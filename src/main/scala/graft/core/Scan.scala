@@ -4,18 +4,19 @@ import java.nio.file.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The read path: union of visible segment files → MVCC version resolution →
-  * (optionally) key order. This ~40-line plan IS the reference's entire query
-  * engine — its k-way ordered merge + newest-wins dedup (scan.rs:55-238).
+/** The read path: one scan of the visible segment files → MVCC version
+  * resolution → (optionally) key order. This ~40-line plan IS the
+  * reference's entire query engine — its k-way ordered merge + newest-wins
+  * dedup (scan.rs:55-238).
   *
   * Spark-first design notes (SURVEY.md §2.1 #1-#4):
-  *   - The k-way merge disappears: a union of parquet files is free, and
-  *     Catalyst plans the dedup as one hash aggregate keyed on the
-  *     dimensions — map-side partial aggregation means each segment's
-  *     duplicates collapse before the shuffle, so shuffled bytes ≈ live rows,
-  *     not total rows. At 100 TB this beats a global sort-merge (a window
-  *     `row_number()=1` formulation would sort every partition; `max_by`
-  *     needs no sort at all).
+  *   - The k-way merge disappears: one parquet scan over every visible
+  *     segment's files is free, and Catalyst plans the dedup as one hash
+  *     aggregate keyed on the dimensions — map-side partial aggregation
+  *     means each segment's duplicates collapse before the shuffle, so
+  *     shuffled bytes ≈ live rows, not total rows. At 100 TB this beats a
+  *     global sort-merge (a window `row_number()=1` formulation would sort
+  *     every partition; `max_by` needs no sort at all).
   *   - Block skipping is parquet row-group min/max stats + Hive partition
   *     pruning on the `_ck_*` chunk-key directories; `pruned` rewrites
   *     dimension predicates onto chunk keys so pruning kicks in before IO
@@ -48,17 +49,104 @@ object Scan {
         StructField(TxnCol, LongType), StructField(SeqCol, LongType)))
   }
 
-  /** Read the raw union of segment dirs + extra in-memory batches, with
-    * `_txn_id`/`_seq` provenance columns present. `paths` are the segment
-    * directories to read — resolved by the caller through the table's
-    * [[Protocol]], so this layer is protocol-agnostic. */
+  /** The chunk-key partition schema of every segment tree: one `_ck_<dim>`
+    * LongType column per dimension, pinned explicitly rather than inferred
+    * (each segment is its own Hive-partitioned tree, and partition
+    * inference refuses several partitioned roots). */
+  def chunkStruct(schema: MatSchema): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(schema.chunkColNames.map(StructField(_, LongType)))
+  }
+
+  /** ONE file index over every segment directory in `paths`, shared by the
+    * core read ([[raw]]) and the DSv2 catalog scan: the roots are the
+    * segment directories and the partition spec enumerates every
+    * `_ck_a=x/_ck_b=y/...` leaf below them with its chunk-key values
+    * pinned. The enumeration is the same metadata listing any file source
+    * performs when its scan is planned, O(chunk dirs in the visible
+    * segments).
+    *
+    * A visible segment whose directory is missing fails loudly: Spark's
+    * file index would list a missing root as empty and the read would
+    * silently drop that segment's rows.
+    *
+    * A committed segment directory is never written again, so the index of
+    * one visible set is built once and kept (see [[indexes]]): repeated
+    * reads of an unchanged table — every `snapshot`, `asOf` and catalog
+    * query of it — share that index instead of listing every chunk
+    * directory again. Each call still stats the segment directories, so a
+    * missing one fails as above and a re-created one is listed afresh. */
+  def segmentIndex(
+      spark: SparkSession,
+      schema: MatSchema,
+      paths: Seq[String]): org.apache.spark.sql.execution.datasources.InMemoryFileIndex = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, PartitionPath, PartitionSpec}
+    lazy val hconf = spark.sessionState.newHadoopConf()
+    val prefixes = schema.chunkColNames.map(_ + "=")
+    def leaves(dir: java.io.File, level: Int, vals: List[Long]): Seq[PartitionPath] =
+      if (level == prefixes.size) {
+        // plain absolute path, then makeQualified — matching how the index
+        // qualifies listed files (File.toURI's empty authority would break
+        // the Path equality the partition→files join relies on)
+        val p = new HPath(dir.getAbsolutePath)
+        Seq(PartitionPath(
+          org.apache.spark.sql.catalyst.InternalRow.fromSeq(vals.reverse),
+          p.getFileSystem(hconf).makeQualified(p)))
+      } else {
+        Option(dir.listFiles()).toSeq.flatten
+          .filter(f => f.isDirectory && f.getName.startsWith(prefixes(level)))
+          .flatMap(f =>
+            leaves(f, level + 1, f.getName.stripPrefix(prefixes(level)).toLong :: vals))
+      }
+    val dirs = paths.map(new java.io.File(_))
+    // (path, inode, mtime) of each segment directory: a directory deleted
+    // and re-created under the same name (a table dropped and re-created
+    // at its path) keys a new index
+    val identity = dirs.map { d =>
+      val attrs =
+        try java.nio.file.Files.readAttributes(d.toPath,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        catch { case _: java.nio.file.NoSuchFileException => null }
+      if (attrs == null || !attrs.isDirectory) throw new IllegalStateException(
+        s"visible segment ${d.getName} has no directory at ${d.getAbsolutePath}")
+      (d.getAbsolutePath, attrs.fileKey, attrs.lastModifiedTime)
+    }
+    val key = (spark, schema, identity)
+    indexes.synchronized(Option(indexes.get(key))).getOrElse {
+      val spec = PartitionSpec(chunkStruct(schema), dirs.flatMap(leaves(_, 0, Nil)))
+      val index = new InMemoryFileIndex(spark, dirs.map(d => new HPath(d.getAbsolutePath)),
+        Map.empty[String, String],
+        Some(org.apache.spark.sql.types.StructType(
+          provenanceStruct(schema).fields ++ chunkStruct(schema).fields)),
+        FileStatusCache.getOrCreate(spark), Some(spec), None)
+      indexes.synchronized(indexes.put(key, index))
+      index
+    }
+  }
+
+  /** The [[segmentIndex]] of the most recently read visible sets, least
+    * recently used first. Bounded, so a long-lived session that commits
+    * continually keeps only the indexes of its latest states (and the
+    * sessions they belong to). */
+  private val indexes =
+    new java.util.LinkedHashMap[AnyRef,
+      org.apache.spark.sql.execution.datasources.InMemoryFileIndex](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef,
+          org.apache.spark.sql.execution.datasources.InMemoryFileIndex]): Boolean = size() > 16
+    }
+
+  /** Read every segment dir through one file scan, plus extra in-memory
+    * batches unioned on top, with `_txn_id`/`_seq` provenance columns
+    * present. `paths` are the segment directories to read — resolved by the
+    * caller through the table's [[Protocol]], so this layer is
+    * protocol-agnostic. */
   def raw(
       spark: SparkSession,
       schema: MatSchema,
       paths: Seq[String],
       extra: Seq[DataFrame]): DataFrame = {
-    // chunk-key partition columns ride along so chunk predicates can prune;
-    // cast defends against partition-column type inference (int vs long).
+    // chunk-key partition columns ride along so chunk predicates can prune.
     // Dimension columns carry their chunk size as attribute metadata so
     // graft.plans.ChunkPruneRule can derive chunk predicates automatically.
     val dimCols = schema.dimensions.map { dim =>
@@ -67,24 +155,29 @@ object Scan {
       col(dim.name).as(dim.name, md)
     }
     val cols = dimCols ++ schema.valueNames.map(col) ++
-      schema.chunkColNames.map(c => col(c).cast("long").as(c)) ++
+      schema.chunkColNames.map(col) ++
       Seq(col(DelCol), col(TxnCol), col(SeqCol))
-    // One read per segment dir (each is its own Hive-partitioned tree); the
-    // union of parquet scans collapses into a single multi-file scan stage.
-    // The schema is supplied explicitly — never inferred: a transaction
-    // that flushed zero rows leaves a data-file-less segment, which schema
-    // inference would refuse (and at scale, skipping footer-based inference
-    // also saves a listing round-trip per segment).
-    import org.apache.spark.sql.types._
-    val readSchema = StructType(
-      provenanceStruct(schema).fields ++
-        schema.chunkColNames.map(StructField(_, LongType)))
-    val fromDisk = paths.map(p => spark.read.schema(readSchema).parquet(p).select(cols: _*))
+    // Every segment dir is read through ONE relation over the shared
+    // [[segmentIndex]], so N segments plan as one file scan whose splits
+    // pack files across segments. The schema is supplied explicitly —
+    // never inferred: a transaction that flushed zero rows leaves a
+    // data-file-less segment, which schema inference would refuse (and at
+    // scale, skipping footer-based inference also saves a footer read per
+    // segment).
+    val fromDisk =
+      if (paths.isEmpty) Nil
+      else {
+        val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+          segmentIndex(spark, schema, paths), chunkStruct(schema), provenanceStruct(schema),
+          bucketSpec = None,
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+          Map.empty[String, String])(spark)
+        Seq(spark.baseRelationToDataFrame(rel).select(cols: _*))
+      }
     val all = fromDisk ++ extra.map(_.select(cols: _*))
     if (all.isEmpty) {
       import org.apache.spark.sql.types._
-      val st = StructType(schema.toStructType.fields ++
-        schema.chunkColNames.map(StructField(_, LongType)) ++
+      val st = StructType(schema.toStructType.fields ++ chunkStruct(schema).fields ++
         provenanceStruct(schema).fields.takeRight(3))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
     } else all.reduce(_ unionByName _)

@@ -113,9 +113,28 @@ final class Transaction private[core] (
     * arbitrarily; across batches, later batches win. */
   def addRows(df: DataFrame): Unit = {
     requireOpen()
+    val projected = conform(df, schema.columnNames)
     val seq = nextSeq; nextSeq += 1
-    val projected = df.select(schema.columnNames.map(col): _*)
     buffered = buffered :+ decorate(projected, seq)
+  }
+
+  /** `df` projected onto `names` in their declared types. A column whose
+    * type safely widens to the declared one (`Cast.canUpCast`, e.g. INT →
+    * LONG) is cast; any other type is refused before anything is buffered —
+    * a segment file with a foreign column type would fail every later read
+    * of the table. */
+  private def conform(df: DataFrame, names: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    val declared = schema.toStructType
+    val projected = df.select(names.map(col): _*)
+    projected.select(projected.schema.fields.toSeq.zip(names).map { case (f, n) =>
+      val want = declared(n).dataType
+      if (org.apache.spark.sql.types.DataType.equalsIgnoreNullability(f.dataType, want)) col(n)
+      else if (Cast.canUpCast(f.dataType, want)) col(n).cast(want).as(n)
+      else throw new IllegalArgumentException(
+        s"column $n has type ${f.dataType.simpleString}, which does not widen to its " +
+          s"declared type ${want.simpleString}; cast it explicitly")
+    }: _*)
   }
 
   /** Buffer TOMBSTONES for the key points in `df` (needs the dimension
@@ -131,8 +150,9 @@ final class Transaction private[core] (
     * upsert, built from the same machinery. */
   def deleteRows(df: DataFrame): Unit = {
     requireOpen()
+    val keys = conform(df, schema.dimNames)
     val seq = nextSeq; nextSeq += 1
-    val nulls = schema.values.foldLeft(df.select(schema.dimNames.map(col): _*)) {
+    val nulls = schema.values.foldLeft(keys) {
       (d, v) => d.withColumn(v.name, lit(null).cast(v.dataType))
     }
     buffered = buffered :+ decorate(nulls, seq, del = true)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.LongType
   * (graft.core.Scan.raw attaches it), so the rule needs no global state and
   * fires only on graft scans. It augments Filter nodes whose child exposes
   * the `_ck_<dim>` column — i.e. after predicate pushdown has moved the
-  * filter next to the per-segment relation.
+  * filter next to the relation that scans every visible segment.
   *
   * Enable per-session with [[GraftPlans.enable]] (runtime, via
   * experimental.extraOptimizations) or cluster-wide with

@@ -13,7 +13,6 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -589,13 +588,15 @@ object GraftCatalog {
   * exactly the visible segment directories, so pushdown, pruning and
   * vectorization are all stock Spark.
   *
-  * The file index is built with an EXPLICIT `PartitionSpec` rather than
-  * partition inference: each segment directory is its own Hive-partitioned
-  * `_ck_*` tree, and Spark's inference refuses multiple partitioned roots
-  * (CONFLICTING_DIRECTORY_STRUCTURES — the V1 path unions per-segment reads
-  * for the same reason, [[graft.core.Scan.raw]]). The chunk dirs are
-  * enumerated driver-side at scan-build time — the same metadata listing
-  * any file source performs, O(chunk dirs in visible segments). */
+  * The file index is [[graft.core.Scan.segmentIndex]], the one the core
+  * read path ([[graft.core.Scan.raw]]) scans too: one index over every
+  * visible segment directory with an EXPLICIT `PartitionSpec` rather than
+  * partition inference (each segment directory is its own Hive-partitioned
+  * `_ck_*` tree, and Spark's inference refuses multiple partitioned roots —
+  * CONFLICTING_DIRECTORY_STRUCTURES). The chunk dirs are enumerated at the
+  * first scan build of a visible set and reused while that set is
+  * unchanged, and a missing segment directory fails the read instead of
+  * dropping that segment's rows. */
 final class GraftV2Table(tableName: String, val matSchema: MatSchema,
     val segmentPaths: Seq[String], val writeDir: Option[String] = None,
     val tableProps: Map[String, String] = Map.empty,
@@ -621,9 +622,6 @@ final class GraftV2Table(tableName: String, val matSchema: MatSchema,
   /** Data columns physically present in every segment file: logical ++
     * provenance — the shared [[graft.core.Scan.provenanceStruct]]. */
   private val dataSchema: StructType = Scan.provenanceStruct(matSchema)
-
-  private val partSchema: StructType =
-    StructType(matSchema.chunkColNames.map(StructField(_, LongType)))
 
   override def name(): String = tableName
 
@@ -754,41 +752,11 @@ final class GraftV2Table(tableName: String, val matSchema: MatSchema,
     ()
   }
 
-  /** Enumerate every `_ck_a=x/_ck_b=y/...` leaf directory under the visible
-    * segments and pin its partition values explicitly. */
-  private def partitionSpec(spark: SparkSession): PartitionSpec = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val depth = matSchema.dimNames.size
-    val prefixes = matSchema.chunkColNames.map(_ + "=")
-    def leaves(dir: java.io.File, level: Int, vals: List[Long]): Seq[PartitionPath] =
-      if (level == depth) {
-        // plain absolute path, then makeQualified — matching how the index
-        // qualifies listed files (File.toURI's empty authority would break
-        // the Path equality the partition→files join relies on)
-        val p = new org.apache.hadoop.fs.Path(dir.getAbsolutePath)
-        val fs = p.getFileSystem(hconf)
-        Seq(PartitionPath(
-          org.apache.spark.sql.catalyst.InternalRow.fromSeq(vals.reverse),
-          fs.makeQualified(p)))
-      } else {
-        Option(dir.listFiles()).toSeq.flatten
-          .filter(f => f.isDirectory && f.getName.startsWith(prefixes(level)))
-          .flatMap(f =>
-            leaves(f, level + 1, f.getName.stripPrefix(prefixes(level)).toLong :: vals))
-      }
-    PartitionSpec(partSchema,
-      segmentPaths.flatMap(p => leaves(new java.io.File(p), 0, Nil)))
-  }
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val spark = SparkSession.active
-    val roots = segmentPaths.map(p =>
-      new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath))
-    val index = new InMemoryFileIndex(spark, roots, Map.empty[String, String],
-      Some(StructType(dataSchema ++ partSchema)),
-      FileStatusCache.getOrCreate(spark), Some(partitionSpec(spark)), None)
-    new GraftScanBuilder(spark, index, StructType(dataSchema ++ partSchema),
-      dataSchema, options, analyzedStats, analyzedDimStats, matSchema)
+    new GraftScanBuilder(spark, Scan.segmentIndex(spark, matSchema, segmentPaths),
+      StructType(dataSchema ++ Scan.chunkStruct(matSchema)), dataSchema, options,
+      analyzedStats, analyzedDimStats, matSchema)
   }
 
   /** Fresh ANALYZEd statistics (resolved bytes, resolved row count), only

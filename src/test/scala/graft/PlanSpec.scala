@@ -1,13 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
 /** Plan-shape guards: the physical plans that make the battery scale must
   * not silently regress (lost broadcast, lost pushdown, hash->sort
   * aggregate fallback). Checks run at sf0.001 — plan shape, not timing. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -143,6 +145,39 @@ class PlanSpec extends AnyFunSuite {
     val p = db.changesBetween(1L, 2L).queryExecution.executedPlan.toString
     assert(p.contains("LeftSemi"), p)
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  test("every segment reads through ONE file scan per Scan.raw call, pruned per chunk") {
+    import org.apache.spark.sql.functions.col
+    val path = Files.createTempDirectory("graft-planspec-onescan").toString
+    val schema = MatSchema(Seq(Dimension("k", 10)), Seq(ValueCol("v")))
+    val db = MatDb.create(spark, schema, path)
+    (1L to 4L).foreach { i =>
+      val t = db.newTransaction()
+      t.addRowsSeq((0L until 50L).map(k => Seq[Any](k, k * 10 + i))); t.commit()
+    }
+    assert(db.committedSegments.size >= 3)
+    def scans(df: org.apache.spark.sql.DataFrame): Seq[FileSourceScanExec] = {
+      df.collect()
+      collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    }
+    assert(scans(db.snapshot()).size === 1)
+    assert(scans(db.asOf(3L)).size === 1)
+    val ordered = db.orderedScan()
+    assert(scans(ordered).size === 1)
+    val plan = TestSpark.finalPlan(ordered)
+    assert(plan.linesIterator.count(_.trim.startsWith("+- Exchange")) === 1, plan)
+    // changesBetween reads twice: the range's touched keys and their history
+    assert(scans(db.changesBetween(1L, 3L)).size === 2)
+    // a point lookup prunes to the key's chunk directory in every segment
+    val chunkFiles = db.committedSegments.map { s =>
+      Storage.segmentPath(Storage.rootPath(path), s, tmp = false).resolve("_ck_k=2").toFile
+        .listFiles().count(_.getName.endsWith(".parquet"))
+    }.sum
+    val point = db.snapshot().where(col("k") === 23L)
+    val Seq(scan) = scans(point)
+    assert(point.collect().map(_.getLong(1)).toSeq === Seq(234L))
+    assert(scan.metrics("numFiles").value === chunkFiles)
   }
 
   test("core MVCC dedup stays on HashAggregate with partition+data filters") {

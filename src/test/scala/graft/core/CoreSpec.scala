@@ -339,6 +339,60 @@ class CoreSpec extends CoreProtocolBehaviors("rename") {
     assert(db3.committedSegments.forall(_.txnId != fakeTxn))
   }
 
+  test("addRows widens INT to LONG and refuses a DOUBLE dimension before buffering") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def frame(t: DataType, rows: Row*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("time", t), StructField("sensor_id", LongType),
+        StructField("value", LongType))))
+    val db = create(tmpDir())
+    val t1 = db.newTransaction(); t1.addRowsSeq(Seq(Seq(1L, 1L, 10L), Seq(2L, 1L, 20L))); t1.commit()
+    // a committed DOUBLE in the LONG dimension `time` would fail every later
+    // read of the table with PARQUET_COLUMN_DATA_TYPE_MISMATCH
+    val doubles = frame(DoubleType, Row(3.5, 1L, 30L))
+    val t2 = db.newTransaction()
+    val add = intercept[IllegalArgumentException](t2.addRows(doubles))
+    assert(add.getMessage.contains("time"), add.getMessage)
+    val del = intercept[IllegalArgumentException](t2.deleteRows(doubles))
+    assert(del.getMessage.contains("time"), del.getMessage)
+    t2.commit()
+    assert(db.snapshot().collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      === Set((1L, 1L, 10L), (2L, 1L, 20L)))
+    // INT up-casts exactly: keys, values and tombstone keys alike
+    val ints = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(Int.MaxValue, 7, Int.MinValue)), 1),
+      StructType(Seq(StructField("time", IntegerType), StructField("sensor_id", IntegerType),
+        StructField("value", IntegerType))))
+    val t3 = db.newTransaction()
+    t3.addRows(ints)
+    t3.deleteRows(frame(IntegerType, Row(1, 1L, 0L)))
+    t3.commit()
+    val snap = db.snapshot()
+    assert(snap.schema.map(_.dataType) === Seq(LongType, LongType, LongType))
+    assert(snap.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      === Set((2L, 1L, 20L), (Int.MaxValue.toLong, 7L, Int.MinValue.toLong)))
+  }
+
+  test("an unchanged visible set reuses its segment index; a re-created table is listed afresh") {
+    val dir = tmpDir()
+    val db = create(dir)
+    val t1 = db.newTransaction(); t1.addRowsSeq(Seq(Seq(1L, 1L, 10L))); t1.commit()
+    val paths = db.segmentReadPaths(db.committedSegments)
+    assert(Scan.segmentIndex(spark, schema, paths) eq Scan.segmentIndex(spark, schema, paths))
+    val t2 = db.newTransaction(); t2.addRowsSeq(Seq(Seq(2L, 1L, 20L))); t2.commit()
+    assert(db.snapshot().count() === 2)
+    // drop the table and re-create it at the same path: its segment
+    // directories come back under the same names with other files in them
+    Storage.deleteRecursively(java.nio.file.Paths.get(dir))
+    val again = create(dir)
+    val t3 = again.newTransaction()
+    t3.addRowsSeq(Seq(Seq(1L, 1L, 99L), Seq(3L, 1L, 30L), Seq(4L, 1L, 40L))); t3.commit()
+    assert(again.segmentReadPaths(again.committedSegments) === paths)
+    assert(again.snapshot().collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+      === Set((1L, 99L), (3L, 30L), (4L, 40L)))
+  }
+
   test("schema json round trip") {
     val s2 = MatSchema.fromJson(schema.json)
     assert(s2 === schema)

@@ -72,6 +72,38 @@ class GraftCatalogSpec extends AnyFunSuite {
       Seq(1L -> 50L, 2L -> 45L, 3L -> 15L))
   }
 
+  test("a missing visible segment directory fails snapshot, asOf and catalog SQL loudly") {
+    val path = root.resolve("gone")
+    val db = MatDb.create(spark, schema, path.toString, "manifest")
+    (0L until 3L).foreach { i =>
+      val txn = db.newTransaction()
+      txn.addRows(batch((0L until 100L).map(k => (i * 100L + k, k % 10, i))))
+      txn.commit()
+    }
+    assert(spark.sql("SELECT count(*) FROM gcat.gone").head().getLong(0) === 300)
+    // the manifest still lists txn 2's segment; its directory is gone
+    val lost = db.committedSegments.filter(_.txnId == 2L)
+      .map(graft.core.Storage.segmentPath(path, _, tmp = false))
+    assert(lost.nonEmpty)
+    lost.foreach(graft.core.Storage.deleteRecursively)
+    def refused(what: String)(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage.contains(lost.head.getFileName.toString)), s"$what: $e")
+    }
+    // Spark's file index lists a missing root as empty: without the check
+    // the catalog would answer 200 rows with no error
+    refused("catalog SQL")(spark.sql("SELECT count(*) FROM gcat.gone").collect())
+    refused("catalog VERSION AS OF")(
+      spark.sql("SELECT count(*) FROM gcat.gone VERSION AS OF 2").collect())
+    refused("snapshot")(db.snapshot().count())
+    refused("asOf")(db.asOf(2L).count())
+    // a version below the lost segment never reads it
+    assert(db.asOf(1L).count() === 100)
+    graft.core.Storage.deleteRecursively(path)
+  }
+
   test("value predicates stay above the dedup; dimension predicates reach the scan") {
     mkTable("sem")
     // key 10 was overwritten to v=2 in txn 2: filtering on its SUPERSEDED
