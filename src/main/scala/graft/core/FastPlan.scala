@@ -17,8 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Why gated: codegen is exactly right for large inputs, and at 100 TB a
   * fold's delta is not tiny. Callers gate on the PLAN-STATISTICS estimate
   * of their input (no job), so at scale the scope is a no-op and every
-  * plan compiles as before. Threshold: `graft.fastplan.small.bytes`
-  * system property, default 64 MB.
+  * plan compiles as before. Threshold: [[SmallBytes]], 64 MB.
   *
   * Concurrency: the conf is session-global and grouped maintenance folds
   * run on a driver pool ([[graft.streaming.Streams]] MaintPool), so the
@@ -27,16 +26,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * two overlapping folds into "restoring" the flipped value.
   */
 object FastPlan {
-  /** Plans estimated at or below this are "tiny" (bytes). Env override
-    * (forked sbt runs don't inherit -D flags) is the threshold's A/B knob. */
-  def smallBytes: Long =
-    sys.env.get("GRAFT_FASTPLAN_SMALL_BYTES")
-      .orElse(sys.props.get("graft.fastplan.small.bytes"))
-      .map(_.toLong).getOrElse(64L << 20)
+  /** Plans estimated at or below this are "tiny" (bytes). */
+  val SmallBytes: Long = 64L << 20
 
   /** Planning-only size probe — optimizer statistics, never a job. */
   def isSmall(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= smallBytes
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= SmallBytes
 
   /** Metadata-only size probe for an on-disk table: `bytes` is a
     * driver-side listing total (e.g. [[MatDb.visibleBytes]]), so the gate
@@ -48,7 +43,7 @@ object FastPlan {
     * when the fold is actually tiny — and a 100 TB base clears either
     * measure. */
   def isSmallBytes(bytes: Long): Boolean =
-    bytes >= 0L && bytes <= smallBytes
+    bytes >= 0L && bytes <= SmallBytes
 
   /** [[isSmallBytes]] over a directory tree's file lengths — the gate for
     * plain parquet layouts (index corpora), where the alternative was a
@@ -72,32 +67,23 @@ object FastPlan {
   private val Flags = Seq("spark.sql.codegen.wholeStage",
     "spark.sql.adaptive.enabled")
 
-  /** Shuffle partitions for exchanges planned inside the scope
-    * (`graft.fastplan.partitions`, default 4). With AQE off in the scope,
-    * every exchange materializes exactly `spark.sql.shuffle.partitions`
-    * tasks; at the session's core-count setting a tiny fold's plan ran
-    * 100-340 ~1 ms tasks (MaintProfile) whose scheduling round-trips were
-    * most of its wall-clock. Aggregation/join results are partition-count
-    * invariant, and the flush's own repartition(1)+sort fixes the written
-    * layout, so only latency changes. Out of scope (large inputs) the
-    * session value applies untouched. */
-  // env override is the measurement kill switch (forked sbt runs don't
-  // inherit -D flags): GRAFT_FASTPLAN_PARTITIONS=32 restores the session
-  // value's behavior for an A/B without a code change
-  private def scopedPartitions: String =
-    sys.env.get("GRAFT_FASTPLAN_PARTITIONS")
-      .orElse(sys.props.get("graft.fastplan.partitions")).getOrElse("4")
+  /** Shuffle partitions for exchanges planned inside the scope. With AQE
+    * off in the scope, every exchange materializes exactly
+    * `spark.sql.shuffle.partitions` tasks; at the session's core-count
+    * setting a tiny fold's plan ran 100-340 ~1 ms tasks (MaintProfile)
+    * whose scheduling round-trips were most of its wall-clock.
+    * Aggregation/join results are partition-count invariant, and the
+    * segment writer's own repartition(1)+sort fixes the written layout, so
+    * only latency changes. Out of scope (large inputs) the session value
+    * applies untouched. */
+  private val ScopedPartitions = "4"
 
   /** Run `f` with whole-stage codegen and AQE off (when `small`; identity
     * otherwise), restoring the session confs when the outermost scope
     * exits. Queries PLANNED inside the scope are affected; running jobs
     * are not. */
-  // measurement kill switch (GRAFT_FASTPLAN=0): lets a bench A/B the whole
-  // mechanism against stock planning without a code change
-  private val enabled: Boolean = !sys.env.get("GRAFT_FASTPLAN").contains("0")
-
   def scoped[A](spark: SparkSession, small: Boolean)(f: => A): A = {
-    if (!small || !enabled) return f
+    if (!small) return f
     states.synchronized {
       val st = { val s = states.get(spark)
         if (s != null) s else { val n = new St; states.put(spark, n); n } }
@@ -106,7 +92,7 @@ object FastPlan {
         st.saved = Flags.map(k => k -> spark.conf.get(k, "true")) :+
           (pk -> spark.conf.get(pk))
         Flags.foreach(spark.conf.set(_, "false"))
-        spark.conf.set(pk, scopedPartitions)
+        spark.conf.set(pk, ScopedPartitions)
       }
       st.depth += 1
     }

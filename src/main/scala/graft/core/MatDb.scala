@@ -274,14 +274,8 @@ final class MatDb private (
     Storage.commitTimestamps(root, protocol, historySegments)
       .filter(_._2 <= tsMillis).lastOption.map(_._1)
 
-  /** Every segment discoverable for history/timestamp purposes: the live
-    * set plus, under the manifest protocol, replaced-away segments whose
-    * directories survive (time-travel history awaiting vacuum). */
   private def historySegments: Seq[SegmentId] =
-    if (protocol == Storage.ManifestProtocol)
-      (Storage.ManifestProtocol.lineageSegments(root) ++ synchronized(committed))
-        .distinct.sorted
-    else synchronized(committed)
+    Storage.historySegments(root, protocol, synchronized(committed))
 
   /** Key-ordered full scan — the reference's one query operator
     * (scan.rs:183-238): newest version per key, ordered by dimensions.
@@ -403,8 +397,7 @@ final class MatDb private (
     val all = Scan.raw(spark, schema,
         segmentReadPaths(segs.filter(_.txnId <= toTxn)), Nil)
       .join(touched, dims, "left_semi")
-    val ver = (least(col(Scan.TxnCol), lit(1L << 40)) * lit(1L << 22) +
-      least(col(Scan.SeqCol), lit((1L << 22) - 1))).as("_ver")
+    val ver = Scan.version(col(Scan.TxnCol), col(Scan.SeqCol)).as("_ver")
     val withVer = all.withColumn("_ver", ver)
       .withColumn("_over", when(col(Scan.TxnCol) <= fromTxn, col("_ver")))
     val delRow = coalesce(col(Scan.DelCol), lit(false))
@@ -719,24 +712,11 @@ final class MatDb private (
     val retained = base.filterNot(_.txnId <= horizon)
     val tid = replaced.map(_.txnId).max
     val bid = SegmentId(tid, replaced.filter(_.txnId == tid).map(_.segNum).max + 1)
-    val resolved = Scan.resolve(spark, schema, segmentReadPaths(replaced), Nil, None)
-    // mirror of Transaction.flush's segment write (chunk routing, zstd,
-    // dim metadata for ChunkPruneRule), with pinned provenance: the
-    // horizon txn's id, a saturated _seq ("the final word" of that txn)
-    val dimCols = schema.dimensions.map { dim =>
-      val md = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(MatSchema.ChunkKey, dim.chunkSize).build()
-      org.apache.spark.sql.functions.col(dim.name).as(dim.name, md)
-    }
-    import org.apache.spark.sql.functions.{col, lit}
-    val decorated = schema.dimensions.foldLeft(
-      resolved.select(dimCols ++ schema.valueNames.map(col): _*)) { (d, dim) =>
-        d.withColumn(schema.chunkColName(dim.name),
-          MatSchema.chunkKeyCol(col(dim.name), dim.chunkSize))
-      }
-      .withColumn(Scan.DelCol, lit(false))
-      .withColumn(Scan.TxnCol, lit(tid))
-      .withColumn(Scan.SeqCol, lit((1L << 22) - 1))
+    // the fold's provenance: the horizon txn's id (stamped by the write)
+    // and a saturated _seq, "the final word" of that txn
+    val decorated = Segment.decorate(schema,
+      Scan.resolve(spark, schema, segmentReadPaths(replaced), Nil, None),
+      del = false, seq = Scan.MaxSeq)
     registerInFlight(bid) // shield from THIS process's vacuum while writing
     // bid is deterministic, so a CRASHED earlier checkpoint may have left a
     // half-written dir here — clear it before appending (a concurrent live
@@ -744,42 +724,9 @@ final class MatDb private (
     protocol.discardInFlight(root, bid)
     Storage.stampClaim(protocol.writePath(root, bid)) // shield from other processes' GC grace
     try {
-      // layout knobs (OPTIMIZE path): within-chunk row order is a pure
-      // clustering optimization — MVCC resolution never depends on file
-      // order — so z-ordering two dims here tightens parquet row-group
-      // min/max bounds for multi-dim range scans without touching
-      // semantics; maxRecordsPerFile bounds output file size.
-      // size-adaptive exchange + tiny-plan fast planning, exactly like
-      // Transaction.flush: a bench/fixture-sized fold collapses to one
-      // partition and skips codegen+AQE for the fold write (its pinned
-      // txn-id/seq literals defeat the codegen cache); a 100 TB fold
-      // keeps the chunk-keyed exchange and codegen. The sort's chunk-col
-      // prefix satisfies the partitioned write's required ordering, so
-      // V1Writes inserts no second sort — and within-chunk order (dims or
-      // z-order) is guaranteed by THIS sort, not writer-sort stability.
-      val small = FastPlan.isSmall(decorated)
-      val exchanged =
-        if (small) decorated.repartition(1)
-        else decorated.repartition(schema.chunkColNames.map(col): _*)
-      val sorted = zorderDims match {
-        case Seq(a, b) =>
-          graft.functions.ZOrder2.register(spark)
-          exchanged.sortWithinPartitions(
-            schema.chunkColNames.map(col) :+ graft.functions.ZOrder2.zorder2(
-              col(a).cast("long"), col(b).cast("long")): _*)
-        case Seq() =>
-          exchanged.sortWithinPartitions(
-            (schema.chunkColNames ++ schema.dimNames).map(col): _*)
-        case other => throw new IllegalArgumentException(
-          s"zorder takes exactly two dimensions, got ${other.mkString(",")}")
-      }
-      val writer = maxRecordsPerFile.foldLeft(
-        sorted.write.mode("append").option("compression", "zstd")
-          .options(Storage.parquetWriteOptions(Storage.readProps(root))))(
-        (w, n) => w.option("maxRecordsPerFile", n))
-      FastPlan.scoped(spark, small)(writer
-        .partitionBy(schema.chunkColNames: _*)
-        .parquet(protocol.writePath(root, bid).toString))
+      // layout knobs (OPTIMIZE path): z-order clustering, file size bound
+      Segment.write(schema, decorated, tid, protocol.writePath(root, bid), root,
+        zorderDims, maxRecordsPerFile)
       // the baseline holds the RESOLVED snapshot: one live row per key, no
       // tombstones — record it so reads whose visible set is exactly this
       // segment skip MVCC resolution (Storage.UniqueFile; see snapshot())

@@ -146,15 +146,9 @@ object Scan {
       schema: MatSchema,
       paths: Seq[String],
       extra: Seq[DataFrame]): DataFrame = {
-    // chunk-key partition columns ride along so chunk predicates can prune.
-    // Dimension columns carry their chunk size as attribute metadata so
-    // graft.plans.ChunkPruneRule can derive chunk predicates automatically.
-    val dimCols = schema.dimensions.map { dim =>
-      val md = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(MatSchema.ChunkKey, dim.chunkSize).build()
-      col(dim.name).as(dim.name, md)
-    }
-    val cols = dimCols ++ schema.valueNames.map(col) ++
+    // chunk-key partition columns ride along so chunk predicates can prune;
+    // dimensions carry their chunk-size metadata (Segment.dimCols)
+    val cols = Segment.dimCols(schema) ++ schema.valueNames.map(col) ++
       schema.chunkColNames.map(col) ++
       Seq(col(DelCol), col(TxnCol), col(SeqCol))
     // Every segment dir is read through ONE relation over the shared
@@ -183,25 +177,39 @@ object Scan {
     } else all.reduce(_ unionByName _)
   }
 
+  /** The largest `_seq` the packed [[version]] order distinguishes — a
+    * checkpoint baseline's `_seq`, "the final word" of its txn. */
+  val MaxSeq: Long = (1L << 22) - 1
+
+  /** The version order `(_txn_id, _seq)` packed into one long: txn in the
+    * high bits (saturated at 2^40), seq in the low 22 bits (saturated at
+    * [[MaxSeq]]). The in-memory `Long.MaxValue` txn tag maps to
+    * 2^62 + seq — overflow-free and above every committed version. Built
+    * as a Catalyst tree so the catalog's resolve rule can use the same
+    * expression over its own attributes (`GraftInternals.expression`). */
+  def version(txn: Column, seq: Column): Column = {
+    import org.apache.spark.sql.GraftInternals.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.{Add, Least, Literal, Multiply}
+    column(Add(
+      Multiply(Least(Seq(expression(txn), Literal(1L << 40))), Literal(1L << 22)),
+      Least(Seq(expression(seq), Literal(MaxSeq)))))
+  }
+
   /** Newest-wins version resolution: one aggregate, no join, no global sort.
     *
-    * The version order (_txn_id, _seq) is packed into a single long `_ver` so
+    * The version order is packed into a single long `_ver` ([[version]]) so
     * each value column resolves via `max_by(value, _ver)` with a primitive
     * aggregation buffer — that keeps the plan on `HashAggregateExec`
     * (a `max_by(struct, struct)` formulation has an immutable struct buffer
     * and silently degrades to `SortAggregateExec`, an O(n log n) sort per
     * partition at scale). `_ver` is unique per (key, version) so all value
-    * columns pick the same winning row. Packing: txn in the high bits
-    * (saturated at 2^40), seq in the low 22 bits — the in-memory
-    * Long.MaxValue txn tag maps to 2^62+seq, overflow-free and still above
-    * every committed version. */
+    * columns pick the same winning row. */
   def dedup(df: DataFrame, schema: MatSchema): DataFrame = {
     val dims = schema.dimNames.map(col)
     val hasDel = df.columns.contains(DelCol)
     if (schema.valueNames.isEmpty && !hasDel) df.select(dims: _*).distinct()
     else {
-      val ver = (least(col(TxnCol), lit(1L << 40)) * lit(1L << 22) +
-        least(col(SeqCol), lit((1L << 22) - 1))).as("_ver")
+      val ver = version(col(TxnCol), col(SeqCol)).as("_ver")
       // the winning row's tombstone flag rides through the SAME aggregate
       // (one more primitive max_by buffer — still HashAggregateExec, still
       // one exchange); coalesce happens per-row so a winner from a

@@ -179,6 +179,14 @@ object Storage {
           .getBytes(StandardCharsets.UTF_8))
     }
 
+  /** Every segment discoverable for history and timestamp resolution:
+    * the `live` set plus, under the manifest protocol, replaced-away
+    * segments whose directories survive (time-travel history awaiting
+    * vacuum). */
+  def historySegments(root: Path, proto: Protocol, live: Seq[SegmentId]): Seq[SegmentId] =
+    (if (proto == ManifestProtocol) ManifestProtocol.lineageSegments(root) ++ live
+     else live).distinct.sorted
+
   /** Per-transaction commit wall-clock (epoch millis) over the given
     * visible segments, monotone by txn order. Transactions predating the
     * stamp (or folded baselines of pre-stamp history) read as 0 — i.e.
@@ -302,9 +310,8 @@ object Storage {
     s.replace("\\\"", "\"").replace("\\\\", "\\")
 
   /** Parquet writer options derived from table properties, applied by every
-    * segment write path (Transaction.flush, the DSv2 insert/overwrite and
-    * row-level delta writes, checkpoint/optimize rewrites, ranged-layout
-    * appends).
+    * segment write path ([[Segment.write]], the row-level delta writes,
+    * ranged-layout appends).
     *
     *   - Any property whose key starts with `parquet.` passes through
     *     verbatim — per-table row-group size (`parquet.block.size`), page

@@ -25,22 +25,14 @@ object MergeAction {
   *     increasing `_seq` — the append-only analog of the reference's
   *     overwrite-in-place within a block (block.rs:47-49): on read, higher
   *     `_seq` wins among equal keys in the same txn (SURVEY.md §7.4).
-  *   - [[flush]] spills all buffered batches to ONE new `.tmp` parquet
-  *     segment, Hive-partitioned by the chunk keys (`floor(dim/chunkSize)`,
-  *     reference schema.rs:28-38) and sorted by dimensions within each
-  *     partition — giving tight parquet row-group min/max stats, the
-  *     declarative version of the reference's per-block bounds
-  *     (segment.rs:173-193). Multiple flushes ⇒ multiple segments per txn
-  *     (transaction.rs:90-119).
+  *   - [[flush]] spills all buffered batches to ONE new `.tmp` segment
+  *     through the shared segment writer ([[Segment.write]]: chunk-keyed
+  *     layout, dims-sorted within each chunk). Multiple flushes ⇒ multiple
+  *     segments per txn (transaction.rs:90-119).
   *   - [[commit]] does a final flush then atomically renames `.tmp` dirs in
   *     reverse order (segment 0 last = commit marker; transaction.rs:127-136).
   *   - [[rollback]] (or abandonment) deletes the `.tmp` dirs
   *     (transaction.rs:50-53, 141-150).
-  *
-  * Scale note: each flush is a single `repartition(chunkCols) +
-  * sortWithinPartitions(dims)` write — one shuffle keyed on chunk, which is
-  * exactly the co-location needed so later scans get partition pruning and
-  * near-sorted reads without a global sort.
   */
 private[core] object Transaction {
   // diagnostic gate shared with IncrementalAgg.ph / tools.MaintProfile
@@ -85,29 +77,6 @@ final class Transaction private[core] (
       r
     }
 
-  /** Columns added to a batch: chunk keys, txn id (MaxValue until commit —
-    * own writes outrank all committed data, reference scan.rs:159-163 intent),
-    * and the batch sequence number. */
-  private def decorate(df: DataFrame, seq: Long, del: Boolean = false): DataFrame = {
-    // dims re-aliased with chunk-size metadata: it persists into the parquet
-    // footer, so scan attributes carry it and graft.plans.ChunkPruneRule can
-    // derive partition predicates on pushed-down filters
-    val dimCols = schema.dimensions.map { dim =>
-      val md = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(MatSchema.ChunkKey, dim.chunkSize).build()
-      col(dim.name).as(dim.name, md)
-    }
-    val withMd = df.select(dimCols ++ schema.valueNames.map(col): _*)
-    val withChunks = schema.dimensions.foldLeft(withMd) { (d, dim) =>
-      d.withColumn(schema.chunkColName(dim.name),
-        MatSchema.chunkKeyCol(col(dim.name), dim.chunkSize))
-    }
-    withChunks
-      .withColumn(Scan.DelCol, lit(del))
-      .withColumn(Scan.TxnCol, lit(Long.MaxValue))
-      .withColumn(Scan.SeqCol, lit(seq))
-  }
-
   /** Buffer a batch of rows. Columns must include every schema column (extra
     * columns are dropped). Within one batch, duplicate keys are resolved
     * arbitrarily; across batches, later batches win. */
@@ -115,7 +84,7 @@ final class Transaction private[core] (
     requireOpen()
     val projected = conform(df, schema.columnNames)
     val seq = nextSeq; nextSeq += 1
-    buffered = buffered :+ decorate(projected, seq)
+    buffered = buffered :+ Segment.decorate(schema, projected, del = false, seq)
   }
 
   /** `df` projected onto `names` in their declared types. A column whose
@@ -152,10 +121,7 @@ final class Transaction private[core] (
     requireOpen()
     val keys = conform(df, schema.dimNames)
     val seq = nextSeq; nextSeq += 1
-    val nulls = schema.values.foldLeft(keys) {
-      (d, v) => d.withColumn(v.name, lit(null).cast(v.dataType))
-    }
-    buffered = buffered :+ decorate(nulls, seq, del = true)
+    buffered = buffered :+ Segment.decorate(schema, keys, del = true, seq)
   }
 
   /** Tombstone every key whose CURRENT resolved row (own uncommitted writes
@@ -255,10 +221,6 @@ final class Transaction private[core] (
     if (buffered.nonEmpty) {
       val id = SegmentId(ensureTxnId(), nextSegNum)
       nextSegNum += 1
-      val all = buffered.reduce(_ unionByName _)
-        // persist the txn id for real — MaxValue is only the in-memory rank
-        .withColumn(Scan.TxnCol, lit(id.txnId))
-      val chunkCols = schema.chunkColNames.map(col)
       val target = db.protocol.writePath(db.root, id)
       // ATOMIC claim of the target directory: under the manifest protocol
       // segments write at their FINAL names, so a taken name means another
@@ -274,38 +236,8 @@ final class Transaction private[core] (
               "writer claimed or committed it; reopen the table and retry")
         Storage.stampClaim(target)
       }
-      // SIZE-ADAPTIVE exchange (guide §2.2/§6): a maintenance fold or DML
-      // batch of a few hundred rows pays more for the chunk-keyed hash
-      // exchange (plan + AQE stage round-trips + per-reducer writer setup)
-      // than the write itself costs — FlushProbe measures the single-
-      // partition variant at ~2/3 of the hash-partitioned one at 500–60k
-      // rows. Below the threshold (plan-statistics estimate, no job) the
-      // batch collapses to ONE partition: same sort, same partitionBy
-      // layout, same in-file order — byte-identical reads. repartition(1),
-      // not coalesce(1), so the upstream compute (scans, joins feeding the
-      // batch) keeps its parallelism. At scale the estimate crosses the
-      // threshold and the chunk-keyed exchange lays data out exactly as
-      // before.
-      val small = FastPlan.isSmall(all)
-      val exchanged =
-        if (small) all.repartition(1)
-        else all.repartition(chunkCols: _*)
-      // tiny batches also skip whole-stage codegen for the write plan:
-      // its literals (txn id, seq) change every commit, so each flush
-      // recompiles every fragment — pure fixed cost at this size
-      // (FastPlan scaladoc has the measurements)
-      ph("flush:write")(FastPlan.scoped(spark, small)(exchanged
-        // sort by (chunk cols, dims): the chunk-col prefix satisfies the
-        // partitioned write's required ordering, so V1Writes inserts NO
-        // second sort (one sort per flush, not two) — and the dims order
-        // within each chunk directory is now guaranteed by THIS sort
-        // rather than by the stability of the writer's own partition sort
-        .sortWithinPartitions((chunkCols ++ schema.dimNames.map(col)): _*)
-        .write.mode("append")
-        .option("compression", "zstd")
-        .options(Storage.parquetWriteOptions(Storage.readProps(db.root)))
-        .partitionBy(schema.chunkColNames: _*)
-        .parquet(target.toString)))
+      ph("flush:write")(Segment.write(schema, buffered.reduce(_ unionByName _),
+        id.txnId, target, db.root))
       flushed = flushed :+ id
       db.registerInFlight(id) // shields it from vacuum() until commit/rollback
       buffered = Vector.empty

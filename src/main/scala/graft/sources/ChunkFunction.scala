@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, DataTypes, LongType, StructType}
 /** The graft chunk-key layout transform as a family of catalog functions:
   * `chunk_<size>(dim) = floor(dim / size)` — the function every graft
   * write path applies to route rows into `_ck_<dim>=<v>` directories
-  * (GraftInsert.decorate, Transaction.flush).
+  * ([[graft.core.Segment.decorate]]).
   *
   * Why it exists: storage-partitioned joins. [[GraftScan]] reports
   * `KeyGroupedPartitioning(chunk_<size>(dim)...)`, and Spark resolves the

@@ -2,9 +2,9 @@ package graft.sources
 
 import java.util.Collections
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftInternals, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, Coalesce, Least, Literal, Multiply, NamedExpression, Not}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Coalesce, Literal, NamedExpression, Not}
 import org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, Filter => LogicalFilter}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -71,10 +71,10 @@ import graft.core.{MatDb, MatSchema, Scan, Storage}
   * == Writes (round 8) ==
   * `INSERT INTO <cat>.<t> ...` commits one transaction per statement via
   * [[GraftInsert]] — the txn id claimed put-if-absent (atomic segment-dir
-  * creation), data chunk-routed exactly like `Transaction.flush`, then
-  * published through the table's own commit protocol, so concurrent SQL
-  * writers commit distinct sequential transactions (GraftCatalogSpec
-  * races them). `CREATE TABLE`/CTAS express chunked dimensions through
+  * creation), data written by the shared segment writer
+  * ([[graft.core.Segment]]), then published through the table's own
+  * commit protocol, so concurrent SQL writers commit distinct sequential
+  * transactions (GraftCatalogSpec races them). `CREATE TABLE`/CTAS express chunked dimensions through
   * `TBLPROPERTIES('graft.dims' = 'dim:chunkSize[,dim:chunkSize...]')`
   * (and optional `'graft.protocol' = 'manifest'|'rename'`, default
   * manifest — the multi-writer protocol, since SQL endpoints must assume
@@ -244,7 +244,8 @@ class GraftCatalog extends TableCatalog
     val dir = tableDir(ident)
     if (!MatDb.exists(dir.toString)) throw new NoSuchTableException(ident)
     val proto = Storage.detect(dir)
-    val txn = Storage.commitTimestamps(dir, proto, lineageSegs(dir, proto))
+    val txn = Storage.commitTimestamps(dir, proto,
+      Storage.historySegments(dir, proto, proto.listCommitted(dir)))
       .filter(_._2 <= timestamp / 1000L) // micros -> millis
       .lastOption.map(_._1).getOrElse(0L)
     load(ident, Some(txn))
@@ -271,7 +272,7 @@ class GraftCatalog extends TableCatalog
       // history spans the manifest lineage (replaced-away states stay
       // discoverable until vacuum), so a user can find the txn id to
       // VERSION AS OF below an overwrite/truncate
-      val segs = lineageSegs(dir, proto)
+      val segs = Storage.historySegments(dir, proto, proto.listCommitted(dir))
         .filter(s => asOf.forall(s.txnId <= _)).sorted
       val ts = Storage.commitTimestamps(dir, proto, segs).toMap
       new GraftHistoryTable(s"$catalogName.${b.toString}.history",
@@ -308,17 +309,6 @@ class GraftCatalog extends TableCatalog
       new graft.streaming.GraftStreamTable(dir.toString,
         graft.streaming.GraftStreamTable.schemaFor(dir.toString))
     }
-  }
-
-  /** Segments discoverable for history/timestamp resolution: the live set
-    * plus, under the manifest protocol, replaced-away segments whose
-    * directories survive (awaiting vacuum). */
-  private def lineageSegs(dir: java.nio.file.Path,
-      proto: graft.core.Protocol): Seq[graft.core.SegmentId] = proto match {
-    case m if m == Storage.ManifestProtocol =>
-      (Storage.ManifestProtocol.lineageSegments(dir) ++ m.listCommitted(dir))
-        .distinct.sorted
-    case p => p.listCommitted(dir).sorted
   }
 
   private def load(ident: Identifier, asOf: Option[Long]): Table = {
@@ -1021,9 +1011,10 @@ private final case class GraftMetaCol(colName: String, colType: DataType)
   override def isNullable: Boolean = true
 }
 
-/** V1 source-filter → Column translation for the DELETE path. Flat
-  * attributes only (graft columns are flat by construction); any filter
-  * shape outside this set makes the whole translation `None`, which
+/** V1 source-filter → Column translation, shared by the DELETE path and
+  * the V1 relation's pushdown ([[GraftRelation]]). Flat attributes only
+  * (graft columns are flat by construction). For DELETE, any filter shape
+  * outside this set makes the whole translation `None`, which
   * [[GraftV2Table.canDeleteWhere]] reports so Spark raises the standard
   * untranslatable-DELETE error rather than silently deleting the wrong
   * rows. */
@@ -1040,7 +1031,8 @@ private[sources] object GraftFilters {
       else Some(cols.flatten.reduce(_ && _))
     }
 
-  private def one(f: Filter): Option[Column] = f match {
+  /** One filter; None for a shape outside the set. */
+  def one(f: Filter): Option[Column] = f match {
     case AlwaysTrue() => Some(lit(true))
     case AlwaysFalse() => Some(lit(false))
     case EqualTo(a, v) => Some(col(a) === lit(v))
@@ -1165,7 +1157,7 @@ case class GraftCatalogDedupRule(spark: SparkSession) extends Rule[LogicalPlan] 
   private def graftTableOf(rel: DataSourceV2Relation): Option[GraftV2Table] =
     rel.table match {
       case g: GraftV2Table => Some(g)
-      case other => org.apache.spark.sql.GraftInternals.rowLevelInnerTable(other)
+      case other => GraftInternals.rowLevelInnerTable(other)
         .collect { case g: GraftV2Table => g }
     }
 
@@ -1190,12 +1182,10 @@ case class GraftCatalogDedupRule(spark: SparkSession) extends Rule[LogicalPlan] 
       .find(_.name == name)
       .getOrElse(throw new IllegalStateException(s"graft relation lost column $name"))
     val dims = schema.dimNames.map(attr)
-    // _ver packing identical to Scan.dedup: txn saturated at 2^40 in the
-    // high bits, seq saturated in the low 22 — one primitive max_by buffer
-    // per value column keeps the plan on HashAggregateExec
-    val ver = Add(
-      Multiply(Least(Seq(attr(Scan.TxnCol), Literal(1L << 40))), Literal(1L << 22)),
-      Least(Seq(attr(Scan.SeqCol), Literal((1L << 22) - 1))))
+    // the _ver packing of Scan.dedup — one primitive max_by buffer per
+    // value column keeps the plan on HashAggregateExec
+    val ver = GraftInternals.expression(Scan.version(
+      GraftInternals.column(attr(Scan.TxnCol)), GraftInternals.column(attr(Scan.SeqCol))))
     // the winning version's tombstone flag resolves through the same
     // aggregate (Scan.dedup's delete-aware path): null _del (pre-delete
     // segments) coalesces to live, and a Filter above the aggregate drops

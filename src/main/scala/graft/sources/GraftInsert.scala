@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{MatSchema, Scan, SegmentId, Storage}
+import graft.core.{MatSchema, Scan, Segment, SegmentId, Storage}
 
 /** Cross-process-safe append for the SQL write path ([[GraftCatalog]]'s
   * `INSERT INTO` / CTAS): commits `df` as ONE transaction without an open
@@ -28,9 +28,8 @@ import graft.core.{MatSchema, Scan, SegmentId, Storage}
   *      then-crashed insert leaves an unreferenced directory that the next
   *      `MatDb.open` recovery sweeps, its id burned — identical to a
   *      crashed transaction.
-  *   2. Writes the decorated batch INTO the claimed directory (same chunk
-  *      routing, dimension-metadata, sort and codec as Transaction.flush —
-  *      one shuffle keyed on the chunk columns).
+  *   2. Writes the batch INTO the claimed directory through the shared
+  *      segment writer ([[graft.core.Segment]]).
   *   3. Publishes through the table's own protocol `commit`: manifest
   *      tables get the optimistic multi-writer publish loop, rename
   *      tables the segment-0-last rename order.
@@ -107,8 +106,8 @@ object GraftInsert {
         val doomed = Scan.resolve(spark, schema, paths, Nil, None)
           .select(schema.dimNames.map(col): _*)
         writeClaimed(root, proto, schema, segId, segPath,
-          decorate(schema, doomed, tombstone = true, seq = 0L)
-            .unionByName(decorate(schema, df, tombstone = false, seq = 1L)))
+          Segment.decorate(schema, doomed, del = true, seq = 0L)
+            .unionByName(Segment.decorate(schema, df, del = false, seq = 1L)))
     }
   }
 
@@ -118,21 +117,8 @@ object GraftInsert {
   private def overwriteReplace(root: Path, proto: graft.core.Protocol,
       schema: MatSchema, df: DataFrame): Option[Long] = {
     val (segId, segPath) = claimSegment(root, proto)
-    val all = decorate(schema, df, tombstone = false, seq = 0L)
-      .withColumn(Scan.TxnCol, lit(segId.txnId))
-    // same size-adaptive exchange + fast-planning as writeClaimed
-    val small = graft.core.FastPlan.isSmall(all)
-    val exchanged =
-      if (small) all.repartition(1)
-      else all.repartition(schema.chunkColNames.map(col): _*)
-    graft.core.FastPlan.scoped(df.sparkSession, small)(exchanged
-      .sortWithinPartitions(
-        (schema.chunkColNames ++ schema.dimNames).map(col): _*)
-      .write.mode("append")
-      .option("compression", "zstd")
-      .options(Storage.parquetWriteOptions(Storage.readProps(root)))
-      .partitionBy(schema.chunkColNames: _*)
-      .parquet(segPath.toString))
+    Segment.write(schema, Segment.decorate(schema, df, del = false, seq = 0L),
+      segId.txnId, segPath, root)
     val newIds = if (hasDataFiles(segPath)) Seq(segId) else Seq.empty[SegmentId]
     var tries = 0
     while (tries < 16) {
@@ -185,49 +171,14 @@ object GraftInsert {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Claim a txn id, write `df` as one segment into the claimed
+    * directory, publish through the table's protocol — one transaction. */
   private def commitBatch(spark: SparkSession, dir: String, df: DataFrame,
       tombstone: Boolean, serializableSince: Option[Long] = None): Option[Long] = {
     val root = Storage.rootPath(dir)
     val schema = Storage.readSchema(root)
     val proto = Storage.detect(root)
-    commitFrame(root, proto, decorate(schema, df, tombstone, seq = 0L),
-      serializableSince)
-  }
-
-  /** Decorate exactly as Transaction.flush: dims carry their chunk size in
-    * field metadata (ChunkPruneRule reads it), chunk columns derived, and
-    * the `_del`/`_seq` provenance set per frame — `_txn_id` is stamped by
-    * [[commitFrame]] once the id is claimed. */
-  private def decorate(schema: MatSchema, df: DataFrame,
-      tombstone: Boolean, seq: Long): DataFrame = {
-    val dimCols = schema.dimensions.map { dim =>
-      val md = new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong(MatSchema.ChunkKey, dim.chunkSize).build()
-      col(dim.name).as(dim.name, md)
-    }
-    val projected =
-      if (tombstone)
-        // tombstone rows: dimensions only, value columns null
-        schema.values.foldLeft(df.select(dimCols: _*)) { (d, v) =>
-          d.withColumn(v.name, lit(null).cast(v.dataType))
-        }
-      else df.select(dimCols ++ schema.valueNames.map(col): _*)
-    val withChunks = schema.dimensions.foldLeft(projected) { (d, dim) =>
-      d.withColumn(schema.chunkColName(dim.name),
-        graft.core.MatSchema.chunkKeyCol(col(dim.name), dim.chunkSize))
-    }
-    withChunks
-      .withColumn(Scan.DelCol, lit(tombstone))
-      .withColumn(Scan.SeqCol, lit(seq))
-  }
-
-  /** Claim a txn id, write the decorated frame chunk-routed into the
-    * claimed directory, publish through the table's protocol — one
-    * transaction (rows route with one shuffle keyed on the chunk columns,
-    * sorted by dims for row-group stats). */
-  private def commitFrame(root: Path, proto: graft.core.Protocol,
-      frame: DataFrame, serializableSince: Option[Long] = None): Option[Long] = {
-    val schema = Storage.readSchema(root)
+    val frame = Segment.decorate(schema, df, del = tombstone, seq = 0L)
     val (segId, segPath) = claimSegment(root, proto)
     writeClaimed(root, proto, schema, segId, segPath, frame, serializableSince)
   }
@@ -235,25 +186,7 @@ object GraftInsert {
   private def writeClaimed(root: Path, proto: graft.core.Protocol,
       schema: MatSchema, segId: SegmentId, segPath: Path,
       frame: DataFrame, serializableSince: Option[Long] = None): Option[Long] = {
-    val all = frame.withColumn(Scan.TxnCol, lit(segId.txnId))
-    // size-adaptive exchange + tiny-plan fast planning, exactly like
-    // Transaction.flush: a small DML batch collapses to one partition and
-    // skips whole-stage codegen (its txn-id literal defeats the codegen
-    // cache every commit); at scale the chunk-keyed exchange is unchanged.
-    // The sort's chunk-col prefix satisfies the partitioned write's
-    // required ordering, so V1Writes inserts no second sort.
-    val small = graft.core.FastPlan.isSmall(all)
-    val exchanged =
-      if (small) all.repartition(1)
-      else all.repartition(schema.chunkColNames.map(col): _*)
-    graft.core.FastPlan.scoped(frame.sparkSession, small)(exchanged
-      .sortWithinPartitions(
-        (schema.chunkColNames ++ schema.dimNames).map(col): _*)
-      .write.mode("append")
-      .option("compression", "zstd")
-      .options(Storage.parquetWriteOptions(Storage.readProps(root)))
-      .partitionBy(schema.chunkColNames: _*)
-      .parquet(segPath.toString))
+    Segment.write(schema, frame, segId.txnId, segPath, root)
     if (hasDataFiles(segPath)) {
       serializableSince match {
         case Some(h) =>

@@ -53,7 +53,7 @@ import graft.core.{MatSchema, Scan, SegmentId, Storage}
   * so Spark range-partitions and sorts the delta — each task then sees its
   * chunks contiguously and streams them out with ONE open parquet writer at
   * a time (rolling on chunk change), producing the same sorted, chunk-keyed
-  * segment layout as `Transaction.flush`. Executors write parquet straight
+  * segment layout as [[graft.core.Segment.write]]. Executors write parquet straight
   * into a CLAIMED segment directory (the put-if-absent txn claim shared
   * with [[GraftInsert]]) under task-unique `_tmp-*` names; the driver
   * commit renames the files named by the surviving attempts' commit
@@ -100,7 +100,7 @@ final class GraftDeltaWrite(table: GraftV2Table, info: LogicalWriteInfo)
 
   /** Range-partition + sort the delta by the dimensions so each task
     * writes each chunk directory once, in key order — the layout
-    * `Transaction.flush` gets from its chunk-keyed repartition, with the
+    * [[graft.core.Segment.write]] gets from its chunk-keyed repartition, with the
     * added benefit that segment files are globally key-ordered. Not
     * strictly required: the writer rolls files on chunk change either
     * way, an unsorted input just writes more, smaller files. */

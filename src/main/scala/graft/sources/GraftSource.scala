@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -160,37 +160,17 @@ class GraftRelation(
     filters.partition(_.references.forall(dims.contains))
   }
 
-  /** Spark `Filter` → `Column`; None for shapes we don't translate (Spark
-    * re-applies every filter on top of the scan, so dropping one only costs
-    * pushdown, never correctness). */
-  private def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v)            => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v)           => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case In(a, vs)                => Some(col(a).isInCollection(vs.toSeq))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v)     => Some(col(a).endsWith(v))
-    case StringContains(a, v)     => Some(col(a).contains(v))
-    case And(l, r)  => for { lc <- toColumn(l); rc <- toColumn(r) } yield lc && rc
-    case Or(l, r)   => for { lc <- toColumn(l); rc <- toColumn(r) } yield lc || rc
-    case Not(inner) => toColumn(inner).map(!_)
-    case _          => None
-  }
-
   /** The inner DataFrame a given (columns, filters) request resolves to —
     * exposed for plan tests: its executed plan must show the dimension
     * predicates as `PushedFilters` on the parquet scan and the pruned
     * `ReadSchema`. */
   def innerFrame(requiredColumns: Array[String], filters: Array[Filter]): DataFrame = {
     val (dimFilters, valueFilters) = splitFilters(filters.toSeq)
-    val pred = dimFilters.flatMap(toColumn).reduceOption(_ && _)
+    // a conjunct GraftFilters cannot translate is dropped: Spark re-applies
+    // every filter on top of the scan, so that only costs pushdown
+    val pred = dimFilters.flatMap(GraftFilters.one).reduceOption(_ && _)
     val resolved = db.snapshot(asOf, pred)
-    val post = valueFilters.flatMap(toColumn).reduceOption(_ && _)
+    val post = valueFilters.flatMap(GraftFilters.one).reduceOption(_ && _)
     val filtered = post.fold(resolved)(resolved.filter)
     // empty projection (e.g. count(*)) still needs a non-empty row shape
     if (requiredColumns.isEmpty) filtered.select(lit(1).as("_one"))

@@ -52,7 +52,7 @@ import graft.core.{SegmentId, Storage}
   * segments a replayed batch may still reference (same limitation as Delta's
   * streaming reads). Column types supported: long/int/double/float/string/
   * boolean/binary (the engine's own types; segments are written by
-  * [[graft.core.Transaction.flush]]).
+  * [[graft.core.Segment.write]]).
   *
   * Why per-file readers are fine HERE and not for the batch source
   * ([[graft.sources.GraftSource]] design note): the stream emits raw segment

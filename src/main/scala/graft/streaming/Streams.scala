@@ -198,8 +198,8 @@ object Streams {
     * MVCC-absorption contract as [[bucketedSink]], now covering deletes).
     *
     * Scale shape: the fold is one map-side-combining aggregate over the
-    * batch; the commit is `Transaction.flush`'s single chunk-keyed
-    * shuffle. History is never read, let alone shuffled — cost is
+    * batch; the commit is the segment writer's single chunk-keyed
+    * shuffle ([[graft.core.Segment.write]]). History is never read, let alone shuffled — cost is
     * O(batch), independent of table size. */
   def cdcApplySink(stream: DataFrame, db: MatDb, opCol: String, ordCol: String,
       checkpoint: String)

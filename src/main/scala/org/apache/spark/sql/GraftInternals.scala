@@ -43,6 +43,14 @@ object GraftInternals {
         cs, originStats, None))
   }
 
+  /** Column ⇄ Catalyst expression, for graft code that builds one
+    * expression for both the DataFrame API and an analyzer rule. */
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
   /** Unwrap Spark's `private[sql]` RowLevelOperationTable (the table the
     * UPDATE/MERGE rewrite plans its read relation against) back to the
     * underlying catalog table, so graft's analyzer rule can recognize its
