@@ -34,7 +34,7 @@ import graft.queries.{CoreOps, Curation, Pipeline, Q, Relational, TimeSeries}
   *     over the renamed pre-image frame, so expression extrema are
   *     exactly as incremental as column extrema): the engine's own
   *     operator semantics — scan order, MVCC upsert/delete, snapshot
-  *     horizon, range pruning, the bucketed/ranged/z-order layouts, SQL
+  *     horizon, range pruning, the ranged/z-order layouts, SQL
   *     DML (INSERT/INSERT OVERWRITE/DELETE/UPDATE/MERGE INTO/TRUNCATE —
   *     overwrite/truncate as O(new-data) manifest replace publishes)
   *     + VERSION AS OF (manifest-lineage time travel below replaces)

@@ -843,7 +843,7 @@ final class MatDb private (
     * has accumulated more than `maxSegments` committed segment sets,
     * keeping the newest `retainTxns` transactions time-travelable. Call it
     * after commits on a long-lived table (e.g. every N micro-batches —
-    * the MatDb counterpart of the bucketed sinks' `compactEvery`);
+    * the retention-keeping counterpart of the ingest sinks' `compactEvery`);
     * it is a no-op until the threshold trips, so calling often is cheap.
     * Returns the baseline txn id when a fold ran. */
   def checkpointIfNeeded(maxSegments: Int, retainTxns: Int): Option[Long] = {

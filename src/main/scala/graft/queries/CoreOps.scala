@@ -6,7 +6,7 @@ import Q._
 /** Queries q01-q05 + q73: the reference engine's own operator semantics
   * (SURVEY.md §2.1/§2.2) demonstrated over the driver's test tables.
   * The real implementations live in graft.core (table format + MVCC scan)
-  * and graft.sources.BucketedGraft (q73's zero-exchange bucketed layout);
+  * and graft.sources (the SQL catalog q73 commits and reads through);
   * these express the same semantics relationally so the DuckDB oracle can
   * check them. */
 object CoreOps {
@@ -80,10 +80,11 @@ object CoreOps {
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     },
 
-    // END-TO-END bucketed-layout MVCC (graft.sources.BucketedGraft): three
-    // transactions upsert per-user aggregates of the events table into a
-    // catalog table hash-bucketed on the key; the snapshot read resolves
-    // newest-txn-wins with ZERO exchanges (BucketedGraftSpec pins the plan;
+    // END-TO-END MVCC upsert through the SQL catalog: three transactions
+    // upsert per-user aggregates of the events table into a catalog table
+    // chunked on the key (GraftInsert.append, one claimed txn each); the
+    // catalog read resolves newest-txn-wins, and under v2 bucketing that
+    // resolve plans with ZERO exchanges (GraftCatalogSpec pins the plan;
     // this entry makes the whole write→commit→resolve path oracle-checked).
     // Batches are per-key pre-aggregated (arg_max by event_id) because
     // duplicate keys WITHIN one batch resolve arbitrarily by contract; the
@@ -94,21 +95,24 @@ object CoreOps {
         |      FROM b GROUP BY user_id, k)
         |SELECT user_id, arg_max(v, k) AS v
         |FROM m GROUP BY user_id ORDER BY user_id""".stripMargin)) { (s, d) =>
-      import graft.core.{Dimension, MatSchema, ValueCol}
-      import graft.sources.BucketedGraft
-      val name = "g73_bucketed"
-      val sch = MatSchema(Seq(Dimension("user_id", 1000)),
-        Seq(ValueCol("v", org.apache.spark.sql.types.DoubleType)))
-      BucketedGraft.drop(s, name)
-      BucketedGraft.create(s, name, sch, buckets = 8)
+      val root = Q.fixture("q73-catalog")
+      val dir = root.resolve("t")
+      graft.core.Storage.deleteRecursively(dir)
+      java.nio.file.Files.createDirectories(root)
+      if (s.conf.getOption("spark.sql.catalog.g73").isEmpty) {
+        s.conf.set("spark.sql.catalog.g73", "graft.sources.GraftCatalog")
+        s.conf.set("spark.sql.catalog.g73.root", root.toString)
+      }
+      s.sql("CREATE TABLE g73.t (user_id BIGINT, v DOUBLE) " +
+        "TBLPROPERTIES('graft.dims' = 'user_id:1000')")
       val ev = table(s, d, "events")
       (0 to 2).foreach { k =>
-        val batch = ev.where(col("event_id") % 3 === k)
-          .groupBy(col("user_id"))
-          .agg(max_by(col("value"), col("event_id")).as("v"))
-        BucketedGraft.append(s, name, sch, batch, buckets = 8)
+        graft.sources.GraftInsert.append(s, dir.toString,
+          ev.where(col("event_id") % 3 === k)
+            .groupBy(col("user_id"))
+            .agg(max_by(col("value"), col("event_id")).as("v")))
       }
-      BucketedGraft.snapshot(s, name, sch).orderBy(col("user_id"))
+      s.sql("SELECT user_id, v FROM g73.t ORDER BY user_id")
     },
 
     // #9 again, SQL-NATIVE: the same upsert history written as a

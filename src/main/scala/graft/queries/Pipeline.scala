@@ -953,7 +953,7 @@ object Pipeline {
 
     // incremental SEMANTIC dedup gate (streaming.Streams
     // .semanticNoveltyFilter — the per-micro-batch decision
-    // semanticBucketedIngest applies): a batch vector drops when cosine ≥
+    // semanticIngest applies): a batch vector drops when cosine ≥
     // 0.999 against any committed vector sharing a probed IVF bucket
     // (nprobe=2), or against a smaller-id batch vector whose primary
     // bucket it probes (the same probe rule as the history check) —

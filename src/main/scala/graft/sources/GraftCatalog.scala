@@ -63,10 +63,12 @@ import graft.core.{MatDb, MatSchema, Scan, Storage}
   * Scale notes: `loadTable` resolves the visible segment set driver-side
   * (a listing, no data IO) exactly like every other table format's snapshot
   * resolution; `VERSION AS OF` shrinks the FILE LIST, so time travel is
-  * metadata, not a filter. The bucketed layout ([[BucketedGraft]]) is a
-  * session-catalog table and keeps its own zero-exchange path — this catalog
-  * serves the directory layout, whose dedup legitimately needs its one
-  * exchange (BucketedGraftSpec continues to pin the bucketed plans).
+  * metadata, not a filter. With `spark.sql.sources.v2.bucketing.enabled`
+  * the scan reports `KeyGroupedPartitioning` over its chunk transforms
+  * ([[ChunkFunction]]), so the dedup and dims-keyed joins between
+  * chunk-aligned tables plan with zero exchanges; without it the dedup
+  * takes its one hash exchange (GraftCatalogSpec pins the zero-exchange
+  * plans).
   *
   * == Writes (round 8) ==
   * `INSERT INTO <cat>.<t> ...` commits one transaction per statement via

@@ -22,8 +22,7 @@ import graft.core.{MatSchema, Scan, Segment, SegmentId, Storage}
   *   1. CLAIMS the txn id by atomically creating its segment-0 directory —
   *      `Files.createDirectory` is put-if-absent at the filesystem, the
   *      same optimistic shape as the manifest protocol's `createLink`
-  *      publish (Storage.scala) and the bucketed layout's partition claim
-  *      (BucketedGraft.claimTxnId). A taken name (live writer, or a crash
+  *      publish (Storage.scala). A taken name (live writer, or a crash
   *      orphan awaiting sweep) just advances the candidate; a claimed-
   *      then-crashed insert leaves an unreferenced directory that the next
   *      `MatDb.open` recovery sweeps, its id burned — identical to a
@@ -39,8 +38,9 @@ import graft.core.{MatSchema, Scan, Segment, SegmentId, Storage}
   * The reference allocates ids in-process with no guard (database.rs:74-79);
   * this is the multi-writer counterpart its single-process model never
   * needed. Empty batches claim, detect emptiness from the written files,
-  * drop the claim, and commit nothing (no burned id, same contract as
-  * BucketedGraft.append). */
+  * drop the claim, and commit nothing (no burned id) — which is what keeps
+  * the streaming ingest sinks' raw history exactly-once under replay
+  * ([[graft.streaming.Streams.dedupedIngest]]). */
 object GraftInsert {
 
   /** Append `df` to the graft table at `dir` as one transaction; returns
@@ -344,8 +344,7 @@ object GraftInsert {
     }
 
   /** Any real data file under the claimed directory (chunk subdirs
-    * included)? Commit markers and hidden files don't count — the same
-    * emptiness rule as BucketedGraft.partitionHasData. */
+    * included)? Commit markers and hidden files don't count. */
   private def hasDataFiles(p: Path): Boolean = {
     val name = p.getFileName.toString
     if (Files.isDirectory(p)) list(p).exists(hasDataFiles)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{MatSchema, Scan, Storage}
 
 /** The RANGE-partitioned graft layout: the ordered-read counterpart of
-  * [[BucketedGraft]] (SURVEY.md §9.4 #7). Range boundaries on the leading
+  * the catalog's chunk-partitioned read (SURVEY.md §9.4 #7). Range boundaries on the leading
   * dimension are fixed at table creation and recorded in a manifest; every
   * append routes rows to their range piece (`_range_id=<i>` subdirectories,
   * plain dynamic-partition write — NO shuffle), so piece i of EVERY segment
@@ -26,13 +26,14 @@ import graft.core.{MatSchema, Scan, Storage}
   * are contiguous and emitted in order). Compare:
   *   - directory layout `MatDb.orderedScan`: one range Exchange (the whole
   *     table moves once);
-  *   - bucketed layout: zero-Exchange RESOLVE, but global ORDER still
-  *     range-exchanges (hash buckets are not contiguous);
+  *   - catalog read under v2 bucketing: zero-Exchange RESOLVE (chunk
+  *     key groups), but global ORDER still range-exchanges (key groups
+  *     carry no global order);
   *   - ranged layout: zero Exchange for resolve AND order.
   * RangedGraftSpec pins the Exchange-free plan and row parity.
   *
   * Cost model: the append pays range routing (a codegen'd when-chain, no
-  * shuffle — cheaper than the bucketed layout's hash exchange) but needs
+  * shuffle — the directory layout's writer pays a chunk-keyed exchange) but needs
   * representative BOUNDARIES up front (from a sample or a previous table's
   * statistics; `boundariesFromSample` below). Skewed boundaries skew pieces
   * — the usual range-partitioning trade. Pieces play the role
@@ -41,8 +42,8 @@ import graft.core.{MatSchema, Scan, Storage}
   *
   * Single-writer contract like the reference (database.rs:74-79): segment
   * numbering is read-then-write. Production multi-writer would port the
-  * claim allocation of [[BucketedGraft]]; this layout's contribution is the
-  * read side.
+  * put-if-absent claim of [[GraftInsert]]; this layout's contribution is
+  * the read side.
   *
   * Scale note: the scan builds one small parquet-read plan per piece and
   * unions their RDDs — O(pieces) driver-side plan nodes (pieces ≈ hundreds

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.MatDb
+import graft.core.{MatDb, Scan, Storage}
+import graft.sources.GraftInsert
 
 /** Structured Streaming surface (SURVEY.md §2.3 "Streaming"): the reference
   * has none, but its append-only segment model is micro-batch shaped — the
@@ -103,7 +104,14 @@ object Streams {
   }
 
   /** foreachBatch sink: each micro-batch commits as ONE graft transaction —
-    * atomic visibility per batch, rollback on failure (nothing renamed). */
+    * atomic visibility per batch, rollback on failure (nothing renamed).
+    *
+    * Replay: a crash between the commit and the checkpoint commit makes
+    * Spark re-run the batch, which lands the SAME rows under a second txn
+    * id — newest-wins resolution returns the identical snapshot, so the
+    * RESOLVED view is exactly-once while the raw history is at-least-once.
+    * Everything the stream writes reads back through the catalog's
+    * chunk-partitioned resolve (zero exchanges under v2 bucketing). */
   def matDbSink(stream: DataFrame, db: MatDb, checkpoint: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
@@ -115,52 +123,13 @@ object Streams {
         txn.commit()
       }
 
-  /** foreachBatch sink into the BUCKETED layout
-    * ([[graft.sources.BucketedGraft]]): each micro-batch commits as one
-    * bucketed transaction, so everything written by the stream is
-    * immediately readable with the zero-exchange resolve. The batch pays
-    * the bucket hash shuffle — the same write-side cost the layout always
-    * trades for exchange-free reads.
-    *
-    * Replay semantics: a crash between the batch's table append and the
-    * checkpoint commit makes Spark re-run the batch, which lands the SAME
-    * rows under a second txn id — newest-wins resolution then returns the
-    * identical snapshot (duplicate upserts are absorbed by MVCC), so the
-    * RESOLVED view is effectively exactly-once while the raw txn history
-    * is at-least-once. The spec asserts both halves.
-    *
-    * Operations notes: txn ids are claim-allocated (see
-    * [[graft.sources.BucketedGraft]]'s concurrency contract), so another
-    * writer can never merge into a micro-batch's transaction, but the DATA
-    * write phase should not overlap other writers on stock Hadoop
-    * committers. A long-running stream accrues one txn partition per
-    * micro-batch — keep listings and snapshot file counts bounded with
-    * [[graft.sources.BucketedGraft.compact]], and run it ONLY at this
-    * stream's own serialization point (inside this foreachBatch, e.g.
-    * every Nth batch) or with the stream stopped: compact rewrites the
-    * snapshot it read, and while it aborts when it detects a transaction
-    * committed under it, the detect-then-overwrite window cannot be fully
-    * closed at a last-writer-wins metastore. The dedup ingest sinks
-    * expose exactly that policy as their `compactEvery` parameter. */
-  def bucketedSink(stream: DataFrame, table: String, schema: graft.core.MatSchema,
-      buckets: Int, checkpoint: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.BucketedGraft.append(batch.sparkSession, table, schema,
-          batch, buckets)
-        ()
-      }
-
   /** foreachBatch sink into the RANGED layout
     * ([[graft.sources.RangedGraft]]): each micro-batch commits as one
     * ranged transaction — rows routed to their range piece with NO shuffle
     * (a dynamic-partition write against the table's fixed boundaries), and
     * everything the stream writes is immediately readable with the
     * fully exchange-free ordered scan. Replay semantics are the same
-    * MVCC-absorption as [[bucketedSink]]: a re-run batch lands under a
+    * MVCC-absorption as [[matDbSink]]: a re-run batch lands under a
     * fresh txn id and newest-wins resolution returns the identical
     * snapshot. Single writer per table (RangedGraft's id allocation is
     * read-then-write); a streaming sink IS that single writer. */
@@ -195,7 +164,7 @@ object Streams {
     * a fresh txn id — tombstone-over-tombstone and upsert-over-equal-
     * upsert both resolve to the identical snapshot, so the RESOLVED view
     * is exactly-once while the raw history is at-least-once (the same
-    * MVCC-absorption contract as [[bucketedSink]], now covering deletes).
+    * MVCC-absorption contract as [[matDbSink]], now covering deletes).
     *
     * Scale shape: the fold is one map-side-combining aggregate over the
     * batch; the commit is the segment writer's single chunk-keyed
@@ -530,20 +499,55 @@ object Streams {
       }
   }
 
-  /** Shared by the bucketed ingest sinks: fold the raw transaction log
-    * into one compacted txn every `compactEvery` micro-batches, INSIDE the
-    * sink's own foreachBatch — the one place BucketedGraft.compact's
-    * concurrency contract blesses, because the sink is the table's single
-    * writer and a batch is its serialization point. Dedup semantics
-    * survive compaction: every sink lands a row at most once, so the
-    * newest-wins fold preserves exactly the committed
-    * fingerprint/signature/vector set the next batch joins against.
-    * compactEvery = 0 disables (the default). */
-  private def maybeCompact(spark: SparkSession, table: String,
-      schema: graft.core.MatSchema, buckets: Int, batchId: Long,
-      compactEvery: Int): Unit =
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      graft.sources.BucketedGraft.compact(spark, table, schema, buckets)
+  /** The table at `dir` as committed: every version of every key, with
+    * provenance, no MVCC resolve — the "ever committed" history the dedup
+    * ingest sinks gate each batch against. One protocol listing plus one
+    * [[graft.core.Scan.raw]] file scan: no `MatDb.open`, so no recovery
+    * sweep runs per micro-batch. It stays raw because the media table
+    * stores several frame rows under one `doc_id` key. */
+  private[graft] def committedRows(spark: SparkSession, dir: String): DataFrame = {
+    val root = Storage.rootPath(dir)
+    val proto = Storage.detect(root)
+    Scan.raw(spark, Storage.readSchema(root),
+      proto.listCommitted(root).sorted.map(s => proto.readPath(root, s).toString), Nil)
+  }
+
+  /** The dedup ingest sinks' shared micro-batch loop. `prepare` derives
+    * the batch's signature rows (persisted for the batch); each admitted
+    * slice ([[admittedSlices]]) is gated by `fresh(slice, history)` against
+    * [[committedRows]] and its survivors commit through
+    * [[graft.sources.GraftInsert.append]] — one claimed txn id per slice,
+    * nothing committed for an empty one, so a replayed batch that the gate
+    * empties leaves the raw history untouched. Every `compactEvery`
+    * micro-batches (0 = never) the table compacts ([[MatDb.compact]], the
+    * same call as `CALL system.compact`): its replace publish is
+    * conflict-checked, so a concurrent writer aborts it instead of being
+    * overwritten. Survivors of batch N are history for batch N+1. */
+  private def ingestSink(stream: DataFrame, dir: String, checkpoint: String,
+      sliceKey: Column, compactEvery: Int, maxBatchRows: Long)(
+      prepare: DataFrame => DataFrame)(
+      fresh: (DataFrame, DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        val rows = prepare(batch).persist()
+        try admittedSlices(rows, sliceKey, maxBatchRows).foreach { slice =>
+          GraftInsert.append(spark, dir, fresh(slice, committedRows(spark, dir)))
+        } finally rows.unpersist()
+        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+          MatDb.open(spark, dir).compact()
+        ()
+      }
+
+  /** Fails unless the table at `dir` persists every column in `cols`. */
+  private def requireColumns(dir: String, cols: String*): Unit = {
+    val names = Storage.readSchema(Storage.rootPath(dir)).columnNames
+    require(cols.forall(names.contains),
+      s"the table schema must persist ${cols.mkString("(", ", ", ")")}")
+  }
 
   /** Default per-batch admission bound for the dedup ingest sinks' "batch
     * broadcasts, history streams" contract (~1M rows). At this size the
@@ -594,7 +598,7 @@ object Streams {
     * corpus per call (anti builds on its right side, which here is the
     * 100 TB one). `hits` is distinct'd before broadcast; for a history
     * that is itself fp-deduped (anything ingested through
-    * [[dedupedBucketedIngest]]) its pre-distinct size is ≤ the batch's. */
+    * [[dedupedIngest]]) its pre-distinct size is ≤ the batch's. */
   def noveltyFilter(batch: DataFrame, history: DataFrame, fpCol: String): DataFrame = {
     val fps = batch.select(col(fpCol)).distinct()
     val hits = history.select(col(fpCol))
@@ -614,49 +618,36 @@ object Streams {
   /** Incremental corpus ingestion with exact dedup against all history:
     * each micro-batch keeps only documents whose text fingerprint
     * ([[graft.functions.Fingerprint64]], codegen FNV-1a) has never been
-    * seen — neither in any committed transaction of `table` nor earlier in
-    * the same batch — and commits the survivors as ONE bucketed
-    * transaction. Survivors of batch N are history for batch N+1 (the
-    * stream-static read re-resolves per micro-batch).
+    * seen — neither in any committed transaction of the table at `dir` nor
+    * earlier in the same batch — and commits the survivors as ONE
+    * transaction ([[ingestSink]]).
     *
-    * Membership is tested against the RAW transaction log (`spark.table`),
-    * not the resolved snapshot: "ever committed" is the question, so the
-    * scan needs no MVCC aggregate — just a column-pruned pass over `fpCol`.
+    * Membership is tested against the RAW committed rows
+    * ([[committedRows]]), not the resolved snapshot: "ever committed" is
+    * the question, so the scan needs no MVCC aggregate — just a
+    * column-pruned pass over `fpCol`.
     *
     * Replay: a batch re-run after a crash between append and checkpoint
     * commit finds all its fingerprints already in history, so the
     * novelty filter drops every row and the empty append claims no txn —
-    * unlike [[bucketedSink]], the RAW history is exactly-once too, because
+    * unlike [[matDbSink]], the RAW history is exactly-once too, because
     * the dedup join IS the idempotence check. The spec asserts this.
     *
-    * `fpCol` must be a column of `schema` so the fingerprint persists —
+    * `fpCol` must be a column of the table so the fingerprint persists —
     * future batches (and batch backfills via [[noveltyFilter]]) read 8
     * bytes per doc instead of re-hashing the corpus. Two distinct texts
     * colliding on the 64-bit fp drop one of them, the standard exact-dedup
     * trade (~n²/2⁶⁵ corpus-wide; negligible below ~10⁹ docs). */
-  def dedupedBucketedIngest(stream: DataFrame, table: String,
-      schema: graft.core.MatSchema, buckets: Int, textCol: String,
+  def dedupedIngest(stream: DataFrame, dir: String, textCol: String,
       fpCol: String, checkpoint: String, compactEvery: Int = 0,
       maxBatchRows: Long = DefaultMaxBatchRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(schema.columnNames.contains(fpCol),
-      s"fingerprint column '$fpCol' must be part of the table schema")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.functions.Fingerprint64.register(spark) // idempotent
-        val fped = batch
-          .withColumn(fpCol, graft.functions.Fingerprint64.fingerprint64(col(textCol)))
-          .dropDuplicates(fpCol)
-          .persist()
-        try admittedSlices(fped, col(fpCol), maxBatchRows).foreach { slice =>
-          val fresh = noveltyFilter(slice, spark.table(table), fpCol)
-          graft.sources.BucketedGraft.append(spark, table, schema, fresh, buckets)
-        } finally fped.unpersist()
-        maybeCompact(spark, table, schema, buckets, batchId, compactEvery)
-      }
+    requireColumns(dir, fpCol)
+    ingestSink(stream, dir, checkpoint, col(fpCol), compactEvery, maxBatchRows) { batch =>
+      graft.functions.Fingerprint64.register(batch.sparkSession) // idempotent
+      batch.withColumn(fpCol, graft.functions.Fingerprint64.fingerprint64(col(textCol)))
+        .dropDuplicates(fpCol)
+    } { (slice, history) => noveltyFilter(slice, history, fpCol) }
   }
 
   /** Rows of `batch` with no SimHash NEAR-duplicate — Hamming ≤ `maxDist`
@@ -700,7 +691,7 @@ object Streams {
     * against all committed history.
     *
     * `history` must carry its IVF `bucket` from ingest (an 8-byte column;
-    * [[semanticBucketedIngest]] persists it); the batch assigns itself and
+    * [[semanticIngest]] persists it); the batch assigns itself and
     * probes its `nprobe` nearest buckets via the driver-sized centroid
     * table riding the closure. Scale shape: the history side is NEVER
     * shuffled — it streams through one broadcast-hash join against the
@@ -769,48 +760,34 @@ object Streams {
   }
 
   /** Incremental SEMANTIC dedup ingest — the embedding-space member of the
-    * sink family (exact [[dedupedBucketedIngest]], SimHash
-    * [[nearDupBucketedIngest]], media [[mediaNearDupIngest]]): each
-    * micro-batch keeps only vectors with no committed cosine-near-dup
-    * ([[semanticNoveltyFilter]]) and commits survivors as one bucketed
-    * transaction WITH their IVF bucket, so every future batch's candidate
-    * join reads history buckets instead of re-assigning the corpus. The
-    * centroid table is trained offline (IvfIndex.train) and rides the
-    * closure, k×dim doubles.
+    * sink family (exact [[dedupedIngest]], SimHash [[nearDupIngest]],
+    * media [[mediaNearDupIngest]]): each micro-batch keeps only vectors
+    * with no committed cosine-near-dup ([[semanticNoveltyFilter]]) and
+    * commits survivors as one transaction WITH their IVF bucket, so every
+    * future batch's candidate join reads history buckets instead of
+    * re-assigning the corpus. The centroid table is trained offline
+    * (IvfIndex.train) and rides the closure, k×dim doubles.
     *
     * Replay: a re-run batch meets its own committed vectors at cosine
     * exactly 1.0 ≥ tau (identical operands, identical fold), so every row
     * drops and no txn is claimed — raw history exactly-once. */
-  def semanticBucketedIngest(stream: DataFrame, table: String,
-      schema: graft.core.MatSchema, buckets: Int, idCol: String,
+  def semanticIngest(stream: DataFrame, dir: String, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]], tau: Double,
       checkpoint: String, nprobe: Int = 2, compactEvery: Int = 0,
       maxBatchRows: Long = DefaultMaxBatchRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(schema.columnNames.contains("bucket"),
-      "the table schema must persist the 'bucket' column")
-    require(schema.columnNames.contains(vecCol),
-      s"the table schema must persist the '$vecCol' column")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import graft.functions.VectorOps.dotCol
-        val cached = batch.persist()
-        try admittedSlices(cached, col(idCol), maxBatchRows).foreach { slice =>
-          val fresh = semanticNoveltyFilter(slice, spark.table(table),
-            idCol, vecCol, centroids, tau, nprobe)
-          val dl = array(centroids.map(c =>
-            dotCol(col(vecCol).cast("array<double>"), typedlit(c))): _*)
-          val withBucket = fresh.withColumn("_dl", dl)
-            .withColumn("bucket", expr("array_position(_dl, array_max(_dl)) - 1"))
-            .withColumn(vecCol, col(vecCol).cast("array<double>"))
-            .drop("_dl")
-          graft.sources.BucketedGraft.append(spark, table, schema, withBucket, buckets)
-        } finally cached.unpersist()
-        maybeCompact(spark, table, schema, buckets, batchId, compactEvery)
-      }
+    requireColumns(dir, "bucket", vecCol)
+    import graft.functions.VectorOps.dotCol
+    ingestSink(stream, dir, checkpoint, col(idCol), compactEvery, maxBatchRows)(identity) {
+      (slice, history) =>
+        val fresh = semanticNoveltyFilter(slice, history, idCol, vecCol, centroids, tau, nprobe)
+        val dl = array(centroids.map(c =>
+          dotCol(col(vecCol).cast("array<double>"), typedlit(c))): _*)
+        fresh.withColumn("_dl", dl)
+          .withColumn("bucket", expr("array_position(_dl, array_max(_dl)) - 1"))
+          .withColumn(vecCol, col(vecCol).cast("array<double>"))
+          .drop("_dl")
+    }
   }
 
   /** Surviving SIGNATURE rows of a media micro-batch: a document drops
@@ -866,14 +843,16 @@ object Streams {
   }
 
   /** Incremental near-dup ingest for IMAGE/VIDEO streams — the multimodal
-    * sibling of [[nearDupBucketedIngest]]: each micro-batch of media rows
+    * sibling of [[nearDupIngest]]: each micro-batch of media rows
     * (doc_id, kind, media) is decoded and pHashed partition-parallel
     * ([[graft.multimodal.Multimodal.mediaPhashes]]: images one signature,
     * videos one per `stride`-sampled frame), gated by
     * [[mediaNearDupFilter]] against every committed signature, and the
-    * surviving documents' signature rows commit as ONE bucketed
-    * transaction. Only 24-byte signatures are ever persisted or joined —
-    * the media bytes never leave the batch scan.
+    * surviving documents' signature rows commit as ONE transaction. Only
+    * 24-byte signatures are ever persisted or joined — the media bytes
+    * never leave the batch scan. Slices split on doc_id, so a document's
+    * frames stay in one slice — minFrames counts distinct frames per doc
+    * within the gate call.
     *
     * Replay: exactly-once raw history holds by DOC IDENTITY, not by the
     * near-dup gate alone — survivors are additionally anti-joined against
@@ -886,78 +865,55 @@ object Streams {
     * minFrames-independent. It also makes re-sending a previously
     * committed doc_id a no-op, which is what "incremental ingest by id"
     * should mean. */
-  def mediaNearDupIngest(stream: DataFrame, table: String,
-      schema: graft.core.MatSchema, buckets: Int, checkpoint: String,
+  def mediaNearDupIngest(stream: DataFrame, dir: String, checkpoint: String,
       stride: Int = 1, minFrames: Int = 1,
       maxDist: Int = graft.operators.SimHashBands.MaxHamming, bands: Int = 3,
       compactEvery: Int = 0, maxBatchRows: Long = DefaultMaxBatchRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(Seq("doc_id", "frame_idx", "phash").forall(schema.columnNames.contains),
-      "the table schema must persist (doc_id, frame_idx, phash)")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val media = batch.select(col("doc_id"), col("kind"), col("media"))
-          .as[graft.multimodal.Multimodal.MediaRow]
-        // persist the SIGNATURES, not the media: slicing must not re-decode
-        // the batch, and admission counts signature rows (what broadcasts)
-        val sigs = graft.multimodal.Multimodal.mediaPhashes(media, stride).persist()
-        // slice on doc_id so a document's frames stay in one slice —
-        // minFrames counts distinct frames per doc within the gate call
-        try admittedSlices(sigs, col("doc_id"), maxBatchRows).foreach { slice =>
-          val gated = mediaNearDupFilter(slice, spark.table(table), minFrames,
-            maxDist, bands)
-          // exact doc-identity replay guard (independent of minFrames): a
-          // doc_id ever committed never commits again, whatever its frame
-          // count — history streams, only batch-derived ids broadcast
-          val ids = gated.select(col("doc_id")).distinct()
-          val committed = spark.table(table).select(col("doc_id"))
-            .join(broadcast(ids), Seq("doc_id"), "left_semi").distinct()
-          val fresh = gated.join(broadcast(committed), Seq("doc_id"), "left_anti")
-          graft.sources.BucketedGraft.append(spark, table, schema, fresh, buckets)
-        } finally sigs.unpersist()
-        maybeCompact(spark, table, schema, buckets, batchId, compactEvery)
-      }
+    requireColumns(dir, "doc_id", "frame_idx", "phash")
+    // the batch's SIGNATURES are what persists, not the media: slicing must
+    // not re-decode the batch, and admission counts signature rows (what
+    // broadcasts)
+    ingestSink(stream, dir, checkpoint, col("doc_id"), compactEvery, maxBatchRows) { batch =>
+      import batch.sparkSession.implicits._
+      graft.multimodal.Multimodal.mediaPhashes(
+        batch.select(col("doc_id"), col("kind"), col("media"))
+          .as[graft.multimodal.Multimodal.MediaRow], stride)
+    } { (slice, history) =>
+      val gated = mediaNearDupFilter(slice, history, minFrames, maxDist, bands)
+      // exact doc-identity replay guard (independent of minFrames): a
+      // doc_id ever committed never commits again, whatever its frame
+      // count — history streams, only batch-derived ids broadcast
+      val ids = gated.select(col("doc_id")).distinct()
+      val committed = history.select(col("doc_id"))
+        .join(broadcast(ids), Seq("doc_id"), "left_semi").distinct()
+      gated.join(broadcast(committed), Seq("doc_id"), "left_anti")
+    }
   }
 
-  /** [[dedupedBucketedIngest]]'s near-dup sibling: each micro-batch keeps
-    * only documents NOT within Hamming `maxDist` of any committed doc's
-    * SimHash (nor of a smaller-id doc in the same batch) and commits the
-    * survivors as one bucketed transaction. The signature is the
-    * [[graft.functions.Simhash56]] codegen kernel over whitespace tokens
-    * (identical to the q48 battery query), persisted in `simhash` so the
-    * history side of every future batch is an 8-byte column scan.
+  /** [[dedupedIngest]]'s near-dup sibling: each micro-batch keeps only
+    * documents NOT within Hamming `maxDist` of any committed doc's SimHash
+    * (nor of a smaller-id doc in the same batch) and commits the survivors
+    * as one transaction. The signature is the [[graft.functions.Simhash56]]
+    * codegen kernel over whitespace tokens (identical to the q48 battery
+    * query), persisted in `simhash` so the history side of every future
+    * batch is an 8-byte column scan.
     *
     * Replay: a re-run batch finds each of its docs within distance 0 of
     * its own committed copy, so every row drops and no txn is claimed —
     * raw history is exactly-once, same argument as the exact sink. */
-  def nearDupBucketedIngest(stream: DataFrame, table: String,
-      schema: graft.core.MatSchema, buckets: Int, textCol: String,
+  def nearDupIngest(stream: DataFrame, dir: String, textCol: String,
       idCol: String, checkpoint: String,
       maxDist: Int = graft.operators.SimHashBands.MaxHamming,
       compactEvery: Int = 0, maxBatchRows: Long = DefaultMaxBatchRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(schema.columnNames.contains("simhash"),
-      "the table schema must persist the 'simhash' column")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.functions.TextOps.register(spark) // idempotent
-        val sigged = batch.withColumn("simhash",
-          graft.functions.TextOps.simhash56Col(split(lower(col(textCol)), "\\s+")))
-          .where(col("simhash").isNotNull)
-          .persist()
-        try admittedSlices(sigged, col(idCol), maxBatchRows).foreach { slice =>
-          val fresh = nearDupFilter(slice, spark.table(table), idCol, maxDist)
-          graft.sources.BucketedGraft.append(spark, table, schema, fresh, buckets)
-        } finally sigged.unpersist()
-        maybeCompact(spark, table, schema, buckets, batchId, compactEvery)
-      }
+    requireColumns(dir, "simhash")
+    ingestSink(stream, dir, checkpoint, col(idCol), compactEvery, maxBatchRows) { batch =>
+      graft.functions.TextOps.register(batch.sparkSession) // idempotent
+      batch.withColumn("simhash",
+        graft.functions.TextOps.simhash56Col(split(lower(col(textCol)), "\\s+")))
+        .where(col("simhash").isNotNull)
+    } { (slice, history) => nearDupFilter(slice, history, idCol, maxDist) }
   }
 
   /** Shared driver-side pool for grouped view maintenance: a handful of

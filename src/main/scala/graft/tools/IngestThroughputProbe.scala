@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dimension, MatSchema, ValueCol}
-import graft.sources.BucketedGraft
+import graft.core.{Dimension, MatDb, MatSchema, Storage, ValueCol}
 import graft.streaming.Streams
 
 /** Throughput evidence for the four dedup ingest sinks — the question the
@@ -14,8 +13,8 @@ import graft.streaming.Streams
   * through one broadcast-hash join, only batch-derived sides broadcast")
   * predicts per-batch wall time ~ O(|history| scan + |batch| work), i.e.
   * slow linear growth from the column-pruned history scan and NO
-  * superlinear blowup; `compactEvery` bounds the txn-partition count so
-  * the scan does not degrade into a many-small-files listing problem.
+  * superlinear blowup; `compactEvery` bounds the committed segment count
+  * so the scan does not degrade into a many-small-files listing problem.
   *
   * The probe drives each sink through a MemoryStream with batches ~10×
   * the StreamingSpec volumes (exact/SimHash: 10k docs; semantic: 1k
@@ -67,12 +66,18 @@ object IngestThroughputProbe {
     }
   }
 
-  /** Drive a started streaming query batch-by-batch, timing each
-    * `processAllAvailable`, reading back committed-history size per batch. */
-  private def drive[A](spark: SparkSession,
-      input: MemoryStream[A], start: () => org.apache.spark.sql.streaming.StreamingQuery,
-      batches: Seq[Seq[A]], historyCount: () => Long): Seq[BatchPoint] = {
-    val q = start()
+  /** Drive a streaming query into a fresh manifest table batch-by-batch,
+    * timing each `processAllAvailable` and reading back the committed-history
+    * size per batch; the table is deleted afterwards. `start` gets the
+    * table directory. */
+  private def drive[A](spark: SparkSession, schema: MatSchema,
+      input: MemoryStream[A], start: String => org.apache.spark.sql.streaming.StreamingQuery,
+      batches: Seq[Seq[A]]): Seq[BatchPoint] = {
+    val home = java.nio.file.Files.createTempDirectory("graft-tp-table")
+    val dir = home.resolve("t").toString
+    MatDb.create(spark, schema, dir, "manifest")
+    def historyCount(): Long = Streams.committedRows(spark, dir).count()
+    val q = start(dir)
     try batches.zipWithIndex.map { case (rows, i) =>
       val before = historyCount()
       val t0 = System.nanoTime()
@@ -81,47 +86,33 @@ object IngestThroughputProbe {
       val dt = (System.nanoTime() - t0) / 1e9
       val after = historyCount()
       BatchPoint(i, rows.size.toLong, after - before, dt, after)
-    } finally q.stop()
+    } finally { q.stop(); Storage.deleteRecursively(home) }
   }
 
   def exactProbe(spark: SparkSession, nBatches: Int, batchRows: Int): Seq[BatchPoint] = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val table = "probe_exact_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 100000)),
       Seq(ValueCol("fp"), ValueCol("text", org.apache.spark.sql.types.StringType)))
-    BucketedGraft.create(spark, table, schema, buckets = 8)
     val cp = java.nio.file.Files.createTempDirectory("graft-tp-exact").toString
     val input = MemoryStream[(Long, String)]
-    val pts = drive[(Long, String)](spark, input,
-      () => Streams.dedupedBucketedIngest(input.toDF().toDF("doc_id", "text"),
-        table, schema, buckets = 8, textCol = "text", fpCol = "fp", cp,
-        compactEvery = 3).start(),
-      textBatches(nBatches, batchRows, 0.10, seed = 7L),
-      () => spark.table(table).count())
-    BucketedGraft.drop(spark, table)
-    pts
+    drive[(Long, String)](spark, schema, input,
+      dir => Streams.dedupedIngest(input.toDF().toDF("doc_id", "text"),
+        dir, textCol = "text", fpCol = "fp", cp, compactEvery = 3).start(),
+      textBatches(nBatches, batchRows, 0.10, seed = 7L))
   }
 
   def simhashProbe(spark: SparkSession, nBatches: Int, batchRows: Int): Seq[BatchPoint] = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val table = "probe_simhash_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 100000)),
       Seq(ValueCol("simhash"), ValueCol("text", org.apache.spark.sql.types.StringType)))
-    BucketedGraft.create(spark, table, schema, buckets = 8)
     val cp = java.nio.file.Files.createTempDirectory("graft-tp-simhash").toString
     val input = MemoryStream[(Long, String)]
-    val pts = drive[(Long, String)](spark, input,
-      () => Streams.nearDupBucketedIngest(input.toDF().toDF("doc_id", "text"),
-        table, schema, buckets = 8, textCol = "text", idCol = "doc_id", cp,
-        compactEvery = 3).start(),
-      textBatches(nBatches, batchRows, 0.10, seed = 11L),
-      () => spark.table(table).count())
-    BucketedGraft.drop(spark, table)
-    pts
+    drive[(Long, String)](spark, schema, input,
+      dir => Streams.nearDupIngest(input.toDF().toDF("doc_id", "text"),
+        dir, textCol = "text", idCol = "doc_id", cp, compactEvery = 3).start(),
+      textBatches(nBatches, batchRows, 0.10, seed = 11L))
   }
 
   def semanticProbe(spark: SparkSession, nBatches: Int, batchRows: Int,
@@ -157,23 +148,18 @@ object IngestThroughputProbe {
       batch
     }
 
-    val table = "probe_semantic_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("vec_id", 100000)),
       Seq(ValueCol("bucket"),
         ValueCol("embedding", org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType))))
-    BucketedGraft.create(spark, table, schema, buckets = 8)
     val cp = java.nio.file.Files.createTempDirectory("graft-tp-sem").toString
     val input = MemoryStream[(Long, Seq[Double])]
-    val pts = drive[(Long, Seq[Double])](spark, input,
-      () => Streams.semanticBucketedIngest(
-        input.toDF().toDF("vec_id", "embedding"), table, schema, buckets = 8,
+    drive[(Long, Seq[Double])](spark, schema, input,
+      dir => Streams.semanticIngest(
+        input.toDF().toDF("vec_id", "embedding"), dir,
         idCol = "vec_id", vecCol = "embedding", cents, tau, cp,
         compactEvery = 3).start(),
-      batches, () => spark.table(table).count())
-    BucketedGraft.drop(spark, table)
-    pts
+      batches)
   }
 
   def mediaProbe(spark: SparkSession, nBatches: Int, batchRows: Int): Seq[BatchPoint] = {
@@ -206,21 +192,16 @@ object IngestThroughputProbe {
       prev = batch
       batch
     }
-    val table = "probe_media_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 100000)),
       Seq(ValueCol("frame_idx", org.apache.spark.sql.types.IntegerType),
         ValueCol("phash")))
-    BucketedGraft.create(spark, table, schema, buckets = 8)
     val cp = java.nio.file.Files.createTempDirectory("graft-tp-media").toString
     val input = MemoryStream[(Long, String, Array[Byte])]
-    val pts = drive[(Long, String, Array[Byte])](spark, input,
-      () => Streams.mediaNearDupIngest(
-        input.toDF().toDF("doc_id", "kind", "media"), table, schema,
-        buckets = 8, cp, maxDist = 2, compactEvery = 3).start(),
-      batches, () => spark.table(table).count())
-    BucketedGraft.drop(spark, table)
-    pts
+    drive[(Long, String, Array[Byte])](spark, schema, input,
+      dir => Streams.mediaNearDupIngest(
+        input.toDF().toDF("doc_id", "kind", "media"), dir, cp,
+        maxDist = 2, compactEvery = 3).start(),
+      batches)
   }
 
   /** Cost growth while history grows: mean of the last two batch times over
@@ -241,8 +222,6 @@ object IngestThroughputProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-tp-wh").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -13,6 +13,28 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  // sink tables live under one catalog root, so their resolved state reads
+  // back through the catalog (SELECT ... FROM gsink.<t>)
+  private lazy val sinkRoot = {
+    val dir = Files.createTempDirectory("graft-sink-catalog")
+    spark.conf.set("spark.sql.catalog.gsink", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gsink.root", dir.toString)
+    dir
+  }
+
+  /** A fresh manifest table `gsink.<name>`; returns its directory. */
+  private def sinkTable(name: String, schema: MatSchema): String = {
+    val dir = sinkRoot.resolve(name).toString
+    MatDb.create(spark, schema, dir, "manifest")
+    dir
+  }
+
+  /** Highest committed txn id of the table at `dir`. */
+  private def watermark(dir: String): Long = {
+    val root = graft.core.Storage.rootPath(dir)
+    graft.core.Storage.detect(root).txnWatermark(root)
+  }
+
   test("tumbling window counts with watermark over a memory stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -757,56 +779,55 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("bucketed sink: micro-batch = bucketed transaction, replay is MVCC-absorbed") {
+  test("matDb sink: micro-batch = one transaction, replay is MVCC-absorbed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
-    val table = "bg_stream_sink"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("k", 100)), Seq(ValueCol("v")))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-bsink").toString
+    val dir = sinkTable("msink", schema)
+    val db = MatDb.open(spark, dir)
+    val checkpoint = java.nio.file.Files.createTempDirectory("graft-msink").toString
 
     val input = MemoryStream[(Long, Long)]
-    val q = Streams.bucketedSink(input.toDF().toDF("k", "v"), table, schema,
-      buckets = 4, checkpoint).start()
+    val q = Streams.matDbSink(input.toDF().toDF("k", "v"), db, checkpoint).start()
+    def resolved() = spark.sql("SELECT k, v FROM gsink.msink ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     try {
       input.addData((1L, 10L), (2L, 20L))
       q.processAllAvailable()
       input.addData((1L, 11L)) // upsert same key in a later micro-batch
       q.processAllAvailable()
-      val snap = BucketedGraft.snapshot(spark, table, schema)
-      val vals = snap.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(vals.toSeq === Seq((1L, 11L), (2L, 20L)))
-      // streamed writes read back with the layout's zero-exchange resolve
-      graft.core.TestSpark.assertNoExchange(snap, "streamed bucketed resolve")
-      // one bucketed transaction per micro-batch
-      assert(BucketedGraft.nextTxnId(spark, table) === 3L)
+      assert(resolved() === Seq((1L, 11L), (2L, 20L)))
+      // streamed writes read back through the catalog with the chunk-keyed
+      // zero-exchange resolve
+      val saved = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
+      try {
+        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+        graft.core.TestSpark.assertNoExchange(
+          spark.sql("SELECT k, v FROM gsink.msink"), "streamed catalog resolve")
+      } finally saved.fold(spark.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
+        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
+      // one transaction per micro-batch
+      assert(watermark(dir) === 2L)
 
-      // a replayed batch (crash between append and checkpoint commit) lands
+      // a replayed batch (crash between commit and checkpoint commit) lands
       // the same rows under a NEW txn (raw history is at-least-once: the
-      // append must really commit — txn 3 exists)...
-      assert(BucketedGraft.append(spark, table, schema,
-        spark.createDataFrame(Seq((1L, 11L))).toDF("k", "v"), buckets = 4) === Some(3L))
-      assert(BucketedGraft.nextTxnId(spark, table) === 4L)
+      // replay must really commit — txn 3 exists)...
+      val replay = db.newTransaction()
+      replay.addRows(Seq((1L, 11L)).toDF("k", "v"))
+      replay.commit()
+      assert(replay.id === Some(3L))
+      assert(watermark(dir) === 3L)
       // ...while the RESOLVED view is unchanged (exactly-once effect)
-      val replayed = BucketedGraft.snapshot(spark, table, schema)
-        .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(replayed.toSeq === Seq((1L, 11L), (2L, 20L)))
+      assert(resolved() === Seq((1L, 11L), (2L, 20L)))
 
-      // compaction collapses the accrued per-batch partitions to ONE txn
-      // (the small-file/partition-listing bound for long-running streams)
-      // without changing the resolved view
-      val ct = BucketedGraft.compact(spark, table, schema, buckets = 4)
+      // compaction collapses the accrued per-batch segments to ONE txn
+      // (the small-file/listing bound for long-running streams) without
+      // changing the resolved view
+      val ct = db.compact()
       assert(ct === 4L)
-      val compacted = BucketedGraft.snapshot(spark, table, schema)
-        .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(compacted.toSeq === Seq((1L, 11L), (2L, 20L)))
-      val parts = spark.sql(s"SHOW PARTITIONS $table").collect().map(_.getString(0))
-      assert(parts.toSeq === Seq(s"${graft.core.Scan.TxnCol}=4"))
+      assert(resolved() === Seq((1L, 11L), (2L, 20L)))
+      assert(MatDb.open(spark, dir).committedSegments.map(_.txnId).distinct === Seq(4L))
     } finally q.stop()
-    BucketedGraft.drop(spark, table)
   }
 
   test("ranged sink: micro-batch = ranged transaction, ordered read stays exchange-free") {
@@ -846,40 +867,39 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
+    import graft.sources.GraftInsert
     import org.apache.spark.sql.types.StringType
-    val table = "bg_dedup_ingest"
     graft.functions.Fingerprint64.register(spark)
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("fp"), ValueCol("text", StringType)))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("dedup_ingest", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-dedup-ingest").toString
 
     val input = MemoryStream[(Long, String)]
-    val q = Streams.dedupedBucketedIngest(input.toDF().toDF("doc_id", "text"),
-      table, schema, buckets = 4, textCol = "text", fpCol = "fp", checkpoint).start()
+    val q = Streams.dedupedIngest(input.toDF().toDF("doc_id", "text"),
+      dir, textCol = "text", fpCol = "fp", checkpoint).start()
     try {
       input.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha")) // intra-batch dup
       q.processAllAvailable()
-      val b1 = spark.table(table).select("text").as[String].collect().sorted
+      val b1 = history.select("text").as[String].collect().sorted
       assert(b1.toSeq === Seq("alpha", "beta"))
       input.addData((4L, "beta"), (5L, "gamma")) // cross-batch dup + one fresh doc
       q.processAllAvailable()
-      val b2 = spark.table(table).select("text").as[String].collect().sorted
+      val b2 = history.select("text").as[String].collect().sorted
       assert(b2.toSeq === Seq("alpha", "beta", "gamma"))
 
       // replaying batch 2 (crash between append and checkpoint commit):
       // every fingerprint is already committed, so the novelty filter
       // empties the batch and the append claims NO txn — raw history is
       // exactly-once, not just MVCC-absorbed
-      val next = BucketedGraft.nextTxnId(spark, table)
+      val next = watermark(dir)
       val replay = Seq((4L, "beta"), (5L, "gamma")).toDF("doc_id", "text")
         .withColumn("fp", graft.functions.Fingerprint64.fingerprint64($"text"))
-      val fresh = Streams.noveltyFilter(replay, spark.table(table), "fp")
+      val fresh = Streams.noveltyFilter(replay, history, "fp")
       assert(fresh.count() === 0L)
-      assert(BucketedGraft.append(spark, table, schema, fresh, 4) === None)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(GraftInsert.append(spark, dir, fresh) === None)
+      assert(watermark(dir) === next)
     } finally q.stop()
 
     // scale shape: both joins of the novelty filter broadcast the
@@ -894,57 +914,55 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("fp", graft.functions.Fingerprint64.fingerprint64($"text"))
       .write.parquet(s"$bdir/b")
     val batchDf = spark.read.parquet(s"$bdir/b")
-    val filtered = Streams.noveltyFilter(batchDf, spark.table(table), "fp")
+    val filtered = Streams.noveltyFilter(batchDf, history, "fp")
     filtered.collect()
     val plan = graft.core.TestSpark.finalPlan(filtered)
     assert("BroadcastHashJoin".r.findAllIn(plan).size === 2, plan)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), plan)
-    BucketedGraft.drop(spark, table)
   }
 
   test("near-dup ingest: SimHash gate vs history and within-batch, exactly-once replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
+    import graft.sources.GraftInsert
     import org.apache.spark.sql.types.StringType
-    val table = "bg_neardup_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("simhash"), ValueCol("text", StringType)))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("neardup_ingest", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-nd-ingest").toString
 
     val tA = "the quick brown fox jumps over the lazy dog"
     val tB = "completely unrelated text about spark physical plans and shuffles"
     val tC = "a third document on bucketed layouts and manifest commit protocols"
     val input = MemoryStream[(Long, String)]
-    val q = Streams.nearDupBucketedIngest(input.toDF().toDF("doc_id", "text"),
-      table, schema, buckets = 4, textCol = "text", idCol = "doc_id", checkpoint).start()
+    val q = Streams.nearDupIngest(input.toDF().toDF("doc_id", "text"),
+      dir, textCol = "text", idCol = "doc_id", checkpoint).start()
     try {
       input.addData((1L, tA), (2L, tB))
       q.processAllAvailable()
-      assert(spark.table(table).count() === 2)
+      assert(history.count() === 2)
       // batch 2: doc 3 duplicates committed doc 1 (Hamming 0 vs history);
       // docs 4+5 duplicate each other within the batch (5 has the
       // smaller-id near-dup 4); doc 6 is fresh
       input.addData((3L, tA), (4L, tC), (5L, tC), (6L, tB + " with a tail"))
       q.processAllAvailable()
-      val landed = spark.table(table).select("doc_id").as[Long].collect().sorted
+      val landed = history.select("doc_id").as[Long].collect().sorted
       assert(landed.toSeq === Seq(1L, 2L, 4L, 6L))
 
       // replay of batch 2: every survivor is now Hamming-0 to its own
       // committed copy, so the gate drops everything — no txn claimed
       graft.functions.TextOps.register(spark)
-      val next = BucketedGraft.nextTxnId(spark, table)
+      val next = watermark(dir)
       val replay = Seq((3L, tA), (4L, tC), (5L, tC), (6L, tB + " with a tail"))
         .toDF("doc_id", "text")
         .withColumn("simhash", graft.functions.TextOps.simhash56Col(
           org.apache.spark.sql.functions.split(lower($"text"), "\\s+")))
-      val fresh = Streams.nearDupFilter(replay, spark.table(table), "doc_id")
+      val fresh = Streams.nearDupFilter(replay, history, "doc_id")
       assert(fresh.count() === 0L)
-      assert(BucketedGraft.append(spark, table, schema, fresh, 4) === None)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(GraftInsert.append(spark, dir, fresh) === None)
+      assert(watermark(dir) === next)
     } finally q.stop()
 
     // scale shape: the corpus path (bands of the committed table) is
@@ -956,47 +974,43 @@ class StreamingSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.split(lower($"text"), "\\s+")))
       .write.parquet(s"$bdir/b")
     val batchDf = spark.read.parquet(s"$bdir/b")
-    val filtered = Streams.nearDupFilter(batchDf, spark.table(table), "doc_id")
+    val filtered = Streams.nearDupFilter(batchDf, history, "doc_id")
     filtered.collect()
     val plan = graft.core.TestSpark.finalPlan(filtered)
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"), plan)
-    BucketedGraft.drop(spark, table)
   }
 
   test("ingest auto-compaction bounds txn partitions without losing dedup history") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
     import org.apache.spark.sql.types.StringType
-    val table = "bg_compact_ingest"
     graft.functions.Fingerprint64.register(spark)
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("fp"), ValueCol("text", StringType)))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("compact_ingest", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-compact-ingest").toString
 
     val input = MemoryStream[(Long, String)]
-    val q = Streams.dedupedBucketedIngest(input.toDF().toDF("doc_id", "text"),
-      table, schema, buckets = 4, textCol = "text", fpCol = "fp", checkpoint,
-      compactEvery = 2).start()
+    val q = Streams.dedupedIngest(input.toDF().toDF("doc_id", "text"),
+      dir, textCol = "text", fpCol = "fp", checkpoint, compactEvery = 2).start()
     try {
       input.addData((1L, "alpha")); q.processAllAvailable()            // batch 0
       input.addData((2L, "beta")); q.processAllAvailable()             // batch 1
       input.addData((3L, "gamma"), (4L, "delta")); q.processAllAvailable() // batch 2 + compact
       // the fold collapsed batches 0-2 (+ the compaction txn) into ONE
-      // live txn partition; batch 3 then lands on top of it
-      val txnsAfterCompact = spark.table(table)
-        .select(col("_txn_id")).distinct().count()
+      // live txn; batch 3 then lands on top of it
+      val txnsAfterCompact = history.select(col("_txn_id")).distinct().count()
       assert(txnsAfterCompact === 1L, s"expected 1 txn after compact, got $txnsAfterCompact")
+      // the committed segment listing collapsed with it
+      assert(MatDb.open(spark, dir).committedSegments.map(_.txnId).distinct.size === 1)
       input.addData((5L, "epsilon"), (6L, "alpha")); q.processAllAvailable() // batch 3
       // dedup still holds against the COMPACTED history: "alpha" dropped
-      val texts = spark.table(table).select("text").as[String].collect().sorted
+      val texts = history.select("text").as[String].collect().sorted
       assert(texts.toSeq === Seq("alpha", "beta", "delta", "epsilon", "gamma"))
-      assert(spark.table(table).select(col("_txn_id")).distinct().count() === 2L)
+      assert(history.select(col("_txn_id")).distinct().count() === 2L)
     } finally q.stop()
-    BucketedGraft.drop(spark, table)
   }
 
   test("semantic filter nprobe >= 3: catches a dup stored under the query's 3rd-nearest bucket") {
@@ -1030,13 +1044,12 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
+    import graft.sources.GraftInsert
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val table = "bg_sem_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("vec_id", 1000)),
       Seq(ValueCol("bucket"), ValueCol("embedding", ArrayType(DoubleType))))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("sem_ingest", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-sem-ingest").toString
 
     // two well-separated clusters in 4 dims; centroids trained offline on
@@ -1048,14 +1061,14 @@ class StreamingSpec extends AnyFunSuite {
       .train(seed, "vec_id", "embedding", k = 2, iters = 2).toSeq.map(_.toSeq)
 
     val input = MemoryStream[(Long, Seq[Double])]
-    val q = Streams.semanticBucketedIngest(
-      input.toDF().toDF("vec_id", "embedding"), table, schema, buckets = 4,
+    val q = Streams.semanticIngest(
+      input.toDF().toDF("vec_id", "embedding"), dir,
       idCol = "vec_id", vecCol = "embedding", centroids = centroids,
       tau = 0.999, checkpoint = checkpoint).start()
     try {
       input.addData((10L, Seq(1.0, 0.01, 0.0, 0.0)), (11L, Seq(0.0, 1.0, 0.02, 0.0)))
       q.processAllAvailable()
-      assert(spark.table(table).select("vec_id").distinct().count() === 2)
+      assert(history.select("vec_id").distinct().count() === 2)
       // batch 2: 12 is a jitter of committed 10 (cosine ≈ 1 → drops);
       // 13 is genuinely novel (orthogonal-ish) and lands; 14 jitters 13
       // within the same batch (larger id loses intra-batch)
@@ -1064,24 +1077,24 @@ class StreamingSpec extends AnyFunSuite {
         (13L, Seq(0.0, 0.0, 0.0, 1.0)),
         (14L, Seq(0.00002, 0.0, 0.0, 0.9999)))
       q.processAllAvailable()
-      val landed = spark.table(table).select("vec_id").as[Long].collect().sorted
+      val landed = history.select("vec_id").as[Long].collect().sorted
       assert(landed.toSeq === Seq(10L, 11L, 13L))
       // persisted bucket matches the closure assignment rule (history is
       // bucket-addressable for every future batch)
-      assert(spark.table(table).where($"bucket".isNull).count() === 0)
+      assert(history.where($"bucket".isNull).count() === 0)
 
       // replay of batch 2: survivors meet their own committed copy at
       // cosine exactly 1.0 — gate empties the batch, no txn claimed
-      val next = BucketedGraft.nextTxnId(spark, table)
+      val next = watermark(dir)
       val replay = Seq((12L, Seq(1.0001, 0.0100, 0.00005, 0.0)),
         (13L, Seq(0.0, 0.0, 0.0, 1.0)),
         (14L, Seq(0.00002, 0.0, 0.0, 0.9999))).toDF("vec_id", "embedding")
-      val fresh = Streams.semanticNoveltyFilter(replay, spark.table(table),
+      val fresh = Streams.semanticNoveltyFilter(replay, history,
         "vec_id", "embedding", centroids, tau = 0.999)
       assert(fresh.count() === 0L)
-      assert(BucketedGraft.append(spark, table, schema, fresh
-        .withColumn("bucket", org.apache.spark.sql.functions.lit(0L)), 4) === None)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(GraftInsert.append(spark, dir, fresh
+        .withColumn("bucket", org.apache.spark.sql.functions.lit(0L))) === None)
+      assert(watermark(dir) === next)
     } finally q.stop()
 
     // scale shape: the history side streams through one broadcast join
@@ -1090,27 +1103,25 @@ class StreamingSpec extends AnyFunSuite {
     Seq((21L, Seq(1.0, 0.0101, 0.0, 0.0)), (22L, Seq(0.5, 0.0, 0.5, 0.70)))
       .toDF("vec_id", "embedding").write.parquet(s"$bdir/b")
     val filteredS = Streams.semanticNoveltyFilter(
-      spark.read.parquet(s"$bdir/b"), spark.table(table),
+      spark.read.parquet(s"$bdir/b"), history,
       "vec_id", "embedding", centroids, tau = 0.999)
     assert(filteredS.select("vec_id").as[Long].collect().toSeq === Seq(22L))
     val planS = graft.core.TestSpark.finalPlan(filteredS)
     assert(!planS.contains("SortMergeJoin") && !planS.contains("ShuffledHashJoin"), planS)
-    BucketedGraft.drop(spark, table)
   }
 
   test("media near-dup ingest: pHash gate for images and videos, exactly-once replay") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
+    import graft.sources.GraftInsert
     import graft.multimodal.Multimodal
     import MediaFixtures.{muxAvi, structuredFrame}
-    val table = "bg_media_ingest"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("frame_idx", org.apache.spark.sql.types.IntegerType),
         ValueCol("phash")))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("media_ingest", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-media-ingest").toString
 
     val imgA = Multimodal.renderDocImage("the quick brown fox jumps over the dog")
@@ -1125,11 +1136,11 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String, Array[Byte])]
     val q = Streams.mediaNearDupIngest(
       input.toDF().toDF("doc_id", "kind", "media"),
-      table, schema, buckets = 4, checkpoint = checkpoint).start()
+      dir, checkpoint = checkpoint).start()
     try {
       input.addData((1L, "image", imgA), (10L, "video", vid1))
       q.processAllAvailable()
-      assert(spark.table(table).select("doc_id").distinct().count() === 2)
+      assert(history.select("doc_id").distinct().count() === 2)
       // batch 2: doc 3 is a brightness-jittered re-encode of committed
       // imgA (pHash-invariant edit → Hamming 0 vs history); doc 5 jitters
       // doc 4 within the batch (larger id loses); doc 6 is fresh; video 11
@@ -1141,13 +1152,13 @@ class StreamingSpec extends AnyFunSuite {
         (6L, "image", imgD),
         (11L, "video", vid2))
       q.processAllAvailable()
-      val landed = spark.table(table).select("doc_id").distinct()
+      val landed = history.select("doc_id").distinct()
         .as[Long].collect().sorted
       assert(landed.toSeq === Seq(1L, 4L, 6L, 10L))
 
       // replay of batch 2: survivors are Hamming-0 to their own committed
       // signatures, so the gate empties the batch and no txn is claimed
-      val next = BucketedGraft.nextTxnId(spark, table)
+      val next = watermark(dir)
       val replayMedia = Seq(
         Multimodal.MediaRow(3L, "image", Multimodal.brightenPng(imgA, 16)),
         Multimodal.MediaRow(4L, "image", imgC),
@@ -1155,17 +1166,17 @@ class StreamingSpec extends AnyFunSuite {
         Multimodal.MediaRow(6L, "image", imgD),
         Multimodal.MediaRow(11L, "video", vid2)).toDS()
       val replaySigs = Multimodal.mediaPhashes(replayMedia)
-      val fresh = Streams.mediaNearDupFilter(replaySigs, spark.table(table))
+      val fresh = Streams.mediaNearDupFilter(replaySigs, history)
       assert(fresh.count() === 0L)
-      assert(BucketedGraft.append(spark, table, schema, fresh, 4) === None)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(GraftInsert.append(spark, dir, fresh) === None)
+      assert(watermark(dir) === next)
 
       // minFrames semantics: vid2 matches only 3 committed frames, so a
       // 4-frame threshold lets it through while doc 3 (1 of 1 frame
       // matched… but below the 4-frame bar) also survives — the knob is
       // per-DOCUMENT distinct matched frames
       val survive4 = Streams.mediaNearDupFilter(
-        replaySigs, spark.table(table), minFrames = 4)
+        replaySigs, history, minFrames = 4)
       assert(survive4.select("doc_id").distinct().as[Long].collect().sorted
         .toSeq === Seq(3L, 4L, 5L, 6L, 11L))
     } finally q.stop()
@@ -1179,73 +1190,64 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "kind", "media").write.parquet(s"$bdir/b")
     val batchSigs = Multimodal.mediaPhashes(
       spark.read.parquet(s"$bdir/b").as[Multimodal.MediaRow])
-    val filteredM = Streams.mediaNearDupFilter(batchSigs, spark.table(table))
+    val filteredM = Streams.mediaNearDupFilter(batchSigs, history)
     assert(filteredM.select("doc_id").distinct().as[Long].collect().toSeq === Seq(22L))
     val planM = graft.core.TestSpark.finalPlan(filteredM)
     assert(!planM.contains("SortMergeJoin") && !planM.contains("ShuffledHashJoin"), planM)
     assert("BroadcastHashJoin".r.findAllIn(planM).size >= 2, planM)
-    BucketedGraft.drop(spark, table)
   }
 
   test("admission: an oversized batch slices through the exact sink, dedup intact") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
     import org.apache.spark.sql.types.StringType
-    val table = "bg_admit_exact"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("fp"), ValueCol("text", StringType)))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("admit_exact", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-admit-exact").toString
     val input = MemoryStream[(Long, String)]
     // maxBatchRows=2 forces a 7-row batch into ⌈7/2⌉ = 4 hash slices
-    val q = Streams.dedupedBucketedIngest(input.toDF().toDF("doc_id", "text"),
-      table, schema, buckets = 4, textCol = "text", fpCol = "fp", checkpoint,
-      maxBatchRows = 2L).start()
+    val q = Streams.dedupedIngest(input.toDF().toDF("doc_id", "text"),
+      dir, textCol = "text", fpCol = "fp", checkpoint, maxBatchRows = 2L).start()
     try {
       input.addData((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"),
         (5L, "epsilon"), (6L, "alpha"), (7L, "zeta"))
       q.processAllAvailable()
       // exact dedup outcome is IDENTICAL to unsliced (equal fingerprints
       // hash to the same slice; dropDuplicates ran before slicing)
-      val texts = spark.table(table).select("text").as[String].collect().sorted
+      val texts = history.select("text").as[String].collect().sorted
       assert(texts.toSeq === Seq("alpha", "beta", "delta", "epsilon", "gamma", "zeta"))
       // more than one txn for the single micro-batch proves slicing ran
-      val txns = spark.table(table).select(col("_txn_id")).distinct().count()
+      val txns = history.select(col("_txn_id")).distinct().count()
       assert(txns >= 2, s"expected >=2 slice txns, got $txns")
       // replay of the oversized batch: every slice finds its fingerprints
       // committed and claims nothing
-      val next = BucketedGraft.nextTxnId(spark, table)
+      val next = watermark(dir)
       input.addData((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"),
         (5L, "epsilon"), (6L, "alpha"), (7L, "zeta"))
       q.processAllAvailable()
-      assert(spark.table(table).count() === 6)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(history.count() === 6)
+      assert(watermark(dir) === next)
     } finally q.stop()
-    BucketedGraft.drop(spark, table)
   }
 
   test("admission: oversized batches slice through the near-dup and semantic sinks") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
     import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
     // --- SimHash sink at maxBatchRows=2 with an intra-batch dup pair ---
-    val ndTable = "bg_admit_nd"
-    BucketedGraft.drop(spark, ndTable)
     val ndSchema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("simhash"), ValueCol("text", StringType)))
-    BucketedGraft.create(spark, ndTable, ndSchema, buckets = 4)
+    val ndDir = sinkTable("admit_nd", ndSchema)
     val ndCp = java.nio.file.Files.createTempDirectory("graft-admit-nd").toString
     val tDup = "a repeated document about bucketed layouts and manifests"
     val ndIn = MemoryStream[(Long, String)]
-    val ndQ = Streams.nearDupBucketedIngest(ndIn.toDF().toDF("doc_id", "text"),
-      ndTable, ndSchema, buckets = 4, textCol = "text", idCol = "doc_id", ndCp,
-      maxBatchRows = 2L).start()
+    val ndQ = Streams.nearDupIngest(ndIn.toDF().toDF("doc_id", "text"),
+      ndDir, textCol = "text", idCol = "doc_id", ndCp, maxBatchRows = 2L).start()
     try {
       ndIn.addData(
         (1L, "the quick brown fox jumps over the lazy dog"),
@@ -1254,21 +1256,18 @@ class StreamingSpec extends AnyFunSuite {
         (5L, "novel content never seen before anywhere"),
         (6L, "a sixth distinct document on watermarks and state stores"))
       ndQ.processAllAvailable()
-      val landed = spark.table(ndTable).select("doc_id").as[Long].collect().toSet
+      val landed = Streams.committedRows(spark, ndDir).select("doc_id").as[Long].collect().toSet
       // at-most-one of the dup pair commits whichever slice each lands in;
       // every non-dup doc commits
       assert(Set(1L, 2L, 5L, 6L).subsetOf(landed), s"lost novel docs: $landed")
       assert((landed & Set(3L, 4L)).size === 1, s"dup pair mishandled: $landed")
       assert(landed.size === 5)
     } finally ndQ.stop()
-    BucketedGraft.drop(spark, ndTable)
 
     // --- semantic sink at maxBatchRows=2 with a cosine-dup pair ---
-    val smTable = "bg_admit_sem"
-    BucketedGraft.drop(spark, smTable)
     val smSchema = MatSchema(Seq(Dimension("vec_id", 1000)),
       Seq(ValueCol("bucket"), ValueCol("embedding", ArrayType(DoubleType))))
-    BucketedGraft.create(spark, smTable, smSchema, buckets = 4)
+    val smDir = sinkTable("admit_sem", smSchema)
     val smCp = java.nio.file.Files.createTempDirectory("graft-admit-sem").toString
     val seed = Seq((0L, Seq(1.0, 0.01, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.02, 0.0)),
       (2L, Seq(0.99, 0.0, 0.01, 0.0)), (3L, Seq(0.01, 0.98, 0.0, 0.0)))
@@ -1276,8 +1275,8 @@ class StreamingSpec extends AnyFunSuite {
     val centroids = graft.operators.IvfIndex
       .train(seed, "vec_id", "embedding", k = 2, iters = 2).toSeq.map(_.toSeq)
     val smIn = MemoryStream[(Long, Seq[Double])]
-    val smQ = Streams.semanticBucketedIngest(
-      smIn.toDF().toDF("vec_id", "embedding"), smTable, smSchema, buckets = 4,
+    val smQ = Streams.semanticIngest(
+      smIn.toDF().toDF("vec_id", "embedding"), smDir,
       idCol = "vec_id", vecCol = "embedding", centroids = centroids,
       tau = 0.999, checkpoint = smCp, maxBatchRows = 2L).start()
     try {
@@ -1288,34 +1287,30 @@ class StreamingSpec extends AnyFunSuite {
         (13L, Seq(0.0, 0.0, 0.0, 1.0)),
         (14L, Seq(0.5, 0.5, 0.5, 0.5)))
       smQ.processAllAvailable()
-      val landed = spark.table(smTable).select("vec_id").as[Long].collect().toSet
+      val landed = Streams.committedRows(spark, smDir).select("vec_id").as[Long].collect().toSet
       assert(Set(11L, 13L, 14L).subsetOf(landed), s"lost novel vectors: $landed")
       assert((landed & Set(10L, 12L)).size === 1, s"cosine pair mishandled: $landed")
       assert(landed.size === 4)
     } finally smQ.stop()
-    BucketedGraft.drop(spark, smTable)
   }
 
   test("admission: an oversized media batch slices without re-pairing committed docs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
     import graft.multimodal.Multimodal
-    val table = "bg_admit_media"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("frame_idx", org.apache.spark.sql.types.IntegerType),
         ValueCol("phash")))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("admit_media", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-admit-media").toString
     val imgs = (0 until 5).map(i =>
       Multimodal.renderDocImage(s"admission media payload number $i"))
     val input = MemoryStream[(Long, String, Array[Byte])]
     val q = Streams.mediaNearDupIngest(
       input.toDF().toDF("doc_id", "kind", "media"),
-      table, schema, buckets = 4, checkpoint = checkpoint,
-      maxBatchRows = 2L).start()
+      dir, checkpoint = checkpoint, maxBatchRows = 2L).start()
     try {
       // 6 single-frame docs → 6 signature rows → 3 slices; doc 6 reuses
       // doc 1's exact image (Hamming 0 — pHash jitter-invariance is
@@ -1326,36 +1321,33 @@ class StreamingSpec extends AnyFunSuite {
         (4L, "image", imgs(3)), (5L, "image", imgs(4)),
         (6L, "image", imgs(0)))
       q.processAllAvailable()
-      val landed = spark.table(table).select("doc_id").as[Long].collect().toSet
+      val landed = history.select("doc_id").as[Long].collect().toSet
       assert(Set(2L, 3L, 4L, 5L).subsetOf(landed), s"lost novel docs: $landed")
       assert((landed & Set(1L, 6L)).size === 1, s"jitter pair mishandled: $landed")
       assert(landed.size === 5)
       // replay of the oversized batch: identity guard + Hamming-0 gate
       // drop every slice to empty
-      val next = BucketedGraft.nextTxnId(spark, table)
+      val next = watermark(dir)
       input.addData(
         (1L, "image", imgs(0)), (2L, "image", imgs(1)), (3L, "image", imgs(2)),
         (4L, "image", imgs(3)), (5L, "image", imgs(4)),
         (6L, "image", imgs(0)))
       q.processAllAvailable()
-      assert(spark.table(table).select("doc_id").distinct().count() === 5)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(history.select("doc_id").distinct().count() === 5)
+      assert(watermark(dir) === next)
     } finally q.stop()
-    BucketedGraft.drop(spark, table)
   }
 
   test("media ingest replay guard: docs with fewer frames than minFrames stay exactly-once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Dimension, MatSchema, ValueCol}
-    import graft.sources.BucketedGraft
     import graft.multimodal.Multimodal
-    val table = "bg_media_replay"
-    BucketedGraft.drop(spark, table)
     val schema = MatSchema(Seq(Dimension("doc_id", 1000)),
       Seq(ValueCol("frame_idx", org.apache.spark.sql.types.IntegerType),
         ValueCol("phash")))
-    BucketedGraft.create(spark, table, schema, buckets = 4)
+    val dir = sinkTable("media_replay", schema)
+    def history = Streams.committedRows(spark, dir)
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-media-replay").toString
 
     // single-frame image docs under minFrames=2: the Hamming-0 gate alone
@@ -1366,20 +1358,19 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String, Array[Byte])]
     val q = Streams.mediaNearDupIngest(
       input.toDF().toDF("doc_id", "kind", "media"),
-      table, schema, buckets = 4, checkpoint = checkpoint, minFrames = 2).start()
+      dir, checkpoint = checkpoint, minFrames = 2).start()
     try {
       input.addData((1L, "image", imgA), (2L, "image", imgB))
       q.processAllAvailable()
-      assert(spark.table(table).count() === 2)
-      val next = BucketedGraft.nextTxnId(spark, table)
+      assert(history.count() === 2)
+      val next = watermark(dir)
       // crash-replay: the same docs arrive again — identity guard drops
       // them, no duplicate signature rows, no txn claimed
       input.addData((1L, "image", imgA), (2L, "image", imgB))
       q.processAllAvailable()
-      assert(spark.table(table).count() === 2)
-      assert(BucketedGraft.nextTxnId(spark, table) === next)
+      assert(history.count() === 2)
+      assert(watermark(dir) === next)
     } finally q.stop()
-    BucketedGraft.drop(spark, table)
   }
 
   test("catalog change stream: readStream.table(<cat>.<t>.stream) tails commits, options flow") {

@@ -917,4 +917,324 @@ class GraftCatalogSpec extends AnyFunSuite {
     }
     Seq("spjp_a", "spjp_b").foreach(t => spark.sql(s"DROP TABLE gcat.$t"))
   }
+
+  // ---- MVCC table jobs end to end on catalog tables: commits through
+  // GraftInsert.append (claimed ids), reads through the catalog, whose
+  // chunk-partitioned scan resolves with zero exchanges under v2 bucketing
+
+  /** A fresh manifest table `gcat.<name>` under the suite schema; returns
+    * its directory. */
+  private def catTable(name: String): String = {
+    val dir = root.resolve(name)
+    graft.core.Storage.deleteRecursively(dir)
+    MatDb.create(spark, schema, dir.toString, "manifest")
+    dir.toString
+  }
+
+  /** Run `f` with the given session confs set, restoring them afterwards. */
+  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; f }
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private val v2Bucketing = "spark.sql.sources.v2.bucketing.enabled" -> "true"
+  private val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+
+  /** Txn ids of the segment directories a catalog read's file scan lists. */
+  private def scannedTxns(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.queryExecution.sparkPlan.collectLeaves().collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case f: org.apache.spark.sql.execution.datasources.v2.FileScan =>
+      f.fileIndex.rootPaths.flatMap(p => graft.core.Storage.decode(p.getName)).map(_._1.txnId)
+    }.flatten.toSet
+
+  private def keyGrouped(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.sparkPlan.collectLeaves().exists(_.outputPartitioning
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning])
+
+  test("zero-exchange dedup, partition-pruned asOf, parity with MatDb") {
+    val dir = catTable("bg_test")
+    // three overlapping transactions: txn2 overwrites half of txn1, txn3
+    // overwrites a quarter and adds new keys
+    val b1 = (0L until 200L).map(i => (i, i % 10, 1L))
+    val b2 = (0L until 100L).map(i => (i, i % 10, 2L))
+    val b3 = (50L until 75L).map(i => (i, i % 10, 3L)) ++
+      (200L until 220L).map(i => (i, i % 10, 3L))
+    val t1 = GraftInsert.append(spark, dir, batch(b1)).get
+    // an EMPTY append commits no transaction and hands out no id — the id
+    // it probed must go to the next real append, not alias two callers
+    assert(GraftInsert.append(spark, dir, batch(Nil)).isEmpty)
+    val t2 = GraftInsert.append(spark, dir, batch(b2)).get
+    val t3 = GraftInsert.append(spark, dir, batch(b3)).get
+    assert(Seq(t1, t2, t3) === Seq(1L, 2L, 3L))
+
+    // parity oracle: a MatDb table built through Transaction commits
+    val db = MatDb.create(spark, schema,
+      Files.createTempDirectory("graft-catalog-parity").toString)
+    Seq(b1, b2, b3).foreach { b =>
+      val txn = db.newTransaction(); txn.addRows(batch(b)); txn.commit()
+    }
+    val expected = db.snapshot().collect().toSet
+    withConf(v2Bucketing) {
+      val snap = spark.sql("SELECT t, sensor, v FROM gcat.bg_test")
+      val got = snap.collect().toSet
+      assert(got === expected)
+      assert(got.size === 220)
+      // newest version wins: keys 50..74 at v=3, 75..99 at v=2, 100..199 at v=1
+      val byKey = got.map(r => (r.getLong(0), r.getLong(2))).toMap
+      assert(byKey(60L) === 3L && byKey(80L) === 2L && byKey(150L) === 1L)
+
+      // THE plan property: the resolve aggregate runs on the scan's chunk
+      // key groups with no Exchange anywhere
+      TestSpark.assertNoExchange(snap, "catalog dedup")
+      assert(keyGrouped(snap), s"the scan must report key-grouped partitioning:\n" +
+        snap.queryExecution.sparkPlan)
+
+      // time travel: VERSION AS OF txn1 sees only b1, and its scan lists
+      // only txn 1's segment (visibility = metadata, not IO)
+      val asOf1 = spark.sql(s"SELECT t, sensor, v FROM gcat.bg_test VERSION AS OF $t1")
+      val rows1 = asOf1.collect()
+      assert(rows1.length === 200 && rows1.forall(_.getLong(2) == 1L))
+      assert(scannedTxns(asOf1) === Set(t1), "VERSION AS OF must shrink the file list")
+      assert(scannedTxns(snap) === Set(t1, t2, t3))
+
+      // a SQL aggregate on the dimensions reuses the key grouping end to end
+      val sqlAgg = spark.sql(
+        "SELECT t, sensor, max(v) AS v FROM gcat.bg_test GROUP BY t, sensor")
+      assert(sqlAgg.count() === 220)
+      TestSpark.assertNoExchange(sqlAgg, "SQL dim-aggregate over the resolved table")
+
+      // ordered scan: dedup still exchange-free; only the final global sort
+      // of RESOLVED rows may exchange (exactly one)
+      val ord = spark.sql("SELECT t, sensor, v FROM gcat.bg_test ORDER BY t, sensor")
+      assert(ord.limit(1).collect().head.getLong(0) === 0L)
+      ord.collect()
+      val ordPlan = TestSpark.finalPlan(ord)
+      val exchanges = "(?m)Exchange".r.findAllIn(ordPlan).length
+      assert(exchanges === 1, s"ordered scan should have exactly the sort exchange:\n$ordPlan")
+    }
+  }
+
+  test("randomized append sequences resolve to the sequential-upsert model") {
+    // seeded property check (deterministic in CI): N random batches of
+    // random unique keys upsert into the table; the catalog read must equal
+    // a driver-side map applied batch-by-batch — the core PropertySpec's
+    // oracle over the GraftInsert write + catalog read path
+    val dir = catTable("bg_prop")
+    val rnd = new scala.util.Random(20260813L)
+    val model = scala.collection.mutable.Map[(Long, Long), Long]()
+    (1 to 5).foreach { _ =>
+      // unique keys within a batch (duplicate keys within one append
+      // resolve arbitrarily by contract, so the model keys are unique)
+      val keys = rnd.shuffle((0L until 120L).toVector).take(1 + rnd.nextInt(60))
+      val rows = keys.map(k => (k, k % 7, rnd.nextLong(1000)))
+      rows.foreach { case (t, s, v) => model((t, s)) = v }
+      GraftInsert.append(spark, dir, batch(rows))
+    }
+    val got = spark.sql("SELECT t, sensor, v FROM gcat.bg_prop").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got === model.toMap)
+  }
+
+  test("two writers never share a txn id: claims are atomic, sequential, unmerged") {
+    // txn ids are CLAIMED by put-if-absent creation of the segment-0
+    // directory, so a streaming sink and a backfill can never commit under
+    // the SAME id. Race real concurrent claimers, then two concurrent
+    // appenders, and check ids stay distinct and each transaction holds
+    // exactly its own batch.
+    val dir = catTable("bg_two_writers")
+    val tableRoot = graft.core.Storage.rootPath(dir)
+    val proto = graft.core.Storage.detect(tableRoot)
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    def race[A](threads: Int, jobs: Seq[() => A]): Seq[A] = {
+      val pool = Executors.newFixedThreadPool(threads)
+      try jobs.map(j => pool.submit(new Callable[A] { def call(): A = j() }))
+        .map(_.get(120, TimeUnit.SECONDS))
+      finally pool.shutdown()
+    }
+
+    // phase 1: 4 threads × 5 concurrent claims — must partition 1..20 exactly
+    val claimed = race(4, Seq.fill(20)(() =>
+      GraftInsert.claimSegment(tableRoot, proto)._1.txnId))
+    assert(claimed.sorted === (1L to 20L), s"claims must be distinct+dense: $claimed")
+    // dead claims (a writer that crashes after claiming) are invisible to
+    // reads, and their ids are never handed out again
+    assert(spark.sql("SELECT * FROM gcat.bg_two_writers").count() === 0)
+
+    // phase 2: writers A and B append 3 batches each, concurrently
+    val writers = race(2, Seq(0L, 50L).map { shift => () =>
+      (0 until 3).map { i =>
+        val rows = (0L until 10L).map(k => (100L * i + k + shift, k % 10, 1000L * shift + i))
+        GraftInsert.append(spark, dir, batch(rows)).get -> rows
+      }
+    })
+    val txns = writers.flatten.map(_._1)
+    assert(txns.sorted === (21L to 26L), s"txn ids must never merge or reuse a claim: $txns")
+    writers.foreach(w => assert(w.map(_._1) === w.map(_._1).sorted,
+      s"ids allocate monotonically per writer: $w"))
+    // no merged transactions: each txn holds exactly its batch
+    val raw = graft.streaming.Streams.committedRows(spark, dir)
+    writers.flatten.foreach { case (txn, rows) =>
+      val got = raw.where(col(graft.core.Scan.TxnCol) === txn)
+        .select(col("t"), col("sensor"), col("v")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got === rows.toSet, s"txn $txn must contain exactly its own batch")
+    }
+    assert(proto.txnWatermark(tableRoot) === txns.max)
+  }
+
+  test("compact aborts instead of discarding a concurrently committed append") {
+    val dir = catTable("bg_compact_race")
+    GraftInsert.append(spark, dir, batch((0L until 40L).map(i => (i, i % 10, 1L))))
+    GraftInsert.append(spark, dir, batch((0L until 20L).map(i => (i, i % 10, 2L))))
+    def resolved() = spark.sql("SELECT t, sensor, v FROM gcat.bg_compact_race").collect()
+
+    // another writer's append lands after the compacting handle pinned its
+    // snapshot: the compaction must ABORT, not overwrite it away
+    val stale = MatDb.open(spark, dir)
+    val racer = GraftInsert.append(spark, dir, batch(Seq((500L, 0L, 9L)))).get
+    val ex = intercept[java.util.ConcurrentModificationException](stale.compact())
+    assert(ex.getMessage.contains(racer.toString), ex.getMessage)
+    // the same race landing between the compaction's WRITE and its replace
+    // PUBLISH — compact's own steps, with the append injected in between:
+    // the conflict-checked replace refuses the stale base
+    val db = MatDb.open(spark, dir)
+    val txn = db.newTransaction()
+    txn.addRows(txn.query())
+    txn.flush()
+    GraftInsert.append(spark, dir, batch(Seq((501L, 1L, 8L)))).get
+    intercept[java.util.ConcurrentModificationException](txn.commitReplacing())
+
+    // nothing was overwritten: every transaction's rows still resolve
+    val afterAbort = resolved()
+    assert(afterAbort.length === 42)
+    assert(afterAbort.exists(r => r.getLong(0) == 500L && r.getLong(2) == 9L))
+    assert(afterAbort.exists(r => r.getLong(0) == 501L && r.getLong(2) == 8L))
+    assert(afterAbort.exists(r => r.getLong(0) == 10L && r.getLong(2) == 2L))
+
+    // with no concurrent writer the same compact succeeds and keeps every row
+    val survivor = MatDb.open(spark, dir).compact()
+    val snap = resolved()
+    assert(snap.length === 42)
+    assert(snap.exists(r => r.getLong(0) == 500L && r.getLong(2) == 9L))
+    val compacted = MatDb.open(spark, dir)
+    assert(compacted.txnWatermark === survivor)
+    assert(compacted.committedSegments.map(_.txnId).distinct === Seq(survivor))
+  }
+
+  test("joining two resolved bucketed tables on the key needs no exchange either") {
+    // chunk-aligned tables are co-located partition-for-partition; the MVCC
+    // dedup aggregate PRESERVES the key grouping, so even the post-resolve
+    // join plans with zero Exchange on either side
+    val a = catTable("bg_join_a")
+    val b = catTable("bg_join_b")
+    GraftInsert.append(spark, a, batch((0L until 150L).map(i => (i, i % 10, 1L))))
+    GraftInsert.append(spark, a, batch((0L until 50L).map(i => (i, i % 10, 2L))))
+    GraftInsert.append(spark, b, batch((100L until 250L).map(i => (i, i % 10, 7L))))
+    withConf(v2Bucketing +: noBroadcast: _*) {
+      val joined = spark.sql(
+        """SELECT x.t, x.sensor, x.v AS va, y.v AS vb
+          |FROM gcat.bg_join_a x JOIN gcat.bg_join_b y
+          |ON x.t = y.t AND x.sensor = y.sensor""".stripMargin)
+      val rows = joined.collect()
+      // keys 100..149 overlap; newest versions: a has v=2 below 50 (not
+      // overlapping), v=1 at 100..149; b has v=7 everywhere
+      assert(rows.length === 50)
+      assert(rows.forall(r => r.getLong(2) == 1L && r.getLong(3) == 7L))
+      TestSpark.assertNoExchange(joined, "co-located resolve+join")
+    }
+  }
+
+  test("shallowClone: zero-copy fork — identical reads, independent writes") {
+    val src = catTable("bg_clone_src")
+    val dst = root.resolve("bg_clone_dst")
+    graft.core.Storage.deleteRecursively(dst)
+    GraftInsert.append(spark, src, batch((0L until 100L).map(i => (i, i % 10, 1L))))
+    GraftInsert.append(spark, src, batch((0L until 50L).map(i => (i, i % 10, 2L))))
+    MatDb.shallowClone(spark, src, dst.toString)
+    def rows(t: String) = spark.sql(s"SELECT t, v FROM gcat.$t ORDER BY t")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows("bg_clone_dst") === rows("bg_clone_src"), "clone reads identically")
+    // hard links, not copies: a data file in the clone shares its inode
+    val aFile = Files.walk(dst).filter(p => p.toString.endsWith(".parquet")).findFirst().get()
+    assert(Files.getAttribute(aFile, "unix:nlink").asInstanceOf[Integer] >= 2,
+      "clone must hard-link data files")
+    // independent appends: the fork diverges, the source does not see it
+    GraftInsert.append(spark, dst.toString, batch(Seq((500L, 0L, 9L))))
+    assert(spark.sql("SELECT * FROM gcat.bg_clone_dst").count() === 101)
+    assert(spark.sql("SELECT * FROM gcat.bg_clone_src").count() === 100)
+  }
+
+  test("analyze: resolved catalog statistics price the relation, not raw versions") {
+    val dir = catTable("bg_analyze")
+    // 200 keys x 5 versions: raw rows 1000, resolved 200
+    (0 until 5).foreach { i =>
+      GraftInsert.append(spark, dir, batch((0L until 200L).map(k => (k, k % 10, i.toLong))))
+    }
+    val (n, bytes) = MatDb.open(spark, dir).analyze()
+    assert(n === 200L, s"resolved count, got $n")
+    assert(bytes === 200L * schema.toStructType.defaultSize)
+    def leafStats() = spark.sql("SELECT * FROM gcat.bg_analyze")
+      .queryExecution.optimizedPlan.collectLeaves().head.stats
+    assert(leafStats().sizeInBytes === BigInt(bytes),
+      s"catalog stats must price the relation: ${leafStats().sizeInBytes} vs $bytes")
+    withConf("spark.sql.cbo.enabled" -> "true") {
+      val cboStats = leafStats()
+      assert(cboStats.rowCount.contains(BigInt(200)),
+        s"CBO must see the resolved row count, got ${cboStats.rowCount}")
+    }
+  }
+
+  test("bucketed fact-fact join runs with zero exchanges and exact parity") {
+    // sf0.001 lineitem ⋈ orders on l_orderkey as two catalog tables chunked
+    // alike on the join key: with v2 bucketing both scans report key groups
+    // over chunk(l_orderkey), so the join runs with ZERO exchanges on either
+    // side and returns exactly the rows of the shuffled join. A graft table
+    // holds one row per key and the join key must be the whole key (a
+    // join on a key prefix cannot regroup through the MVCC dedup), so
+    // lineitem enters as its per-order line totals. Both sides are
+    // materialized once, so the parity check compares identical doubles.
+    root
+    Seq("li_b", "ord_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS gcat.$t"))
+    val sf = "/root/testdata/sf0.001"
+    val src = Files.createTempDirectory("graft-spj-src")
+    spark.read.parquet(s"$sf/lineitem.parquet").groupBy(col("l_orderkey"))
+      .agg(count(lit(1)).as("l_lines"), sum(col("l_quantity")).as("l_quantity"),
+        sum(col("l_extendedprice")).as("l_extendedprice"))
+      .write.parquet(src.resolve("li").toString)
+    spark.read.parquet(s"$sf/orders.parquet")
+      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
+      .write.parquet(src.resolve("ord").toString)
+    val lineitem = spark.read.parquet(src.resolve("li").toString)
+    val orders = spark.read.parquet(src.resolve("ord").toString)
+    lineitem.createOrReplaceTempView("li_src")
+    orders.createOrReplaceTempView("ord_src")
+    spark.sql("CREATE TABLE gcat.li_b " +
+      "TBLPROPERTIES('graft.dims' = 'l_orderkey:100') AS SELECT * FROM li_src")
+    spark.sql("CREATE TABLE gcat.ord_b " +
+      "TBLPROPERTIES('graft.dims' = 'l_orderkey:100') AS SELECT * FROM ord_src")
+    // at sf0.001 the planner would broadcast the tiny side; disable
+    // broadcast to exercise the plan shape that matters at scale
+    withConf(Seq(v2Bucketing,
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true") ++ noBroadcast: _*) {
+      val joined = spark.sql(
+        """SELECT l.l_orderkey, l.l_lines, l.l_quantity, l.l_extendedprice, o.o_totalprice
+          |FROM gcat.li_b l JOIN gcat.ord_b o ON l.l_orderkey = o.l_orderkey""".stripMargin)
+      val expected = lineitem.join(orders, "l_orderkey")
+        .select("l_orderkey", "l_lines", "l_quantity", "l_extendedprice", "o_totalprice")
+      assert(joined.count() === expected.count())
+      assert(joined.exceptAll(expected).count() === 0L)
+      assert(expected.exceptAll(joined).count() === 0L)
+      joined.collect()
+      val plan = TestSpark.finalPlan(joined)
+      assert(!plan.contains("Exchange"), s"chunk-aligned join must not shuffle:\n$plan")
+      assert(plan.contains("SortMergeJoin"), s"unexpected join strategy:\n$plan")
+      // the co-location comes from the key-grouped scans
+      assert(keyGrouped(joined), joined.queryExecution.sparkPlan.toString)
+    }
+    Seq("li_b", "ord_b").foreach(t => spark.sql(s"DROP TABLE gcat.$t"))
+    graft.core.Storage.deleteRecursively(src)
+  }
 }
