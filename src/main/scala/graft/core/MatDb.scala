@@ -44,35 +44,21 @@ final class MatDb private (
   }
 
   /** Publish a transaction's flushed segments as the ENTIRE table — the
-    * replace commit behind [[overwrite]] and [[compact]]. Atomic under the
-    * manifest protocol; under renames old and new coexist until the deletes
-    * below finish (see [[Protocol.replace]]). Superseded directories are
-    * deleted afterward in either case. */
-  /** `expectedBase` = the committed set the replacement data was computed
-    * from (the replacing transaction's snapshot). If anything committed
-    * since — in-process (checked under this lock) or cross-process
-    * (checked against the on-disk manifest by the protocol) — the replace
-    * ABORTS with `ConcurrentModificationException` rather than silently
-    * dropping the interleaved transaction; the caller re-derives and
-    * retries. Only the superseded `expectedBase` directories are deleted. */
+    * replace commit behind [[overwrite]] and [[compact]] ([[Protocol.replace]]
+    * decides how superseded directories go). `expectedBase` = the committed
+    * set the replacement data was computed from (the replacing
+    * transaction's snapshot). If anything committed since — in-process
+    * (checked under this lock) or cross-process (checked against the
+    * on-disk manifest by the protocol) — the replace ABORTS with
+    * `ConcurrentModificationException` rather than silently dropping the
+    * interleaved transaction; the caller re-derives and retries. */
   private[core] def commitReplace(ids: Seq[SegmentId], expectedBase: Seq[SegmentId],
-      prodTxn: Long): Unit = {
-    val old = synchronized {
-      if (committed != expectedBase.toVector.sorted)
-        throw new java.util.ConcurrentModificationException(
-          "table changed since the replace commit's snapshot (overwrite/compact); retry")
-      val stale = committed
-      committed = protocol.replace(root, ids, ids.sorted, expectedBase, prodTxn)
-        .toVector.sorted
-      stale
-    }
-    // Rename protocol: superseded dirs must go NOW — visibility IS the
-    // directory listing. Manifest protocol: they are already invisible, so
-    // deletion is deferred (explicit [[vacuum]], or the next open's
-    // recovery sweep) — a reader whose snapshot captured the old file list
-    // can still finish its scan (the lakehouse vacuum-vs-reader rule).
-    if (protocol == Storage.RenameProtocol)
-      old.foreach(s => protocol.deleteSegment(root, s))
+      prodTxn: Long): Unit = synchronized {
+    if (committed != expectedBase.toVector.sorted)
+      throw new java.util.ConcurrentModificationException(
+        "table changed since the replace commit's snapshot (overwrite/compact); retry")
+    committed = protocol.replace(root, ids, ids.sorted, expectedBase, prodTxn)
+      .toVector.sorted
   }
 
   // Segments flushed by THIS process's open transactions but not yet
@@ -346,10 +332,10 @@ final class MatDb private (
     import org.apache.spark.sql.functions._
     require(fromTxn <= toTxn, s"changesBetween: from $fromTxn > to $toTxn")
     val dims = schema.dimNames
-    val segs: Seq[SegmentId] = protocol match {
-      case Storage.ManifestProtocol =>
-        val mp = Storage.ManifestProtocol
-        val safe = mp.commitsAfter(root, fromTxn) match {
+    val segs: Seq[SegmentId] =
+      if (!protocol.atomicReplace) synchronized(committed) // rename: append-only contract
+      else {
+        val safe = protocol.commitsAfter(root, fromTxn) match {
           case Some(metas) =>
             metas.forall(m => !m.isReplace || m.foldTxn.exists(_ <= fromTxn))
           case None => false // metadata holes / pre-round-12 manifests
@@ -357,7 +343,7 @@ final class MatDb private (
         if (safe) synchronized(committed)
         else {
           def strict(t: Long, side: String): Seq[SegmentId] =
-            mp.listCommittedAsOfStrict(root, t).getOrElse(
+            protocol.listCommittedAsOfStrict(root, t).getOrElse(
               throw new IllegalStateException(
                 s"changesBetween($fromTxn, $toTxn): a replace-kind commit " +
                   "(TRUNCATE / INSERT OVERWRITE / compact) landed after txn " +
@@ -373,8 +359,7 @@ final class MatDb private (
           if (fromSet.forall(toSet.contains)) toSet
           else return replaceRangeDiff(fromSet, toSet, includeOld)
         }
-      case _ => synchronized(committed) // rename: append-only contract
-    }
+      }
     // no .distinct(): the only consumer is the left-semi join below, whose
     // hash build dedups keys inherently — the distinct added a two-phase
     // HashAggregate + Exchange per CDC call for nothing. Duplicate factor
@@ -703,13 +688,12 @@ final class MatDb private (
     // (a txn missing its segment 0 never finished committing) would drop a
     // baseline that replaces its own txn's segment 0 — and the rename swap
     // is not atomic anyway. The manifest's conditional-put publish is.
-    require(protocol == Storage.ManifestProtocol,
+    require(protocol.atomicReplace,
       "checkpoint(horizon) requires the 'manifest' commit protocol " +
         "(use compact() for a full flatten under the rename protocol)")
     val base = synchronized(committed)
     val replaced = base.filter(_.txnId <= horizon)
     if (replaced.isEmpty) return -1L
-    val retained = base.filterNot(_.txnId <= horizon)
     val tid = replaced.map(_.txnId).max
     val bid = SegmentId(tid, replaced.filter(_.txnId == tid).map(_.segNum).max + 1)
     // the fold's provenance: the horizon txn's id (stamped by the write)
@@ -741,55 +725,36 @@ final class MatDb private (
             protocol.writePath(root, bid).resolve(Storage.CommitTsFile),
             String.valueOf(ts).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-      // REBASE loop: a checkpoint is pure maintenance — its baseline folds
-      // exactly the segments <= horizon, and any CONCURRENT APPEND commits
-      // txn ids above the watermark (hence above the horizon), landing in
-      // the retained class the fold never read. So an append racing the
-      // publish must not abort the (expensive, already-written) fold: re-list
-      // the committed set, verify the FOLDED PREFIX is byte-identical, and
-      // re-publish with the newcomer retained — only the O(1) CAS retries,
-      // never the write. A concurrent REPLACE (overwrite/truncate/another
-      // fold) changes the prefix and still aborts: its output superseded
-      // ours. This is the Delta/Iceberg "compaction does not conflict with
+      // REBASE publish (Protocol.publishRebasing): a checkpoint is pure
+      // maintenance — its baseline folds exactly the segments <= horizon,
+      // and any CONCURRENT APPEND commits txn ids above the watermark
+      // (hence above the horizon), landing in the retained class the fold
+      // never read. So an append racing the publish must not abort the
+      // (expensive, already-written) fold: each try verifies the FOLDED
+      // PREFIX of the on-disk committed set is unchanged and publishes with
+      // the newcomers retained — only the O(1) CAS retries, never the
+      // write. A concurrent REPLACE (overwrite/truncate/another fold)
+      // changes the prefix and still aborts: its output superseded ours.
+      // This is the Delta/Iceberg "compaction does not conflict with
       // appends" rule; OVERWRITE keeps strict abort semantics because its
       // output semantically replaces the concurrent append too — rebasing
-      // there would silently drop committed rows.
-      var tries = 0
-      var published = false
-      while (!published) {
-        // rebase view: whatever is committed on disk NOW (in-memory state
-        // may be stale vs another handle/process — the publish CAS is the
-        // authority either way)
-        val cur = protocol.listCommitted(root).toVector.sorted
-        if (cur.filter(_.txnId <= horizon) != replaced) {
-          protocol.discardInFlight(root, bid)
-          throw new java.util.ConcurrentModificationException(
-            "folded prefix changed under the checkpoint (concurrent " +
-              "overwrite/truncate/fold); the baseline is stale — retry from scratch")
-        }
-        val newRetained = cur.filterNot(_.txnId <= horizon)
-        try {
-          synchronized {
-            // replaceFold, not replace: the manifest records the fold
-            // boundary (the max FOLDED txn — tighter than the requested
-            // horizon, since nothing exists in (tid, horizon]), so a CDC
-            // reader whose range starts at-or-above it keeps its O(delta)
-            // path across this fold (changesBetween)
-            committed = Storage.ManifestProtocol
-              .replaceFold(root, Seq(bid), (Seq(bid) ++ newRetained).sorted, cur,
-                prodTxn = (Seq(bid) ++ newRetained).map(_.txnId).max,
-                foldTxn = tid)
-              .toVector.sorted
+      // there would silently drop committed rows. The fold boundary
+      // recorded is the max FOLDED txn — tighter than the requested
+      // horizon, since nothing exists in (tid, horizon] — so a CDC reader
+      // whose range starts at-or-above it keeps its O(delta) path across
+      // this fold (changesBetween).
+      synchronized {
+        committed = protocol.publishRebasing(root, Seq(bid), tid, foldTxn = Some(tid)) { cur =>
+          if (cur.filter(_.txnId <= horizon) != replaced) {
+            protocol.discardInFlight(root, bid)
+            throw new java.util.ConcurrentModificationException(
+              "folded prefix changed under the checkpoint (concurrent " +
+                "overwrite/truncate/fold); the baseline is stale — retry from scratch")
           }
-          published = true
-        } catch {
-          case _: java.util.ConcurrentModificationException if tries < 16 =>
-            tries += 1 // an append landed between list and publish: rebase
-        }
+          (bid +: cur.filterNot(_.txnId <= horizon)).sorted
+        }.toVector.sorted
       }
     } finally resolveInFlight(Seq(bid))
-    // manifest protocol (required at entry): superseded dirs are already
-    // invisible; vacuum()/recovery sweeps them.
     tid
   }
 
@@ -894,10 +859,9 @@ object MatDb {
     Storage.writeStoreMarker(root, CasStore.forName(store))
     Storage.writeSchema(root, schema)
     val proto = Storage.forName(protocol)
-    // manifest tables are self-describing via _log/ — recover() creates it
-    // and returns the empty initial state
-    val (committed, nextTxn) =
-      if (proto == Storage.ManifestProtocol) proto.recover(root) else (Seq.empty[SegmentId], 1L)
+    // the table's initial state (manifest tables: recover() creates the
+    // self-describing _log/)
+    val (committed, nextTxn) = proto.recover(root)
     new MatDb(spark, root, schema, proto, committed, nextTxn)
   }
 
@@ -948,9 +912,10 @@ object MatDb {
     val src = Storage.rootPath(srcPath)
     val dst = Storage.rootPath(dstPath)
     require(exists(srcPath), s"no graft table at $srcPath")
-    require(!Files.exists(dst) || Storage.listDirPublic(dst).isEmpty,
+    require(!Files.exists(dst) || Storage.listDir(dst).isEmpty,
       s"clone target $dstPath already exists and is not empty")
-    require(Storage.detect(src) == Storage.ManifestProtocol,
+    val proto = Storage.detect(src)
+    require(proto.atomicReplace,
       "shallow clone requires the 'manifest' commit protocol " +
         "(rename-protocol visibility is the directory listing — nothing to fork)")
     Files.createDirectories(dst)
@@ -970,9 +935,7 @@ object MatDb {
     // data: every segment directory still on disk — committed, plus
     // lineage history awaiting vacuum (claim stamps are NOT carried: the
     // clone's copies are committed data, not an in-flight claim)
-    val proto = Storage.ManifestProtocol
-    val segs = (proto.lineageSegments(src) ++ proto.listCommitted(src)).distinct
-    segs.foreach { id =>
+    Storage.historySegments(src, proto, proto.listCommitted(src)).foreach { id =>
       val from = proto.readPath(src, id)
       if (Files.isDirectory(from))
         Storage.linkOrCopyTree(store, from, proto.readPath(dst, id),

@@ -33,10 +33,25 @@ final case class SegmentId(txnId: Long, segNum: Int) extends Ordered[SegmentId] 
   *     whole set in one manifest), and is the natural base for optimistic
   *     multi-writer (a concurrent commit loses the rename race and retries).
   *
+  * Every protocol-dependent decision lives here. Members that only the
+  * manifest protocol can answer (manifest lineage, commit metadata) carry
+  * rename-protocol defaults, so callers never test which protocol a table
+  * uses. The one capability a caller may branch on is [[atomicReplace]]:
+  * operations that need an atomic swap (checkpoint folds, shallow clones,
+  * the replace-publish INSERT OVERWRITE) refuse or choose by it. Segment
+  * publishes that rebase onto concurrent commits (INSERT OVERWRITE,
+  * serializable DML, checkpoint) share one loop, [[publishRebasing]].
+  *
   * A table's protocol is self-describing: `_log/` exists ⇔ manifest.
   */
 sealed trait Protocol {
   def name: String
+
+  /** True when [[replace]] swaps the visible set in one atomic step (and
+    * replaced-away states stay readable until vacuum). False under
+    * renames, where a replace commits the new segments and then deletes
+    * the old ones. */
+  def atomicReplace: Boolean
 
   /** Directory a flush writes segment `id` into (uncommitted). */
   def writePath(root: Path, id: SegmentId): Path
@@ -60,20 +75,60 @@ sealed trait Protocol {
     * a blind swap), and likewise if the final publish race is lost. The
     * rename protocol derives visibility from the listing and relies on the
     * caller's in-process lock for the base check; it cannot swap
-    * atomically — it commits `newIds` first, so until the caller deletes
-    * the superseded directories, old and new are both visible (MVCC still
-    * resolves overlapping keys to the new rows; keys absent from the new
-    * data resurface only in that window — documented rename-protocol
-    * caveat, the reason the manifest protocol exists).
+    * atomically — it commits `newIds` first and then deletes the
+    * `expectedBase` directories absent from `visibleAfter`, so until the
+    * deletes finish old and new are both visible (MVCC still resolves
+    * overlapping keys to the new rows; keys absent from the new data
+    * resurface only in that window — documented rename-protocol caveat,
+    * the reason the manifest protocol exists). Under the manifest
+    * protocol superseded directories stay on disk, invisible, until
+    * vacuum: a reader whose snapshot captured the old file list can still
+    * finish its scan.
     *
     * `prodTxn` is the transaction id that PRODUCED this state change (the
     * overwriting/compacting txn) — the manifest protocol records it so time
     * travel can resolve `asOf(t)` for `t < prodTxn` against an OLDER
     * manifest version ([[listCommittedAsOf]]). It matters precisely when no
     * segment carries the id (a TRUNCATE publishes an empty set, yet its txn
-    * must stay burned and its state boundary findable). */
+    * must stay burned and its state boundary findable).
+    *
+    * `foldTxn` marks a CHECKPOINT FOLD: the replace only RESHAPED the state
+    * at-or-below that txn equivalently (resolved baseline, erased
+    * tombstones all <= foldTxn) and removed nothing above it. The manifest
+    * records it, so a CDC reader whose `fromTxn >= foldTxn` keeps its
+    * O(delta) path across the fold ([[graft.core.MatDb.changesBetween]]). */
   def replace(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId],
-      expectedBase: Seq[SegmentId], prodTxn: Long): Seq[SegmentId]
+      expectedBase: Seq[SegmentId], prodTxn: Long,
+      foldTxn: Option[Long] = None): Seq[SegmentId]
+
+  /** Publish `newIds` onto whatever is committed NOW, rebasing over
+    * concurrent commits — the one loop behind INSERT OVERWRITE,
+    * serializable row-level DML and checkpoint folds. Each try lists the
+    * committed base once and asks `target` for the visible set to publish
+    * onto it; `target` may throw to abort (a conflict, a changed fold
+    * prefix). The publish is a CAS [[replace]] against that base when
+    * [[atomicReplace]] holds, a [[commit]] otherwise. A lost race
+    * (`ConcurrentModificationException` from the publish) re-lists and
+    * retries, up to 16 times; the 17th loss propagates. Returns the
+    * published visible set. */
+  final def publishRebasing(root: Path, newIds: Seq[SegmentId], prodTxn: Long,
+      foldTxn: Option[Long] = None)(
+      target: Seq[SegmentId] => Seq[SegmentId]): Seq[SegmentId] = {
+    @annotation.tailrec def attempt(tries: Int): Seq[SegmentId] = {
+      val base = listCommitted(root)
+      val after = target(base)
+      val published =
+        try Some(
+          if (atomicReplace) replace(root, newIds, after, base, prodTxn, foldTxn)
+          else commit(root, newIds, after))
+        catch { case _: java.util.ConcurrentModificationException if tries < 16 => None }
+      published match {
+        case Some(visible) => visible
+        case None          => attempt(tries + 1)
+      }
+    }
+    attempt(0)
+  }
 
   /** The visible segment set AS OF transaction `txn` — time travel. The
     * rename protocol (append-only visibility: the listing) filters the
@@ -102,6 +157,31 @@ sealed trait Protocol {
     * listing for observers (e.g. the streaming source): a reader must never
     * delete a concurrent writer's in-flight `.tmp`/unreferenced segments. */
   def listCommitted(root: Path): Seq[SegmentId]
+
+  /** [[listCommitted]] as sorted read paths — the file list of the current
+    * committed state, for readers without a table handle. */
+  def committedPaths(root: Path): Seq[String] =
+    listCommitted(root).sorted.map(s => readPath(root, s).toString)
+
+  /** Segments referenced by some EARLIER state and still on disk — history
+    * that time travel and timestamp resolution can reach beyond the live
+    * set. Rename protocol: none (a replace deletes what it supersedes). */
+  private[graft] def lineageSegments(root: Path): Seq[SegmentId] = Nil
+
+  /** Commit metadata of every state change produced above `horizon`,
+    * newest first — the serializable conflict check's metadata-only read.
+    * None when the protocol records no such metadata (rename) or some
+    * covered change predates it: the caller then walks segment
+    * directories. */
+  private[graft] def commitsAfter(root: Path, horizon: Long): Option[Seq[Storage.CommitMeta]] =
+    None
+
+  /** [[listCommittedAsOf]] without a silent fallback: None when the state
+    * at `txn` is no longer exactly reconstructible. Rename protocol: the
+    * listing is append-only history, so the filtered listing is the
+    * answer. */
+  private[graft] def listCommittedAsOfStrict(root: Path, txn: Long): Option[Seq[SegmentId]] =
+    Some(listCommittedAsOf(root, txn))
 
   /** Delete final-name segment directories not in `keep` (GC for
     * superseded/orphaned segments). Returns directories removed. Rename
@@ -184,8 +264,7 @@ object Storage {
     * segments whose directories survive (time-travel history awaiting
     * vacuum). */
   def historySegments(root: Path, proto: Protocol, live: Seq[SegmentId]): Seq[SegmentId] =
-    (if (proto == ManifestProtocol) ManifestProtocol.lineageSegments(root) ++ live
-     else live).distinct.sorted
+    (proto.lineageSegments(root) ++ live).distinct.sorted
 
   /** Per-transaction commit wall-clock (epoch millis) over the given
     * visible segments, monotone by txn order. Transactions predating the
@@ -428,13 +507,10 @@ object Storage {
       }
     }
 
-  /** Public listing face of [[listDir]] (clone target-emptiness check). */
-  def listDirPublic(dir: Path): Seq[Path] = listDir(dir)
-
   /** List a directory, CLOSING the stream (Files.list holds an fd until
     * closed — leaking it on hot paths like commit/stream-planning
     * exhausts file descriptors on long-lived drivers). */
-  private[core] def listDir(dir: Path): Seq[Path] =
+  private[graft] def listDir(dir: Path): Seq[Path] =
     if (!Files.isDirectory(dir)) Seq.empty
     else {
       val s = Files.list(dir)
@@ -533,6 +609,7 @@ object Storage {
 
   case object RenameProtocol extends Protocol {
     val name = "rename"
+    val atomicReplace = false
 
     def writePath(root: Path, id: SegmentId): Path = segmentPath(root, id, tmp = true)
     def readPath(root: Path, id: SegmentId): Path = segmentPath(root, id, tmp = false)
@@ -548,13 +625,18 @@ object Storage {
     }
 
     /** Not atomic under renames (see [[Protocol.replace]]): commit the new
-      * segments; the caller deletes the superseded directories right after.
-      * The base check happens under the caller's in-process lock (the
-      * rename protocol is single-process by design). `prodTxn` is unused —
-      * visibility is the listing, which carries the ids itself. */
+      * segments, then delete the superseded directories — visibility IS
+      * the listing, so they must go now. The base check happens under the
+      * caller's in-process lock (the rename protocol is single-process by
+      * design). `prodTxn` and `foldTxn` are unused — visibility is the
+      * listing, which carries the ids itself. */
     def replace(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId],
-        expectedBase: Seq[SegmentId], prodTxn: Long): Seq[SegmentId] =
+        expectedBase: Seq[SegmentId], prodTxn: Long,
+        foldTxn: Option[Long]): Seq[SegmentId] = {
       commit(root, newIds, visibleAfter)
+      expectedBase.filterNot(visibleAfter.contains).foreach(deleteSegment(root, _))
+      visibleAfter
+    }
 
     def discardInFlight(root: Path, id: SegmentId): Unit =
       deleteRecursively(segmentPath(root, id, tmp = true))
@@ -596,6 +678,7 @@ object Storage {
 
   case object ManifestProtocol extends Protocol {
     val name = "manifest"
+    val atomicReplace = true
 
     // visibility comes from the manifest, so segments go straight to their
     // final names — no rename step to need atomicity from the data store
@@ -616,21 +699,9 @@ object Storage {
       * manifest content before publishing or as a lost publish race (see
       * [[Protocol.replace]]). */
     def replace(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId],
-        expectedBase: Seq[SegmentId], prodTxn: Long): Seq[SegmentId] =
-      publish(root, newIds, replaceAll = true, visibleAfter, expectedBase, prodTxn)
-
-    /** [[replace]] for a CHECKPOINT FOLD: records `foldTxn` — the fold
-      * horizon — in the manifest, asserting this replace only RESHAPED the
-      * state at-or-below that txn equivalently (resolved baseline, erased
-      * tombstones all <= foldTxn) and removed nothing above it. A CDC
-      * reader whose `fromTxn >= foldTxn` can then keep its O(delta) path
-      * across the fold instead of degrading to the two-set diff
-      * ([[graft.core.MatDb.changesBetween]]). */
-    private[graft] def replaceFold(root: Path, newIds: Seq[SegmentId],
-        visibleAfter: Seq[SegmentId], expectedBase: Seq[SegmentId],
-        prodTxn: Long, foldTxn: Long): Seq[SegmentId] =
-      publish(root, newIds, replaceAll = true, visibleAfter, expectedBase,
-        prodTxn, foldTxn = Some(foldTxn))
+        expectedBase: Seq[SegmentId], prodTxn: Long,
+        foldTxn: Option[Long]): Seq[SegmentId] =
+      publish(root, newIds, replaceAll = true, visibleAfter, expectedBase, prodTxn, foldTxn)
 
     private def publish(root: Path, newIds: Seq[SegmentId], replaceAll: Boolean,
         intended: Seq[SegmentId], expectedBase: Seq[SegmentId] = Seq.empty,
@@ -758,7 +829,7 @@ object Storage {
       * Newest-first walk. A version can serve `txn` exactly when either
       * its producing txn is <= `txn` (the state boundary itself), or it is
       * a checkpoint fold whose recorded boundary is <= `txn`
-      * ([[replaceFold]]): the fold reshaped only the <= boundary prefix
+      * ([[Protocol.replace]]'s `foldTxn`): the fold reshaped only the <= boundary prefix
       * EQUIVALENTLY and removed nothing above it, so filtering its state
       * by segment txn resolves `txn` exactly — this is what keeps CDC
       * across a below-range fold working even after vacuum pruned the
@@ -767,7 +838,7 @@ object Storage {
       * must look below (overwrite/truncate/compact) — walk to its
       * predecessor; a pruned predecessor is an unprovable hole → None.
       * Walking past version 0 means `txn` predates the first commit. */
-    private[graft] def listCommittedAsOfStrict(root: Path, txn: Long)
+    override private[graft] def listCommittedAsOfStrict(root: Path, txn: Long)
         : Option[Seq[SegmentId]] = {
       var v = latestManifest(root) match {
         case None    => return Some(Seq.empty) // never committed
@@ -800,7 +871,7 @@ object Storage {
     /** Every segment id any manifest version ever referenced, EXCLUDING ids
       * whose directories are gone (vacuumed) — the discovery set for
       * history/timestamp resolution across replace commits. */
-    private[graft] def lineageSegments(root: Path): Seq[SegmentId] =
+    override private[graft] def lineageSegments(root: Path): Seq[SegmentId] =
       everReferenced(root).toSeq.sorted
         .filter(id => Files.isDirectory(readPath(root, id)))
 
@@ -950,7 +1021,7 @@ object Storage {
       val prod = (prodTxn +: visible.map(_.txnId)).max
       // commit-scoped fields first ("new_txns"/"chunks"/"replace" — what
       // THIS version added, for metadata-only conflict detection; "fold" —
-      // a checkpoint's horizon, see [[replaceFold]]), then the full visible
+      // a checkpoint's horizon, see [[Protocol.replace]]), then the full visible
       // set. Chunk dir names are [-_=a-zA-Z0-9/] only — no JSON escaping
       // needed.
       val newTxns = newIds.map(_.txnId).distinct.sorted.mkString(", ")
@@ -963,19 +1034,6 @@ object Storage {
       casStore(root).putIfAbsent(dir.resolve(f"$version%08x.json"), body)
     }
 
-    /** One committed manifest version's commit-scoped metadata: the txns it
-      * added (with their segment ids, for key-digest lookup), the chunk
-      * dirs they touched (None when written before chunk recording —
-      * round <= 11), whether it was a replace (overwrite/truncate/
-      * compact — removes rows in arbitrary chunks, so conflict detection
-      * must treat it as touching EVERYTHING), and — for checkpoint folds —
-      * the fold horizon ([[replaceFold]]): a replace carrying `foldTxn = h`
-      * provably reshaped only the state at-or-below `h`, equivalently. */
-    private[graft] final case class CommitMeta(version: Long, prodTxn: Long,
-        newTxns: Seq[Long], newSegs: Seq[SegmentId],
-        chunks: Option[Set[String]], isReplace: Boolean,
-        foldTxn: Option[Long] = None)
-
     /** Commit metadata for every manifest version whose producing txn is
       * above `horizon`, newest first — the serializable conflict check's
       * metadata-only read path. Walks BACKWARD from the latest version
@@ -983,7 +1041,8 @@ object Storage {
       * no segment file-tree walks). Returns None when any covered version
       * predates chunk recording — the caller falls back to walking segment
       * directories. */
-    private[graft] def commitsAfter(root: Path, horizon: Long): Option[Seq[CommitMeta]] = {
+    override private[graft] def commitsAfter(root: Path, horizon: Long)
+        : Option[Seq[CommitMeta]] = {
       val latest = latestManifest(root).getOrElse(return Some(Seq.empty))
       var v = manifestVersion(latest)
       val out = Seq.newBuilder[CommitMeta]
@@ -1019,6 +1078,20 @@ object Storage {
       if (complete) Some(out.result()) else None
     }
   }
+
+  /** One committed manifest version's commit-scoped metadata: the txns it
+    * added (with their segment ids, for key-digest lookup), the chunk
+    * dirs they touched (None when written before chunk recording —
+    * round <= 11), whether it was a replace (overwrite/truncate/
+    * compact — removes rows in arbitrary chunks, so conflict detection
+    * must treat it as touching EVERYTHING), and — for checkpoint folds —
+    * the fold horizon ([[Protocol.replace]]'s `foldTxn`): a replace
+    * carrying `foldTxn = h` provably reshaped only the state at-or-below
+    * `h`, equivalently. */
+  private[graft] final case class CommitMeta(version: Long, prodTxn: Long,
+      newTxns: Seq[Long], newSegs: Seq[SegmentId],
+      chunks: Option[Set[String]], isReplace: Boolean,
+      foldTxn: Option[Long] = None)
 
   // ---- key-granular serializable digests ----------------------------------
   //
@@ -1119,42 +1192,35 @@ object Storage {
   private[graft] def isUnique(segDir: Path): Boolean =
     Files.isRegularFile(segDir.resolve(UniqueFile))
 
+  /** The data files under a segment directory (chunk subdirectories
+    * included; underscore- and dot-prefixed markers excluded), walked
+    * lazily and closed after `f`. */
+  private def withDataFiles[A](segDir: Path)(f: Iterator[Path] => A): A =
+    if (!Files.isDirectory(segDir)) f(Iterator.empty)
+    else {
+      val walk = Files.walk(segDir)
+      try f(walk.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".")
+      }) finally walk.close()
+    }
+
   /** (data file count, data bytes) under a segment directory — the
     * small-file diagnostics `.history` and `optimize` report. */
   private[graft] def dataFileStats(segDir: Path): (Long, Long) =
-    if (!Files.isDirectory(segDir)) (0L, 0L)
-    else {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(segDir)
-      try {
-        var n = 0L; var b = 0L
-        walk.iterator().asScala.foreach { p =>
-          val name = p.getFileName.toString
-          if (Files.isRegularFile(p) && !name.startsWith("_") && !name.startsWith(".")) {
-            n += 1; b += Files.size(p)
-          }
-        }
-        (n, b)
-      } finally walk.close()
-    }
+    withDataFiles(segDir)(_.foldLeft((0L, 0L)) { case ((n, b), p) =>
+      (n + 1, b + Files.size(p))
+    })
 
   private[graft] def countDataFiles(segDir: Path): Long = dataFileStats(segDir)._1
+
+  /** Does the segment directory hold any data file? Stops at the first —
+    * how a claimed write detects an empty batch. */
+  private[graft] def hasDataFiles(segDir: Path): Boolean = withDataFiles(segDir)(_.hasNext)
 
   /** Relative `_ck_*` chunk-key directories (like `_ck_t=3/_ck_s=1`)
     * holding data files under a segment directory — the granularity
     * recorded in manifests and used for serializable conflict detection. */
   private[graft] def chunkDirsOf(segDir: Path): Seq[String] =
-    if (!Files.isDirectory(segDir)) Seq.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(segDir)
-      try walk.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-        }
-        .map(p => segDir.relativize(p.getParent).toString)
-        .toSeq.distinct
-      finally walk.close()
-    }
+    withDataFiles(segDir)(_.map(p => segDir.relativize(p.getParent).toString).toSeq.distinct)
 }

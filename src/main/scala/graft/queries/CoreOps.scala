@@ -1848,7 +1848,7 @@ object CoreOps {
               |GROUP BY user_id""".stripMargin)                          // on top
       val removed = s.sql("CALL g147.system.vacuum('t')").head.getInt(0)
       require(removed > 0, s"vacuum must reclaim the replaced history")
-      val versions = graft.core.Storage.listDirPublic(root.resolve("t/_log"))
+      val versions = graft.core.Storage.listDir(root.resolve("t/_log"))
         .count(_.getFileName.toString.matches("[0-9a-f]{8}\\.json"))
       require(versions <= 2,
         s"manifest prune must leave O(live) versions, found $versions")

@@ -736,8 +736,7 @@ final class GraftV2Table(tableName: String, val matSchema: MatSchema,
       if (tableProps.getOrElse(GraftCatalog.IsolationProp, "") == "serializable")
         Some(proto.txnWatermark(root))
       else None
-    val paths = proto.listCommitted(root).sorted.map(s => proto.readPath(root, s).toString)
-    val doomed = Scan.resolve(spark, matSchema, paths, Nil)
+    val doomed = Scan.resolve(spark, matSchema, proto.committedPaths(root), Nil)
       .filter(pred)
       .select(matSchema.dimNames.map(org.apache.spark.sql.functions.col): _*)
     GraftInsert.tombstone(spark, dir, doomed, since)

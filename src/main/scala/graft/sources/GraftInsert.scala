@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,84 +65,55 @@ object GraftInsert {
     commitBatch(spark, dir, keys, tombstone = true, serializableSince)
 
   /** `INSERT OVERWRITE` / `TRUNCATE`: replace the table contents in ONE
-    * transaction. Cost is O(new data), not O(old table):
+    * transaction. Where the protocol swaps atomically
+    * ([[graft.core.Protocol.atomicReplace]]) the cost is O(new data), not
+    * O(old table): the new rows are written to one claimed segment and the
+    * visible set flips to exactly that segment, the same replace publish
+    * [[graft.core.MatDb.overwrite]] and `checkpoint()` use. The old state
+    * is never read and never tombstoned, and stays readable for
+    * `VERSION AS OF` until vacuum. The publish rebases over concurrent
+    * commits ([[graft.core.Protocol.publishRebasing]]), RETAINING segments
+    * with a txn id above the overwrite's own — newest-txn-wins, enforced
+    * at publish time. Otherwise the overwrite is one tombstone-all
+    * transaction: tombstones for every currently-live key (`_seq` 0)
+    * UNIONed with the new rows (`_seq` 1, outranking their own
+    * transaction's tombstone on overlapping keys), the txn id claimed
+    * BEFORE the live set is resolved.
     *
-    *   - **Manifest protocol** — a replace publish: the new rows are written
-    *     to one claimed segment and the manifest flips to exactly that set
-    *     (`visibleAfter = [new segment]`), the same atomic mechanism
-    *     [[graft.core.MatDb.overwrite]] and `checkpoint()` use. The old
-    *     state is never read and never tombstoned — a daily 100 TB refresh
-    *     costs the new day's write, not a full-table scan. Old manifests
-    *     keep the replaced state readable for `VERSION AS OF` until vacuum.
-    *     The publish is conflict-checked (expectedBase CAS): if any commit
-    *     lands between claim and publish it retries, RETAINING segments
-    *     with a txn id above the overwrite's own — newest-txn-wins, now
-    *     enforced at publish time rather than assumed from a pre-claim
-    *     resolve (the round-10 race: an append committing between resolve
-    *     and publish kept its keys alive despite the overwrite being
-    *     newer).
-    *   - **Rename protocol** (no atomic swap) — the tombstone-all shape:
-    *     tombstones for every currently-live key (`_seq` 0) UNIONed with
-    *     the new rows (`_seq` 1, outranking their own transaction's
-    *     tombstone on overlapping keys). The txn id is claimed BEFORE the
-    *     live set is resolved, narrowing the same race to the
-    *     single-writer window the rename protocol already assumes.
-    *
-    * Either way: readers see the old state until the publish flips,
-    * `VERSION AS OF` below the overwrite keeps reading, and txn ids stay
-    * monotone (a TRUNCATE's id is recorded as the manifest's producing txn
-    * even though no segment carries it) — so stream offsets never rewind.
-    * TRUNCATE is the degenerate empty-source case. */
+    * Either way: readers see the old state until the publish flips, and
+    * txn ids stay monotone (a TRUNCATE's id is recorded as the producing
+    * txn even though no segment carries it) — so stream offsets never
+    * rewind. TRUNCATE is the degenerate empty-source case. Returns the
+    * claimed txn id — an overwrite commits even when `df` is empty. */
   def overwrite(spark: SparkSession, dir: String, df: DataFrame): Option[Long] = {
     val root = Storage.rootPath(dir)
     val schema = Storage.readSchema(root)
-    Storage.detect(root) match {
-      case m if m == Storage.ManifestProtocol =>
-        overwriteReplace(root, m, schema, df)
-      case proto =>
-        val (segId, segPath) = claimSegment(root, proto)
-        val paths = proto.listCommitted(root).sorted
-          .map(s => proto.readPath(root, s).toString)
-        val doomed = Scan.resolve(spark, schema, paths, Nil, None)
-          .select(schema.dimNames.map(col): _*)
-        writeClaimed(root, proto, schema, segId, segPath,
-          Segment.decorate(schema, doomed, del = true, seq = 0L)
-            .unionByName(Segment.decorate(schema, df, del = false, seq = 1L)))
-    }
-  }
-
-  /** Manifest-table overwrite: claim, write the new rows, replace-publish.
-    * Always returns the claimed txn id — an overwrite commits even when
-    * `df` is empty (that IS the truncate). */
-  private def overwriteReplace(root: Path, proto: graft.core.Protocol,
-      schema: MatSchema, df: DataFrame): Option[Long] = {
+    val proto = Storage.detect(root)
     val (segId, segPath) = claimSegment(root, proto)
+    if (!proto.atomicReplace) {
+      val doomed = Scan.resolve(spark, schema, proto.committedPaths(root), Nil, None)
+        .select(schema.dimNames.map(col): _*)
+      return writeClaimed(root, proto, schema, segId, segPath,
+        Segment.decorate(schema, doomed, del = true, seq = 0L)
+          .unionByName(Segment.decorate(schema, df, del = false, seq = 1L)))
+    }
     Segment.write(schema, Segment.decorate(schema, df, del = false, seq = 0L),
       segId.txnId, segPath, root)
-    val newIds = if (hasDataFiles(segPath)) Seq(segId) else Seq.empty[SegmentId]
-    var tries = 0
-    while (tries < 16) {
-      val base = proto.listCommitted(root)
-      // newest-txn-wins across writers: a commit that claimed a LATER txn
-      // id than this overwrite survives it (same answer the tombstone path
-      // gives per-key); everything older is replaced away
-      val keep = base.filter(_.txnId > segId.txnId)
-      try {
-        proto.replace(root, newIds, (newIds ++ keep).sorted, base,
-          prodTxn = segId.txnId)
-        // an empty claim dir (TRUNCATE) is not referenced by the manifest —
-        // drop it now that the producing txn is durably recorded
-        if (newIds.isEmpty) Storage.deleteRecursively(segPath)
-        return Some(segId.txnId)
-      } catch {
-        case _: java.util.ConcurrentModificationException => tries += 1
-      }
+    val newIds = if (Storage.hasDataFiles(segPath)) Seq(segId) else Seq.empty[SegmentId]
+    try proto.publishRebasing(root, newIds, segId.txnId)(base =>
+      (newIds ++ base.filter(_.txnId > segId.txnId)).sorted)
+    catch {
+      case _: java.util.ConcurrentModificationException =>
+        // never-published claim: reclaim it now instead of leaving an
+        // orphan until the 24h claim retention expires
+        Storage.deleteRecursively(segPath)
+        throw new IllegalStateException(
+          "INSERT OVERWRITE: too many concurrent commits; giving up after 16 retries")
     }
-    // never-published claim: reclaim it now (matching publishConflictChecked)
-    // instead of leaving an orphan until the 24h claim retention expires
-    Storage.deleteRecursively(segPath)
-    throw new IllegalStateException(
-      "INSERT OVERWRITE: too many concurrent commits; giving up after 16 retries")
+    // an empty claim dir (TRUNCATE) is not referenced by the manifest —
+    // drop it now that the producing txn is durably recorded
+    if (newIds.isEmpty) Storage.deleteRecursively(segPath)
+    Some(segId.txnId)
   }
 
   /** CLAIM a fresh transaction's segment-0 directory put-if-absent — the
@@ -155,7 +126,7 @@ object GraftInsert {
       proto: graft.core.Protocol): (SegmentId, Path) = {
     // the watermark covers the committed set AND the manifest's producing
     // txn — a replace-truncate leaves no segments, yet its id stays burned
-    val onDisk = list(root).flatMap(p => Storage.decode(p.getFileName.toString))
+    val onDisk = Storage.listDir(root).flatMap(p => Storage.decode(p.getFileName.toString))
       .map(_._1.txnId)
     var txn = (onDisk :+ proto.txnWatermark(root)).max + 1L
     while (true) {
@@ -187,22 +158,36 @@ object GraftInsert {
       schema: MatSchema, segId: SegmentId, segPath: Path,
       frame: DataFrame, serializableSince: Option[Long] = None): Option[Long] = {
     Segment.write(schema, frame, segId.txnId, segPath, root)
-    if (hasDataFiles(segPath)) {
-      serializableSince match {
-        case Some(h) =>
-          val ours = maybeWriteKeyDigest(frame.sparkSession, schema, root, segPath)
-          publishConflictChecked(root, proto, segId, segPath, h, ours)
-        case None =>
-          // publish against the CURRENT committed set — concurrent writers
-          // may have committed while this batch was writing (newest-wins)
-          proto.commit(root, Seq(segId), (proto.listCommitted(root) :+ segId).sorted)
-      }
+    if (Storage.hasDataFiles(segPath)) {
+      publishClaimed(frame.sparkSession, root, proto, schema, segId, segPath,
+        serializableSince)
       Some(segId.txnId)
     } else {
       Storage.deleteRecursively(segPath)
       None
     }
   }
+
+  /** Publish a claimed, fully-written segment — the one publish of every
+    * claimed write (INSERT, DELETE, the row-level delta). Without
+    * `serializableSince` it appends against the CURRENT committed set:
+    * concurrent writers may have committed while the batch was writing,
+    * and newest-wins resolves their keys. With it, the publish is
+    * conflict-checked against transactions committed above that snapshot
+    * watermark ([[publishConflictChecked]]). */
+  private[sources] def publishClaimed(spark: SparkSession, root: Path,
+      proto: graft.core.Protocol, schema: MatSchema, segId: SegmentId, segPath: Path,
+      serializableSince: Option[Long]): Unit =
+    serializableSince match {
+      case Some(h) =>
+        // granularity = 'key': record this delta's exact touched keys first
+        // (readable the instant the manifest lists us), then check/publish
+        val ours = maybeWriteKeyDigest(spark, schema, root, segPath)
+        publishConflictChecked(root, proto, segId, segPath, h, ours)
+      case None =>
+        proto.commit(root, Seq(segId), (proto.listCommitted(root) :+ segId).sorted)
+        ()
+    }
 
   /** Under `graft.isolation.granularity = 'key'`: compute the delta's
     * touched-key digest (xxhash64 of the dim tuple, read back from the
@@ -214,7 +199,7 @@ object GraftInsert {
     * stay sound (negatives are certain), a false positive only produces a
     * spurious abort. Returns the digest for OUR side of the check; None
     * when the granularity is chunk. */
-  private[sources] def maybeWriteKeyDigest(spark: SparkSession, schema: MatSchema,
+  private def maybeWriteKeyDigest(spark: SparkSession, schema: MatSchema,
       root: Path, segPath: Path): Option[Storage.KeyDigest] =
     if (!Storage.readProps(root).get(GraftCatalog.GranularityProp).contains("key")) None
     else {
@@ -240,19 +225,18 @@ object GraftInsert {
     * detection: any transaction committed after `readHorizon` whose
     * segment touches the same CHUNK keys aborts this commit with
     * `ConcurrentModificationException` (the claim directory is deleted —
-    * the statement can simply be retried against the current state). On
-    * manifest tables the publish is a CAS `replace` on the exact base the
-    * check inspected, re-checked on every lost race, so no window remains
-    * between check and publish; rename tables get the check plus the
-    * protocol's single-writer assumption. Chunk granularity is
-    * conservative (a same-chunk different-key writer also aborts) — the
-    * same shape as Delta's file-level conflict detection, one level
-    * coarser. Shared by the row-level delta write
-    * ([[GraftDeltaBatchWrite]]) and the serializable filter-DELETE. */
-  private[sources] def publishConflictChecked(root: Path, proto: graft.core.Protocol,
+    * the statement can simply be retried against the current state). The
+    * check runs inside [[graft.core.Protocol.publishRebasing]] on every
+    * try, against the base that try publishes onto: on manifest tables a
+    * CAS `replace` on that exact base, so no window remains between check
+    * and publish; rename tables get the check plus the protocol's
+    * single-writer assumption. Chunk granularity is conservative (a
+    * same-chunk different-key writer also aborts) — the same shape as
+    * Delta's file-level conflict detection, one level coarser. */
+  private def publishConflictChecked(root: Path, proto: graft.core.Protocol,
       segId: SegmentId, segPath: Path, readHorizon: Long,
-      ourKeys: Option[Storage.KeyDigest] = None): Unit = {
-    lazy val ours = chunkKeys(segPath) // our OWN just-written delta — one walk
+      ourKeys: Option[Storage.KeyDigest]): Unit = {
+    lazy val ours = Storage.chunkDirsOf(segPath).toSet // our OWN delta — one walk
     // conflicting txn ids committed above the horizon, or empty
     def conflictTxns(base: Seq[SegmentId]): Seq[Long] = {
       // metadata path (manifest tables, round 12+): each manifest version
@@ -263,91 +247,51 @@ object GraftInsert {
       // it conflicts with EVERY row-level write — the dir-walk fallback
       // cannot see a truncate (it leaves no segments) and silently missed
       // this case before chunk recording existed.
-      val meta = proto match {
-        case m if m == Storage.ManifestProtocol =>
-          Storage.ManifestProtocol.commitsAfter(root, readHorizon).map(_.flatMap { c =>
-            val chunkOverlap = c.chunks.forall(_.exists(ours.contains))
-            // key exoneration (granularity = 'key'): a same-chunk commit
-            // whose recorded key digest is PROVABLY disjoint from ours is
-            // write-serializable after all — no abort. Digests are exact
-            // up to the cap and bloom above it ([[Storage.KeyDigest]]);
-            // any side without a digest (bulk append,
-            // pre-key-granularity) stays chunk-granular, the conservative
-            // direction — as do two over-cap bloom sides (no sound
-            // emptiness test between blooms).
-            val keyDisjoint = !c.isReplace && chunkOverlap && (ourKeys match {
-              case Some(mine) if c.newSegs.nonEmpty =>
-                val theirs = c.newSegs.map(id =>
-                  Storage.readKeyDigest(proto.readPath(root, id)))
-                theirs.forall(_.isDefined) &&
-                  theirs.flatten.forall(_.provablyDisjoint(mine))
-              case _ => false
-            })
-            val overlap = c.isReplace || (chunkOverlap && !keyDisjoint)
-            if (overlap && (c.newTxns.nonEmpty || c.isReplace))
-              if (c.newTxns.nonEmpty) c.newTxns else Seq(c.prodTxn)
-            else Seq.empty
-          })
-        case _ => None
-      }
+      val meta = proto.commitsAfter(root, readHorizon).map(_.flatMap { c =>
+        val chunkOverlap = c.chunks.forall(_.exists(ours.contains))
+        // key exoneration (granularity = 'key'): a same-chunk commit
+        // whose recorded key digest is PROVABLY disjoint from ours is
+        // write-serializable after all — no abort. Digests are exact
+        // up to the cap and bloom above it ([[Storage.KeyDigest]]);
+        // any side without a digest (bulk append,
+        // pre-key-granularity) stays chunk-granular, the conservative
+        // direction — as do two over-cap bloom sides (no sound
+        // emptiness test between blooms).
+        val keyDisjoint = !c.isReplace && chunkOverlap && (ourKeys match {
+          case Some(mine) if c.newSegs.nonEmpty =>
+            val theirs = c.newSegs.map(id =>
+              Storage.readKeyDigest(proto.readPath(root, id)))
+            theirs.forall(_.isDefined) &&
+              theirs.flatten.forall(_.provablyDisjoint(mine))
+          case _ => false
+        })
+        val overlap = c.isReplace || (chunkOverlap && !keyDisjoint)
+        if (overlap && (c.newTxns.nonEmpty || c.isReplace))
+          if (c.newTxns.nonEmpty) c.newTxns else Seq(c.prodTxn)
+        else Seq.empty
+      })
       meta.getOrElse {
         // fallback (rename protocol, or manifests predating chunk
         // recording): walk each later segment's directory tree
         base.filter(_.txnId > readHorizon).filter(s =>
-          chunkKeys(proto.readPath(root, s)).exists(ours.contains)).map(_.txnId)
+          Storage.chunkDirsOf(proto.readPath(root, s)).exists(ours.contains)).map(_.txnId)
       }
     }
-    var tries = 0
-    while (true) {
-      val base = proto.listCommitted(root)
+    try proto.publishRebasing(root, Seq(segId), segId.txnId) { base =>
       if (proto.txnWatermark(root) > readHorizon) {
         val conflicts = conflictTxns(base)
-        if (conflicts.nonEmpty) {
-          Storage.deleteRecursively(segPath)
-          throw new java.util.ConcurrentModificationException(
-            s"serializable row-level conflict: transaction(s) " +
-              s"${conflicts.distinct.sorted.mkString(", ")} committed " +
-              s"after this statement's snapshot (txn $readHorizon) and touched the " +
-              "same chunks; re-run the statement against the current state")
-        }
+        if (conflicts.nonEmpty) throw new java.util.ConcurrentModificationException(
+          s"serializable row-level conflict: transaction(s) " +
+            s"${conflicts.distinct.sorted.mkString(", ")} committed " +
+            s"after this statement's snapshot (txn $readHorizon) and touched the " +
+            "same chunks; re-run the statement against the current state")
       }
-      if (proto != Storage.ManifestProtocol) {
-        proto.commit(root, Seq(segId), (base :+ segId).sorted)
-        return
-      }
-      try {
-        proto.replace(root, Seq(segId), (base :+ segId).sorted, base, segId.txnId)
-        return
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // lost the CAS: something committed between check and publish —
-          // loop to re-run the conflict check against the new base
-          tries += 1
-          if (tries >= 16) { Storage.deleteRecursively(segPath); throw e }
-      }
+      (base :+ segId).sorted
+    } catch {
+      case e: java.util.ConcurrentModificationException =>
+        Storage.deleteRecursively(segPath)
+        throw e
     }
-  }
-
-  /** Chunk-key directories (relative paths like `_ck_t=3/_ck_s=1`) holding
-    * data files under a segment — the conflict-detection granularity
-    * ([[graft.core.Storage.chunkDirsOf]], the same walk the manifest
-    * publisher records). */
-  private[sources] def chunkKeys(segDir: Path): Set[String] =
-    Storage.chunkDirsOf(segDir).toSet
-
-  private def list(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toSeq }
-      finally s.close()
-    }
-
-  /** Any real data file under the claimed directory (chunk subdirs
-    * included)? Commit markers and hidden files don't count. */
-  private def hasDataFiles(p: Path): Boolean = {
-    val name = p.getFileName.toString
-    if (Files.isDirectory(p)) list(p).exists(hasDataFiles)
-    else !name.startsWith("_") && !name.startsWith(".")
+    ()
   }
 }

@@ -208,18 +208,8 @@ final class GraftDeltaBatchWrite(dir: String, matSchema: MatSchema, info: Logica
     * single-writer assumption. The loser's claim directory is deleted and
     * the statement can simply be retried — its re-read sees the winner. */
   private def publish(segId: SegmentId, segPath: java.nio.file.Path): Unit =
-    if (serializable) {
-      // granularity = 'key': record this delta's exact touched keys first
-      // (readable the instant the manifest lists us), then check/publish
-      val ourKeys = GraftInsert.maybeWriteKeyDigest(
-        org.apache.spark.sql.SparkSession.active, matSchema, root, segPath)
-      GraftInsert.publishConflictChecked(root, proto, segId, segPath, readHorizon,
-        ourKeys)
-    } else {
-      val committed = proto.listCommitted(root)
-      proto.commit(root, Seq(segId), (committed :+ segId).sorted)
-      ()
-    }
+    GraftInsert.publishClaimed(SparkSession.active, root, proto, matSchema,
+      segId, segPath, if (serializable) Some(readHorizon) else None)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     claimed.foreach(c => Storage.deleteRecursively(c._2))

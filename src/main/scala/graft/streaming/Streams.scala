@@ -28,18 +28,14 @@ object Streams {
     * micro-batch. The glob matches exactly `<8hex>.<8hex>` directory names,
     * so `.tmp` (uncommitted) dirs can never match — glob `*` matches dots,
     * which is why a lazy `[0-9a-f]*.[0-9a-f]*` would dirty-read them.
+    * Tables whose visibility is a manifest, not the listing, are refused.
     *
     * Micro-batches are file-aligned, not transaction-aligned; for
     * exactly-once txn-per-batch semantics use [[GraftStreamSource]]
     * (`spark.readStream.format("graft-stream")`). */
   def segmentStream(spark: SparkSession, dbPath: String): DataFrame = {
     val db = MatDb.open(spark, dbPath)
-    // Manifest-protocol tables write IN-FLIGHT segments at their final
-    // hex8.hex8 names (visibility comes from the manifest, which a bare
-    // file glob cannot consult) — this stream would dirty-read them. The
-    // txn-aligned graft-stream source reads through the manifest and is
-    // the supported path there.
-    require(db.protocol == graft.core.Storage.RenameProtocol,
+    require(!db.protocol.atomicReplace,
       "segmentStream supports rename-protocol tables only; use " +
         "spark.readStream.format(\"graft-stream\") for manifest tables")
     // _del rides along (null ≡ live for pre-delete segments) so the raw
@@ -390,11 +386,10 @@ object Streams {
             if (maxSegs > 0) {
               val retain = sys.props.get("graft.mview.checkpoint.retain")
                 .map(_.toInt).getOrElse(16)
-              // manifest-protocol views only: checkpoint's atomic fold
-              // needs the conditional-put publish (a rename-protocol view
-              // simply skips — the knob must never crash the stream)
+              // checkpoint's fold needs an atomic replace (other views
+              // simply skip — the knob must never crash the stream)
               pending.foreach { case (v, _) =>
-                if (v.protocol == graft.core.Storage.ManifestProtocol) {
+                if (v.protocol.atomicReplace) {
                   v.checkpointIfNeeded(maxSegs, retain); ()
                 }
               }
@@ -503,13 +498,11 @@ object Streams {
     * provenance, no MVCC resolve — the "ever committed" history the dedup
     * ingest sinks gate each batch against. One protocol listing plus one
     * [[graft.core.Scan.raw]] file scan: no `MatDb.open`, so no recovery
-    * sweep runs per micro-batch. It stays raw because the media table
-    * stores several frame rows under one `doc_id` key. */
+    * sweep runs per micro-batch. It stays raw because a media table keyed
+    * by `doc_id` alone stores several frame rows under one key. */
   private[graft] def committedRows(spark: SparkSession, dir: String): DataFrame = {
     val root = Storage.rootPath(dir)
-    val proto = Storage.detect(root)
-    Scan.raw(spark, Storage.readSchema(root),
-      proto.listCommitted(root).sorted.map(s => proto.readPath(root, s).toString), Nil)
+    Scan.raw(spark, Storage.readSchema(root), Storage.detect(root).committedPaths(root), Nil)
   }
 
   /** The dedup ingest sinks' shared micro-batch loop. `prepare` derives
@@ -864,13 +857,25 @@ object Streams {
     * re-commit duplicate signature rows; the identity guard is
     * minFrames-independent. It also makes re-sending a previously
     * committed doc_id a no-op, which is what "incremental ingest by id"
-    * should mean. */
+    * should mean.
+    *
+    * Compaction (`compactEvery > 0`) keeps one row per key, so it needs
+    * `frame_idx` in the key: on a table keyed by `doc_id` alone it would
+    * silently drop all but one frame of every video, and the sink refuses
+    * it. `frame_idx` is cast to the table's column type (a dimension is a
+    * long). */
   def mediaNearDupIngest(stream: DataFrame, dir: String, checkpoint: String,
       stride: Int = 1, minFrames: Int = 1,
       maxDist: Int = graft.operators.SimHashBands.MaxHamming, bands: Int = 3,
       compactEvery: Int = 0, maxBatchRows: Long = DefaultMaxBatchRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireColumns(dir, "doc_id", "frame_idx", "phash")
+    val schema = Storage.readSchema(Storage.rootPath(dir))
+    require(compactEvery <= 0 || schema.dimNames.contains("frame_idx"),
+      s"compactEvery = $compactEvery on a media table keyed by " +
+        s"(${schema.dimNames.mkString(", ")}) would keep one frame row per key; " +
+        "key the table by (doc_id, frame_idx)")
+    val frameType = schema.toStructType("frame_idx").dataType
     // the batch's SIGNATURES are what persists, not the media: slicing must
     // not re-decode the batch, and admission counts signature rows (what
     // broadcasts)
@@ -879,6 +884,7 @@ object Streams {
       graft.multimodal.Multimodal.mediaPhashes(
         batch.select(col("doc_id"), col("kind"), col("media"))
           .as[graft.multimodal.Multimodal.MediaRow], stride)
+        .withColumn("frame_idx", col("frame_idx").cast(frameType))
     } { (slice, history) =>
       val gated = mediaNearDupFilter(slice, history, minFrames, maxDist, bands)
       // exact doc-identity replay guard (independent of minFrames): a

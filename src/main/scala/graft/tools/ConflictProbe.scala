@@ -48,7 +48,7 @@ object ConflictProbe {
           lit(i.toLong).as("v")))
         t.commit()
       }
-      val proto = Storage.ManifestProtocol
+      val proto = Storage.detect(root)
       val later = proto.listCommitted(root).filter(_.txnId > 0L)
       require(later.size == commits)
       // the old path: walk EVERY later segment's file tree
@@ -98,11 +98,11 @@ object ConflictProbe {
         spark.range(5000).select(col("id").as("k"), lit(0L).as("v")),
         serializableSince = Some(1L))
       // writer B: one disjoint key, horizon BELOW writer A — both commit
-      val before = Storage.ManifestProtocol.txnWatermark(root)
+      val before = Storage.detect(root).txnWatermark(root)
       graft.sources.GraftInsert.tombstone(spark, root.toString,
         spark.range(5500, 5501).select(col("id").as("k"), lit(0L).as("v")),
         serializableSince = Some(1L))
-      val both = Storage.ManifestProtocol.txnWatermark(root) > before
+      val both = Storage.detect(root).txnWatermark(root) > before
       db.refresh()
       val n = db.snapshot().count()
       Storage.deleteRecursively(root)

@@ -192,9 +192,9 @@ object IngestThroughputProbe {
       prev = batch
       batch
     }
-    val schema = MatSchema(Seq(Dimension("doc_id", 100000)),
-      Seq(ValueCol("frame_idx", org.apache.spark.sql.types.IntegerType),
-        ValueCol("phash")))
+    // keyed per frame: compactEvery needs frame_idx in the key
+    val schema = MatSchema(Seq(Dimension("doc_id", 100000), Dimension("frame_idx", 1024)),
+      Seq(ValueCol("phash")))
     val cp = java.nio.file.Files.createTempDirectory("graft-tp-media").toString
     val input = MemoryStream[(Long, String, Array[Byte])]
     drive[(Long, String, Array[Byte])](spark, schema, input,

@@ -31,7 +31,7 @@ object MetaLatencyProbe {
     val small = args.lift(0).map(_.toInt).getOrElse(200)
     val big = args.lift(1).map(_.toInt).getOrElse(5000)
     val reps = args.lift(2).map(_.toInt).getOrElse(300)
-    val proto = Storage.ManifestProtocol
+    val proto = Storage.forName("manifest")
 
     def build(n: Int): java.nio.file.Path = {
       val root = Files.createTempDirectory(s"graft-meta-$n")

@@ -1373,6 +1373,46 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("media ingest compaction: refused on a doc_id key, keeps every frame on (doc_id, frame_idx)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.multimodal.Multimodal
+    import MediaFixtures.{muxAvi, structuredFrame}
+    val vid = muxAvi(Seq(structuredFrame(0), structuredFrame(7),
+      structuredFrame(13)), 40000, 64, 48)
+    def media = MemoryStream[(Long, String, Array[Byte])]
+    def ckpt() = java.nio.file.Files.createTempDirectory("graft-media-compact").toString
+
+    // keyed by doc_id alone, compaction (newest-wins per key) would keep
+    // one of the video's three frame rows: refused at call time
+    val docKeyed = sinkTable("media_compact_doc", MatSchema(Seq(Dimension("doc_id", 1000)),
+      Seq(ValueCol("frame_idx", org.apache.spark.sql.types.IntegerType), ValueCol("phash"))))
+    val refused = intercept[IllegalArgumentException](Streams.mediaNearDupIngest(
+      media.toDF().toDF("doc_id", "kind", "media"), docKeyed, ckpt(), compactEvery = 1))
+    assert(refused.getMessage.contains("doc_id") && refused.getMessage.contains("frame_idx"),
+      refused.getMessage)
+
+    val frameKeyed = sinkTable("media_compact_frame",
+      MatSchema(Seq(Dimension("doc_id", 1000), Dimension("frame_idx", 64)), Seq(ValueCol("phash"))))
+    def frames(doc: Long) =
+      Streams.committedRows(spark, frameKeyed).where($"doc_id" === doc).count()
+    val input = media
+    val q = Streams.mediaNearDupIngest(input.toDF().toDF("doc_id", "kind", "media"),
+      frameKeyed, ckpt(), compactEvery = 1).start()
+    try {
+      input.addData((10L, "video", vid))
+      q.processAllAvailable()
+      assert(frames(10L) === 3)
+      // batch 1 appends an image, then compacts the table
+      input.addData((1L, "image", Multimodal.renderDocImage("one image after the video")))
+      q.processAllAvailable()
+      val committed = MatDb.open(spark, frameKeyed).committedSegments
+      assert(committed.map(_.txnId).distinct.size === 1, s"batch 1 must compact: $committed")
+      assert(frames(10L) === 3, "compaction must keep every frame of the video")
+      assert(frames(1L) === 1)
+    } finally q.stop()
+  }
+
   test("catalog change stream: readStream.table(<cat>.<t>.stream) tails commits, options flow") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-cat-stream")

@@ -339,6 +339,26 @@ class CoreSpec extends CoreProtocolBehaviors("rename") {
     assert(db3.committedSegments.forall(_.txnId != fakeTxn))
   }
 
+  test("replace leaves exactly visibleAfter on disk: the protocol deletes superseded dirs") {
+    val path = tmpDir()
+    val db = create(path)
+    (1L to 3L).foreach { t =>
+      val txn = db.newTransaction(); txn.addRowsSeq(Seq(Seq(t, 1L, t))); txn.commit()
+    }
+    val root = Storage.rootPath(path)
+    val base = db.committedSegments
+    assert(base.map(_.txnId) === Seq(1L, 2L, 3L))
+    // a flushed replacement segment keeps txn 2 and supersedes txns 1 and 3
+    val fresh = SegmentId(9L, 0)
+    Files.createDirectories(db.protocol.writePath(root, fresh))
+    val after = Seq(base(1), fresh)
+    assert(db.protocol.replace(root, Seq(fresh), after, base, 9L) === after)
+    val onDisk = Storage.listDir(root)
+      .flatMap(p => Storage.decode(p.getFileName.toString)).map(_._1).sorted
+    assert(onDisk === after)
+    assert(db.protocol.listCommitted(root) === after)
+  }
+
   test("addRows widens INT to LONG and refuses a DOUBLE dimension before buffering") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
