@@ -163,9 +163,23 @@ object ObjectStoreSim extends CasStore {
 }
 
 object CasStore {
-  /** Registry by marker name; [[PosixCasStore]] when absent/unknown. */
-  def forName(name: String): CasStore = name match {
-    case ObjectStoreSim.name => ObjectStoreSim
-    case _ => PosixCasStore
+  private val registry = new java.util.concurrent.ConcurrentHashMap[String, CasStore](
+    java.util.Map.of(PosixCasStore.name, PosixCasStore, ObjectStoreSim.name, ObjectStoreSim))
+
+  /** The store registered under `name` (a `_store` marker's content or a
+    * requested store). An unknown name is refused: silently falling back
+    * to posix would commit an object-store table through primitives its
+    * store does not have. */
+  def forName(name: String): CasStore = {
+    val store = registry.get(name)
+    if (store == null) {
+      val known = registry.keySet.toArray(Array.empty[String]).sorted.mkString(", ")
+      throw new IllegalArgumentException(s"unknown graft store '$name' (expected one of $known)")
+    }
+    store
   }
+
+  /** Register a further store under its name — the seam tests use to
+    * interpose fault-injecting decorators. */
+  private[graft] def register(store: CasStore): Unit = { registry.put(store.name, store); () }
 }

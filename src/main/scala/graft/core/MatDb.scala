@@ -13,15 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a transaction sees only segments with `txnId < horizon` taken at open
   * (database.rs:68-72, 85-89), which doubles as time travel via [[asOf]].
   *
-  * Commit durability is pluggable ([[Protocol]]): the reference's atomic
-  * directory renames (default), or an object-store-safe `_log` manifest that
-  * also makes [[overwrite]]/[[compact]] a single atomic swap.
+  * Commits publish through the `_log` manifest ([[Protocol]]): object-store
+  * safe, optimistic multi-writer, and [[overwrite]]/[[compact]] are a single
+  * atomic swap. A directory committed by the reference's segment renames is
+  * upgraded to manifest version 0 when opened.
   */
 final class MatDb private (
     val spark: SparkSession,
     val root: Path,
     val schema: MatSchema,
-    val protocol: Protocol,
     initialCommitted: Seq[SegmentId],
     firstTxnId: Long) {
 
@@ -33,19 +33,16 @@ final class MatDb private (
 
   private[core] def allocateTxnId(): Long = nextTxnId.getAndIncrement()
 
-  /** Publish a transaction's flushed segments (append). Bookkeeping and the
-    * protocol call share the lock so `visibleAfter` is consistent; the
-    * protocol returns the ACTUAL post-commit set (under the manifest
-    * protocol a concurrent writer's segments merge in), which becomes this
-    * instance's view. */
+  /** Publish a transaction's flushed segments (append). The protocol
+    * returns the ACTUAL post-commit set (a concurrent writer's segments
+    * merge in), which becomes this instance's view. */
   private[core] def commitTransaction(ids: Seq[SegmentId]): Unit = synchronized {
-    val after = (committed ++ ids).sorted
-    committed = protocol.commit(root, ids, after).toVector.sorted
+    committed = Protocol.commit(root, ids).toVector.sorted
   }
 
   /** Publish a transaction's flushed segments as the ENTIRE table — the
-    * replace commit behind [[overwrite]] and [[compact]] ([[Protocol.replace]]
-    * decides how superseded directories go). `expectedBase` = the committed
+    * replace commit behind [[overwrite]] and [[compact]] ([[Protocol.replace]];
+    * superseded directories stay until [[vacuum]]). `expectedBase` = the committed
     * set the replacement data was computed from (the replacing
     * transaction's snapshot). If anything committed since — in-process
     * (checked under this lock) or cross-process (checked against the
@@ -57,13 +54,13 @@ final class MatDb private (
     if (committed != expectedBase.toVector.sorted)
       throw new java.util.ConcurrentModificationException(
         "table changed since the replace commit's snapshot (overwrite/compact); retry")
-    committed = protocol.replace(root, ids, ids.sorted, expectedBase, prodTxn)
+    committed = Protocol.replace(root, ids, ids.sorted, expectedBase, prodTxn)
       .toVector.sorted
   }
 
   // Segments flushed by THIS process's open transactions but not yet
-  // committed — vacuum must never sweep them (under the manifest protocol
-  // they already sit at their final names).
+  // committed — vacuum must never sweep them (they already sit at their
+  // final names).
   private var inFlight: Set[SegmentId] = Set.empty
   private[core] def registerInFlight(id: SegmentId): Unit =
     synchronized { inFlight += id }
@@ -71,18 +68,18 @@ final class MatDb private (
     synchronized { inFlight --= ids }
 
   /** Physically delete segment directories that are no longer referenced
-    * (superseded by compact/overwrite, or left by crashed transactions).
-    * Manifest protocol only — under renames, unreferenced-and-committed
-    * cannot exist. This process's in-flight transactions are excluded;
+    * (superseded by compact/overwrite, or left by crashed transactions,
+    * including the segment-0-less txns of an upgraded rename-committed
+    * directory). This process's in-flight transactions are excluded;
     * do NOT run vacuum while OTHER processes may be writing this table,
     * and only when no in-flight snapshot may still be reading pre-replace
     * files. Returns the number of directories removed. */
   def vacuum(): Int = synchronized {
-    val swept = protocol.sweepUnreferenced(root, committed ++ inFlight)
+    val swept = Protocol.sweepUnreferenced(root, committed ++ inFlight)
     // with the superseded directories gone, manifest versions referencing
     // them can serve no read — drop them so table metadata stays O(live
-    // history), not O(commits ever) (Storage.pruneManifestHistory)
-    protocol.pruneManifestHistory(root)
+    // history), not O(commits ever) (Protocol.pruneManifestHistory)
+    Protocol.pruneManifestHistory(root)
     swept
   }
 
@@ -95,7 +92,7 @@ final class MatDb private (
   /** Highest transaction id this table has ever committed (on-disk read —
     * pair with [[refresh]] for a fresh observation of a table other
     * processes write). */
-  def txnWatermark: Long = protocol.txnWatermark(root)
+  def txnWatermark: Long = Protocol.txnWatermark(root)
 
   /** Open a transaction whose id is PINNED to `id` instead of allocated.
     *
@@ -108,7 +105,7 @@ final class MatDb private (
     * any crashed prior attempt's orphan segments cleared first
     * ([[discardOrphanTxn]]) or flush aborts on the claimed directory. */
   def newPinnedTransaction(id: Long): Transaction = synchronized {
-    require(id > protocol.txnWatermark(root),
+    require(id > Protocol.txnWatermark(root),
       s"pinned txn id $id is not above the table's watermark — already committed")
     // raise the allocator floor past the pin so later UNPINNED allocations
     // stay unique and monotone
@@ -126,8 +123,8 @@ final class MatDb private (
     require(!committed.exists(_.txnId == tid),
       s"txn $tid is committed — refusing to discard its segments")
     var sn = 0
-    while (java.nio.file.Files.exists(protocol.writePath(root, SegmentId(tid, sn)))) {
-      protocol.discardInFlight(root, SegmentId(tid, sn))
+    while (java.nio.file.Files.exists(Storage.segmentPath(root, SegmentId(tid, sn)))) {
+      Protocol.discardInFlight(root, SegmentId(tid, sn))
       sn += 1
     }
   }
@@ -141,14 +138,14 @@ final class MatDb private (
     * one manifest read under the `_last` pointer, O(1). The txn-id floor
     * advances past everything observed so later allocations stay unique. */
   def refresh(): Unit = synchronized {
-    committed = protocol.listCommitted(root).toVector.sorted
-    val floor = protocol.txnWatermark(root) + 1L
+    committed = Protocol.listCommitted(root).toVector.sorted
+    val floor = Protocol.txnWatermark(root) + 1L
     var cur = nextTxnId.get()
     while (cur < floor && !nextTxnId.compareAndSet(cur, floor)) cur = nextTxnId.get()
   }
 
   private[core] def segmentReadPaths(segments: Seq[SegmentId]): Seq[String] =
-    segments.map(s => protocol.readPath(root, s).toString)
+    segments.map(s => Storage.segmentPath(root, s).toString)
 
   /** Read-only snapshot of the table: newest version of each key point, in
     * no particular order (add `.orderBy` for the reference's key-ordered
@@ -168,7 +165,7 @@ final class MatDb private (
     // full resolve automatically. Two marked segments of DIFFERENT txns can
     // overlap keys, so the fast path requires exactly one.
     val unique = segs.map(_.txnId).distinct.size == 1 &&
-      segs.forall(s => Storage.isUnique(protocol.readPath(root, s)))
+      segs.forall(s => Storage.isUnique(Storage.segmentPath(root, s)))
     val df =
       if (unique && segs.nonEmpty) {
         val raw = Scan.raw(spark, schema, segmentReadPaths(segs), extra = Nil)
@@ -198,13 +195,13 @@ final class MatDb private (
   }
 
   /** Segment set visible at `asOfTxn`. Time travel resolves through the
-    * protocol ([[Protocol.listCommittedAsOf]]) so that, under the manifest
-    * protocol, states replaced away by overwrite/truncate/compact stay
+    * protocol ([[Protocol.listCommittedAsOf]]) so that states replaced
+    * away by overwrite/truncate/compact stay
     * readable from their ORIGINAL manifest version until vacuumed; the
     * current snapshot stays on the in-memory committed set (no listing). */
   private def visibleAt(asOfTxn: Option[Long]): Seq[SegmentId] = asOfTxn match {
     case None    => synchronized(committed)
-    case Some(t) => protocol.listCommittedAsOf(root, t)
+    case Some(t) => Protocol.listCommittedAsOf(root, t)
   }
 
   def asOf(txnId: Long): DataFrame = snapshot(Some(txnId))
@@ -221,7 +218,7 @@ final class MatDb private (
     * (metadata-only: one manifest-lineage read, no data IO). */
   def hasCommitExactlyAt(txn: Long): Boolean =
     txn > 0L &&
-      protocol.listCommittedAsOf(root, txn).map(_.txnId).foldLeft(0L)(math.max) == txn
+      Protocol.listCommittedAsOf(root, txn).map(_.txnId).foldLeft(0L)(math.max) == txn
 
   /** Total on-disk bytes of the segments visible at `asOfTxn` (driver-side
     * listing, no data IO). [[graft.sources.GraftRelation]] reports this as
@@ -257,11 +254,11 @@ final class MatDb private (
     * over the manifest LINEAGE (directories still on disk) so timestamps
     * below a replace commit keep resolving until vacuum. */
   def resolveTimestamp(tsMillis: Long): Option[Long] =
-    Storage.commitTimestamps(root, protocol, historySegments)
+    Storage.commitTimestamps(root, historySegments)
       .filter(_._2 <= tsMillis).lastOption.map(_._1)
 
   private def historySegments: Seq[SegmentId] =
-    Storage.historySegments(root, protocol, synchronized(committed))
+    Storage.historySegments(root, synchronized(committed))
 
   /** Key-ordered full scan — the reference's one query operator
     * (scan.rs:183-238): newest version per key, ordered by dimensions.
@@ -314,8 +311,8 @@ final class MatDb private (
     * `(fromTxn, toTxn]` break the touched-keys formulation: the keys they
     * wiped exist in NO range segment (a truncate is segment-less, an
     * overwrite's removals are manifest-shaped), so the O(delta) path would
-    * silently emit no D rows for them and a replica would diverge. Under
-    * the MANIFEST protocol this is handled soundly: a metadata walk detects
+    * silently emit no D rows for them and a replica would diverge. This is
+    * handled soundly: a metadata walk detects
     * any replace above `fromTxn` (a checkpoint fold whose recorded boundary
     * is <= `fromTxn` is exonerated — it reshaped only state the range never
     * reads); both horizons then resolve EXACTLY through the manifest
@@ -323,42 +320,37 @@ final class MatDb private (
     * delta comes from a full two-snapshot diff — O(state), the unavoidable
     * price of a replace in range. If the pre-replace state was already
     * vacuumed/pruned, this REFUSES with `IllegalStateException` rather than
-    * answer wrong — rebuild the consumer from a full snapshot. Under the
-    * RENAME protocol a replace physically destroys the replaced state at
-    * commit time, so nothing can be detected or resolved: the documented
-    * contract there is append-only history over the range (CDC consumers
-    * should use the manifest protocol). */
+    * answer wrong — rebuild the consumer from a full snapshot. History
+    * below an upgraded directory's version 0 is the append-only legacy
+    * listing, which that version records as exactly resolvable. */
   def changesBetween(fromTxn: Long, toTxn: Long, includeOld: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
     require(fromTxn <= toTxn, s"changesBetween: from $fromTxn > to $toTxn")
     val dims = schema.dimNames
+    val safe = Protocol.commitsAfter(root, fromTxn) match {
+      case Some(metas) =>
+        metas.forall(m => !m.isReplace || m.foldTxn.exists(_ <= fromTxn))
+      case None => false // metadata holes / manifests predating commit metadata
+    }
     val segs: Seq[SegmentId] =
-      if (!protocol.atomicReplace) synchronized(committed) // rename: append-only contract
+      if (safe) synchronized(committed)
       else {
-        val safe = protocol.commitsAfter(root, fromTxn) match {
-          case Some(metas) =>
-            metas.forall(m => !m.isReplace || m.foldTxn.exists(_ <= fromTxn))
-          case None => false // metadata holes / pre-round-12 manifests
-        }
-        if (safe) synchronized(committed)
-        else {
-          def strict(t: Long, side: String): Seq[SegmentId] =
-            protocol.listCommittedAsOfStrict(root, t).getOrElse(
-              throw new IllegalStateException(
-                s"changesBetween($fromTxn, $toTxn): a replace-kind commit " +
-                  "(TRUNCATE / INSERT OVERWRITE / compact) landed after txn " +
-                  s"$fromTxn and the $side state at txn $t is no longer " +
-                  "exactly reconstructible (history vacuumed or pruned) — " +
-                  "the delta would be incomplete; rebuild the consumer " +
-                  "from a full snapshot instead"))
-          val fromSet = strict(fromTxn, "old")
-          val toSet = strict(toTxn, "new")
-          // replaces only ABOVE toTxn leave the range itself append-only
-          // (fromSet survives into toSet verbatim): the O(delta) path still
-          // applies, just over the lineage-resolved sets
-          if (fromSet.forall(toSet.contains)) toSet
-          else return replaceRangeDiff(fromSet, toSet, includeOld)
-        }
+        def strict(t: Long, side: String): Seq[SegmentId] =
+          Protocol.listCommittedAsOfStrict(root, t).getOrElse(
+            throw new IllegalStateException(
+              s"changesBetween($fromTxn, $toTxn): a replace-kind commit " +
+                "(TRUNCATE / INSERT OVERWRITE / compact) landed after txn " +
+                s"$fromTxn and the $side state at txn $t is no longer " +
+                "exactly reconstructible (history vacuumed or pruned) — " +
+                "the delta would be incomplete; rebuild the consumer " +
+                "from a full snapshot instead"))
+        val fromSet = strict(fromTxn, "old")
+        val toSet = strict(toTxn, "new")
+        // replaces only ABOVE toTxn leave the range itself append-only
+        // (fromSet survives into toSet verbatim): the O(delta) path still
+        // applies, just over the lineage-resolved sets
+        if (fromSet.forall(toSet.contains)) toSet
+        else return replaceRangeDiff(fromSet, toSet, includeOld)
       }
     // no .distinct(): the only consumer is the left-semi join below, whose
     // hash build dedups keys inherently — the distinct added a two-phase
@@ -459,9 +451,9 @@ final class MatDb private (
   def history(): DataFrame = {
     import spark.implicits._
     val segs = historySegments
-    val ts = Storage.commitTimestamps(root, protocol, segs).toMap
+    val ts = Storage.commitTimestamps(root, segs).toMap
     segs
-      .map(s => (s.txnId, s.segNum, protocol.readPath(root, s).toString,
+      .map(s => (s.txnId, s.segNum, Storage.segmentPath(root, s).toString,
         new java.sql.Timestamp(ts(s.txnId))))
       .toDF("txn_id", "seg_num", "path", "commit_ts")
   }
@@ -494,7 +486,7 @@ final class MatDb private (
     // landing AFTER the watermark read is caught by the re-check below
     // (watermark is monotone, so end-equality proves nothing landed in
     // between) and the persist is skipped.
-    val watermark = protocol.txnWatermark(root)
+    val watermark = Protocol.txnWatermark(root)
     refresh()
     val snap = snapshot()
     // actual logical size, not n * defaultSize: StructType.defaultSize
@@ -538,7 +530,7 @@ final class MatDb private (
     // re-read after the aggregate: any commit that landed mid-aggregate
     // makes these numbers unverifiable — skip the persist (the next
     // ANALYZE recomputes) instead of stamping stale stats as fresh
-    if (protocol.txnWatermark(root) == watermark)
+    if (Protocol.txnWatermark(root) == watermark)
       Storage.writeProps(root, Storage.readProps(root) ++ dimStats ++ Map(
         "graft.stats.rowcount" -> n.toString,
         "graft.stats.bytes" -> bytes.toString,
@@ -553,7 +545,7 @@ final class MatDb private (
     val props = Storage.readProps(root)
     for {
       txn <- props.get("graft.stats.txn")
-      if txn.toLong == protocol.txnWatermark(root)
+      if txn.toLong == Protocol.txnWatermark(root)
       bytes <- props.get("graft.stats.bytes")
     } yield bytes.toLong
   }
@@ -621,8 +613,8 @@ final class MatDb private (
   }
 
   /** Compact the table: rewrite the resolved snapshot as one new
-    * transaction that REPLACES the old segment set (atomic under the
-    * manifest protocol), then delete the superseded directories.
+    * transaction that REPLACES the old segment set in one atomic swap; the
+    * superseded directories stay readable for time travel until [[vacuum]].
     * Counterpart of Delta's OPTIMIZE+VACUUM; the reference accumulates
     * segments forever. Caveat (documented): time travel to transactions
     * older than the compaction is gone.
@@ -684,13 +676,6 @@ final class MatDb private (
 
   private[graft] def checkpoint(horizon: Long, maxRecordsPerFile: Option[Long],
       zorderDims: Seq[String]): Long = {
-    // manifest protocol only: under renames, recovery's completeness rule
-    // (a txn missing its segment 0 never finished committing) would drop a
-    // baseline that replaces its own txn's segment 0 — and the rename swap
-    // is not atomic anyway. The manifest's conditional-put publish is.
-    require(protocol.atomicReplace,
-      "checkpoint(horizon) requires the 'manifest' commit protocol " +
-        "(use compact() for a full flatten under the rename protocol)")
     val base = synchronized(committed)
     val replaced = base.filter(_.txnId <= horizon)
     if (replaced.isEmpty) return -1L
@@ -705,24 +690,24 @@ final class MatDb private (
     // bid is deterministic, so a CRASHED earlier checkpoint may have left a
     // half-written dir here — clear it before appending (a concurrent live
     // checkpoint with the same bid loses either here or at the CAS below)
-    protocol.discardInFlight(root, bid)
-    Storage.stampClaim(protocol.writePath(root, bid)) // shield from other processes' GC grace
+    Protocol.discardInFlight(root, bid)
+    Storage.stampClaim(Storage.segmentPath(root, bid)) // shield from other processes' GC grace
     try {
       // layout knobs (OPTIMIZE path): z-order clustering, file size bound
-      Segment.write(schema, decorated, tid, protocol.writePath(root, bid), root,
+      Segment.write(schema, decorated, tid, Storage.segmentPath(root, bid), root,
         zorderDims, maxRecordsPerFile)
       // the baseline holds the RESOLVED snapshot: one live row per key, no
       // tombstones — record it so reads whose visible set is exactly this
       // segment skip MVCC resolution (Storage.UniqueFile; see snapshot())
-      Storage.markUnique(protocol.writePath(root, bid))
+      Storage.markUnique(Storage.segmentPath(root, bid))
       // preserve the horizon txn's ORIGINAL commit wall-clock on the folded
       // baseline (stampCommitTs won't overwrite an existing stamp), so
       // TIMESTAMP AS OF keeps resolving exactly like before the fold for
       // every t >= the horizon commit
-      Storage.commitTimestamps(root, protocol, replaced).lastOption.foreach {
+      Storage.commitTimestamps(root, replaced).lastOption.foreach {
         case (_, ts) =>
           java.nio.file.Files.write(
-            protocol.writePath(root, bid).resolve(Storage.CommitTsFile),
+            Storage.segmentPath(root, bid).resolve(Storage.CommitTsFile),
             String.valueOf(ts).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       // REBASE publish (Protocol.publishRebasing): a checkpoint is pure
@@ -744,9 +729,9 @@ final class MatDb private (
       // whose range starts at-or-above it keeps its O(delta) path across
       // this fold (changesBetween).
       synchronized {
-        committed = protocol.publishRebasing(root, Seq(bid), tid, foldTxn = Some(tid)) { cur =>
+        committed = Protocol.publishRebasing(root, Seq(bid), tid, foldTxn = Some(tid)) { cur =>
           if (cur.filter(_.txnId <= horizon) != replaced) {
-            protocol.discardInFlight(root, bid)
+            Protocol.discardInFlight(root, bid)
             throw new java.util.ConcurrentModificationException(
               "folded prefix changed under the checkpoint (concurrent " +
                 "overwrite/truncate/fold); the baseline is stale — retry from scratch")
@@ -785,12 +770,12 @@ final class MatDb private (
     val before = synchronized(committed)
     if (before.isEmpty) return (-1L, 0L, 0L)
     val filesBefore = before.map(s => Storage.countDataFiles(
-      protocol.readPath(root, s))).sum
+      Storage.segmentPath(root, s))).sum
     val maxRecords = targetFileBytes.map { bytes =>
       require(bytes > 0, s"target_file_size must be positive, got $bytes")
       val props = Storage.readProps(root)
       val rowBytes = (for {
-        txn <- props.get("graft.stats.txn") if txn.toLong == protocol.txnWatermark(root)
+        txn <- props.get("graft.stats.txn") if txn.toLong == Protocol.txnWatermark(root)
         b <- props.get("graft.stats.bytes")
         n <- props.get("graft.stats.rowcount") if n.toLong > 0
       } yield math.max(1L, b.toLong / n.toLong))
@@ -800,7 +785,7 @@ final class MatDb private (
     val horizon = before.map(_.txnId).max
     val tid = checkpoint(horizon, maxRecords, zorderDims)
     val filesAfter = synchronized(committed).map(s => Storage.countDataFiles(
-      protocol.readPath(root, s))).sum
+      Storage.segmentPath(root, s))).sum
     (tid, filesBefore, filesAfter)
   }
 
@@ -848,40 +833,47 @@ final class MatDb private (
 }
 
 object MatDb {
-  /** Create a new table directory (reference: database.rs:35-50).
-    * `protocol` = "rename" (reference-parity default) or "manifest". */
+  /** Create a new table directory (reference: database.rs:35-50) in
+    * `store` ([[CasStore.forName]]). `protocol` must be "manifest", the one
+    * commit protocol; any other value (or an unknown store) is refused
+    * before anything is written. */
   def create(spark: SparkSession, schema: MatSchema, path: String,
-      protocol: String = "rename", store: String = PosixCasStore.name): MatDb = {
+      protocol: String = Protocol.name, store: String = PosixCasStore.name): MatDb = {
+    requireManifest(protocol, "MatDb.create")
+    val cas = CasStore.forName(store)
     graft.plans.GraftPlans.enable(spark)
     val root = Storage.rootPath(path)
     // store marker FIRST: every subsequent write (schema, manifests,
     // claims) must already route through the chosen CasStore
-    Storage.writeStoreMarker(root, CasStore.forName(store))
+    Storage.writeStoreMarker(root, cas)
     Storage.writeSchema(root, schema)
-    val proto = Storage.forName(protocol)
-    // the table's initial state (manifest tables: recover() creates the
-    // self-describing _log/)
-    val (committed, nextTxn) = proto.recover(root)
-    new MatDb(spark, root, schema, proto, committed, nextTxn)
+    val (committed, nextTxn) = Protocol.create(root)
+    new MatDb(spark, root, schema, committed, nextTxn)
   }
 
-  /** Open an existing table: detect the protocol, load the schema, sweep
-    * leftovers, rebuild the committed set and next txn id
-    * (reference: database.rs:52-66, 100-127). */
+  /** Refuse a commit-protocol choice other than "manifest", naming `what`
+    * asked for it. */
+  private[graft] def requireManifest(protocol: String, what: String): Unit =
+    if (protocol != Protocol.name) throw new IllegalArgumentException(
+      s"$what: unknown commit protocol '$protocol' (the only protocol is '${Protocol.name}')")
+
+  /** Open an existing table: load the schema, upgrade a rename-committed
+    * directory to manifest version 0, sweep leftovers, rebuild the
+    * committed set and next txn id (reference: database.rs:52-66,
+    * 100-127). */
   def open(spark: SparkSession, path: String): MatDb = {
     graft.plans.GraftPlans.enable(spark)
     val root = Storage.rootPath(path)
     val schema = Storage.readSchema(root)
-    val proto = Storage.detect(root)
-    val (committed, nextTxn) = proto.recover(root)
-    new MatDb(spark, root, schema, proto, committed, nextTxn)
+    val (committed, nextTxn) = Protocol.recover(root)
+    new MatDb(spark, root, schema, committed, nextTxn)
   }
 
   def createOrOpen(spark: SparkSession, schema: MatSchema, path: String,
-      protocol: String = "rename", store: String = PosixCasStore.name): MatDb = {
+      store: String = PosixCasStore.name): MatDb = {
     val root = Storage.rootPath(path)
     if (java.nio.file.Files.exists(Storage.schemaPath(root))) open(spark, path)
-    else create(spark, schema, path, protocol, store)
+    else create(spark, schema, path, store = store)
   }
 
   /** Does a graft table exist at `path`? */
@@ -905,8 +897,7 @@ object MatDb {
     * in the clone sees the source's full history as of the fork. This is
     * the POSIX analog of a manifest-reference clone (Delta/Iceberg
     * `SHALLOW CLONE`); an object-store port would swap the links for
-    * absolute-path manifest entries. Manifest-protocol tables only.
-    * Returns the opened clone. */
+    * absolute-path manifest entries. Returns the opened clone. */
   def shallowClone(spark: SparkSession, srcPath: String, dstPath: String): MatDb = {
     import java.nio.file.Files
     val src = Storage.rootPath(srcPath)
@@ -914,10 +905,7 @@ object MatDb {
     require(exists(srcPath), s"no graft table at $srcPath")
     require(!Files.exists(dst) || Storage.listDir(dst).isEmpty,
       s"clone target $dstPath already exists and is not empty")
-    val proto = Storage.detect(src)
-    require(proto.atomicReplace,
-      "shallow clone requires the 'manifest' commit protocol " +
-        "(rename-protocol visibility is the directory listing — nothing to fork)")
+    val proto = Protocol.at(src)
     Files.createDirectories(dst)
     // share through the SOURCE's store: hard links on posix (zero-copy),
     // byte/server-side copies on an object store — and the `_store`
@@ -935,10 +923,10 @@ object MatDb {
     // data: every segment directory still on disk — committed, plus
     // lineage history awaiting vacuum (claim stamps are NOT carried: the
     // clone's copies are committed data, not an in-flight claim)
-    Storage.historySegments(src, proto, proto.listCommitted(src)).foreach { id =>
-      val from = proto.readPath(src, id)
+    Storage.historySegments(src, proto.listCommitted(src)).foreach { id =>
+      val from = Storage.segmentPath(src, id)
       if (Files.isDirectory(from))
-        Storage.linkOrCopyTree(store, from, proto.readPath(dst, id),
+        Storage.linkOrCopyTree(store, from, Storage.segmentPath(dst, id),
           skip = Set(Storage.ClaimFile))
     }
     open(spark, dstPath)

@@ -139,8 +139,8 @@ object Scan {
   /** Read every segment dir through one file scan, plus extra in-memory
     * batches unioned on top, with `_txn_id`/`_seq` provenance columns
     * present. `paths` are the segment directories to read — resolved by the
-    * caller through the table's [[Protocol]], so this layer is
-    * protocol-agnostic. */
+    * caller through the [[Protocol]], so this layer never reads a
+    * manifest. */
   def raw(
       spark: SparkSession,
       schema: MatSchema,

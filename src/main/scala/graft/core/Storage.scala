@@ -15,82 +15,60 @@ final case class SegmentId(txnId: Long, segNum: Int) extends Ordered[SegmentId] 
   }
 }
 
-/** How segment visibility is committed and recovered. Two interchangeable
-  * implementations behind one interface (both pass the same CoreSpec suite):
+/** The commit protocol: how segment visibility is committed, time-traveled
+  * and recovered. Lakehouse-style: segments are written directly under
+  * their final names but are invisible until a manifest file
+  * `_log/<version>.json` (listing the FULL visible segment set) lands via a
+  * single-file put-if-absent ([[CasStore.putIfAbsent]]). Object-store safe,
+  * supports atomic REPLACE (overwrite/compact swap the whole set in one
+  * manifest), and is optimistic multi-writer (a concurrent commit loses the
+  * publish race and retries). Segment publishes that rebase onto
+  * concurrent commits (INSERT OVERWRITE, serializable DML, checkpoint)
+  * share one loop, [[publishRebasing]].
   *
-  *   - [[Storage.RenameProtocol]] — the reference's design
-  *     (storage.rs:86-111): segments are written as `.tmp` directories and a
-  *     commit renames them visible in reverse order, segment 0 last as the
-  *     commit marker (transaction.rs:127-136). Visibility IS the directory
-  *     listing. Requires atomic rename — true on POSIX filesystems and HDFS,
-  *     false on object stores.
-  *
-  *   - [[Storage.ManifestProtocol]] — lakehouse-style: segments are written
-  *     directly under their final names but are invisible until a manifest
-  *     file `_log/<version>.json` (listing the FULL visible segment set)
-  *     lands via a single-file atomic move. Object-store safe (one
-  *     put-if-absent), supports atomic REPLACE (overwrite/compact swap the
-  *     whole set in one manifest), and is the natural base for optimistic
-  *     multi-writer (a concurrent commit loses the rename race and retries).
-  *
-  * Every protocol-dependent decision lives here. Members that only the
-  * manifest protocol can answer (manifest lineage, commit metadata) carry
-  * rename-protocol defaults, so callers never test which protocol a table
-  * uses. The one capability a caller may branch on is [[atomicReplace]]:
-  * operations that need an atomic swap (checkpoint folds, shallow clones,
-  * the replace-publish INSERT OVERWRITE) refuse or choose by it. Segment
-  * publishes that rebase onto concurrent commits (INSERT OVERWRITE,
-  * serializable DML, checkpoint) share one loop, [[publishRebasing]].
-  *
-  * A table's protocol is self-describing: `_log/` exists ⇔ manifest.
+  * The reference commits by renaming `.tmp` segment directories visible,
+  * segment 0 last (transaction.rs:127-136). That rule survives only as the
+  * UPGRADE READER behind [[at]]: a table directory without `_log/` gets
+  * manifest version 0 published from it the first time it is touched.
   */
-sealed trait Protocol {
-  def name: String
+object Protocol {
+  import Storage._
 
-  /** True when [[replace]] swaps the visible set in one atomic step (and
-    * replaced-away states stay readable until vacuum). False under
-    * renames, where a replace commits the new segments and then deletes
-    * the old ones. */
-  def atomicReplace: Boolean
+  val name = "manifest"
 
-  /** Directory a flush writes segment `id` into (uncommitted). */
-  def writePath(root: Path, id: SegmentId): Path
+  /** The protocol for the table at `root`, upgrading a directory without
+    * `_log/` first — the one accessor every reader and writer that holds no
+    * open [[MatDb]] goes through. With `_log/` present this is one stat. */
+  def at(root: Path): Protocol.type = {
+    if (!Files.isDirectory(logDir(root))) upgrade(root)
+    this
+  }
 
-  /** Directory of a COMMITTED segment. */
-  def readPath(root: Path, id: SegmentId): Path
+  /** Make `newIds` visible on top of whatever is committed NOW; returns the
+    * ACTUAL post-commit visible set. The target set is recomputed from the
+    * ON-DISK manifest (not the caller's possibly-stale view) so a
+    * concurrent writer's segments survive; a lost publish race re-reads and
+    * retries. Txn-id collisions (two writers allocated the same id —
+    * possible when both opened the table at the same version) abort: the
+    * colliding directory on disk belongs to the OTHER writer. */
+  def commit(root: Path, newIds: Seq[SegmentId]): Seq[SegmentId] =
+    publish(root, newIds, replaceAll = false, Seq.empty)
 
-  /** Make `newIds` visible; returns the ACTUAL post-commit visible set.
-    * `visibleAfter` is the caller's intended set — the rename protocol
-    * derives visibility from the listing and returns it as-is; the manifest
-    * protocol recomputes the union from the on-disk manifest (a concurrent
-    * writer may have appended since the caller's snapshot) and retries lost
-    * publish races, so the returned set can be a superset of the intent. */
-  def commit(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId]): Seq[SegmentId]
-
-  /** Set the visible set to exactly `visibleAfter` (for overwrite/compact);
-    * returns it. `expectedBase` is the committed set the replacement was
-    * computed FROM: the manifest protocol aborts with
+  /** Set the visible set to exactly `visibleAfter` (for overwrite/compact)
+    * in one atomic swap; returns it. `expectedBase` is the committed set
+    * the replacement was computed FROM: the replace aborts with
     * `ConcurrentModificationException` if the on-disk manifest no longer
     * equals it (any commit that landed since would be silently dropped by
-    * a blind swap), and likewise if the final publish race is lost. The
-    * rename protocol derives visibility from the listing and relies on the
-    * caller's in-process lock for the base check; it cannot swap
-    * atomically — it commits `newIds` first and then deletes the
-    * `expectedBase` directories absent from `visibleAfter`, so until the
-    * deletes finish old and new are both visible (MVCC still resolves
-    * overlapping keys to the new rows; keys absent from the new data
-    * resurface only in that window — documented rename-protocol caveat,
-    * the reason the manifest protocol exists). Under the manifest
-    * protocol superseded directories stay on disk, invisible, until
-    * vacuum: a reader whose snapshot captured the old file list can still
-    * finish its scan.
+    * a blind swap), and likewise if the publish race is lost. Superseded
+    * directories stay on disk, invisible, until vacuum: a reader whose
+    * snapshot captured the old file list can still finish its scan.
     *
     * `prodTxn` is the transaction id that PRODUCED this state change (the
-    * overwriting/compacting txn) — the manifest protocol records it so time
-    * travel can resolve `asOf(t)` for `t < prodTxn` against an OLDER
-    * manifest version ([[listCommittedAsOf]]). It matters precisely when no
-    * segment carries the id (a TRUNCATE publishes an empty set, yet its txn
-    * must stay burned and its state boundary findable).
+    * overwriting/compacting txn) — recorded so time travel can resolve
+    * `asOf(t)` for `t < prodTxn` against an OLDER manifest version
+    * ([[listCommittedAsOf]]). It matters precisely when no segment carries
+    * the id (a TRUNCATE publishes an empty set, yet its txn must stay
+    * burned and its state boundary findable).
     *
     * `foldTxn` marks a CHECKPOINT FOLD: the replace only RESHAPED the state
     * at-or-below that txn equivalently (resolved baseline, erased
@@ -99,28 +77,26 @@ sealed trait Protocol {
     * O(delta) path across the fold ([[graft.core.MatDb.changesBetween]]). */
   def replace(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId],
       expectedBase: Seq[SegmentId], prodTxn: Long,
-      foldTxn: Option[Long] = None): Seq[SegmentId]
+      foldTxn: Option[Long] = None): Seq[SegmentId] =
+    publish(root, newIds, replaceAll = true, visibleAfter, expectedBase, prodTxn, foldTxn)
 
   /** Publish `newIds` onto whatever is committed NOW, rebasing over
     * concurrent commits — the one loop behind INSERT OVERWRITE,
     * serializable row-level DML and checkpoint folds. Each try lists the
     * committed base once and asks `target` for the visible set to publish
     * onto it; `target` may throw to abort (a conflict, a changed fold
-    * prefix). The publish is a CAS [[replace]] against that base when
-    * [[atomicReplace]] holds, a [[commit]] otherwise. A lost race
-    * (`ConcurrentModificationException` from the publish) re-lists and
-    * retries, up to 16 times; the 17th loss propagates. Returns the
+    * prefix). The publish is a CAS [[replace]] against that base. A lost
+    * race (`ConcurrentModificationException` from the publish) re-lists
+    * and retries, up to 16 times; the 17th loss propagates. Returns the
     * published visible set. */
-  final def publishRebasing(root: Path, newIds: Seq[SegmentId], prodTxn: Long,
+  def publishRebasing(root: Path, newIds: Seq[SegmentId], prodTxn: Long,
       foldTxn: Option[Long] = None)(
       target: Seq[SegmentId] => Seq[SegmentId]): Seq[SegmentId] = {
     @annotation.tailrec def attempt(tries: Int): Seq[SegmentId] = {
       val base = listCommitted(root)
       val after = target(base)
       val published =
-        try Some(
-          if (atomicReplace) replace(root, newIds, after, base, prodTxn, foldTxn)
-          else commit(root, newIds, after))
+        try Some(replace(root, newIds, after, base, prodTxn, foldTxn))
         catch { case _: java.util.ConcurrentModificationException if tries < 16 => None }
       published match {
         case Some(visible) => visible
@@ -130,63 +106,226 @@ sealed trait Protocol {
     attempt(0)
   }
 
-  /** The visible segment set AS OF transaction `txn` — time travel. The
-    * rename protocol (append-only visibility: the listing) filters the
-    * committed set; the manifest protocol resolves against the manifest
-    * LINEAGE so states replaced away by overwrite/truncate/compact stay
-    * readable until their directories are vacuumed. */
-  def listCommittedAsOf(root: Path, txn: Long): Seq[SegmentId] =
-    listCommitted(root).filter(_.txnId <= txn).sorted
-
-  /** Highest transaction id this table has ever committed — the floor for
-    * new id claims and stream offsets. Derived from the listing by default;
-    * the manifest protocol also consults the recorded producing txn, so a
-    * TRUNCATE (which leaves no segments) still advances the watermark and
-    * offsets/ids never rewind. */
-  def txnWatermark(root: Path): Long =
-    (listCommitted(root).map(_.txnId) :+ 0L).max
+  private def publish(root: Path, newIds: Seq[SegmentId], replaceAll: Boolean,
+      intended: Seq[SegmentId], expectedBase: Seq[SegmentId] = Seq.empty,
+      prodTxn: Long = 0L, foldTxn: Option[Long] = None): Seq[SegmentId] = {
+    stampCommitTs(root, newIds) // dirs are final-named, still invisible
+    // this commit's touched chunk keys, recorded in the manifest so
+    // serializable conflict detection is a METADATA read (walk the new
+    // manifests, not the new segments' file trees). One walk of our OWN
+    // just-written directories, outside the retry loop.
+    val newChunks = newIds.flatMap(id =>
+      chunkDirsOf(segmentPath(root, id))).distinct.sorted
+    var tries = 0
+    while (tries < 16) {
+      val latest = latestManifest(root)
+      val current = latest.map(readManifest).getOrElse(Seq.empty)
+      val clash = newIds.filter(current.contains)
+      if (clash.nonEmpty) throw new java.util.ConcurrentModificationException(
+        s"transaction-id collision with an already-committed segment: ${clash.mkString(",")}")
+      if (replaceAll && current.sorted != expectedBase.sorted)
+        throw new java.util.ConcurrentModificationException(
+          "table changed since the replace commit's snapshot (overwrite/compact): " +
+            s"expected ${expectedBase.sorted.mkString(",")}, found ${current.sorted.mkString(",")}")
+      val version = latest.map(manifestVersion).getOrElse(-1L) + 1L
+      val target = if (replaceAll) intended.sorted else (current ++ newIds).sorted
+      // the producing txn is MONOTONE across versions: a new append's id,
+      // an explicit replace's id, or carried forward — never backward
+      // (listCommittedAsOf depends on it to pick "newest state <= t")
+      val prod = (Seq(prodTxn) ++ latest.map(readProdTxn) ++
+        newIds.map(_.txnId) ++ target.map(_.txnId)).max
+      // the recorded `replace` flag means rows may have been REMOVED
+      // (truncate/overwrite/compact drop segments from the visible set) —
+      // NOT that the publish used the CAS-replace primitive: a row-level
+      // delta publishes via `replace` on its exact base purely for
+      // linearization, and is a semantic APPEND (conflict detection by
+      // its chunks, not conflict-with-everything)
+      val semanticReplace = replaceAll && target != (current ++ newIds).sorted
+      if (tryWriteManifest(root, version, target, prod,
+          newIds, newChunks, semanticReplace, foldTxn)) {
+        writeLastPointer(root, version) // best-effort O(1)-open hint
+        return target
+      }
+      // lost the publish race: someone committed between read and write
+      if (replaceAll) throw new java.util.ConcurrentModificationException(
+        "table changed under a replace commit (overwrite/compact); recompute and retry")
+      tries += 1
+    }
+    throw new IllegalStateException("manifest commit: too many publish races")
+  }
 
   /** Delete a flushed-but-uncommitted segment (rollback). */
-  def discardInFlight(root: Path, id: SegmentId): Unit
+  def discardInFlight(root: Path, id: SegmentId): Unit =
+    deleteRecursively(segmentPath(root, id))
 
-  /** Recover table state on open: sweep leftovers of crashed transactions,
-    * return (committed segment ids, next transaction id). */
-  def recover(root: Path): (Seq[SegmentId], Long)
+  /** Physically delete a committed segment directory (GC after compact /
+    * replace — only call once no live snapshot can reference it). */
+  def deleteSegment(root: Path, id: SegmentId): Unit =
+    deleteRecursively(segmentPath(root, id))
+
+  /** A fresh table's initial state: lay out `_log/` (a new table has no
+    * manifest until its first commit) and return what [[recover]] would. */
+  def create(root: Path): (Seq[SegmentId], Long) = {
+    Files.createDirectories(logDir(root))
+    recovered(root)
+  }
+
+  /** Recover table state on open — upgrading a `_log/`-less directory first
+    * ([[at]]), so the sweep below never runs before version 0 exists — and
+    * return (committed segment ids, next transaction id). Visible set =
+    * latest manifest. Never-referenced segment directories past the claim
+    * grace are leftovers of crashed or rolled-back transactions — swept
+    * here. Directories REFERENCED by some older manifest version are
+    * retained: they are time-travel history below a replace commit
+    * (overwrite/truncate/compact/checkpoint), readable via `VERSION AS OF`
+    * until an explicit vacuum reclaims them — the lakehouse
+    * open-never-deletes-data rule. Next txn id must outrank every id ever
+    * seen on disk or recorded as a producing txn (a TRUNCATE leaves no
+    * segments but its id stays burned), so ids never rewind. */
+  def recover(root: Path): (Seq[SegmentId], Long) = { at(root); recovered(root) }
+
+  private def recovered(root: Path): (Seq[SegmentId], Long) = {
+    val committed = latestManifest(root).map(readManifest).getOrElse(Seq.empty)
+    val onDisk = listEntries(root)
+    val maxTxn = ((onDisk.map(_._2.txnId) ++ committed.map(_.txnId)) :+
+      latestManifest(root).map(readProdTxn).getOrElse(0L)).max
+    // sweep candidates: not in the live set AND past every grace window.
+    // Never-referenced candidates are crashed claims (swept);
+    // ever-referenced ones are time-travel history (kept until vacuum).
+    // everReferenced reads EVERY manifest version — O(commit count) — so
+    // it is only computed when candidates actually exist; a healthy
+    // table's open stays O(1) manifest reads (the _last pointer) plus
+    // one directory listing.
+    val live = committed.toSet
+    val candidates = onDisk.filterNot(e => live.contains(e._2))
+      .filterNot(e => withinGrace(e._1))
+    if (candidates.nonEmpty) {
+      val refEver = everReferenced(root)
+      candidates.filterNot(e => refEver.contains(e._2))
+        .foreach(e => deleteRecursively(e._1))
+    }
+    (committed.sorted, maxTxn + 1)
+  }
 
   /** Committed segment ids WITHOUT any recovery sweep — the read-only
     * listing for observers (e.g. the streaming source): a reader must never
-    * delete a concurrent writer's in-flight `.tmp`/unreferenced segments. */
-  def listCommitted(root: Path): Seq[SegmentId]
+    * delete a concurrent writer's in-flight unreferenced segments. */
+  def listCommitted(root: Path): Seq[SegmentId] =
+    latestManifest(root).map(readManifest).getOrElse(Seq.empty).sorted
 
   /** [[listCommitted]] as sorted read paths — the file list of the current
     * committed state, for readers without a table handle. */
   def committedPaths(root: Path): Seq[String] =
-    listCommitted(root).sorted.map(s => readPath(root, s).toString)
+    listCommitted(root).map(s => segmentPath(root, s).toString)
 
-  /** Segments referenced by some EARLIER state and still on disk — history
-    * that time travel and timestamp resolution can reach beyond the live
-    * set. Rename protocol: none (a replace deletes what it supersedes). */
-  private[graft] def lineageSegments(root: Path): Seq[SegmentId] = Nil
+  /** The visible segment set AS OF transaction `txn` — time travel through
+    * the manifest LINEAGE: the newest manifest whose producing txn is <= `t`
+    * captures the table state as of `t` (producing txns are monotone across
+    * versions), filtered by segment txn for the within-manifest append
+    * case. States replaced away by overwrite/truncate/compact resolve to
+    * their ORIGINAL manifest, whose directories survive until vacuum — so
+    * `VERSION AS OF` below a replace keeps reading. When no version's
+    * producing txn is <= `t`, the oldest surviving version still answers
+    * if it is a fold whose boundary is <= `t` (an upgraded directory's
+    * version 0 holds the whole append-only legacy history). Otherwise, or
+    * if any directory of the resolved state was already vacuumed, falls
+    * back to filtering the LATEST manifest (typically the empty table
+    * below a replace — never a torn read of half-vacuumed history). */
+  def listCommittedAsOf(root: Path, txn: Long): Seq[SegmentId] = {
+    def fallback = listCommitted(root).filter(_.txnId <= txn).sorted
+    val lineage = manifestLineage(root)
+    lineage.filter(_._1 <= txn).lastOption
+      .orElse(lineage.headOption.filter(_._2.exists(_ <= txn))) match {
+      case Some((_, _, state)) =>
+        val visible = state.filter(_.txnId <= txn).sorted
+        if (visible.forall(id => Files.isDirectory(segmentPath(root, id)))) visible
+        else fallback
+      // no version at or below `txn` remains: either a pre-first-commit
+      // time (fallback filters to empty as well) or PRUNED history
+      // (vacuum's manifest GC) — fall back, exactly as an unreadable
+      // version would, so pruning a version never changes an answer
+      case None => fallback
+    }
+  }
 
-  /** Commit metadata of every state change produced above `horizon`,
-    * newest first — the serializable conflict check's metadata-only read.
-    * None when the protocol records no such metadata (rename) or some
-    * covered change predates it: the caller then walks segment
-    * directories. */
-  private[graft] def commitsAfter(root: Path, horizon: Long): Option[Seq[Storage.CommitMeta]] =
-    None
+  /** [[listCommittedAsOf]] WITHOUT the silent fallback: Some(state) only
+    * when the resolution is provably exact; None means the true state at
+    * `txn` is NOT reconstructible (history vacuumed/pruned) — callers
+    * that would silently compute a WRONG answer from the fallback (the
+    * CDC delta across a replace) must refuse instead.
+    *
+    * Newest-first walk. A version can serve `txn` exactly when either
+    * its producing txn is <= `txn` (the state boundary itself), or it is
+    * a fold whose recorded boundary is <= `txn` ([[replace]]'s `foldTxn`;
+    * an upgraded directory's version 0 records boundary 0): the fold
+    * reshaped only the <= boundary prefix EQUIVALENTLY and removed nothing
+    * above it, so filtering its state by segment txn resolves `txn`
+    * exactly — this is what keeps CDC across a below-range fold working
+    * even after vacuum pruned the pre-fold manifests. Any other version
+    * only layers effects above `txn` (appends allocate above the
+    * watermark) or replaces state we must look below
+    * (overwrite/truncate/compact) — walk to its predecessor; a pruned
+    * predecessor is an unprovable hole → None. Walking past version 0
+    * means `txn` predates the first commit. */
+  private[graft] def listCommittedAsOfStrict(root: Path, txn: Long)
+      : Option[Seq[SegmentId]] = {
+    var v = latestManifest(root) match {
+      case None    => return Some(Seq.empty) // never committed
+      case Some(p) => manifestVersion(p)
+    }
+    while (v >= 0) {
+      val p = manifestPath(root, v)
+      if (!Files.exists(p)) return None // pruned below an unresolved replace
+      val text = readText(p)
+      if (prodIn(text) <= txn || foldIn(text).exists(_ <= txn)) {
+        val visible = segmentsIn(text).filter(_.txnId <= txn).sorted
+        return if (visible.forall(id => Files.isDirectory(segmentPath(root, id))))
+          Some(visible)
+        else None
+      }
+      v -= 1
+    }
+    Some(Seq.empty) // every version produced above txn: pre-first-commit
+  }
 
-  /** [[listCommittedAsOf]] without a silent fallback: None when the state
-    * at `txn` is no longer exactly reconstructible. Rename protocol: the
-    * listing is append-only history, so the filtered listing is the
-    * answer. */
-  private[graft] def listCommittedAsOfStrict(root: Path, txn: Long): Option[Seq[SegmentId]] =
-    Some(listCommittedAsOf(root, txn))
+  /** Highest transaction id this table has ever committed — the floor for
+    * new id claims and stream offsets. Consults the recorded producing txn
+    * too, so a TRUNCATE (which leaves no segments) still advances the
+    * watermark and offsets/ids never rewind. */
+  def txnWatermark(root: Path): Long =
+    ((listCommitted(root).map(_.txnId) :+ 0L) ++
+      latestManifest(root).map(readProdTxn)).max
+
+  /** Every segment id any manifest version ever referenced, EXCLUDING ids
+    * whose directories are gone (vacuumed) — history that time travel and
+    * timestamp resolution can reach beyond the live set. */
+  private[graft] def lineageSegments(root: Path): Seq[SegmentId] =
+    everReferenced(root).toSeq.sorted
+      .filter(id => Files.isDirectory(segmentPath(root, id)))
+
+  /** (producing txn, fold boundary, segment set) per manifest version,
+    * version order — one read per version. */
+  private def manifestLineage(root: Path): Seq[(Long, Option[Long], Seq[SegmentId])] =
+    manifestFiles(root).sortBy(_.getFileName.toString).map { p =>
+      val text = readText(p)
+      (prodIn(text), foldIn(text), segmentsIn(text))
+    }
+
+  private def manifestFiles(root: Path): Seq[Path] =
+    listDir(logDir(root)).filter(p => ManifestName.matches(p.getFileName.toString))
 
   /** Delete final-name segment directories not in `keep` (GC for
-    * superseded/orphaned segments). Returns directories removed. Rename
-    * protocol: no-op (committed == listed, deletion happens at replace). */
-  def sweepUnreferenced(root: Path, keep: Seq[SegmentId]): Int = 0
+    * superseded/orphaned segments). Returns directories removed. */
+  def sweepUnreferenced(root: Path, keep: Seq[SegmentId]): Int = {
+    val keepSet = keep.toSet
+    val candidates = listEntries(root).filterNot(e => keepSet.contains(e._2))
+    if (candidates.isEmpty) return 0 // skip the O(commit-count) manifest scan
+    val refEver = everReferenced(root)
+    val stale = candidates
+      .filter(e => refEver.contains(e._2) || !withinGrace(e._1))
+    stale.foreach(e => deleteRecursively(e._1))
+    stale.size
+  }
 
   /** Delete manifest versions that can no longer serve ANY read (some
     * referenced segment directory is gone — i.e. history a segment sweep
@@ -195,39 +334,269 @@ sealed trait Protocol {
     * lifetime: without it `_log/` accumulates one version per commit
     * forever, and every lineage walk (time travel across replaces,
     * recovery's ever-referenced scan, conflict metadata) pays O(all
-    * commits ever). Strictly behavior-preserving by construction — only
-    * versions whose reads already fall back are removed, and the
-    * conflict-metadata walk treats a missing version as a hole and turns
-    * conservative. Same caller contract as the segment sweep (no
-    * concurrent writers). Rename protocol: no manifests, no-op. */
-  def pruneManifestHistory(root: Path): Int = 0
+    * commits ever). Same caller contract as the segment sweep (no
+    * concurrent writers).
+    *
+    * Prunes a contiguous PREFIX of versions: find the newest version
+    * (below the latest) whose state is no longer readable and delete every
+    * version at or below it. Unreadable versions are dead metadata
+    * ([[listCommittedAsOf]] already falls back to filtering the latest
+    * manifest for them); fully-readable versions BELOW the newest dead one
+    * must go too, or they become stale survivors that lineage resolution
+    * picks over the fallback, silently changing `VERSION AS OF` answers
+    * (e.g. an empty truncate version is vacuously "readable" — keeping it
+    * below a pruned hole makes `VERSION AS OF` of a later pruned txn
+    * answer EMPTY instead of the latest-filtered baseline). Prefix-prune
+    * is behavior-preserving: a readable version below the hole references
+    * only still-live directories, so its state is a subset of the live
+    * set, and producing txns are monotone — filtering the latest manifest
+    * by txn resolves it identically. The latest version is never a
+    * candidate (its directories are the live set; a missing one there is
+    * corruption this GC must not paper over). A crash mid-prune just
+    * leaves more dead versions for the next run — [[commitsAfter]] treats
+    * any missing version as a hole and turns conservative, and
+    * [[latestManifest]] probes forward from `_last`, so partial deletion
+    * is harmless. */
+  def pruneManifestHistory(root: Path): Int = {
+    val latest = latestManifest(root).getOrElse(return 0)
+    val old = manifestFiles(root)
+      .filterNot(_.getFileName == latest.getFileName)
+      .sortBy(_.getFileName.toString)
+    val newestDead = old.lastIndexWhere(p =>
+      !readManifest(p).forall(id => Files.isDirectory(segmentPath(root, id))))
+    if (newestDead < 0) return 0
+    val dead = old.take(newestDead + 1)
+    dead.foreach(p => Files.deleteIfExists(p))
+    dead.size
+  }
 
-  /** Physically delete a committed segment directory (GC after compact /
-    * replace — only call once no live snapshot can reference it). */
-  def deleteSegment(root: Path, id: SegmentId): Unit
+  /** Every segment id any manifest version has EVER referenced — the
+    * provably-not-a-live-claim set (O(manifest versions), metadata). */
+  private def everReferenced(root: Path): Set[SegmentId] =
+    manifestFiles(root).flatMap(readManifest).toSet
+
+  // ---- O(1) open: the _log/_last pointer ----------------------------------
+  //
+  // latestManifest used to LIST _log/ — O(commit count) names per open,
+  // snapshot read, or stream-progress poll; a 1M-commit table paid a
+  // large listing to read one manifest (the Delta `_last_checkpoint`
+  // problem). `_last` holds the latest version number, written
+  // BEST-EFFORT after each successful publish (atomic replace, never
+  // part of the commit itself — the conditional-put manifest IS the
+  // commit). Readers take the pointer, verify the version exists, and
+  // probe FORWARD to absorb staleness (a crash between manifest and
+  // pointer write, or a concurrent writer's fresher publish); anything
+  // unreadable falls back to the listing. ManifestCrashSpec pins the
+  // crash points.
+
+  private def logDir(root: Path): Path = root.resolve("_log")
+  private val ManifestName: Regex = """^([0-9a-f]{8})\.json$""".r
+  private def lastPointer(root: Path): Path = logDir(root).resolve("_last")
+  private def manifestFile(version: Long): String = f"$version%08x.json"
+  private def manifestPath(root: Path, version: Long): Path =
+    logDir(root).resolve(manifestFile(version))
+
+  private def writeLastPointer(root: Path, version: Long): Unit =
+    try casStore(root).putReplace(lastPointer(root), String.valueOf(version))
+    catch { case _: Exception => () } // best-effort: readers self-heal
+
+  private def latestManifest(root: Path): Option[Path] = {
+    val hinted =
+      try {
+        val p = lastPointer(root)
+        if (!Files.exists(p)) None
+        else {
+          val v = readText(p).trim.toLong
+          if (!Files.exists(manifestPath(root, v))) None // corrupt/ahead: fall back
+          else {
+            var cur = v // stale-by-k pointer: probe forward to the true latest
+            while (Files.exists(manifestPath(root, cur + 1))) cur += 1
+            Some(manifestPath(root, cur))
+          }
+        }
+      } catch { case _: Exception => None }
+    hinted.orElse(manifestFiles(root).sortBy(_.getFileName.toString).lastOption)
+  }
+
+  private def manifestVersion(p: Path): Long = p.getFileName.toString match {
+    case ManifestName(v) => java.lang.Long.parseLong(v, 16)
+    case _               => 0L
+  }
+
+  private def readText(p: Path): String =
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+
+  /** One JSON line per segment keeps parsing dependency-free (the schema
+    * document already uses the same hand-rolled style). Pairs are parsed
+    * from the `"segments"` array ONWARD — `"new_txns": [1, 2]` (commit
+    * metadata) would otherwise read as a phantom SegmentId(1, 2). */
+  private def segmentsIn(text: String): Seq[SegmentId] = {
+    val from = text.indexOf("\"segments\"")
+    val body = if (from >= 0) text.substring(from) else text
+    """\[\s*(\d+)\s*,\s*(\d+)\s*\]""".r.findAllMatchIn(body)
+      .map(m => SegmentId(m.group(1).toLong, m.group(2).toInt)).toSeq
+  }
+
+  /** The manifest's recorded producing txn; manifests written before the
+    * field existed derive it as the max referenced txn — exact for their
+    * append-only histories. */
+  private def prodIn(text: String): Long =
+    """"txn"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
+      .getOrElse((segmentsIn(text).map(_.txnId) :+ 0L).max)
+
+  private def foldIn(text: String): Option[Long] =
+    """"fold"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
+
+  private def readManifest(p: Path): Seq[SegmentId] = segmentsIn(readText(p))
+  private def readProdTxn(p: Path): Long = prodIn(readText(p))
+
+  /** Single-file atomic PUT-IF-ABSENT of manifest `<version>.json` through
+    * the table's [[CasStore]] (posix: temp file + `Files.createLink`, whose
+    * creation fails atomically if the target exists — the
+    * optimistic-concurrency check a second writer must lose). Returns
+    * false when the version was already taken. */
+  private[core] def tryWriteManifest(root: Path, version: Long,
+      visible: Seq[SegmentId], prodTxn: Long = 0L,
+      newIds: Seq[SegmentId] = Seq.empty, newChunks: Seq[String] = Seq.empty,
+      isReplace: Boolean = false, foldTxn: Option[Long] = None): Boolean =
+    // the conditional put IS the commit — one winner per version name
+    casStore(root).putIfAbsent(manifestPath(root, version),
+      manifestBody(visible, prodTxn, newIds, Some(newChunks), isReplace, foldTxn))
+
+  /** Commit-scoped fields first ("new_txns"/"chunks"/"replace" — what
+    * THIS version added, for metadata-only conflict detection; "fold" — a
+    * fold boundary, see [[replace]]), then the full visible set. Without
+    * `chunks` the conflict check treats the version as touching every
+    * chunk. Chunk dir names are [-_=a-zA-Z0-9/] only — no JSON escaping
+    * needed. */
+  private def manifestBody(visible: Seq[SegmentId], prodTxn: Long,
+      newIds: Seq[SegmentId], chunks: Option[Seq[String]], isReplace: Boolean,
+      foldTxn: Option[Long]): String = {
+    val prod = (prodTxn +: visible.map(_.txnId)).max
+    val newTxns = newIds.map(_.txnId).distinct.sorted.mkString(", ")
+    val chunkField = chunks.fold("")(cs =>
+      cs.map(c => s""""$c"""").mkString(""""chunks": [""", ", ", "], "))
+    val fold = foldTxn.fold("")(h => s""""fold": $h, """)
+    visible.sorted.map(s => s"  [${s.txnId}, ${s.segNum}]").mkString(
+      s"""{"txn": $prod, "replace": $isReplace, $fold"new_txns": [$newTxns], """ +
+        s"""$chunkField"segments": [\n""", ",\n", "\n]}\n")
+  }
+
+  /** Commit metadata for every manifest version whose producing txn is
+    * above `horizon`, newest first — the serializable conflict check's
+    * metadata-only read path. Walks BACKWARD from the latest version
+    * (O(commits since horizon) single-file reads; no directory listing,
+    * no segment file-tree walks). Returns None when any covered version
+    * predates commit metadata — the caller falls back to walking segment
+    * directories. */
+  private[graft] def commitsAfter(root: Path, horizon: Long): Option[Seq[CommitMeta]] = {
+    val latest = latestManifest(root).getOrElse(return Some(Seq.empty))
+    var v = manifestVersion(latest)
+    val out = Seq.newBuilder[CommitMeta]
+    var complete = true
+    while (v >= 0 && complete) {
+      val p = manifestPath(root, v)
+      if (!Files.exists(p)) complete = false // hole: be conservative
+      else {
+        val text = readText(p)
+        val prod = prodIn(text)
+        if (prod <= horizon) return if (complete) Some(out.result()) else None
+        val isReplace = """"replace"\s*:\s*(true|false)""".r
+          .findFirstMatchIn(text).map(_.group(1) == "true")
+        val newTxns = """"new_txns"\s*:\s*\[([^\]]*)\]""".r
+          .findFirstMatchIn(text)
+          .map(m => """\d+""".r.findAllIn(m.group(1)).map(_.toLong).toSeq)
+        val chunks = """"chunks"\s*:\s*\[([^\]]*)\]""".r
+          .findFirstMatchIn(text)
+          .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
+        (isReplace, newTxns) match {
+          case (Some(r), Some(ts)) =>
+            val segs = segmentsIn(text).filter(s => ts.contains(s.txnId))
+            out += CommitMeta(v, prod, ts, segs, chunks, r, foldIn(text))
+          case _ => complete = false // manifest predating commit metadata
+        }
+        v -= 1
+      }
+    }
+    if (complete) Some(out.result()) else None
+  }
+
+  // ---- upgrade reader: directories committed by renames ---------------------
+  //
+  // A table directory without `_log/` was committed by the reference's
+  // rename protocol: flushes wrote `<txn>.<seg>.tmp` directories and a
+  // commit renamed them to their final names in reverse order, segment 0
+  // last — so a txn is committed iff its segment 0 exists under its final
+  // name (transaction.rs:127-136, database.rs:100-127). [[at]] publishes
+  // exactly those txns as manifest version 0; from then on the directory is
+  // an ordinary manifest table.
+  //   - Version 0's producing txn is the highest id on disk, `.tmp` and
+  //     segment-0-less txns included, so the next id equals what the
+  //     rename recovery handed out and crashed ids stay burned.
+  //   - It records fold boundary 0: the legacy history is append-only, so
+  //     its state at any txn is version 0 filtered by segment txn (time
+  //     travel and CDC below the upgrade read it exactly).
+  //   - It records no chunks, so a serializable check reaching below the
+  //     upgrade conflicts conservatively.
+  //   - `_log/` never exists without version 0: the manifest is staged in
+  //     `_log.<random>/` and the whole directory renamed into place. A
+  //     racer whose rename fails deletes its stage and adopts the
+  //     winner's version 0 — which lists the same set, computed from the
+  //     same immutable legacy directories.
+  //   - Segment-0-less txns become never-referenced final-name directories
+  //     that recovery and vacuum sweep under the claim grace; the winner
+  //     sweeps `.tmp` leftovers past the grace itself (nothing else decodes
+  //     `.tmp` names).
+  //   - An object store never had an atomic rename, so a `_log/`-less
+  //     directory there is corrupt, not legacy: refused.
+
+  private val LegacyTmp: Regex = """^([0-9a-f]{8})\.([0-9a-f]{8})\.tmp$""".r
+
+  private def upgrade(root: Path): Unit = {
+    if (!Files.isRegularFile(schemaPath(root))) return // no table here
+    val store = casStore(root)
+    if (store == ObjectStoreSim) throw new IllegalStateException(
+      s"graft table at $root has no _log/ but its store is '${store.name}': " +
+        "only rename-committed posix tables lack a manifest, so this table is corrupt")
+    val listing = listDir(root)
+    val done = listing.flatMap(p => decode(p.getFileName.toString))
+    val tmp = listing.flatMap(p => p.getFileName.toString match {
+      case LegacyTmp(t, _) => Some(p -> java.lang.Long.parseLong(t, 16))
+      case _               => None
+    })
+    val complete = done.groupBy(_.txnId).filter(_._2.exists(_.segNum == 0))
+      .values.flatten.toSeq.sorted
+    val prod = (done.map(_.txnId) ++ tmp.map(_._2) :+ 0L).max
+    val stage = root.resolve(s"_log.${java.util.UUID.randomUUID()}")
+    try {
+      store.putIfAbsent(stage.resolve(manifestFile(0L)), manifestBody(complete, prod,
+        complete, chunks = None, isReplace = false, foldTxn = Some(0L)))
+      Files.move(stage, logDir(root), StandardCopyOption.ATOMIC_MOVE)
+      tmp.map(_._1).filterNot(withinGrace).foreach(deleteRecursively)
+    } catch {
+      case _: java.io.IOException if Files.isDirectory(logDir(root)) => () // lost the race
+    } finally deleteRecursively(stage) // no-op once moved
+  }
 }
 
-/** On-disk layout, naming, and the two commit protocols.
+/** On-disk layout and naming; the commit protocol itself is [[Protocol]].
   *
   * Layout of a table directory:
   * {{{
   *   <root>/schema.json                    table schema (MatSchema JSON)
   *   <root>/<txn%08x>.<seg%08x>/           segment (parquet dir)
-  *   <root>/<txn%08x>.<seg%08x>.tmp/       uncommitted segment (rename protocol)
-  *   <root>/_log/<version%08x>.json        manifest (manifest protocol only)
+  *   <root>/_log/<version%08x>.json        manifest
   * }}}
   */
 object Storage {
-  private val Committed: Regex = """^([0-9a-f]{8})\.([0-9a-f]{8})$""".r
-  private val Tmp: Regex = """^([0-9a-f]{8})\.([0-9a-f]{8})\.tmp$""".r
+  private val SegmentName: Regex = """^([0-9a-f]{8})\.([0-9a-f]{8})$""".r
 
-  def segmentDirName(id: SegmentId, tmp: Boolean): String =
-    f"${id.txnId}%08x.${id.segNum}%08x" + (if (tmp) ".tmp" else "")
+  def segmentDirName(id: SegmentId): String = f"${id.txnId}%08x.${id.segNum}%08x"
 
-  def decode(name: String): Option[(SegmentId, Boolean)] = name match {
-    case Committed(t, s) => Some((SegmentId(java.lang.Long.parseLong(t, 16), Integer.parseInt(s, 16)), false))
-    case Tmp(t, s)       => Some((SegmentId(java.lang.Long.parseLong(t, 16), Integer.parseInt(s, 16)), true))
-    case _               => None
+  def decode(name: String): Option[SegmentId] = name match {
+    case SegmentName(t, s) =>
+      Some(SegmentId(java.lang.Long.parseLong(t, 16), Integer.parseInt(s, 16)))
+    case _ => None
   }
 
   def schemaPath(root: Path): Path = root.resolve("schema.json")
@@ -235,9 +604,8 @@ object Storage {
   // ---- commit wall-clock (TIMESTAMP AS OF) -------------------------------
   //
   // Each transaction's FIRST segment directory carries a `_commit_ts` file
-  // (epoch millis), written just before the commit becomes visible — under
-  // renames while the directory is still `.tmp`, under the manifest before
-  // the manifest publish — so a visible transaction always has its stamp.
+  // (epoch millis), written just before the manifest publish makes the
+  // commit visible — so a visible transaction always has its stamp.
   // Underscore-prefixed, so parquet readers and data-file checks ignore it.
   // Readers make the series MONOTONE by running-max over txn order (wall
   // clocks of different writer processes may skew; transaction ids are the
@@ -250,32 +618,29 @@ object Storage {
   /** Stamp `System.currentTimeMillis` into each new transaction's first
     * segment (no-op where a stamp already exists — checkpoint pre-seeds
     * the folded baseline with the horizon txn's ORIGINAL timestamp). */
-  private[core] def stampCommitTs(root: Path, proto: Protocol,
-      newIds: Seq[SegmentId]): Unit =
+  private[core] def stampCommitTs(root: Path, newIds: Seq[SegmentId]): Unit =
     newIds.groupBy(_.txnId).values.map(_.min).foreach { id =>
-      val f = proto.writePath(root, id).resolve(CommitTsFile)
+      val f = segmentPath(root, id).resolve(CommitTsFile)
       if (!Files.exists(f))
         Files.write(f, String.valueOf(System.currentTimeMillis())
           .getBytes(StandardCharsets.UTF_8))
     }
 
   /** Every segment discoverable for history and timestamp resolution:
-    * the `live` set plus, under the manifest protocol, replaced-away
-    * segments whose directories survive (time-travel history awaiting
-    * vacuum). */
-  def historySegments(root: Path, proto: Protocol, live: Seq[SegmentId]): Seq[SegmentId] =
-    (proto.lineageSegments(root) ++ live).distinct.sorted
+    * the `live` set plus replaced-away segments whose directories survive
+    * (time-travel history awaiting vacuum). */
+  def historySegments(root: Path, live: Seq[SegmentId]): Seq[SegmentId] =
+    (Protocol.lineageSegments(root) ++ live).distinct.sorted
 
   /** Per-transaction commit wall-clock (epoch millis) over the given
     * visible segments, monotone by txn order. Transactions predating the
     * stamp (or folded baselines of pre-stamp history) read as 0 — i.e.
     * visible at every timestamp, the only safe reading for old tables. */
-  def commitTimestamps(root: Path, proto: Protocol,
-      segs: Seq[SegmentId]): Seq[(Long, Long)] = {
+  def commitTimestamps(root: Path, segs: Seq[SegmentId]): Seq[(Long, Long)] = {
     var run = 0L
     segs.groupBy(_.txnId).toSeq.sortBy(_._1).map { case (txn, ids) =>
       val ts = ids.sorted.iterator
-        .map(id => proto.readPath(root, id).resolve(CommitTsFile))
+        .map(id => segmentPath(root, id).resolve(CommitTsFile))
         .find(Files.exists(_))
         .map(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong)
         .getOrElse(0L)
@@ -356,7 +721,7 @@ object Storage {
   // ---- table properties ---------------------------------------------------
   //
   // Free-form `TBLPROPERTIES` beyond the structural ones (dims live in the
-  // schema, the protocol is `_log/`-self-describing): a `_props.json`
+  // schema, the store in the `_store` marker): a `_props.json`
   // key/value document in the table root, written with the same
   // write-then-atomic-move as the schema mirror. Currently carries
   // `graft.isolation` (newest-wins | serializable — the row-level DML
@@ -517,10 +882,9 @@ object Storage {
       try s.iterator().asScala.toSeq finally s.close()
     }
 
-  private def listEntries(root: Path): Seq[(Path, SegmentId, Boolean)] =
-    listDir(root).flatMap { p =>
-      decode(p.getFileName.toString).map { case (id, tmp) => (p, id, tmp) }
-    }
+  /** Segment directories under `root` with their ids. */
+  private[graft] def listEntries(root: Path): Seq[(Path, SegmentId)] =
+    listDir(root).flatMap(p => decode(p.getFileName.toString).map(p -> _))
 
   // ---- GC grace for possibly-live claims ---------------------------------
   //
@@ -533,7 +897,7 @@ object Storage {
   // against vacuuming a live writer) before sweeping. Directories that WERE
   // referenced by some manifest version are provably superseded commits,
   // never claims, and sweep immediately. Visibility is unaffected either
-  // way (it comes from the manifest / the segment-0 rule, never the sweep),
+  // way (it comes from the manifest, never the sweep),
   // and a skipped orphan still burns its txn id. Single-writer tooling
   // (crash harnesses, offline GC) can set the property to 0 for the
   // sweep-everything behavior.
@@ -572,7 +936,7 @@ object Storage {
     ()
   }
 
-  private def withinGrace(p: Path): Boolean =
+  private[core] def withinGrace(p: Path): Boolean =
     try {
       val claim = p.resolve(ClaimFile)
       if (Files.exists(claim))
@@ -582,8 +946,8 @@ object Storage {
         Files.getLastModifiedTime(p).toMillis < recoveryGraceMs
     } catch { case _: Exception => true } // unreadable: assume live
 
-  def segmentPath(root: Path, id: SegmentId, tmp: Boolean): Path =
-    root.resolve(segmentDirName(id, tmp))
+  /** Directory of segment `id` — written there, committed in place. */
+  def segmentPath(root: Path, id: SegmentId): Path = root.resolve(segmentDirName(id))
 
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
@@ -592,492 +956,6 @@ object Storage {
     }
 
   def rootPath(s: String): Path = Paths.get(s)
-
-  /** Pick the protocol a table on disk uses (`_log/` marks manifest), or the
-    * requested one for a fresh table. */
-  def detect(root: Path): Protocol =
-    if (Files.isDirectory(logDir(root))) ManifestProtocol else RenameProtocol
-
-  def forName(name: String): Protocol = name match {
-    case "rename"   => RenameProtocol
-    case "manifest" => ManifestProtocol
-    case other => throw new IllegalArgumentException(
-      s"unknown commit protocol '$other' (expected rename or manifest)")
-  }
-
-  // ---- rename protocol --------------------------------------------------
-
-  case object RenameProtocol extends Protocol {
-    val name = "rename"
-    val atomicReplace = false
-
-    def writePath(root: Path, id: SegmentId): Path = segmentPath(root, id, tmp = true)
-    def readPath(root: Path, id: SegmentId): Path = segmentPath(root, id, tmp = false)
-
-    /** Atomic visibility flip: rename in reverse order so segment 0 — the
-      * commit marker — lands last (reference transaction.rs:127-136). */
-    def commit(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId]): Seq[SegmentId] = {
-      stampCommitTs(root, this, newIds) // into the .tmp dirs, pre-visibility
-      newIds.sorted.reverse.foreach { id =>
-        Files.move(segmentPath(root, id, tmp = true), segmentPath(root, id, tmp = false))
-      }
-      visibleAfter
-    }
-
-    /** Not atomic under renames (see [[Protocol.replace]]): commit the new
-      * segments, then delete the superseded directories — visibility IS
-      * the listing, so they must go now. The base check happens under the
-      * caller's in-process lock (the rename protocol is single-process by
-      * design). `prodTxn` and `foldTxn` are unused — visibility is the
-      * listing, which carries the ids itself. */
-    def replace(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId],
-        expectedBase: Seq[SegmentId], prodTxn: Long,
-        foldTxn: Option[Long]): Seq[SegmentId] = {
-      commit(root, newIds, visibleAfter)
-      expectedBase.filterNot(visibleAfter.contains).foreach(deleteSegment(root, _))
-      visibleAfter
-    }
-
-    def discardInFlight(root: Path, id: SegmentId): Unit =
-      deleteRecursively(segmentPath(root, id, tmp = true))
-
-    /** Recovery sweep (reference: database.rs:100-127): delete uncommitted
-      * `.tmp` segments; drop committed segments of transactions missing their
-      * segment 0 (partial commit — the rename protocol guarantees segment 0
-      * lands last, so its absence proves the commit never completed). */
-    def recover(root: Path): (Seq[SegmentId], Long) = {
-      val entries = listEntries(root)
-      // .tmp flushes and seg-0-less partials may belong to a LIVE writer
-      // mid-commit — grace-guard their deletion (visibility is unaffected:
-      // both are excluded from the committed set below regardless)
-      entries.filter(_._3).filterNot(e => withinGrace(e._1))
-        .foreach(e => deleteRecursively(e._1))
-      val committed = entries.filterNot(_._3).map(_._2)
-      val complete = committed.groupBy(_.txnId).filter(_._2.exists(_.segNum == 0))
-      // crashed and incomplete txns still burn their id (count .tmp too)
-      val maxTxn = (entries.map(_._2.txnId) :+ 0L).max
-      (complete.values.flatten.toSeq.sorted, maxTxn + 1)
-    }
-
-    def deleteSegment(root: Path, id: SegmentId): Unit =
-      deleteRecursively(segmentPath(root, id, tmp = false))
-
-    /** Same completeness rule as [[recover]] (txns missing segment 0 never
-      * finished their commit), but purely observational. */
-    def listCommitted(root: Path): Seq[SegmentId] = {
-      val committed = listEntries(root).filterNot(_._3).map(_._2)
-      committed.groupBy(_.txnId).filter(_._2.exists(_.segNum == 0))
-        .values.flatten.toSeq.sorted
-    }
-  }
-
-  // ---- manifest protocol --------------------------------------------------
-
-  private def logDir(root: Path): Path = root.resolve("_log")
-  private val ManifestName: Regex = """^([0-9a-f]{8})\.json$""".r
-
-  case object ManifestProtocol extends Protocol {
-    val name = "manifest"
-    val atomicReplace = true
-
-    // visibility comes from the manifest, so segments go straight to their
-    // final names — no rename step to need atomicity from the data store
-    def writePath(root: Path, id: SegmentId): Path = segmentPath(root, id, tmp = false)
-    def readPath(root: Path, id: SegmentId): Path = segmentPath(root, id, tmp = false)
-
-    /** Optimistic multi-writer append: the target set is recomputed from
-      * the ON-DISK manifest (not the caller's possibly-stale view) so a
-      * concurrent writer's segments survive; a lost publish race re-reads
-      * and retries. Txn-id collisions (two writers allocated the same id —
-      * possible when both opened the table at the same version) abort: the
-      * colliding directory on disk belongs to the OTHER writer. */
-    def commit(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId]): Seq[SegmentId] =
-      publish(root, newIds, replaceAll = false, visibleAfter)
-
-    /** Atomic swap to exactly `visibleAfter`; aborts if ANY commit landed
-      * since the caller's `expectedBase` snapshot — observed either in the
-      * manifest content before publishing or as a lost publish race (see
-      * [[Protocol.replace]]). */
-    def replace(root: Path, newIds: Seq[SegmentId], visibleAfter: Seq[SegmentId],
-        expectedBase: Seq[SegmentId], prodTxn: Long,
-        foldTxn: Option[Long]): Seq[SegmentId] =
-      publish(root, newIds, replaceAll = true, visibleAfter, expectedBase, prodTxn, foldTxn)
-
-    private def publish(root: Path, newIds: Seq[SegmentId], replaceAll: Boolean,
-        intended: Seq[SegmentId], expectedBase: Seq[SegmentId] = Seq.empty,
-        prodTxn: Long = 0L, foldTxn: Option[Long] = None): Seq[SegmentId] = {
-      stampCommitTs(root, this, newIds) // dirs are final-named, still invisible
-      // this commit's touched chunk keys, recorded in the manifest so
-      // serializable conflict detection is a METADATA read (walk the new
-      // manifests, not the new segments' file trees). One walk of our OWN
-      // just-written directories, outside the retry loop.
-      val newChunks = newIds.flatMap(id =>
-        chunkDirsOf(segmentPath(root, id, tmp = false))).distinct.sorted
-      var tries = 0
-      while (tries < 16) {
-        val latest = latestManifest(root)
-        val current = latest.map(readManifest).getOrElse(Seq.empty)
-        val clash = newIds.filter(current.contains)
-        if (clash.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"transaction-id collision with an already-committed segment: ${clash.mkString(",")}")
-        if (replaceAll && current.sorted != expectedBase.sorted)
-          throw new java.util.ConcurrentModificationException(
-            "table changed since the replace commit's snapshot (overwrite/compact): " +
-              s"expected ${expectedBase.sorted.mkString(",")}, found ${current.sorted.mkString(",")}")
-        val version = latest.map(manifestVersion).getOrElse(-1L) + 1L
-        val target = if (replaceAll) intended.sorted else (current ++ newIds).sorted
-        // the producing txn is MONOTONE across versions: a new append's id,
-        // an explicit replace's id, or carried forward — never backward
-        // (listCommittedAsOf depends on it to pick "newest state <= t")
-        val prod = (Seq(prodTxn) ++ latest.map(readProdTxn) ++
-          newIds.map(_.txnId) ++ target.map(_.txnId)).max
-        // the recorded `replace` flag means rows may have been REMOVED
-        // (truncate/overwrite/compact drop segments from the visible set) —
-        // NOT that the publish used the CAS-replace primitive: a row-level
-        // delta publishes via `replace` on its exact base purely for
-        // linearization, and is a semantic APPEND (conflict detection by
-        // its chunks, not conflict-with-everything)
-        val semanticReplace = replaceAll && target != (current ++ newIds).sorted
-        if (tryWriteManifest(root, version, target, prod,
-            newIds, newChunks, semanticReplace, foldTxn)) {
-          writeLastPointer(root, version) // best-effort O(1)-open hint
-          return target
-        }
-        // lost the publish race: someone committed between read and write
-        if (replaceAll) throw new java.util.ConcurrentModificationException(
-          "table changed under a replace commit (overwrite/compact); recompute and retry")
-        tries += 1
-      }
-      throw new IllegalStateException("manifest commit: too many publish races")
-    }
-
-    def discardInFlight(root: Path, id: SegmentId): Unit =
-      deleteRecursively(segmentPath(root, id, tmp = false))
-
-    /** Visible set = latest manifest. Never-referenced segment directories
-      * past the claim grace are leftovers of crashed or rolled-back
-      * transactions — swept here. Directories REFERENCED by some older
-      * manifest version are retained: they are time-travel history below a
-      * replace commit (overwrite/truncate/compact/checkpoint), readable via
-      * `VERSION AS OF` until an explicit vacuum reclaims them — the
-      * lakehouse open-never-deletes-data rule (round 11; before that,
-      * superseded commits were swept on every open, which made replace
-      * commits destroy history immediately). Next txn id must outrank every
-      * id ever seen on disk or recorded as a producing txn (a TRUNCATE
-      * leaves no segments but its id stays burned), so ids never rewind. */
-    def recover(root: Path): (Seq[SegmentId], Long) = {
-      Files.createDirectories(logDir(root))
-      val committed = latestManifest(root).map(readManifest).getOrElse(Seq.empty)
-      val onDisk = listEntries(root)
-      val maxTxn = ((onDisk.map(_._2.txnId) ++ committed.map(_.txnId)) :+
-        latestManifest(root).map(readProdTxn).getOrElse(0L)).max
-      // sweep candidates: not in the live set AND past every grace window.
-      // Never-referenced candidates are crashed claims (swept);
-      // ever-referenced ones are time-travel history (kept until vacuum).
-      // everReferenced reads EVERY manifest version — O(commit count) — so
-      // it is only computed when candidates actually exist; a healthy
-      // table's open stays O(1) manifest reads (the _last pointer) plus
-      // one directory listing.
-      val live = committed.toSet
-      val candidates = onDisk.filterNot(e => live.contains(e._2))
-        .filterNot(e => withinGrace(e._1))
-      if (candidates.nonEmpty) {
-        val refEver = everReferenced(root)
-        candidates.filterNot(e => refEver.contains(e._2))
-          .foreach(e => deleteRecursively(e._1))
-      }
-      (committed.sorted, maxTxn + 1)
-    }
-
-    def deleteSegment(root: Path, id: SegmentId): Unit =
-      deleteRecursively(segmentPath(root, id, tmp = false))
-
-    def listCommitted(root: Path): Seq[SegmentId] =
-      latestManifest(root).map(readManifest).getOrElse(Seq.empty).sorted
-
-    /** Time travel through the manifest LINEAGE: the newest manifest whose
-      * producing txn is <= `t` captures the table state as of `t` (producing
-      * txns are monotone across versions), filtered by segment txn for the
-      * within-manifest append case. States replaced away by
-      * overwrite/truncate/compact resolve to their ORIGINAL manifest, whose
-      * directories survive until vacuum — so `VERSION AS OF` below a replace
-      * keeps reading. If any directory of the resolved state was already
-      * vacuumed, falls back to filtering the LATEST manifest (the pre-round-11
-      * behavior: typically the empty table below a replace — never a torn
-      * read of half-vacuumed history). */
-    override def listCommittedAsOf(root: Path, txn: Long): Seq[SegmentId] = {
-      def fallback = listCommitted(root).filter(_.txnId <= txn).sorted
-      manifestLineage(root).filter(_._1 <= txn).lastOption match {
-        case Some((_, state)) =>
-          val visible = state.filter(_.txnId <= txn).sorted
-          if (visible.forall(id => Files.isDirectory(readPath(root, id)))) visible
-          else fallback
-        // no version at or below `txn` remains: either a pre-first-commit
-        // time (fallback filters to empty as well) or PRUNED history
-        // (vacuum's manifest GC) — fall back, exactly as an unreadable
-        // version would, so pruning a version never changes an answer
-        case None => fallback
-      }
-    }
-
-    /** [[listCommittedAsOf]] WITHOUT the silent fallback: Some(state) only
-      * when the resolution is provably exact; None means the true state at
-      * `txn` is NOT reconstructible (history vacuumed/pruned) — callers
-      * that would silently compute a WRONG answer from the fallback (the
-      * CDC delta across a replace) must refuse instead.
-      *
-      * Newest-first walk. A version can serve `txn` exactly when either
-      * its producing txn is <= `txn` (the state boundary itself), or it is
-      * a checkpoint fold whose recorded boundary is <= `txn`
-      * ([[Protocol.replace]]'s `foldTxn`): the fold reshaped only the <= boundary prefix
-      * EQUIVALENTLY and removed nothing above it, so filtering its state
-      * by segment txn resolves `txn` exactly — this is what keeps CDC
-      * across a below-range fold working even after vacuum pruned the
-      * pre-fold manifests. Any other version only layers effects above
-      * `txn` (appends allocate above the watermark) or replaces state we
-      * must look below (overwrite/truncate/compact) — walk to its
-      * predecessor; a pruned predecessor is an unprovable hole → None.
-      * Walking past version 0 means `txn` predates the first commit. */
-    override private[graft] def listCommittedAsOfStrict(root: Path, txn: Long)
-        : Option[Seq[SegmentId]] = {
-      var v = latestManifest(root) match {
-        case None    => return Some(Seq.empty) // never committed
-        case Some(p) => manifestVersion(p)
-      }
-      while (v >= 0) {
-        val p = manifestPath(root, v)
-        if (!Files.exists(p)) return None // pruned below an unresolved replace
-        val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        val prod = """"txn"\s*:\s*(\d+)""".r.findFirstMatchIn(text)
-          .map(_.group(1).toLong)
-          .getOrElse((readManifest(p).map(_.txnId) :+ 0L).max)
-        val fold = """"fold"\s*:\s*(\d+)""".r
-          .findFirstMatchIn(text).map(_.group(1).toLong)
-        if (prod <= txn || fold.exists(_ <= txn)) {
-          val visible = readManifest(p).filter(_.txnId <= txn).sorted
-          return if (visible.forall(id => Files.isDirectory(readPath(root, id))))
-            Some(visible)
-          else None
-        }
-        v -= 1
-      }
-      Some(Seq.empty) // every version produced above txn: pre-first-commit
-    }
-
-    override def txnWatermark(root: Path): Long =
-      ((listCommitted(root).map(_.txnId) :+ 0L) ++
-        latestManifest(root).map(readProdTxn)).max
-
-    /** Every segment id any manifest version ever referenced, EXCLUDING ids
-      * whose directories are gone (vacuumed) — the discovery set for
-      * history/timestamp resolution across replace commits. */
-    override private[graft] def lineageSegments(root: Path): Seq[SegmentId] =
-      everReferenced(root).toSeq.sorted
-        .filter(id => Files.isDirectory(readPath(root, id)))
-
-    /** (producing txn, segment set) per manifest version, version order. */
-    private def manifestLineage(root: Path): Seq[(Long, Seq[SegmentId])] =
-      listDir(logDir(root))
-        .filter(p => ManifestName.matches(p.getFileName.toString))
-        .sortBy(_.getFileName.toString)
-        .map(p => (readProdTxn(p), readManifest(p)))
-
-    override def sweepUnreferenced(root: Path, keep: Seq[SegmentId]): Int = {
-      val keepSet = keep.toSet
-      val candidates = listEntries(root).filter(e => !e._3 && !keepSet.contains(e._2))
-      if (candidates.isEmpty) return 0 // skip the O(commit-count) manifest scan
-      val refEver = everReferenced(root)
-      val stale = candidates
-        .filter(e => refEver.contains(e._2) || !withinGrace(e._1))
-      stale.foreach(e => deleteRecursively(e._1))
-      stale.size
-    }
-
-    /** Prune a contiguous PREFIX of manifest versions: find the newest
-      * version (below the latest) whose state is no longer readable — some
-      * referenced directory was vacuumed — and delete every version at or
-      * below it. Unreadable versions are dead metadata ([[listCommittedAsOf]]
-      * already falls back to filtering the latest manifest for them);
-      * fully-readable versions BELOW the newest dead one must go too, or
-      * they become stale survivors that lineage resolution picks over the
-      * fallback, silently changing `VERSION AS OF` answers (e.g. an empty
-      * truncate version is vacuously "readable" — keeping it below a
-      * pruned hole makes `VERSION AS OF` of a later pruned txn answer
-      * EMPTY instead of the latest-filtered baseline). Prefix-prune is
-      * behavior-preserving: a readable version below the hole references
-      * only still-live directories, so its state is a subset of the live
-      * set, and producing txns are monotone — filtering the latest
-      * manifest by txn resolves it identically. The latest version is
-      * never a candidate (its directories are the live set; a missing one
-      * there is corruption this GC must not paper over). A crash mid-prune
-      * just leaves more dead versions for the next run — [[commitsAfter]]
-      * treats any missing version as a hole and turns conservative, and
-      * [[latestManifest]] probes forward from `_last`, so partial
-      * deletion is harmless. */
-    override def pruneManifestHistory(root: Path): Int = {
-      val latest = latestManifest(root).getOrElse(return 0)
-      val old = listDir(logDir(root))
-        .filter(p => ManifestName.matches(p.getFileName.toString))
-        .filterNot(_.getFileName == latest.getFileName)
-        .sortBy(_.getFileName.toString)
-      val newestDead = old.lastIndexWhere(p =>
-        !readManifest(p).forall(id => Files.isDirectory(readPath(root, id))))
-      if (newestDead < 0) return 0
-      val dead = old.take(newestDead + 1)
-      dead.foreach(p => Files.deleteIfExists(p))
-      dead.size
-    }
-
-    /** Every segment id any manifest version has EVER referenced — the
-      * provably-not-a-live-claim set (O(manifest versions), metadata). */
-    private def everReferenced(root: Path): Set[SegmentId] =
-      listDir(logDir(root))
-        .filter(p => ManifestName.matches(p.getFileName.toString))
-        .flatMap(readManifest).toSet
-
-    // ---- O(1) open: the _log/_last pointer --------------------------------
-    //
-    // latestManifest used to LIST _log/ — O(commit count) names per open,
-    // snapshot read, or stream-progress poll; a 1M-commit table paid a
-    // large listing to read one manifest (the Delta `_last_checkpoint`
-    // problem). `_last` holds the latest version number, written
-    // BEST-EFFORT after each successful publish (atomic replace, never
-    // part of the commit itself — the conditional-put manifest IS the
-    // commit). Readers take the pointer, verify the version exists, and
-    // probe FORWARD to absorb staleness (a crash between manifest and
-    // pointer write, or a concurrent writer's fresher publish); anything
-    // unreadable falls back to the listing. ManifestCrashSpec pins the
-    // crash points.
-
-    private def lastPointer(root: Path): Path = logDir(root).resolve("_last")
-    private def manifestPath(root: Path, version: Long): Path =
-      logDir(root).resolve(f"$version%08x.json")
-
-    private def writeLastPointer(root: Path, version: Long): Unit =
-      try casStore(root).putReplace(lastPointer(root), String.valueOf(version))
-      catch { case _: Exception => () } // best-effort: readers self-heal
-
-    private def latestManifest(root: Path): Option[Path] = {
-      val hinted =
-        try {
-          val p = lastPointer(root)
-          if (!Files.exists(p)) None
-          else {
-            val v = new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
-            if (!Files.exists(manifestPath(root, v))) None // corrupt/ahead: fall back
-            else {
-              var cur = v // stale-by-k pointer: probe forward to the true latest
-              while (Files.exists(manifestPath(root, cur + 1))) cur += 1
-              Some(manifestPath(root, cur))
-            }
-          }
-        } catch { case _: Exception => None }
-      hinted.orElse(
-        listDir(logDir(root))
-          .filter(p => ManifestName.matches(p.getFileName.toString))
-          .sortBy(_.getFileName.toString).lastOption)
-    }
-
-    private def manifestVersion(p: Path): Long = p.getFileName.toString match {
-      case ManifestName(v) => java.lang.Long.parseLong(v, 16)
-      case _               => 0L
-    }
-
-    /** One JSON line per segment keeps parsing dependency-free (the schema
-      * document already uses the same hand-rolled style). Pairs are parsed
-      * from the `"segments"` array ONWARD — `"new_txns": [1, 2]` (round 12
-      * commit metadata) would otherwise read as a phantom SegmentId(1, 2). */
-    private def readManifest(p: Path): Seq[SegmentId] = {
-      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      val from = text.indexOf("\"segments\"")
-      val body = if (from >= 0) text.substring(from) else text
-      """\[\s*(\d+)\s*,\s*(\d+)\s*\]""".r.findAllMatchIn(body)
-        .map(m => SegmentId(m.group(1).toLong, m.group(2).toInt)).toSeq
-    }
-
-    /** The manifest's recorded producing txn; manifests written before the
-      * field existed (round <= 10) derive it as the max referenced txn —
-      * exact for their append-only histories. */
-    private def readProdTxn(p: Path): Long = {
-      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      """"txn"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-        .getOrElse((readManifest(p).map(_.txnId) :+ 0L).max)
-    }
-
-    /** Single-file atomic PUT-IF-ABSENT of manifest `<version>.json`:
-      * write a temp file, then `Files.createLink` it into place — hard-link
-      * creation fails atomically if the target exists, which is the
-      * optimistic-concurrency check a second writer must lose. (A
-      * `Files.move(ATOMIC_MOVE)` is NOT that check: POSIX rename silently
-      * REPLACES an existing target, which would drop the winner's commit.
-      * On an object store the equivalent is a conditional put.) Returns
-      * false when the version was already taken. */
-    private[core] def tryWriteManifest(root: Path, version: Long,
-        visible: Seq[SegmentId], prodTxn: Long = 0L,
-        newIds: Seq[SegmentId] = Seq.empty, newChunks: Seq[String] = Seq.empty,
-        isReplace: Boolean = false, foldTxn: Option[Long] = None): Boolean = {
-      val dir = logDir(root)
-      Files.createDirectories(dir)
-      val prod = (prodTxn +: visible.map(_.txnId)).max
-      // commit-scoped fields first ("new_txns"/"chunks"/"replace" — what
-      // THIS version added, for metadata-only conflict detection; "fold" —
-      // a checkpoint's horizon, see [[Protocol.replace]]), then the full visible
-      // set. Chunk dir names are [-_=a-zA-Z0-9/] only — no JSON escaping
-      // needed.
-      val newTxns = newIds.map(_.txnId).distinct.sorted.mkString(", ")
-      val chunks = newChunks.map(c => s""""$c"""").mkString(", ")
-      val fold = foldTxn.fold("")(h => s""""fold": $h, """)
-      val body = visible.sorted.map(s => s"  [${s.txnId}, ${s.segNum}]").mkString(
-        s"""{"txn": $prod, "replace": $isReplace, $fold"new_txns": [$newTxns], """ +
-          s""""chunks": [$chunks], "segments": [\n""", ",\n", "\n]}\n")
-      // the conditional put IS the commit — one winner per version name
-      casStore(root).putIfAbsent(dir.resolve(f"$version%08x.json"), body)
-    }
-
-    /** Commit metadata for every manifest version whose producing txn is
-      * above `horizon`, newest first — the serializable conflict check's
-      * metadata-only read path. Walks BACKWARD from the latest version
-      * (O(commits since horizon) single-file reads; no directory listing,
-      * no segment file-tree walks). Returns None when any covered version
-      * predates chunk recording — the caller falls back to walking segment
-      * directories. */
-    override private[graft] def commitsAfter(root: Path, horizon: Long)
-        : Option[Seq[CommitMeta]] = {
-      val latest = latestManifest(root).getOrElse(return Some(Seq.empty))
-      var v = manifestVersion(latest)
-      val out = Seq.newBuilder[CommitMeta]
-      var complete = true
-      while (v >= 0 && complete) {
-        val p = manifestPath(root, v)
-        if (!Files.exists(p)) complete = false // hole: be conservative
-        else {
-          val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-          val prod = """"txn"\s*:\s*(\d+)""".r.findFirstMatchIn(text)
-            .map(_.group(1).toLong)
-            .getOrElse((readManifest(p).map(_.txnId) :+ 0L).max)
-          if (prod <= horizon) return if (complete) Some(out.result()) else None
-          val isReplace = """"replace"\s*:\s*(true|false)""".r
-            .findFirstMatchIn(text).map(_.group(1) == "true")
-          val newTxns = """"new_txns"\s*:\s*\[([^\]]*)\]""".r
-            .findFirstMatchIn(text)
-            .map(m => """\d+""".r.findAllIn(m.group(1)).map(_.toLong).toSeq)
-          val chunks = """"chunks"\s*:\s*\[([^\]]*)\]""".r
-            .findFirstMatchIn(text)
-            .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
-          val fold = """"fold"\s*:\s*(\d+)""".r
-            .findFirstMatchIn(text).map(_.group(1).toLong)
-          (isReplace, newTxns) match {
-            case (Some(r), Some(ts)) =>
-              val segs = readManifest(p).filter(s => ts.contains(s.txnId))
-              out += CommitMeta(v, prod, ts, segs, chunks, r, fold)
-            case _ => complete = false // pre-round-12 manifest in range
-          }
-          v -= 1
-        }
-      }
-      if (complete) Some(out.result()) else None
-    }
-  }
 
   /** One committed manifest version's commit-scoped metadata: the txns it
     * added (with their segment ids, for key-digest lookup), the chunk

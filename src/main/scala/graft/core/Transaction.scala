@@ -25,13 +25,16 @@ object MergeAction {
   *     increasing `_seq` — the append-only analog of the reference's
   *     overwrite-in-place within a block (block.rs:47-49): on read, higher
   *     `_seq` wins among equal keys in the same txn (SURVEY.md §7.4).
-  *   - [[flush]] spills all buffered batches to ONE new `.tmp` segment
-  *     through the shared segment writer ([[Segment.write]]: chunk-keyed
-  *     layout, dims-sorted within each chunk). Multiple flushes ⇒ multiple
-  *     segments per txn (transaction.rs:90-119).
-  *   - [[commit]] does a final flush then atomically renames `.tmp` dirs in
-  *     reverse order (segment 0 last = commit marker; transaction.rs:127-136).
-  *   - [[rollback]] (or abandonment) deletes the `.tmp` dirs
+  *   - [[flush]] spills all buffered batches to ONE new segment, claimed
+  *     and written at its final name but invisible until commit, through
+  *     the shared segment writer ([[Segment.write]]: chunk-keyed layout,
+  *     dims-sorted within each chunk). Multiple flushes ⇒ multiple segments
+  *     per txn (transaction.rs:90-119).
+  *   - [[commit]] does a final flush then publishes every flushed segment
+  *     in one manifest version ([[Protocol.commit]]) — the atomic
+  *     visibility flip the reference gets from renaming segment 0 last
+  *     (transaction.rs:127-136).
+  *   - [[rollback]] (or abandonment) deletes the flushed segments
   *     (transaction.rs:50-53, 141-150).
   */
 private[core] object Transaction {
@@ -213,17 +216,16 @@ final class Transaction private[core] (
     val id = pinned.getOrElse(db.allocateTxnId()); txnId = Some(id); id
   }
 
-  /** Spill buffered batches to a new uncommitted segment (a `.tmp` dir under
-    * the rename protocol; a manifest-unreferenced final-name dir under the
-    * manifest protocol). No-op if empty. */
+  /** Spill buffered batches to a new uncommitted segment (a
+    * manifest-unreferenced final-name dir). No-op if empty. */
   def flush(): Unit = {
     requireOpen()
     if (buffered.nonEmpty) {
       val id = SegmentId(ensureTxnId(), nextSegNum)
       nextSegNum += 1
-      val target = db.protocol.writePath(db.root, id)
-      // ATOMIC claim of the target directory: under the manifest protocol
-      // segments write at their FINAL names, so a taken name means another
+      val target = Storage.segmentPath(db.root, id)
+      // ATOMIC claim of the target directory: segments write at their
+      // FINAL names, so a taken name means another
       // process committed (or is writing) this txn id — abort rather than
       // append into someone else's segment. Then stamp the claim
       // wall-clock so a concurrent open/vacuum never mistakes the
@@ -250,7 +252,7 @@ final class Transaction private[core] (
     * everything (tagged Long.MaxValue). */
   def query(pred: Option[Column] = None): DataFrame = {
     val paths = db.segmentReadPaths(visibleAtOpen) ++
-      flushed.map(id => db.protocol.writePath(db.root, id).toString)
+      flushed.map(id => Storage.segmentPath(db.root, id).toString)
     Scan.resolve(spark, schema, paths, buffered, pred)
   }
 
@@ -293,7 +295,7 @@ final class Transaction private[core] (
               s.dropped.contains(n) || !s.valueNames.contains(n)))).distinct
       val bad = (gone ++ reborn).distinct
       if (bad.nonEmpty) {
-        flushed.foreach(id => db.protocol.discardInFlight(db.root, id))
+        flushed.foreach(id => Protocol.discardInFlight(db.root, id))
         db.resolveInFlight(flushed)
         closed = true
         throw new java.util.ConcurrentModificationException(
@@ -326,7 +328,7 @@ final class Transaction private[core] (
   /** Delete all uncommitted work (reference transaction.rs:141-150). */
   def rollback(): Unit = {
     requireOpen()
-    flushed.foreach(id => db.protocol.discardInFlight(db.root, id))
+    flushed.foreach(id => Protocol.discardInFlight(db.root, id))
     db.resolveInFlight(flushed)
     flushed = Vector.empty
     buffered = Vector.empty

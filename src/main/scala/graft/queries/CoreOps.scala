@@ -468,7 +468,7 @@ object CoreOps {
       graft.core.Storage.deleteRecursively(dir)
       val sch = MatSchema(Seq(Dimension("user_id", 1000)),
         Seq(ValueCol("v", org.apache.spark.sql.types.DoubleType)))
-      val db = MatDb.create(s, sch, dir.toString, "manifest")
+      val db = MatDb.create(s, sch, dir.toString)
       val seed = table(s, d, "events")
         .groupBy(col("user_id"))
         .agg(max_by(col("value"), col("event_id")).as("v"))
@@ -519,10 +519,10 @@ object CoreOps {
       val dec = DecimalType(18, 4)
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp", LongType), ValueCol("v", dec))),
-        root.resolve("base").toString, "manifest")
+        root.resolve("base").toString)
       val view = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       val e = table(s, d, "events")
       val t1 = base.newTransaction()
       t1.addRows(e.where(col("event_id") < 800).select(col("event_id"),
@@ -569,10 +569,10 @@ object CoreOps {
       val dec = DecimalType(18, 4)
       val basePath = root.resolve("base").toString
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
-        Seq(ValueCol("grp", LongType), ValueCol("v", dec))), basePath, "manifest")
+        Seq(ValueCol("grp", LongType), ValueCol("v", dec))), basePath)
       val view = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       val e = table(s, d, "events")
       val t1 = base.newTransaction()
       t1.addRows(e.where(col("event_id") < 600).select(col("event_id"),
@@ -628,13 +628,13 @@ object CoreOps {
       val basePath = root.resolve("base").toString
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp", LongType), ValueCol("src", LongType), ValueCol("v", dec))),
-        basePath, "manifest")
+        basePath)
       val viewA = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("va").toString, "manifest")
+        root.resolve("va").toString)
       val viewB = MatDb.create(s, MatSchema(Seq(Dimension("src", 10)),
         Seq(ValueCol("min_v", dec), ValueCol("max_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("vb").toString, "manifest")
+        root.resolve("vb").toString)
       val e = table(s, d, "events")
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(col("event_id"),
         col("user_id").as("grp"), (col("user_id") % 10).as("src"),
@@ -950,7 +950,7 @@ object CoreOps {
       }
       val sch = MatSchema(Seq(Dimension("user_id", 1000)),
         Seq(ValueCol("v", org.apache.spark.sql.types.DoubleType)))
-      val db = MatDb.create(s, sch, root.resolve("td").toString, "manifest")
+      val db = MatDb.create(s, sch, root.resolve("td").toString)
       val seed = table(s, d, "events")
         .groupBy(col("user_id"))
         .agg(max_by(col("value"), col("event_id")).as("v"))
@@ -968,9 +968,8 @@ object CoreOps {
       // batch, bounded by maxTxnsPerBatch regardless of data scale; r16
       // driver measured 8 cores BEATING 32 on this query, ratio 0.68 —
       // pure per-store overhead). Size the state shuffle to the bounded
-      // key space, not the core count; parameterized, data-scale-free.
-      val stateParts = sys.props.get("graft.stream.state.partitions")
-        .map(_.toInt).getOrElse(4)
+      // key space, not the core count: a data-scale-free constant.
+      val stateParts = 4
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", stateParts)
       val q = try s.readStream
@@ -1451,7 +1450,7 @@ object CoreOps {
       IvfIndex.writeIndex(emb.limit(0), "vec_id", "embedding", trained, idx)
       val basePath = root.resolve("base").toString
       val base = MatDb.create(s, MatSchema(Seq(Dimension("vec_id", 1000)),
-        Seq(ValueCol("embedding", ArrayType(FloatType)))), basePath, "manifest")
+        Seq(ValueCol("embedding", ArrayType(FloatType)))), basePath)
       val t1 = base.newTransaction()
       t1.addRows(emb); t1.commit()
       val t2 = base.newTransaction()
@@ -1619,10 +1618,10 @@ object CoreOps {
       val dec = DecimalType(18, 4)
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp", LongType), ValueCol("v", dec))),
-        root.resolve("base").toString, "manifest")
+        root.resolve("base").toString)
       val view = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       val e = table(s, d, "events")
       val t1 = base.newTransaction()
       t1.addRows(e.where(col("event_id") < 700).select(col("event_id"),
@@ -1691,11 +1690,11 @@ object CoreOps {
       val basePath = root.resolve("base").toString
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp", LongType), ValueCol("src", LongType), ValueCol("v", dec))),
-        basePath, "manifest")
+        basePath)
       val view = MatDb.create(s, MatSchema(
         Seq(Dimension("grp", 1000), Dimension("src", 10)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       val e = table(s, d, "events")
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(col("event_id"),
         col("user_id").as("grp"), (col("user_id") % 7).as("src"),
@@ -1895,10 +1894,10 @@ object CoreOps {
       val dec = DecimalType(18, 4)
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp", LongType), ValueCol("v", dec))),
-        root.resolve("base").toString, "manifest")
+        root.resolve("base").toString)
       val view = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       val e = table(s, d, "events")
       val t1 = base.newTransaction()
       t1.addRows(e.where(col("event_id") < 500).select(col("event_id"),
@@ -1970,10 +1969,10 @@ object CoreOps {
       graft.core.Storage.deleteRecursively(root)
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp"), ValueCol("w"), ValueCol("v"))),
-        root.resolve("base").toString, "manifest")
+        root.resolve("base").toString)
       val view = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_rev"), ValueCol("cnt"))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       graft.core.Storage.writeProps(view.root,
         graft.core.Storage.readProps(view.root) +
           ("graft.mview.expr.rev" -> "v * (w + 1)"))
@@ -2041,7 +2040,7 @@ object CoreOps {
       graft.core.Storage.deleteRecursively(dir)
       val sch = MatSchema(Seq(Dimension("user_id", 1000)),
         Seq(ValueCol("v", org.apache.spark.sql.types.DoubleType)))
-      val db = MatDb.create(s, sch, dir.toString, "manifest")
+      val db = MatDb.create(s, sch, dir.toString)
       val seed = table(s, d, "events").where(col("user_id") < 60)
         .groupBy(col("user_id"))
         .agg(max_by(col("value"), col("event_id")).as("v"))
@@ -2085,11 +2084,11 @@ object CoreOps {
       graft.core.Storage.deleteRecursively(root)
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp"), ValueCol("u"), ValueCol("w"))),
-        root.resolve("base").toString, "manifest")
+        root.resolve("base").toString)
       val view = MatDb.create(s, MatSchema(
         Seq(Dimension("grp", 1000), Dimension("u", 10)),
         Seq(ValueCol("cnt_w"), ValueCol("cnt"))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       val e = table(s, d, "events")
       val t1 = base.newTransaction()
       t1.addRows(e.where(col("event_id") < 700).select(col("event_id"),
@@ -2157,11 +2156,11 @@ object CoreOps {
       graft.core.Storage.deleteRecursively(root)
       val base = MatDb.create(s, MatSchema(Seq(Dimension("event_id", 100)),
         Seq(ValueCol("grp"), ValueCol("w"), ValueCol("v"))),
-        root.resolve("base").toString, "manifest")
+        root.resolve("base").toString)
       val view = MatDb.create(s, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("min_rev"), ValueCol("max_rev"),
           ValueCol("sum_rev"), ValueCol("cnt"))),
-        root.resolve("view").toString, "manifest")
+        root.resolve("view").toString)
       graft.core.Storage.writeProps(view.root,
         graft.core.Storage.readProps(view.root) +
           ("graft.mview.expr.rev" -> "v * (w + 1)"))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{MatDb, MatSchema, Scan, Storage}
+import graft.core.{CasStore, MatDb, MatSchema, PosixCasStore, Protocol, Scan, Storage}
 
 /** SQL-native access to graft tables: a DataSource V2 `TableCatalog` that
   * makes every directory-layout graft table under a root queryable as
@@ -74,16 +74,14 @@ import graft.core.{MatDb, MatSchema, Scan, Storage}
   * `INSERT INTO <cat>.<t> ...` commits one transaction per statement via
   * [[GraftInsert]] — the txn id claimed put-if-absent (atomic segment-dir
   * creation), data written by the shared segment writer
-  * ([[graft.core.Segment]]), then published through the table's own
-  * commit protocol, so concurrent SQL writers commit distinct sequential
+  * ([[graft.core.Segment]]), then published through the multi-writer
+  * manifest commit, so concurrent SQL writers commit distinct sequential
   * transactions (GraftCatalogSpec races them). `CREATE TABLE`/CTAS express chunked dimensions through
-  * `TBLPROPERTIES('graft.dims' = 'dim:chunkSize[,dim:chunkSize...]')`
-  * (and optional `'graft.protocol' = 'manifest'|'rename'`, default
-  * manifest — the multi-writer protocol, since SQL endpoints must assume
-  * concurrent INSERTs). `INSERT OVERWRITE` and `TRUNCATE TABLE` are ONE
-  * atomic MVCC replace transaction each ([[GraftInsert.overwrite]] /
-  * tombstone-all — time travel below them keeps reading, txn ids stay
-  * monotone). Writing to a `VERSION AS OF` / `TIMESTAMP AS OF` relation
+  * `TBLPROPERTIES('graft.dims' = 'dim:chunkSize[,dim:chunkSize...]')`.
+  * `INSERT OVERWRITE` and `TRUNCATE TABLE` are ONE atomic replace
+  * transaction each ([[GraftInsert.overwrite]] — time travel below them
+  * keeps reading, txn ids stay monotone). Writing to a `VERSION AS OF` /
+  * `TIMESTAMP AS OF` relation
   * is rejected. `UPDATE` / `MERGE INTO` / subquery-`DELETE` commit
   * through the delta row-level path ([[GraftRowLevelOperation]], round
   * 10). `TIMESTAMP AS OF` resolves against per-commit wall-clock stamps
@@ -245,9 +243,8 @@ class GraftCatalog extends TableCatalog
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val dir = tableDir(ident)
     if (!MatDb.exists(dir.toString)) throw new NoSuchTableException(ident)
-    val proto = Storage.detect(dir)
-    val txn = Storage.commitTimestamps(dir, proto,
-      Storage.historySegments(dir, proto, proto.listCommitted(dir)))
+    val txn = Storage.commitTimestamps(dir,
+      Storage.historySegments(dir, Protocol.at(dir).listCommitted(dir)))
       .filter(_._2 <= timestamp / 1000L) // micros -> millis
       .lastOption.map(_._1).getOrElse(0L)
     load(ident, Some(txn))
@@ -270,21 +267,20 @@ class GraftCatalog extends TableCatalog
       else None
     baseIdent.filter(b => MatDb.exists(tableDir(b).toString)).map { b =>
       val dir = tableDir(b)
-      val proto = Storage.detect(dir)
       // history spans the manifest lineage (replaced-away states stay
       // discoverable until vacuum), so a user can find the txn id to
       // VERSION AS OF below an overwrite/truncate
-      val segs = Storage.historySegments(dir, proto, proto.listCommitted(dir))
+      val segs = Storage.historySegments(dir, Protocol.at(dir).listCommitted(dir))
         .filter(s => asOf.forall(s.txnId <= _)).sorted
-      val ts = Storage.commitTimestamps(dir, proto, segs).toMap
+      val ts = Storage.commitTimestamps(dir, segs).toMap
       new GraftHistoryTable(s"$catalogName.${b.toString}.history",
         segs.map { s =>
           // small-file diagnostics per segment (data file count + bytes):
           // the signal `CALL system.optimize` exists to fix — surfaced
           // where a user looks for it. One directory walk per segment,
           // driver-side, at metadata-table load.
-          val (files, bytes) = Storage.dataFileStats(proto.readPath(dir, s))
-          (s.txnId, s.segNum, proto.readPath(dir, s).toString,
+          val (files, bytes) = Storage.dataFileStats(Storage.segmentPath(dir, s))
+          (s.txnId, s.segNum, Storage.segmentPath(dir, s).toString,
             ts(s.txnId), files, bytes)
         })
     }
@@ -320,23 +316,23 @@ class GraftCatalog extends TableCatalog
         .orElse(if (asOf.isEmpty) streamTableFor(ident) else None)
         .getOrElse(throw new NoSuchTableException(ident))
     val schema = Storage.readSchema(dir)
-    // read-only listing: no recovery sweep (MatDb.open would delete another
-    // writer's in-flight .tmp segments — a catalog read must not mutate)
-    val proto = Storage.detect(dir)
+    // read-only listing: no recovery sweep (MatDb.open would sweep another
+    // writer's aged claims — a catalog read must not); a rename-committed
+    // directory is upgraded to manifest version 0 first
+    val proto = Protocol.at(dir)
     // snapshot horizon BEFORE the listing: a commit racing between the two
     // reads then has txnId > readHorizon and the serializable conflict
     // check aborts it (spurious-but-safe), instead of the reverse order
     // where the racer is inside the horizon yet absent from the snapshot —
     // an exempted lost update (deleteWhere already orders it this way)
     val horizon = proto.txnWatermark(dir)
-    // time travel resolves through the protocol (manifest lineage under
-    // replace commits — Protocol.listCommittedAsOf); the current snapshot
-    // is the plain listing
+    // time travel resolves through the manifest lineage (replace commits —
+    // Protocol.listCommittedAsOf); the current snapshot is the plain listing
     val visible = asOf match {
       case None    => proto.listCommitted(dir).sorted
       case Some(t) => proto.listCommittedAsOf(dir, t)
     }
-    val paths = visible.map(s => proto.readPath(dir, s).toString)
+    val paths = visible.map(s => Storage.segmentPath(dir, s).toString)
     new GraftV2Table(s"$catalogName.${ident.toString}", schema, paths,
       // a VERSION AS OF relation is a historical snapshot — not writable
       writeDir = if (asOf.isEmpty) Some(dir.toString) else None,
@@ -348,14 +344,15 @@ class GraftCatalog extends TableCatalog
       // MVCC resolve (GraftCatalogDedupRule leaves the relation bare)
       uniqueBaseline = visible.map(_.txnId).distinct.size == 1 &&
         visible.nonEmpty &&
-        visible.forall(s => Storage.isUnique(proto.readPath(dir, s))))
+        visible.forall(s => Storage.isUnique(Storage.segmentPath(dir, s))))
   }
 
   /** `CREATE TABLE`/CTAS: chunked dimensions come from
     * `TBLPROPERTIES('graft.dims' = 'dim:chunkSize[,...]')`; every other
-    * column is a value column with its declared type. Protocol from
-    * `'graft.protocol'`, default "manifest" (multi-writer publish — the
-    * right default for a SQL endpoint). */
+    * column is a value column with its declared type. `'graft.protocol'`
+    * may only name "manifest" ([[GraftCatalog.ProtocolProp]]); `'graft.store'`
+    * must name a registered store. Both are checked before anything is
+    * written. */
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: java.util.Map[String, String]): Table = {
     require(partitions.isEmpty,
@@ -385,14 +382,16 @@ class GraftCatalog extends TableCatalog
     if (MatDb.exists(dir.toString))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Seq(catalogName) ++ ident.namespace() :+ ident.name())
+    Option(properties.get(GraftCatalog.ProtocolProp))
+      .foreach(MatDb.requireManifest(_, s"TBLPROPERTIES('${GraftCatalog.ProtocolProp}')"))
+    val store = CasStore.forName(
+      Option(properties.get(GraftCatalog.StoreProp)).getOrElse(PosixCasStore.name))
     java.nio.file.Files.createDirectories(dir.getParent)
-    MatDb.create(SparkSession.active, mat, dir.toString,
-      Option(properties.get(GraftCatalog.ProtocolProp)).getOrElse("manifest"),
-      Option(properties.get(GraftCatalog.StoreProp)).getOrElse("posix"))
+    MatDb.create(SparkSession.active, mat, dir.toString, store = store.name)
     // persist operational graft.* properties (isolation policy, …) — dims
-    // live in the schema and the protocol is _log/-self-describing, so
-    // those two are excluded; Spark-reserved props (owner/provider/…) are
-    // session metadata, not table state
+    // live in the schema, the protocol is fixed and the store is the
+    // `_store` marker, so those are excluded; Spark-reserved props
+    // (owner/provider/…) are session metadata, not table state
     val extra = {
       import scala.jdk.CollectionConverters._
       properties.asScala.filter { case (k, _) =>
@@ -531,8 +530,9 @@ object GraftCatalog {
     * `'graft.dims' = 'dim:chunkSize[,dim:chunkSize...]'`. */
   val DimsProp = "graft.dims"
 
-  /** Table property selecting the commit protocol at CREATE/CTAS:
-    * "manifest" (default — multi-writer publish) or "rename". */
+  /** Table property naming the commit protocol: surfaced by `DESCRIBE` as
+    * "manifest", the one protocol. At CREATE/CTAS it may be given only as
+    * "manifest"; any other value is refused. */
   val ProtocolProp = "graft.protocol"
 
   /** Table property selecting the row-level-DML conflict policy:
@@ -548,7 +548,7 @@ object GraftCatalog {
     * directories) or "objectsim" (the simulated object store: conditional
     * put + overwrite put only, the two calls a real S3/GCS binding has —
     * [[graft.core.ObjectStoreSim]]). The choice persists as a `_store`
-    * marker and is carried by clones. */
+    * marker and is carried by clones. Any other name is refused. */
   val StoreProp = "graft.store"
 
   /** Table property refining serializable conflict detection:
@@ -627,8 +627,7 @@ final class GraftV2Table(tableName: String, val matSchema: MatSchema,
     tableProps.foreach { case (k, v) => m.put(k, v) }
     m.put(GraftCatalog.DimsProp,
       matSchema.dimensions.map(d => s"${d.name}:${d.chunkSize}").mkString(","))
-    writeDir.foreach(d => m.put(GraftCatalog.ProtocolProp,
-      Storage.detect(Storage.rootPath(d)).name))
+    writeDir.foreach(_ => m.put(GraftCatalog.ProtocolProp, Protocol.name))
     Collections.unmodifiableMap(m)
   }
 
@@ -702,11 +701,9 @@ final class GraftV2Table(tableName: String, val matSchema: MatSchema,
   /** `TRUNCATE TABLE` — NOT the `SupportsDelete` default (deleteWhere with
     * no filters = resolve the whole live table + one tombstone per key,
     * O(live keys)): routed through [[GraftInsert.overwrite]] with an empty
-    * source, which on manifest tables is a pure manifest replace publish —
-    * O(1) regardless of table size, time travel below it intact until
-    * vacuum, the truncating txn id burned so stream offsets stay monotone.
-    * Rename-protocol tables fall back to the tombstone-all shape inside
-    * the same call (no atomic swap exists there). */
+    * source, a pure manifest replace publish — O(1) regardless of table
+    * size, time travel below it intact until vacuum, the truncating txn id
+    * burned so stream offsets stay monotone. */
   override def truncateTable(): Boolean = {
     val dir = writeDir.getOrElse(throw new UnsupportedOperationException(
       s"$tableName is a VERSION AS OF snapshot — historical versions are read-only"))
@@ -727,7 +724,7 @@ final class GraftV2Table(tableName: String, val matSchema: MatSchema,
     // resolve the CURRENT snapshot (this table's visible segment set may be
     // stale if other writers committed since load — re-list, same as INSERT)
     val root = Storage.rootPath(dir)
-    val proto = Storage.detect(root)
+    val proto = Protocol.at(root)
     // serializable tables conflict-check the tombstone publish against
     // txns committed above THIS listing's watermark — captured before the
     // resolve so the filter-DELETE path gives the same no-lost-update
@@ -1144,7 +1141,7 @@ case class GraftCatalogDedupRule(spark: SparkSession) extends Rule[LogicalPlan] 
         val snapTxn = g.segmentPaths
           .flatMap(p => graft.core.Storage.decode(
             java.nio.file.Paths.get(p).getFileName.toString))
-          .map(_._1.txnId).foldLeft(0L)(math.max)
+          .map(_.txnId).foldLeft(0L)(math.max)
         graft.plans.MvRegistry.register(key.canonicalized,
           graft.plans.MvRegistry.Entry(java.nio.file.Paths.get(r)
             .toAbsolutePath.toString, snapTxn, mv))

@@ -5,7 +5,7 @@ import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{MatSchema, Scan, Segment, SegmentId, Storage}
+import graft.core.{MatSchema, Protocol, Segment, SegmentId, Storage}
 
 /** Cross-process-safe append for the SQL write path ([[GraftCatalog]]'s
   * `INSERT INTO` / CTAS): commits `df` as ONE transaction without an open
@@ -13,25 +13,24 @@ import graft.core.{MatSchema, Scan, Segment, SegmentId, Storage}
   *
   * Why not `MatDb.open(...).newTransaction()`: `open` allocates txn ids
   * from an in-process counter seeded at open time — two PROCESSES that
-  * opened at the same version allocate the SAME id and, under the manifest
-  * protocol, write part files into the SAME final-name directory before
+  * opened at the same version allocate the SAME id and write part files
+  * into the SAME final-name directory before
   * either commit can detect the collision. `open` also runs the recovery
   * sweep, which would delete another live writer's in-flight directories.
   * A SQL endpoint must assume concurrent INSERTs, so this path:
   *
   *   1. CLAIMS the txn id by atomically creating its segment-0 directory —
   *      `Files.createDirectory` is put-if-absent at the filesystem, the
-  *      same optimistic shape as the manifest protocol's `createLink`
-  *      publish (Storage.scala). A taken name (live writer, or a crash
+  *      same optimistic shape as the manifest's put-if-absent publish
+  *      ([[graft.core.Protocol]]). A taken name (live writer, or a crash
   *      orphan awaiting sweep) just advances the candidate; a claimed-
   *      then-crashed insert leaves an unreferenced directory that the next
   *      `MatDb.open` recovery sweeps, its id burned — identical to a
   *      crashed transaction.
   *   2. Writes the batch INTO the claimed directory through the shared
   *      segment writer ([[graft.core.Segment]]).
-  *   3. Publishes through the table's own protocol `commit`: manifest
-  *      tables get the optimistic multi-writer publish loop, rename
-  *      tables the segment-0-last rename order.
+  *   3. Publishes through the optimistic multi-writer manifest commit
+  *      ([[graft.core.Protocol.commit]]).
   *
   * Two concurrent catalog INSERTs therefore commit distinct, sequential
   * transactions with both data sets visible — GraftCatalogSpec races them.
@@ -65,42 +64,29 @@ object GraftInsert {
     commitBatch(spark, dir, keys, tombstone = true, serializableSince)
 
   /** `INSERT OVERWRITE` / `TRUNCATE`: replace the table contents in ONE
-    * transaction. Where the protocol swaps atomically
-    * ([[graft.core.Protocol.atomicReplace]]) the cost is O(new data), not
-    * O(old table): the new rows are written to one claimed segment and the
-    * visible set flips to exactly that segment, the same replace publish
-    * [[graft.core.MatDb.overwrite]] and `checkpoint()` use. The old state
-    * is never read and never tombstoned, and stays readable for
-    * `VERSION AS OF` until vacuum. The publish rebases over concurrent
-    * commits ([[graft.core.Protocol.publishRebasing]]), RETAINING segments
-    * with a txn id above the overwrite's own — newest-txn-wins, enforced
-    * at publish time. Otherwise the overwrite is one tombstone-all
-    * transaction: tombstones for every currently-live key (`_seq` 0)
-    * UNIONed with the new rows (`_seq` 1, outranking their own
-    * transaction's tombstone on overlapping keys), the txn id claimed
-    * BEFORE the live set is resolved.
+    * transaction at O(new data), not O(old table): the new rows are
+    * written to one claimed segment and the visible set flips to exactly
+    * that segment, the same replace publish [[graft.core.MatDb.overwrite]]
+    * and `checkpoint()` use. The old state is never read and never
+    * tombstoned, and stays readable for `VERSION AS OF` until vacuum. The
+    * publish rebases over concurrent commits
+    * ([[graft.core.Protocol.publishRebasing]]), RETAINING segments with a
+    * txn id above the overwrite's own — newest-txn-wins, enforced at
+    * publish time.
     *
-    * Either way: readers see the old state until the publish flips, and
-    * txn ids stay monotone (a TRUNCATE's id is recorded as the producing
+    * Readers see the old state until the publish flips, and txn ids stay
+    * monotone (a TRUNCATE's id is recorded as the producing
     * txn even though no segment carries it) — so stream offsets never
     * rewind. TRUNCATE is the degenerate empty-source case. Returns the
     * claimed txn id — an overwrite commits even when `df` is empty. */
   def overwrite(spark: SparkSession, dir: String, df: DataFrame): Option[Long] = {
     val root = Storage.rootPath(dir)
     val schema = Storage.readSchema(root)
-    val proto = Storage.detect(root)
-    val (segId, segPath) = claimSegment(root, proto)
-    if (!proto.atomicReplace) {
-      val doomed = Scan.resolve(spark, schema, proto.committedPaths(root), Nil, None)
-        .select(schema.dimNames.map(col): _*)
-      return writeClaimed(root, proto, schema, segId, segPath,
-        Segment.decorate(schema, doomed, del = true, seq = 0L)
-          .unionByName(Segment.decorate(schema, df, del = false, seq = 1L)))
-    }
+    val (segId, segPath) = claimSegment(root)
     Segment.write(schema, Segment.decorate(schema, df, del = false, seq = 0L),
       segId.txnId, segPath, root)
     val newIds = if (Storage.hasDataFiles(segPath)) Seq(segId) else Seq.empty[SegmentId]
-    try proto.publishRebasing(root, newIds, segId.txnId)(base =>
+    try Protocol.publishRebasing(root, newIds, segId.txnId)(base =>
       (newIds ++ base.filter(_.txnId > segId.txnId)).sorted)
     catch {
       case _: java.util.ConcurrentModificationException =>
@@ -121,17 +107,17 @@ object GraftInsert {
     * the row-level delta write ([[GraftDeltaBatchWrite]]). The candidate id
     * outranks everything committed OR on disk (orphans burn their id
     * exactly like MatDb recovery treats them); `Files.createDirectory` is
-    * atomic at the filesystem, so concurrent claimants get distinct ids. */
-  private[sources] def claimSegment(root: Path,
-      proto: graft.core.Protocol): (SegmentId, Path) = {
+    * atomic at the filesystem, so concurrent claimants get distinct ids.
+    * A rename-committed directory is upgraded first ([[Protocol.at]]), so
+    * its crashed ids are burned by version 0's producing txn. */
+  private[sources] def claimSegment(root: Path): (SegmentId, Path) = {
     // the watermark covers the committed set AND the manifest's producing
     // txn — a replace-truncate leaves no segments, yet its id stays burned
-    val onDisk = Storage.listDir(root).flatMap(p => Storage.decode(p.getFileName.toString))
-      .map(_._1.txnId)
-    var txn = (onDisk :+ proto.txnWatermark(root)).max + 1L
+    val onDisk = Storage.listEntries(root).map(_._2.txnId)
+    var txn = (onDisk :+ Protocol.at(root).txnWatermark(root)).max + 1L
     while (true) {
       val id = SegmentId(txn, 0)
-      val p = proto.writePath(root, id)
+      val p = Storage.segmentPath(root, id)
       if (Storage.casStore(root).claimDirectory(p)) {
         // claim wall-clock stamp: keeps GC's grace honest for writes that
         // outlast the mtime grace (Storage.stampClaim scaladoc)
@@ -143,24 +129,16 @@ object GraftInsert {
   }
 
   /** Claim a txn id, write `df` as one segment into the claimed
-    * directory, publish through the table's protocol — one transaction. */
+    * directory, publish it — one transaction. */
   private def commitBatch(spark: SparkSession, dir: String, df: DataFrame,
       tombstone: Boolean, serializableSince: Option[Long] = None): Option[Long] = {
     val root = Storage.rootPath(dir)
     val schema = Storage.readSchema(root)
-    val proto = Storage.detect(root)
     val frame = Segment.decorate(schema, df, del = tombstone, seq = 0L)
-    val (segId, segPath) = claimSegment(root, proto)
-    writeClaimed(root, proto, schema, segId, segPath, frame, serializableSince)
-  }
-
-  private def writeClaimed(root: Path, proto: graft.core.Protocol,
-      schema: MatSchema, segId: SegmentId, segPath: Path,
-      frame: DataFrame, serializableSince: Option[Long] = None): Option[Long] = {
+    val (segId, segPath) = claimSegment(root)
     Segment.write(schema, frame, segId.txnId, segPath, root)
     if (Storage.hasDataFiles(segPath)) {
-      publishClaimed(frame.sparkSession, root, proto, schema, segId, segPath,
-        serializableSince)
+      publishClaimed(spark, root, schema, segId, segPath, serializableSince)
       Some(segId.txnId)
     } else {
       Storage.deleteRecursively(segPath)
@@ -176,16 +154,16 @@ object GraftInsert {
     * conflict-checked against transactions committed above that snapshot
     * watermark ([[publishConflictChecked]]). */
   private[sources] def publishClaimed(spark: SparkSession, root: Path,
-      proto: graft.core.Protocol, schema: MatSchema, segId: SegmentId, segPath: Path,
+      schema: MatSchema, segId: SegmentId, segPath: Path,
       serializableSince: Option[Long]): Unit =
     serializableSince match {
       case Some(h) =>
         // granularity = 'key': record this delta's exact touched keys first
         // (readable the instant the manifest lists us), then check/publish
         val ours = maybeWriteKeyDigest(spark, schema, root, segPath)
-        publishConflictChecked(root, proto, segId, segPath, h, ours)
+        publishConflictChecked(root, segId, segPath, h, ours)
       case None =>
-        proto.commit(root, Seq(segId), (proto.listCommitted(root) :+ segId).sorted)
+        Protocol.commit(root, Seq(segId))
         ()
     }
 
@@ -227,19 +205,17 @@ object GraftInsert {
     * `ConcurrentModificationException` (the claim directory is deleted —
     * the statement can simply be retried against the current state). The
     * check runs inside [[graft.core.Protocol.publishRebasing]] on every
-    * try, against the base that try publishes onto: on manifest tables a
-    * CAS `replace` on that exact base, so no window remains between check
-    * and publish; rename tables get the check plus the protocol's
-    * single-writer assumption. Chunk granularity is conservative (a
+    * try, against the base that try publishes onto — a CAS `replace` on
+    * that exact base, so no window remains between check and publish.
+    * Chunk granularity is conservative (a
     * same-chunk different-key writer also aborts) — the same shape as
     * Delta's file-level conflict detection, one level coarser. */
-  private def publishConflictChecked(root: Path, proto: graft.core.Protocol,
-      segId: SegmentId, segPath: Path, readHorizon: Long,
-      ourKeys: Option[Storage.KeyDigest]): Unit = {
+  private def publishConflictChecked(root: Path, segId: SegmentId, segPath: Path,
+      readHorizon: Long, ourKeys: Option[Storage.KeyDigest]): Unit = {
     lazy val ours = Storage.chunkDirsOf(segPath).toSet // our OWN delta — one walk
     // conflicting txn ids committed above the horizon, or empty
     def conflictTxns(base: Seq[SegmentId]): Seq[Long] = {
-      // metadata path (manifest tables, round 12+): each manifest version
+      // metadata path: each manifest version
       // records its commit's txns + touched chunks + replace flag, so the
       // check is O(commits since horizon) single-file reads — no segment
       // file-tree walks, flat in table file count. A replace
@@ -247,7 +223,7 @@ object GraftInsert {
       // it conflicts with EVERY row-level write — the dir-walk fallback
       // cannot see a truncate (it leaves no segments) and silently missed
       // this case before chunk recording existed.
-      val meta = proto.commitsAfter(root, readHorizon).map(_.flatMap { c =>
+      val meta = Protocol.commitsAfter(root, readHorizon).map(_.flatMap { c =>
         val chunkOverlap = c.chunks.forall(_.exists(ours.contains))
         // key exoneration (granularity = 'key'): a same-chunk commit
         // whose recorded key digest is PROVABLY disjoint from ours is
@@ -260,7 +236,7 @@ object GraftInsert {
         val keyDisjoint = !c.isReplace && chunkOverlap && (ourKeys match {
           case Some(mine) if c.newSegs.nonEmpty =>
             val theirs = c.newSegs.map(id =>
-              Storage.readKeyDigest(proto.readPath(root, id)))
+              Storage.readKeyDigest(Storage.segmentPath(root, id)))
             theirs.forall(_.isDefined) &&
               theirs.flatten.forall(_.provablyDisjoint(mine))
           case _ => false
@@ -271,14 +247,14 @@ object GraftInsert {
         else Seq.empty
       })
       meta.getOrElse {
-        // fallback (rename protocol, or manifests predating chunk
-        // recording): walk each later segment's directory tree
+        // fallback (manifests predating commit metadata): walk each later
+        // segment's directory tree
         base.filter(_.txnId > readHorizon).filter(s =>
-          Storage.chunkDirsOf(proto.readPath(root, s)).exists(ours.contains)).map(_.txnId)
+          Storage.chunkDirsOf(Storage.segmentPath(root, s)).exists(ours.contains)).map(_.txnId)
       }
     }
-    try proto.publishRebasing(root, Seq(segId), segId.txnId) { base =>
-      if (proto.txnWatermark(root) > readHorizon) {
+    try Protocol.publishRebasing(root, Seq(segId), segId.txnId) { base =>
+      if (Protocol.txnWatermark(root) > readHorizon) {
         val conflicts = conflictTxns(base)
         if (conflicts.nonEmpty) throw new java.util.ConcurrentModificationException(
           s"serializable row-level conflict: transaction(s) " +

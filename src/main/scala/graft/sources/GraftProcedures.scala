@@ -111,7 +111,7 @@ object GraftProcedures {
         // The GC grace window still protects live claims.
         row =>
           val dir = tableDir(row)
-          val proto = graft.core.Storage.detect(dir)
+          val proto = graft.core.Protocol.at(dir)
           val removed = proto.sweepUnreferenced(dir, proto.listCommitted(dir))
           // with the superseded directories gone, manifest versions
           // referencing them can serve no read — same GC MatDb.vacuum runs,
@@ -145,7 +145,7 @@ object GraftProcedures {
           val clone = MatDb.shallowClone(SparkSession.active,
             tableDir(row).toString, dstDir.toString)
           new GenericInternalRow(Array[Any](clone.committedSegments.size,
-            clone.protocol.txnWatermark(clone.root)))
+            clone.txnWatermark))
       }
       case "analyze" => proc("analyze",
         "compute resolved-snapshot statistics (post-MVCC row count, " +

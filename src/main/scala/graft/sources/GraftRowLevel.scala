@@ -58,7 +58,7 @@ import graft.core.{MatSchema, Scan, SegmentId, Storage}
   * with [[GraftInsert]]) under task-unique `_tmp-*` names; the driver
   * commit renames the files named by the surviving attempts' commit
   * messages, sweeps any loser-attempt leftovers, and publishes through the
-  * table's own commit protocol — exactly-once, concurrent-writer-safe, no
+  * manifest commit — exactly-once, concurrent-writer-safe, no
   * driver data movement.
   */
 final class GraftRowLevelBuilder(table: GraftV2Table, info: RowLevelOperationInfo)
@@ -135,15 +135,14 @@ final class GraftDeltaBatchWrite(dir: String, matSchema: MatSchema, info: Logica
     extends DeltaBatchWrite {
 
   private val root = Storage.rootPath(dir)
-  private val proto = Storage.detect(root)
   // claimed when the write starts (factory creation is driver-side, before
-  // any task launches); the claim directory is invisible until the protocol
+  // any task launches); the claim directory is invisible until the manifest
   // publish, so a failed/aborted write leaves only a recovery-sweepable orphan
   @volatile private var claimed: Option[(SegmentId, java.nio.file.Path)] = None
 
   override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DeltaWriterFactory = {
     val spark = SparkSession.active
-    val c = GraftInsert.claimSegment(root, proto)
+    val c = GraftInsert.claimSegment(root)
     claimed = Some(c)
     // segment file schema: dims ++ values ++ (_del, _txn_id, _seq) — chunk
     // keys are directory-encoded, not stored in the files
@@ -201,14 +200,13 @@ final class GraftDeltaBatchWrite(dir: String, matSchema: MatSchema, info: Logica
     * abort-on-race contract as `compact()`/`checkpoint()`, at chunk
     * granularity (conservative: a same-chunk different-key writer also
     * aborts; Delta's file-level conflict detection has the same shape).
-    * On manifest tables the publish itself is the conflict check's
-    * linearization point (a CAS `replace` on the exact base the check
-    * read, re-checked on every lost race), so no window remains between
-    * check and publish; rename tables get the check plus the protocol's
-    * single-writer assumption. The loser's claim directory is deleted and
-    * the statement can simply be retried — its re-read sees the winner. */
+    * The publish itself is the conflict check's linearization point (a
+    * CAS `replace` on the exact base the check read, re-checked on every
+    * lost race), so no window remains between check and publish. The
+    * loser's claim directory is deleted and the statement can simply be
+    * retried — its re-read sees the winner. */
   private def publish(segId: SegmentId, segPath: java.nio.file.Path): Unit =
-    GraftInsert.publishClaimed(SparkSession.active, root, proto, matSchema,
+    GraftInsert.publishClaimed(SparkSession.active, root, matSchema,
       segId, segPath, if (serializable) Some(readHorizon) else None)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -22,7 +22,10 @@ import graft.core.{MatDb, Scan}
   * Write modes: Append = one atomic graft transaction; Overwrite = an atomic
   * replace commit ([[MatDb.overwrite]] — keys absent from the new data are
   * gone, per the Spark save-mode contract); ErrorIfExists throws on an
-  * existing table; Ignore no-ops on an existing table.
+  * existing table; Ignore no-ops on an existing table. The write option
+  * `protocol` may only be "manifest" (the one commit protocol); anything
+  * else is refused. A rename-committed table directory is upgraded to
+  * manifest version 0 on its first read or write.
   *
   * == Why V1 `PrunedFilteredScan`, not a DSv2 `ScanBuilder` ==
   *
@@ -84,11 +87,12 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
       data: DataFrame): BaseRelation = {
     val spark = sqlContext.sparkSession
     val path = pathOf(parameters)
+    parameters.get("protocol")
+      .foreach(MatDb.requireManifest(_, "format(\"graft\") option protocol"))
     val exists = MatDb.exists(path)
     val db =
       if (exists) MatDb.open(spark, path)
-      else MatDb.create(spark, GraftSource.inferSchema(data, parameters), path,
-        parameters.getOrElse("protocol", "rename"))
+      else MatDb.create(spark, GraftSource.inferSchema(data, parameters), path)
     mode match {
       case SaveMode.ErrorIfExists if exists =>
         throw new IllegalStateException(s"graft table already exists at $path")

@@ -18,13 +18,15 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.core.{SegmentId, Storage}
+import graft.core.{Protocol, SegmentId, Storage}
 
 /** `spark.readStream.format("graft-stream")` — an exactly-once,
-  * transaction-aligned streaming source over a graft table (the DSv2
-  * `MicroBatchStream` the file-glob stream in [[Streams.segmentStream]]
-  * cannot be): **offsets are committed transaction ids**, so a micro-batch
-  * is a contiguous, replayable range of whole transactions.
+  * transaction-aligned streaming source over a graft table (a DSv2
+  * `MicroBatchStream`; a file-glob stream over segment directories could
+  * not be one, since visibility is the manifest, not the listing):
+  * **offsets are committed transaction ids**, so a micro-batch is a
+  * contiguous, replayable range of whole transactions. A rename-committed
+  * table directory is upgraded to manifest version 0 on first poll.
   *
   *   - Exactly-once: the engine checkpoints `{"txn": N}` offsets;
   *     [[GraftMicroBatchStream.planInputPartitions]] is a pure function of
@@ -131,7 +133,7 @@ final class GraftMicroBatchStream(
     extends MicroBatchStream with SupportsAdmissionControl {
 
   private val root: JPath = Storage.rootPath(path)
-  private def protocol = Storage.detect(root)
+  private def protocol = Protocol.at(root)
 
   /** Watermark, not just the listing max: a replace-TRUNCATE leaves no
     * segments but records its producing txn in the manifest — the offset
@@ -156,7 +158,7 @@ final class GraftMicroBatchStream(
       case None => startingTimestamp match {
         case None => 0L
         case Some(t) =>
-          (Storage.commitTimestamps(root, protocol, protocol.listCommitted(root))
+          (Storage.commitTimestamps(root, protocol.listCommitted(root))
             .filter(_._2 < t).map(_._1) :+ 0L).max
       }
     }
@@ -210,7 +212,7 @@ final class GraftMicroBatchStream(
   }
 
   private def dataFiles(id: SegmentId): Seq[String] = {
-    val dir = protocol.readPath(root, id)
+    val dir = Storage.segmentPath(root, id)
     if (!Files.isDirectory(dir)) Seq.empty
     else {
       val walk = Files.walk(dir)

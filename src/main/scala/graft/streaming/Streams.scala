@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.{MatDb, Scan, Storage}
+import graft.core.{MatDb, Protocol, Scan, Storage}
 import graft.sources.GraftInsert
 
 /** Structured Streaming surface (SURVEY.md §2.3 "Streaming"): the reference
@@ -11,9 +11,10 @@ import graft.sources.GraftInsert
   * sensor-log loader (sensor-log.rs:241-305) is a batch ingest of an
   * unbounded feed. Here the same feed is a stream:
   *
-  *   - [[segmentStream]]: file-source stream over a graft table's committed
-  *     segment directories — every committed transaction becomes a
-  *     micro-batch (the streaming read path of the table format);
+  *   - the streaming read path of the table format is the
+  *     transaction-aligned source `spark.readStream.format("graft-stream")`
+  *     ([[GraftStreamSource]]) — every committed transaction becomes part
+  *     of exactly one micro-batch;
   *   - tumbling / sliding / session windows with watermarks;
   *   - [[dedupWithinWatermark]]: the engine's upsert semantics on a stream;
   *   - [[runningMaxByKey]]: arbitrary stateful op via mapGroupsWithState;
@@ -22,35 +23,6 @@ import graft.sources.GraftInsert
   *     guarantees as batch writes.
   */
 object Streams {
-
-  /** Stream of rows appended to a graft table: parquet file-source over the
-    * committed segment glob. New committed segments are picked up per
-    * micro-batch. The glob matches exactly `<8hex>.<8hex>` directory names,
-    * so `.tmp` (uncommitted) dirs can never match — glob `*` matches dots,
-    * which is why a lazy `[0-9a-f]*.[0-9a-f]*` would dirty-read them.
-    * Tables whose visibility is a manifest, not the listing, are refused.
-    *
-    * Micro-batches are file-aligned, not transaction-aligned; for
-    * exactly-once txn-per-batch semantics use [[GraftStreamSource]]
-    * (`spark.readStream.format("graft-stream")`). */
-  def segmentStream(spark: SparkSession, dbPath: String): DataFrame = {
-    val db = MatDb.open(spark, dbPath)
-    require(!db.protocol.atomicReplace,
-      "segmentStream supports rename-protocol tables only; use " +
-        "spark.readStream.format(\"graft-stream\") for manifest tables")
-    // _del rides along (null ≡ live for pre-delete segments) so the raw
-    // change stream distinguishes deletes from null-valued upserts
-    val st = org.apache.spark.sql.types.StructType(
-      db.schema.toStructType.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("_del", org.apache.spark.sql.types.BooleanType),
-        org.apache.spark.sql.types.StructField("_txn_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("_seq", org.apache.spark.sql.types.LongType)))
-    val hex8 = "[0-9a-f]" * 8
-    spark.readStream
-      .schema(st)
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(s"$dbPath/$hex8.$hex8/*")
-  }
 
   /** Tumbling-window counts with a watermark for late data. */
   def tumblingCounts(events: DataFrame, tsCol: String, watermark: String, window: String): DataFrame =
@@ -386,13 +358,7 @@ object Streams {
             if (maxSegs > 0) {
               val retain = sys.props.get("graft.mview.checkpoint.retain")
                 .map(_.toInt).getOrElse(16)
-              // checkpoint's fold needs an atomic replace (other views
-              // simply skip — the knob must never crash the stream)
-              pending.foreach { case (v, _) =>
-                if (v.protocol.atomicReplace) {
-                  v.checkpointIfNeeded(maxSegs, retain); ()
-                }
-              }
+              pending.foreach { case (v, _) => v.checkpointIfNeeded(maxSegs, retain) }
             }
           }
         }
@@ -502,7 +468,7 @@ object Streams {
     * by `doc_id` alone stores several frame rows under one key. */
   private[graft] def committedRows(spark: SparkSession, dir: String): DataFrame = {
     val root = Storage.rootPath(dir)
-    Scan.raw(spark, Storage.readSchema(root), Storage.detect(root).committedPaths(root), Nil)
+    Scan.raw(spark, Storage.readSchema(root), Protocol.at(root).committedPaths(root), Nil)
   }
 
   /** The dedup ingest sinks' shared micro-batch loop. `prepare` derives

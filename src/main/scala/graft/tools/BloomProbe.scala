@@ -41,7 +41,7 @@ object BloomProbe {
       val sch = MatSchema(Seq(Dimension("k", rows + 1)),
         Seq(ValueCol("fp"),
           ValueCol("payload", org.apache.spark.sql.types.StringType)))
-      val db = MatDb.create(spark, sch, root.toString, "manifest")
+      val db = MatDb.create(spark, sch, root.toString)
       // 4 MB row groups on BOTH tables: the skip unit. (A 100 TB table has
       // thousands of default-size row groups per chunk; the smaller groups
       // model that granularity at probe scale without changing what is

@@ -50,7 +50,7 @@ object CheckpointProbe {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-probe")
     val db = MatDb.create(spark,
       MatSchema(Seq(Dimension("k", 1000)), Seq(ValueCol("v"))),
-      dir.toString, "manifest")
+      dir.toString)
     // each txn upserts a deterministic pseudo-random ~1/40 slice of the key
     // space — the long-lived-table shape: every key's history spread over
     // many segments, most versions dead at read time

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dimension, MatDb, MatSchema, Storage, ValueCol}
+import graft.core.{Dimension, MatDb, MatSchema, Protocol, Storage, ValueCol}
 
 /** Evidence for round 12's manifest commit metadata: serializable conflict
   * detection used to re-walk each later segment's file tree per check AND
@@ -39,7 +39,7 @@ object ConflictProbe {
     val results = Seq(50, 200, 800).map { chunks =>
       val root = java.nio.file.Files.createTempDirectory(s"graft-conflict-$chunks")
       val sch = MatSchema(Seq(Dimension("k", 10)), Seq(ValueCol("v")))
-      val db = MatDb.create(spark, sch, root.toString, "manifest")
+      val db = MatDb.create(spark, sch, root.toString)
       // K commits, each touching all F chunks (k = 0..10*F step keeps one
       // row per chunk — the file count per segment is what we scale)
       (0 until commits).foreach { i =>
@@ -48,13 +48,13 @@ object ConflictProbe {
           lit(i.toLong).as("v")))
         t.commit()
       }
-      val proto = Storage.detect(root)
+      val proto = Protocol.at(root)
       val later = proto.listCommitted(root).filter(_.txnId > 0L)
       require(later.size == commits)
       // the old path: walk EVERY later segment's file tree
       val walkMs = timeMin(reps) {
         val ours = Set("_ck_k=0")
-        later.foreach(s => Storage.chunkDirsOf(proto.readPath(root, s))
+        later.foreach(s => Storage.chunkDirsOf(Storage.segmentPath(root, s))
           .exists(ours.contains))
       }
       // the new path: read the manifests' recorded chunk sets
@@ -87,7 +87,7 @@ object ConflictProbe {
     val bloomScenario = {
       val root = java.nio.file.Files.createTempDirectory("graft-conflict-bloom")
       val sch = MatSchema(Seq(Dimension("k", 1000000)), Seq(ValueCol("v")))
-      val db = MatDb.create(spark, sch, root.toString, "manifest")
+      val db = MatDb.create(spark, sch, root.toString)
       Storage.writeProps(root, Storage.readProps(root) +
         ("graft.isolation.granularity" -> "key"))
       val t = db.newTransaction()
@@ -98,11 +98,11 @@ object ConflictProbe {
         spark.range(5000).select(col("id").as("k"), lit(0L).as("v")),
         serializableSince = Some(1L))
       // writer B: one disjoint key, horizon BELOW writer A — both commit
-      val before = Storage.detect(root).txnWatermark(root)
+      val before = Protocol.at(root).txnWatermark(root)
       graft.sources.GraftInsert.tombstone(spark, root.toString,
         spark.range(5500, 5501).select(col("id").as("k"), lit(0L).as("v")),
         serializableSince = Some(1L))
-      val both = Storage.detect(root).txnWatermark(root) > before
+      val both = Protocol.at(root).txnWatermark(root) > before
       db.refresh()
       val n = db.snapshot().count()
       Storage.deleteRecursively(root)

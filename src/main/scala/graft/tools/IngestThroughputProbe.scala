@@ -75,7 +75,7 @@ object IngestThroughputProbe {
       batches: Seq[Seq[A]]): Seq[BatchPoint] = {
     val home = java.nio.file.Files.createTempDirectory("graft-tp-table")
     val dir = home.resolve("t").toString
-    MatDb.create(spark, schema, dir, "manifest")
+    MatDb.create(spark, schema, dir)
     def historyCount(): Long = Streams.committedRows(spark, dir).count()
     val q = start(dir)
     try batches.zipWithIndex.map { case (rows, i) =>

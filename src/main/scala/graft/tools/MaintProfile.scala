@@ -60,14 +60,14 @@ object MaintProfile {
       val base = t("mv: create tables") {
         MatDb.create(spark, MatSchema(Seq(Dimension("event_id", 100)),
           Seq(ValueCol("grp", LongType), ValueCol("src", LongType), ValueCol("v", dec))),
-          basePath, "manifest")
+          basePath)
       }
       val viewA = MatDb.create(spark, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("va").toString, "manifest")
+        root.resolve("va").toString)
       val viewB = MatDb.create(spark, MatSchema(Seq(Dimension("src", 10)),
         Seq(ValueCol("min_v", dec), ValueCol("max_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("vb").toString, "manifest")
+        root.resolve("vb").toString)
       val e = spark.read.parquet(s"$sfDir/events.parquet")
       def rows(df: org.apache.spark.sql.DataFrame) = df.select(col("event_id"),
         col("user_id").as("grp"), (col("user_id") % 10).as("src"),
@@ -91,10 +91,10 @@ object MaintProfile {
       // from streaming-engine overhead
       val viewA2 = MatDb.create(spark, MatSchema(Seq(Dimension("grp", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("va2").toString, "manifest")
+        root.resolve("va2").toString)
       val viewB2 = MatDb.create(spark, MatSchema(Seq(Dimension("src", 10)),
         Seq(ValueCol("min_v", dec), ValueCol("max_v", dec), ValueCol("cnt", LongType))),
-        root.resolve("vb2").toString, "manifest")
+        root.resolve("vb2").toString)
       (1L to 3L).foreach { txn =>
         val delta = t(s"mv: changesBetween($txn)") {
           val d = base.changesBetween(txn - 1, txn, includeOld = true).persist()
@@ -140,7 +140,7 @@ object MaintProfile {
       }
       val basePath = root.resolve("base").toString
       val base = MatDb.create(spark, MatSchema(Seq(Dimension("vec_id", 1000)),
-        Seq(ValueCol("embedding", ArrayType(FloatType)))), basePath, "manifest")
+        Seq(ValueCol("embedding", ArrayType(FloatType)))), basePath)
       t("ix: base txn1 (bulk)") {
         val t1 = base.newTransaction(); t1.addRows(emb); t1.commit()
       }

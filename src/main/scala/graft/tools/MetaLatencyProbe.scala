@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import graft.core.{SegmentId, Storage}
+import graft.core.{Protocol, SegmentId, Storage}
 
 /** Evidence for round 11's `_log/_last` pointer + lazy GC scan
   * (VERDICT r10 "what's missing" #4): before it, every `open()` /
@@ -31,7 +31,6 @@ object MetaLatencyProbe {
     val small = args.lift(0).map(_.toInt).getOrElse(200)
     val big = args.lift(1).map(_.toInt).getOrElse(5000)
     val reps = args.lift(2).map(_.toInt).getOrElse(300)
-    val proto = Storage.forName("manifest")
 
     def build(n: Int): java.nio.file.Path = {
       val root = Files.createTempDirectory(s"graft-meta-$n")
@@ -42,20 +41,20 @@ object MetaLatencyProbe {
       var prev = Vector.empty[SegmentId]
       (1 to n).foreach { t =>
         val id = SegmentId(t.toLong, 0)
-        val dir = proto.writePath(root, id)
+        val dir = Storage.segmentPath(root, id)
         Files.createDirectories(dir)
         Files.write(dir.resolve("part-0.parquet"), Array[Byte](1))
         // cap the visible set at the newest 8 segments so manifest SIZE is
         // constant while VERSION COUNT grows — the variable under test
         val next = (prev :+ id).takeRight(8)
-        proto.replace(root, Seq(id), next, expectedBase = prev, prodTxn = t.toLong)
+        Protocol.replace(root, Seq(id), next, expectedBase = prev, prodTxn = t.toLong)
         prev = next
       }
       // vacuum the replaced-away history: open() pays one listing of the
       // SEGMENT dirs (data-proportional), so the probe holds segment count
       // constant (8 live) while VERSION COUNT grows — the healthy
       // vacuumed-table shape the flat-open claim is about
-      proto.sweepUnreferenced(root, prev)
+      Protocol.sweepUnreferenced(root, prev)
       root
     }
 
@@ -67,13 +66,13 @@ object MetaLatencyProbe {
     }
 
     def measure(root: java.nio.file.Path): (Double, Double, Double) = {
-      val poll = medianNanos(reps)(proto.txnWatermark(root))
-      val open = medianNanos(math.max(reps / 10, 20))(proto.recover(root))
+      val poll = medianNanos(reps)(Protocol.txnWatermark(root))
+      val open = medianNanos(math.max(reps / 10, 20))(Protocol.recover(root))
       // fallback: pointer removed -> pure listing path
       val last = root.resolve("_log").resolve("_last")
       val saved = Files.readAllBytes(last)
       Files.delete(last)
-      val fallback = medianNanos(reps)(proto.txnWatermark(root))
+      val fallback = medianNanos(reps)(Protocol.txnWatermark(root))
       Files.write(last, saved)
       (poll / 1e6, open / 1e6, fallback / 1e6)
     }
@@ -91,11 +90,11 @@ object MetaLatencyProbe {
         .matches("[0-9a-f]{8}\\.json")).count()
     val lineageReps = math.max(reps / 10, 20)
     val lineageBefore = medianNanos(lineageReps)(
-      proto.listCommittedAsOf(bigRoot, 1L)) / 1e6
+      Protocol.listCommittedAsOf(bigRoot, 1L)) / 1e6
     val filesBefore = manifestCount(bigRoot)
-    val prunedCount = proto.pruneManifestHistory(bigRoot)
+    val prunedCount = Protocol.pruneManifestHistory(bigRoot)
     val lineageAfter = medianNanos(lineageReps)(
-      proto.listCommittedAsOf(bigRoot, 1L)) / 1e6
+      Protocol.listCommittedAsOf(bigRoot, 1L)) / 1e6
     val filesAfter = manifestCount(bigRoot)
     println(f"[probe] prune: manifests $filesBefore -> $filesAfter " +
       f"(removed $prunedCount), lineage walk ${lineageBefore}%8.4f ms -> ${lineageAfter}%8.4f ms")

@@ -42,11 +42,11 @@ object MvRewriteProbe {
     val base = MatDb.create(spark,
       MatSchema(Seq(Dimension("k", 1000000)),
         Seq(ValueCol("g", LongType), ValueCol("v", dec))),
-      root.resolve("base").toString, "manifest")
+      root.resolve("base").toString)
     val view = MatDb.create(spark,
       MatSchema(Seq(Dimension("g", 1000)),
         Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-      root.resolve("view").toString, "manifest")
+      root.resolve("view").toString)
     base.registerMaterializedView(root.resolve("view").toString)
 
     def time[A](f: => A): (A, Double) = {

@@ -31,7 +31,7 @@ object OptimizeProbe {
     val root = java.nio.file.Files.createTempDirectory("graft-optimize-probe")
     val sch = MatSchema(Seq(Dimension("a", 100000), Dimension("b", 100000)),
       Seq(ValueCol("v")))
-    val db = MatDb.create(spark, sch, root.toString, "manifest")
+    val db = MatDb.create(spark, sch, root.toString)
     // each commit: rowsPer unique keys over an 8x4 chunk grid, upserting
     // half the previous commit's keys — a realistic hot-append pattern
     (0 until commits).foreach { i =>
@@ -54,7 +54,7 @@ object OptimizeProbe {
     }
 
     val filesBeforeCount = db.committedSegments.map(s =>
-      graft.core.Storage.countDataFiles(db.protocol.readPath(db.root, s))).sum
+      graft.core.Storage.countDataFiles(graft.core.Storage.segmentPath(db.root, s))).sum
     val wallBefore = scanWall()
     val t0 = System.nanoTime()
     val (txn, before, after) = db.optimize(zorderDims = Seq("a", "b"))

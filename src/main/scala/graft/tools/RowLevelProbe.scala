@@ -57,7 +57,7 @@ object RowLevelProbe {
       try {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala.filter(p =>
-          graft.core.Storage.decode(p.getFileName.toString).exists(!_._2)).toSeq
+          graft.core.Storage.decode(p.getFileName.toString).isDefined).toSeq
       } finally s.close()
     }
     val preSegs = segDirs.toSet

@@ -49,13 +49,11 @@ object ViewMaintProbe {
       val base = MatDb.create(spark,
         MatSchema(Seq(Dimension("k", 100000)),
           Seq(ValueCol("g", LongType), ValueCol("v", dec))),
-        java.nio.file.Files.createTempDirectory(s"graft-vmp-base-$label").toString,
-        "manifest")
+        java.nio.file.Files.createTempDirectory(s"graft-vmp-base-$label").toString)
       val view = MatDb.create(spark,
         MatSchema(Seq(Dimension("g", 1000)),
           Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        java.nio.file.Files.createTempDirectory(s"graft-vmp-view-$label").toString,
-        "manifest")
+        java.nio.file.Files.createTempDirectory(s"graft-vmp-view-$label").toString)
       var delta = (0L, 0L) // (from, to) txn bounds of the latest commit
       val points = (1 to nBatches).map { b =>
         // constant-size delta: fresh keys + some overwrites, 200 groups
@@ -101,13 +99,11 @@ object ViewMaintProbe {
       val base = MatDb.create(spark,
         MatSchema(Seq(Dimension("k", 100000)),
           Seq(ValueCol("g", LongType), ValueCol("v", dec))),
-        java.nio.file.Files.createTempDirectory(s"graft-vmp-base-$label").toString,
-        "manifest")
+        java.nio.file.Files.createTempDirectory(s"graft-vmp-base-$label").toString)
       val view = MatDb.create(spark,
         MatSchema(Seq(Dimension("g", 1000)),
           Seq(ValueCol("sum_v", dec), ValueCol("cnt", LongType))),
-        java.nio.file.Files.createTempDirectory(s"graft-vmp-view-$label").toString,
-        "manifest")
+        java.nio.file.Files.createTempDirectory(s"graft-vmp-view-$label").toString)
       var nextKey = 0L
       def commitRows(n: Long): (Long, Long) = {
         val txn = base.newTransaction()

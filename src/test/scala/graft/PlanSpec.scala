@@ -171,7 +171,7 @@ class PlanSpec extends AnyFunSuite
     assert(scans(db.changesBetween(1L, 3L)).size === 2)
     // a point lookup prunes to the key's chunk directory in every segment
     val chunkFiles = db.committedSegments.map { s =>
-      Storage.segmentPath(Storage.rootPath(path), s, tmp = false).resolve("_ck_k=2").toFile
+      Storage.segmentPath(Storage.rootPath(path), s).resolve("_ck_k=2").toFile
         .listFiles().count(_.getName.endsWith(".parquet"))
     }.sum
     val point = db.snapshot().where(col("k") === 23L)

@@ -32,7 +32,7 @@ class StreamingSpec extends AnyFunSuite {
   /** Highest committed txn id of the table at `dir`. */
   private def watermark(dir: String): Long = {
     val root = graft.core.Storage.rootPath(dir)
-    graft.core.Storage.detect(root).txnWatermark(root)
+    graft.core.Protocol.at(root).txnWatermark(root)
   }
 
   test("tumbling window counts with watermark over a memory stream") {
@@ -326,7 +326,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
 
     // the committed segments are themselves streamable
-    val seg = Streams.segmentStream(spark, path)
+    val seg = spark.readStream.format("graft-stream").load(path)
     assert(seg.isStreaming)
     val q2 = seg.writeStream.format("memory").queryName("segs").outputMode("append").start()
     try {
@@ -385,7 +385,7 @@ class StreamingSpec extends AnyFunSuite {
     // the raw segment stream carries the tombstone flag, so a DOWNSTREAM
     // consumer can re-apply deletes as deletes (k5's delete was folded
     // away by its later insert — only k2 and k4 ever tombstoned)
-    val seg = Streams.segmentStream(spark, path)
+    val seg = spark.readStream.format("graft-stream").load(path)
     val q2 = seg.writeStream.format("memory").queryName("cdcsegs")
       .outputMode("append").start()
     try {

@@ -179,14 +179,18 @@ class CheckpointSpec extends AnyFunSuite {
     assert(state(db.asOfTimestamp(preTs(4L))) === state(db.snapshot()))
   }
 
-  test("rename-protocol tables are refused with a pointer to compact()") {
-    val dir = Files.createTempDirectory("graft-ckpt-rn").toString
-    val db = MatDb.create(spark,
-      MatSchema(Seq(Dimension("k", 10)), Seq(ValueCol("v"))), dir, "rename")
-    import spark.implicits._
-    val t1 = db.newTransaction()
-    t1.addRows(Seq((1L, 1L)).toDF("k", "v")); t1.commit()
-    val ex = intercept[IllegalArgumentException](db.checkpoint(1L))
-    assert(ex.getMessage.contains("manifest"))
+  test("rename-layout tables upgrade on open and checkpoint like any other") {
+    val db = freshDb(); build(db)
+    val pre = state(db.snapshot())
+    val pre2 = state(db.asOf(2L))
+    // the same four commits as a rename-committed directory: no _log/
+    Storage.deleteRecursively(db.root.resolve("_log"))
+    val up = MatDb.open(spark, db.root.toString)
+    assert(state(up.snapshot()) === pre)
+    assert(state(up.asOf(2L)) === pre2, "history below version 0 stays readable")
+    assert(up.checkpoint(2L) === 2L)
+    assert(state(up.snapshot()) === pre)
+    assert(state(up.asOf(2L)) === pre2)
+    assert(state(MatDb.open(spark, db.root.toString).snapshot()) === pre)
   }
 }

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -37,23 +37,23 @@ object TestSpark {
   }
 }
 
-/** End-to-end core-engine behaviors, run once per commit protocol (the
-  * rename protocol of the reference and the object-store-safe manifest
-  * protocol must be indistinguishable through the public API). The first
-  * test reproduces the reference's integration scenario
-  * (reference: tests/matdb.rs:54-75): 100×100 grid, mid-txn flush, in-txn
-  * visibility, commit, fresh-txn visibility, and the dirty-directory re-run
-  * relying on upsert dedup. */
-abstract class CoreProtocolBehaviors(protocolName: String,
+/** End-to-end core-engine behaviors, run once per way a table comes to
+  * be (a fresh manifest table, a rename-committed directory upgraded on
+  * open, a table on the simulated object store — all must be
+  * indistinguishable through the public API). The first test reproduces
+  * the reference's integration scenario (reference: tests/matdb.rs:54-75):
+  * 100×100 grid, mid-txn flush, in-txn visibility, commit, fresh-txn
+  * visibility, and the dirty-directory re-run relying on upsert dedup. */
+abstract class CoreProtocolBehaviors(label: String,
     storeName: String = "posix")
     extends AnyFunSuite with BeforeAndAfterAll {
   protected lazy val spark = TestSpark.spark
 
   protected def tmpDir(): String =
-    Files.createTempDirectory(s"graft-core-$protocolName-$storeName").toString
+    Files.createTempDirectory(s"graft-core-$label-$storeName").toString
 
-  protected def create(path: String): MatDb =
-    MatDb.create(spark, schema, path, protocolName, storeName)
+  protected def create(path: String, sch: MatSchema = schema): MatDb =
+    MatDb.create(spark, sch, path, store = storeName)
 
   private def grid(n: Int, m: Int, valueOf: (Int, Int) => Long): Seq[Seq[Any]] =
     for (t <- 0 until n; s <- 0 until m)
@@ -65,8 +65,8 @@ abstract class CoreProtocolBehaviors(protocolName: String,
 
   test("matdb integration scenario: insert grid, flush, query, commit, reopen, dirty rerun") {
     val path = tmpDir()
-    val db = MatDb.createOrOpen(spark, schema, path, protocolName, storeName)
-    assert(db.protocol.name === protocolName)
+    val db = create(path)
+    assert(Files.isDirectory(Paths.get(path, "_log")))
 
     val txn = db.newTransaction()
     // sensors 0-49 before the flush, 50-99 after
@@ -84,9 +84,9 @@ abstract class CoreProtocolBehaviors(protocolName: String,
     assert(txn2.query().count() === 10000)
     txn2.rollback()
 
-    // reopen from disk (protocol is self-describing)
+    // reopen from disk
     val db2 = MatDb.open(spark, path)
-    assert(db2.protocol.name === protocolName)
+    assert(Files.isDirectory(Paths.get(path, "_log")))
     assert(db2.snapshot().count() === 10000)
 
     // dirty re-run: re-insert the same keys with new values; upsert dedup
@@ -251,7 +251,7 @@ abstract class CoreProtocolBehaviors(protocolName: String,
     val two = MatSchema(
       Seq(Dimension("time", 50), Dimension("sensor_id", 10)),
       Seq(ValueCol("v"), ValueCol("w")))
-    val db = MatDb.create(spark, two, path, protocolName)
+    val db = create(path, two)
     val t0 = db.newTransaction()
     t0.addRowsSeq(Seq(Seq(1L, 1L, 10L, 100L)))
     t0.commit()
@@ -325,18 +325,36 @@ abstract class CoreProtocolBehaviors(protocolName: String,
   }
 }
 
-/** Rename protocol (reference-parity default) + rename-only invariants. */
-class CoreSpec extends CoreProtocolBehaviors("rename") {
+/** Rename-committed directories (the reference's layout: no `_log/`) upgraded
+  * to manifest version 0 by [[MatDb.open]], plus the upgrade's own
+  * invariants. `create` lays out such a directory and opens it. */
+class CoreSpec extends CoreProtocolBehaviors("upgraded") {
+
+  /** Drop `_log/`: what is left is the layout a rename commit leaves — a
+    * txn is committed iff its segment 0 sits under its final name. */
+  private def toRenameLayout(path: String): Unit =
+    Storage.deleteRecursively(Paths.get(path, "_log"))
+
+  override protected def create(path: String, sch: MatSchema = schema): MatDb = {
+    super.create(path, sch)
+    toRenameLayout(path)
+    MatDb.open(spark, path)
+  }
 
   test("partial commit: committed-looking segment without segment 0 is ignored") {
     val path = tmpDir()
     val db = create(path)
     val t1 = db.newTransaction(); t1.addRowsSeq(Seq(Seq(1L, 1L, 1L))); t1.commit()
+    toRenameLayout(path)
     val fakeTxn = 99L
     val seg1 = SegmentId(fakeTxn, 1)
-    Files.createDirectories(Storage.segmentPath(Storage.rootPath(path), seg1, tmp = false))
+    Files.createDirectories(Storage.segmentPath(Storage.rootPath(path), seg1))
     val db3 = MatDb.open(spark, path)
     assert(db3.committedSegments.forall(_.txnId != fakeTxn))
+    assert(db3.snapshot().count() === 1)
+    // the partial txn's id stays burned: version 0 records it as producing txn
+    val t2 = db3.newTransaction(); t2.addRowsSeq(Seq(Seq(2L, 2L, 2L))); t2.commit()
+    assert(t2.id.get === fakeTxn + 1)
   }
 
   test("replace leaves exactly visibleAfter on disk: the protocol deletes superseded dirs") {
@@ -345,18 +363,38 @@ class CoreSpec extends CoreProtocolBehaviors("rename") {
     (1L to 3L).foreach { t =>
       val txn = db.newTransaction(); txn.addRowsSeq(Seq(Seq(t, 1L, t))); txn.commit()
     }
+    toRenameLayout(path)
     val root = Storage.rootPath(path)
-    val base = db.committedSegments
+    val base = MatDb.open(spark, path).committedSegments
     assert(base.map(_.txnId) === Seq(1L, 2L, 3L))
     // a flushed replacement segment keeps txn 2 and supersedes txns 1 and 3
     val fresh = SegmentId(9L, 0)
-    Files.createDirectories(db.protocol.writePath(root, fresh))
+    Files.createDirectories(Storage.segmentPath(root, fresh))
     val after = Seq(base(1), fresh)
-    assert(db.protocol.replace(root, Seq(fresh), after, base, 9L) === after)
-    val onDisk = Storage.listDir(root)
-      .flatMap(p => Storage.decode(p.getFileName.toString)).map(_._1).sorted
-    assert(onDisk === after)
-    assert(db.protocol.listCommitted(root) === after)
+    assert(Protocol.replace(root, Seq(fresh), after, base, 9L) === after)
+    // the superseded version-0 segments stay for time travel until vacuum
+    assert(MatDb.open(spark, path).vacuum() === 2)
+    assert(Storage.listEntries(root).map(_._2).sorted === after)
+    assert(Protocol.listCommitted(root) === after)
+  }
+
+  test("an unknown store name is refused before anything is written") {
+    val path = Paths.get(tmpDir(), "t")
+    val store = intercept[IllegalArgumentException](
+      MatDb.create(spark, schema, path.toString, store = "objsim"))
+    assert(store.getMessage.contains("objsim"), store.getMessage)
+    val proto = intercept[IllegalArgumentException](
+      MatDb.create(spark, schema, path.toString, "rename"))
+    assert(proto.getMessage.contains("rename"), proto.getMessage)
+    assert(!Files.exists(path))
+    // a `_store` marker naming no registered store: the first write refuses
+    // loudly instead of committing through posix primitives
+    val db = create(path.toString)
+    Files.write(path.resolve("_store"), "bogus".getBytes("UTF-8"))
+    val marker = intercept[IllegalArgumentException] {
+      val t = db.newTransaction(); t.addRowsSeq(Seq(Seq(1L, 1L, 1L))); t.commit()
+    }
+    assert(marker.getMessage.contains("bogus"), marker.getMessage)
   }
 
   test("addRows widens INT to LONG and refuses a DOUBLE dimension before buffering") {
@@ -419,14 +457,16 @@ class CoreSpec extends CoreProtocolBehaviors("rename") {
   }
 
   test("storage segment name encode/decode") {
-    assert(Storage.segmentDirName(SegmentId(255, 2), tmp = false) === "000000ff.00000002")
-    assert(Storage.decode("000000ff.00000002") === Some((SegmentId(255, 2), false)))
-    assert(Storage.decode("000000ff.00000002.tmp") === Some((SegmentId(255, 2), true)))
+    assert(Storage.segmentDirName(SegmentId(255, 2)) === "000000ff.00000002")
+    assert(Storage.decode("000000ff.00000002") === Some(SegmentId(255, 2)))
+    // a rename flush that never committed is no segment: only the upgrade
+    // reader looks at `.tmp` names
+    assert(Storage.decode("000000ff.00000002.tmp") === None)
     assert(Storage.decode("schema.json") === None)
   }
 }
 
-/** Manifest protocol + manifest-only invariants. */
+/** Fresh manifest tables + manifest invariants. */
 class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
 
   test("visibility comes from the manifest, not the directory listing") {
@@ -436,7 +476,7 @@ class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
     // a segment directory that no manifest references must stay invisible
     // (this is what makes writes to final names safe pre-commit)...
     val t2 = db.newTransaction(); t2.addRowsSeq(Seq(Seq(2L, 2L, 2L))); t2.flush()
-    val orphan = Storage.segmentPath(Storage.rootPath(path), SegmentId(t2.id.get, 0), tmp = false)
+    val orphan = Storage.segmentPath(Storage.rootPath(path), SegmentId(t2.id.get, 0))
     assert(Files.isDirectory(orphan)) // written at its FINAL name already
     assert(db.snapshot().count() === 1) // ...but not visible
     // reopen: a YOUNG never-referenced dir is indistinguishable from a
@@ -464,7 +504,7 @@ class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
     // superseded COMMITS (referenced by an older manifest) are never
     // mistaken for claims: compact + vacuum removes them immediately
     val preCompact = db3.committedSegments
-      .map(s => Storage.segmentPath(Storage.rootPath(path), s, tmp = false))
+      .map(s => Storage.segmentPath(Storage.rootPath(path), s))
     db3.compact()
     assert(db3.vacuum() === preCompact.size)
     assert(preCompact.forall(!Files.exists(_)))
@@ -492,8 +532,7 @@ class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
     // commit-level defense in depth: replaying an already-committed id
     // aborts with a conflict even if a directory check were bypassed
     intercept[java.util.ConcurrentModificationException] {
-      Storage.ManifestProtocol.commit(Storage.rootPath(path),
-        Seq(SegmentId(t2.id.get, 0)), Seq(SegmentId(t2.id.get, 0)))
+      Protocol.commit(Storage.rootPath(path), Seq(SegmentId(t2.id.get, 0)))
     }
 
     // a writer that refreshes its view proceeds past the collision, and
@@ -511,8 +550,8 @@ class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
     val nextVersion = Files.list(root.resolve("_log")).iterator().asScala
       .map(_.getFileName.toString).filter(_.endsWith(".json"))
       .map(n => java.lang.Long.parseLong(n.stripSuffix(".json"), 16)).max + 1
-    assert(Storage.ManifestProtocol.tryWriteManifest(root, nextVersion, Seq(SegmentId(99L, 0))))
-    assert(!Storage.ManifestProtocol.tryWriteManifest(root, nextVersion, Seq.empty))
+    assert(Protocol.tryWriteManifest(root, nextVersion, Seq(SegmentId(99L, 0))))
+    assert(!Protocol.tryWriteManifest(root, nextVersion, Seq.empty))
   }
 
   test("compact defers deletion; vacuum sweeps superseded segments") {
@@ -522,7 +561,7 @@ class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
       val t = db.newTransaction(); t.addRowsSeq(Seq(Seq(i.toLong, 1L, i * 10L))); t.commit()
     }
     val oldDirs = db.committedSegments
-      .map(s => Storage.segmentPath(Storage.rootPath(path), s, tmp = false))
+      .map(s => Storage.segmentPath(Storage.rootPath(path), s))
     db.compact()
     // superseded dirs still on disk (a reader mid-scan can finish)...
     assert(oldDirs.forall(Files.isDirectory(_)))
@@ -552,7 +591,7 @@ class CoreManifestSpec extends CoreProtocolBehaviors("manifest") {
   * put + overwrite put — no hard links, no atomic rename, no native
   * directories. This is the CasStore seam's port-compatibility proof: a
   * real S3/GCS binding implements the same four primitives. */
-class CoreObjectStoreSpec extends CoreProtocolBehaviors("manifest", "objectsim") {
+class CoreObjectStoreSpec extends CoreProtocolBehaviors("objectstore", "objectsim") {
 
   test("the store marker routes commits through ObjectStoreSim") {
     val path = tmpDir()
@@ -563,7 +602,7 @@ class CoreObjectStoreSpec extends CoreProtocolBehaviors("manifest", "objectsim")
     // claims are marker objects, not bare directories
     val seg = db.committedSegments.head
     assert(Files.exists(
-      Storage.segmentPath(root, seg, tmp = false).resolve("_dirclaim")))
+      Storage.segmentPath(root, seg).resolve("_dirclaim")))
   }
 
   test("shallow clone over the object store copies bytes (no links) and stays independent") {
@@ -580,7 +619,7 @@ class CoreObjectStoreSpec extends CoreProtocolBehaviors("manifest", "objectsim")
     assert(clone.snapshot().count() === 2)
     // copies, not links: the clone's parquet files have link count 1
     val cloneSeg = Storage.segmentPath(Storage.rootPath(dst),
-      clone.committedSegments.head, tmp = false)
+      clone.committedSegments.head)
     val aFile = Files.walk(cloneSeg).filter(p =>
       p.toString.endsWith(".parquet")).findFirst().get()
     assert(Files.getAttribute(aFile, "unix:nlink").asInstanceOf[Integer] === 1,

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * orphan segment directories, and a next-txn-id above every id ever used
   * (crashed transactions burn their id, database.rs:123-126 semantics).
   *
-  * The commit flow's observable steps (Storage.ManifestProtocol):
+  * The commit flow's observable steps (Protocol):
   *   1. segment directories land at their FINAL names (no rename step);
   *   2. the manifest body is written to a temp file in `_log/`;
   *   3. `Files.createLink` publishes it as `<version>.json` (atomic
@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * points. No Spark involved — recovery reads only names and manifests. */
 abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
-  private val proto = Storage.ManifestProtocol
+  private val proto = Protocol
 
   /** A table root with the suite's CasStore pinned — all protocol
     * operations below route through it. */
@@ -60,7 +60,7 @@ abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
 
   private def mkSegDirs(root: Path, ids: Seq[SegmentId]): Unit =
     ids.foreach { id =>
-      val dir = proto.writePath(root, id)
+      val dir = Storage.segmentPath(root, id)
       Files.createDirectories(dir)
       Files.write(dir.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
     }
@@ -80,7 +80,7 @@ abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
       val buf = Set.newBuilder[SegmentId]
       while (it.hasNext) {
         val n = it.next().getFileName.toString
-        Storage.decode(n).foreach { case (id, tmp) => if (!tmp) buf += id }
+        Storage.decode(n).foreach(buf += _)
       }
       buf.result()
     } finally s.close()
@@ -114,7 +114,7 @@ abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
             if (kill >= 1) mkSegDirs(root, ids)
             if (kill >= 2) mkStrayTempManifest(root)
             if (kill >= 3) {
-              proto.commit(root, ids, (committed ++ ids).sorted)
+              proto.commit(root, ids)
               committed = (committed ++ ids).sorted.toVector
             }
           case Replace(kill) =>
@@ -163,9 +163,9 @@ abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
 
     // two published commits: versions 0 and 1; pointer tracks the latest
     mkSegDirs(root, Seq(SegmentId(1, 0)))
-    proto.commit(root, Seq(SegmentId(1, 0)), Seq(SegmentId(1, 0)))
+    proto.commit(root, Seq(SegmentId(1, 0)))
     mkSegDirs(root, Seq(SegmentId(2, 0)))
-    proto.commit(root, Seq(SegmentId(2, 0)), Seq(SegmentId(1, 0), SegmentId(2, 0)))
+    proto.commit(root, Seq(SegmentId(2, 0)))
     assert(new String(Files.readAllBytes(last)).trim === "1")
 
     // CRASH between manifest write and pointer write: publish version 2
@@ -192,8 +192,7 @@ abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
 
     // the next publish repairs the pointer
     mkSegDirs(root, Seq(SegmentId(4, 0)))
-    proto.commit(root, Seq(SegmentId(4, 0)),
-      Seq(SegmentId(1, 0), SegmentId(2, 0), SegmentId(3, 0), SegmentId(4, 0)))
+    proto.commit(root, Seq(SegmentId(4, 0)))
     assert(new String(Files.readAllBytes(last)).trim === "3")
     assert(proto.listCommitted(root).map(_.txnId).sorted === Seq(1L, 2L, 3L, 4L))
   }
@@ -202,7 +201,7 @@ abstract class ManifestCrashBehaviors(storeName: String) extends AnyFunSuite
     val root = mkRoot("graft-manifest-replace-crash")
     val base = Seq(SegmentId(1, 0), SegmentId(2, 0))
     mkSegDirs(root, base)
-    proto.commit(root, base, base)
+    proto.commit(root, base)
 
     // compact writes its output segment, then dies before publishing
     mkSegDirs(root, Seq(SegmentId(3, 0)))

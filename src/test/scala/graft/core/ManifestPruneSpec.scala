@@ -111,8 +111,8 @@ class ManifestPruneSpec extends AnyFunSuite {
     // the manifest — prune must NOT remove the latest version (that would
     // paper over corruption as an empty table)
     val seg = db.committedSegments.head
-    Storage.deleteRecursively(db.protocol.readPath(db.root, seg))
-    assert(db.protocol.pruneManifestHistory(Paths.get(root.toString)) == 0)
+    Storage.deleteRecursively(Storage.segmentPath(db.root, seg))
+    assert(Protocol.pruneManifestHistory(Paths.get(root.toString)) == 0)
     assert(manifests(root).nonEmpty)
   }
 }

@@ -72,8 +72,8 @@ class SegmentLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   private def segmentDirs(dir: Path): Set[Path] = {
-    val proto = Storage.detect(dir)
-    proto.listCommitted(dir).map(proto.readPath(dir, _).normalize).toSet
+    val proto = Protocol.at(dir)
+    proto.listCommitted(dir).map(Storage.segmentPath(dir, _).normalize).toSet
   }
 
   /** The segment directories `write` committed to the table at `dir`. */
@@ -103,10 +103,9 @@ class SegmentLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** A segment's identity whatever the directory it was written under (a
-    * rename-protocol segment is written as `.tmp`, then renamed). */
+  /** A segment's identity: its table directory and decoded id. */
   private def segmentKey(p: Path) =
-    (p.getParent, Storage.decode(p.getFileName.toString).map(_._1))
+    (p.getParent, Storage.decode(p.getFileName.toString))
 
   /** SortExec counts of the captured writes into `seg` — listener events
     * arrive asynchronously, so wait (bounded) for the first. */
@@ -153,8 +152,11 @@ class SegmentLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.sql("INSERT INTO gseg.ovw_m SELECT * FROM seg_rows_head")
     val viaOverwriteManifest =
       newSegments(ovwM)(spark.sql("INSERT OVERWRITE gseg.ovw_m SELECT * FROM seg_rows"))
-    val ovwR = table("ovw_r", "rename")
+    // a rename-committed directory (no _log/): INSERT OVERWRITE upgrades it
+    // to manifest version 0 and takes the same replace publish
+    val ovwR = table("ovw_r", "manifest")
     spark.sql("INSERT INTO gseg.ovw_r SELECT * FROM seg_rows_head")
+    Storage.deleteRecursively(ovwR.resolve("_log"))
     val viaOverwriteRename =
       newSegments(ovwR)(spark.sql("INSERT OVERWRITE gseg.ovw_r SELECT * FROM seg_rows"))
     val (ckDb, ckDir) = core("ckpt")
@@ -169,7 +171,7 @@ class SegmentLayoutSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ("Transaction commit with deleteRows", viaTxn, true),
       ("INSERT INTO", viaInsert, true),
       ("INSERT OVERWRITE (manifest)", viaOverwriteManifest, true),
-      ("INSERT OVERWRITE (rename)", viaOverwriteRename, true),
+      ("INSERT OVERWRITE (upgraded rename layout)", viaOverwriteRename, true),
       ("checkpoint", viaCheckpoint, true),
       ("optimize zorder(a, b)", viaOptimize, true),
       ("SQL UPDATE", viaUpdate, false))

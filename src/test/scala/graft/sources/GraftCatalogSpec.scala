@@ -83,7 +83,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM gcat.gone").head().getLong(0) === 300)
     // the manifest still lists txn 2's segment; its directory is gone
     val lost = db.committedSegments.filter(_.txnId == 2L)
-      .map(graft.core.Storage.segmentPath(path, _, tmp = false))
+      .map(graft.core.Storage.segmentPath(path, _))
     assert(lost.nonEmpty)
     lost.foreach(graft.core.Storage.deleteRecursively)
     def refused(what: String)(read: => Any): Unit = {
@@ -177,10 +177,27 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("DESCRIBE surfaces the dims/protocol contract as table properties") {
     mkTable("props")
+    // a rename-committed directory (no _log/) describes as the manifest
+    // table it upgrades to, with every committed row
+    graft.core.Storage.deleteRecursively(root.resolve("props").resolve("_log"))
     val show = spark.sql("SHOW TBLPROPERTIES gcat.props").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(show.get("graft.dims").contains("t:50,sensor:10"))
-    assert(show.get("graft.protocol").contains("rename")) // mkTable default
+    assert(show.get("graft.protocol").contains("manifest"))
+    assert(Files.exists(root.resolve("props").resolve("_log").resolve("00000000.json")))
+    assert(spark.sql("SELECT count(*) FROM gcat.props").head().getLong(0) === 110L)
+  }
+
+  test("CREATE TABLE refuses an unknown graft.store or protocol before writing anything") {
+    def refused(name: String, prop: String): Unit = {
+      val e = intercept[IllegalArgumentException](spark.sql(
+        s"CREATE TABLE gcat.$name (t BIGINT, sensor BIGINT, v BIGINT) " +
+          s"TBLPROPERTIES('graft.dims' = 't:50,sensor:10', $prop)"))
+      assert(e.getMessage.contains("bogus"), e.getMessage)
+      assert(!Files.exists(root.resolve(name)), s"$name must not be written")
+    }
+    refused("bad_store", "'graft.store' = 'bogus'")
+    refused("bad_proto", "'graft.protocol' = 'bogus'")
   }
 
   test("history metadata table: SQL face of MatDb.history, version-filtered, no shadowing") {
@@ -569,7 +586,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // O(new data), not O(old table): the live manifest references ONLY the
     // overwrite's own segment — the old state was never read or tombstoned
     // (round 11's manifest replace publish), it just fell out of visibility
-    val live = graft.core.Storage.ManifestProtocol.listCommitted(root.resolve("ovw"))
+    val live = graft.core.Protocol.listCommitted(root.resolve("ovw"))
     assert(live.map(_.txnId).distinct === Seq(3L),
       s"live manifest must hold only the overwrite txn's segments, got $live")
     // ids stay monotone past the overwrite
@@ -662,7 +679,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // O(1), not O(live keys): the truncate is a manifest replace publish —
     // the live manifest is EMPTY (no tombstone-per-key segment was written,
     // the old table was never even read)
-    assert(graft.core.Storage.ManifestProtocol
+    assert(graft.core.Protocol
       .listCommitted(root.resolve("trunc")).isEmpty,
       "TRUNCATE must publish an empty manifest, not a tombstone segment")
     // time travel below the truncate keeps working (manifest lineage: the
@@ -947,7 +964,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     df.queryExecution.sparkPlan.collectLeaves().collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
     }.collect { case f: org.apache.spark.sql.execution.datasources.v2.FileScan =>
-      f.fileIndex.rootPaths.flatMap(p => graft.core.Storage.decode(p.getName)).map(_._1.txnId)
+      f.fileIndex.rootPaths.flatMap(p => graft.core.Storage.decode(p.getName)).map(_.txnId)
     }.flatten.toSet
 
   private def keyGrouped(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -1046,7 +1063,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // exactly its own batch.
     val dir = catTable("bg_two_writers")
     val tableRoot = graft.core.Storage.rootPath(dir)
-    val proto = graft.core.Storage.detect(tableRoot)
+    val proto = graft.core.Protocol.at(tableRoot)
     import java.util.concurrent.{Callable, Executors, TimeUnit}
     def race[A](threads: Int, jobs: Seq[() => A]): Seq[A] = {
       val pool = Executors.newFixedThreadPool(threads)
@@ -1057,7 +1074,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
     // phase 1: 4 threads × 5 concurrent claims — must partition 1..20 exactly
     val claimed = race(4, Seq.fill(20)(() =>
-      GraftInsert.claimSegment(tableRoot, proto)._1.txnId))
+      GraftInsert.claimSegment(tableRoot)._1.txnId))
     assert(claimed.sorted === (1L to 20L), s"claims must be distinct+dense: $claimed")
     // dead claims (a writer that crashes after claiming) are invisible to
     // reads, and their ids are never handed out again

@@ -97,19 +97,21 @@ class GraftProcedureSpec extends AnyFunSuite {
     assert(e2.getMessage.toLowerCase.contains("no_such_table"))
   }
 
-  test("rename-protocol tables: compact works, checkpoint refuses cleanly, vacuum is 0") {
+  test("rename-layout tables upgrade on first CALL: checkpoint, vacuum and compact all run") {
     import org.apache.spark.sql.functions._
-    val db = MatDb.create(spark, schema, root.resolve("rn").toString, "rename")
+    val dir = root.resolve("rn")
+    val db = MatDb.create(spark, schema, dir.toString)
     Seq((0L, 100L, 1L), (0L, 50L, 2L)).foreach { case (lo, hi, v) =>
       val txn = db.newTransaction()
       txn.addRows(spark.range(lo, hi).select(col("id").as("k"), lit(v).as("v")))
       txn.commit()
     }
-    val e = intercept[Exception](call("CALL gproc.system.checkpoint('rn', 1)"))
-    assert(e.getMessage.contains("manifest"),
-      s"checkpoint must name the protocol requirement: ${e.getMessage}")
-    // under renames, unreferenced-and-committed cannot exist — vacuum is a no-op
-    assert(call("CALL gproc.system.vacuum('rn')") === Row(0))
+    // the same two commits as a rename-committed directory: no _log/
+    graft.core.Storage.deleteRecursively(dir.resolve("_log"))
+    assert(call("CALL gproc.system.checkpoint('rn', 1)") === Row(1L))
+    assert(Files.exists(dir.resolve("_log").resolve("00000000.json")))
+    // txn 1's segment, folded into the baseline, is history — vacuum takes it
+    assert(call("CALL gproc.system.vacuum('rn')") === Row(1))
     assert(call("CALL gproc.system.compact('rn')").getLong(0) > 0)
     assert(spark.sql("SELECT count(*) FROM gproc.rn").head().getLong(0) === 100L)
   }
@@ -128,7 +130,7 @@ class GraftProcedureSpec extends AnyFunSuite {
 
     // zero-copy: the shared parquet files are the SAME inode (hard link)
     val srcSeg = MatDb.open(spark, root.resolve("cl_src").toString).committedSegments.head
-    val segDir = graft.core.Storage.segmentPath(root.resolve("cl_src"), srcSeg, tmp = false)
+    val segDir = graft.core.Storage.segmentPath(root.resolve("cl_src"), srcSeg)
     val aFile = Files.walk(segDir).filter(p =>
       p.getFileName.toString.endsWith(".parquet")).findFirst().get()
     assert(Files.getAttribute(aFile, "unix:nlink").asInstanceOf[Integer] >= 2,

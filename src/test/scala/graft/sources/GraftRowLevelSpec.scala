@@ -333,7 +333,7 @@ class GraftRowLevelSpec extends AnyFunSuite {
     spark.sql("UPDATE grl.meta SET v = 1 WHERE k < 10")               // txn 2: chunk 0
     spark.sql("TRUNCATE TABLE grl.meta")                              // txn 3: replace
     val dir = root.resolve("meta")
-    val all = graft.core.Storage.ManifestProtocol.commitsAfter(dir, 0L)
+    val all = graft.core.Protocol.commitsAfter(dir, 0L)
       .getOrElse(fail("round-12 manifests must support the metadata conflict path"))
     assert(all.exists(c => c.isReplace && c.chunks.exists(_.isEmpty)),
       s"the truncate must be recorded as an empty replace, got $all")
@@ -343,7 +343,7 @@ class GraftRowLevelSpec extends AnyFunSuite {
         c.chunks.exists(_ == Set("_ck_k=0", "_ck_k=1"))),
       s"the insert must record txn 1 touching chunks 0 and 1, got $all")
     // horizon filtering: only commits above the horizon are returned
-    val recent = graft.core.Storage.ManifestProtocol.commitsAfter(dir, 2L)
+    val recent = graft.core.Protocol.commitsAfter(dir, 2L)
       .getOrElse(fail("metadata path expected"))
     assert(recent.forall(_.prodTxn > 2L) && recent.exists(_.isReplace))
     assert(!recent.exists(_.newTxns.contains(1L)))
@@ -404,10 +404,10 @@ class GraftRowLevelSpec extends AnyFunSuite {
     // txn 2 writes 5000 keys — over KeyDigestCap, so the digest on disk
     // must be a BLOOM, not exact (and not absent, the old degradation)
     spark.sql("UPDATE grl.serbloom SET v = 7 WHERE k < 5000")
-    val proto = graft.core.Storage.ManifestProtocol
+    val proto = graft.core.Protocol
     val txn2Segs = proto.listCommitted(dir).filter(_.txnId == 2L)
     assert(txn2Segs.nonEmpty)
-    val digest = graft.core.Storage.readKeyDigest(proto.readPath(dir, txn2Segs.head))
+    val digest = graft.core.Storage.readKeyDigest(graft.core.Storage.segmentPath(dir, txn2Segs.head))
     assert(digest.exists(_.isInstanceOf[graft.core.Storage.BloomKeys]),
       s"a 5000-key delta must record a bloom digest, got $digest")
 
@@ -462,7 +462,7 @@ class GraftRowLevelSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("serializable"))
     // and the metadata path recorded the commits' chunks
-    val meta = graft.core.Storage.ManifestProtocol.commitsAfter(dir, 1L)
+    val meta = graft.core.Protocol.commitsAfter(dir, 1L)
       .getOrElse(fail("metadata conflict path expected over objectsim"))
     assert(meta.exists(c => c.newTxns == Seq(2L) && c.chunks.exists(_ == Set("_ck_k=0"))))
     spark.sql("DELETE FROM grl.oser WHERE k = 3") // fresh snapshot: commits
