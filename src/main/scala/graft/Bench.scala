@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the whole battery against SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":…,"queries":{…}}. A small untimed warm-up
   * (scan + shuffle + codegen) runs first so JVM/codegen startup doesn't
@@ -25,40 +23,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // let AQE re-partition CACHED plans too (off by default): the
-      // maintenance folds persist O(batch)-row frames whose shuffles
-      // otherwise always run at the full spark.sql.shuffle.partitions —
-      // with this on, partition counts follow DATA SIZE at every scale
-      // (guide §2.2's size-the-partitions rule, extended to cached frames;
-      // measured −1.0 s on q153/q141/q117 each at sf0.1)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // prefer hash joins when a side fits per-partition (guide §3.1: no
-      // sort, spill-safe via AQE), and let AQE demote SMJ→SHJ at runtime;
-      // both are size-conditioned, so they scale with the data, not the
-      // host
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // iteration aid: SPARK_GRAFT_BENCH_CONF="k=v;k=v" applies session confs
-    // before the battery — for measuring a conf's effect (e.g. the
-    // storage-partitioned-join flag) without editing the harness
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
+    val spark = GraftSession()
     // warm-up: touch the scan path, a shuffle, and codegen once, untimed
     spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().collect()
@@ -108,49 +74,17 @@ object Bench {
         .toAbsolutePath
       System.err.println(s"[bench] persisting per-query map under $dir")
       java.nio.file.Files.createDirectories(dir)
-      // FOLD into an existing artifact, never replace it: the artifact's
-      // committed minima span many recorded passes, and a single fresh run
-      // overwriting them has twice masqueraded as a phantom regression
-      // (round 13's driver rerun, and again this round). Queries that left
-      // the battery drop; new queries enter with this run's samples.
-      val target = dir.resolve(s"bench_$sfName.json")
-      val prior: Seq[Map[String, Double]] =
-        if (!java.nio.file.Files.exists(target)) Nil
-        else try {
-          val txt = java.nio.file.Files.readString(target)
-          // minimal parse of the {"summary":…,"passes":[{…},…]} shape this
-          // main writes: pull each pass object's "name":value pairs
-          val passBlock = txt.substring(txt.indexOf("\"passes\":") + 9)
-          val objRe = java.util.regex.Pattern.compile("\\{([^{}]*)\\}")
-          // tolerate whitespace around the colon: hand-merged artifacts
-          // (python json.dump) write "key": value
-          val kvRe = java.util.regex.Pattern.compile("\"([^\"]+)\"\\s*:\\s*([-0-9.eE]+)")
-          val m = objRe.matcher(passBlock)
-          val out = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
-          while (m.find()) {
-            val kv = kvRe.matcher(m.group(1))
-            val p = scala.collection.mutable.Map.empty[String, Double]
-            while (kv.find()) p(kv.group(1)) = kv.group(2).toDouble
-            if (p.nonEmpty) out += p.toMap
-          }
-          out.toSeq
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] could not fold prior artifact ($e); replacing")
-          Nil
-        }
-      val allPasses = (prior.map(_.filter(kv => names.contains(kv._1)))
-        .filter(_.nonEmpty) ++ samples).distinct
-      val folded = names.map(n =>
-        n -> allPasses.flatMap(_.get(n)).min)
-      val foldedQs = folded.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val foldedLine = s"""{"metric":"total","value":${folded.map(_._2).sum},""" +
-        s""""unit":"sec","queries":$foldedQs,"sf":"$sfDir"}"""
-      val passesJson = allPasses.map(p =>
-        p.keys.toSeq.sorted.map(n => "\"" + n + "\":" + p(n)).mkString("{", ",", "}"))
+      // this run's passes only: minima folded in from earlier artifacts
+      // came from other trees, so the result described no single tree
+      val tree = scala.util.Try(scala.sys.process.Process(
+        Seq("git", "describe", "--always", "--dirty"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim)
+        .filter(_.nonEmpty).getOrElse("unknown")
+      val passesJson = samples.map(p =>
+        names.map(n => "\"" + n + "\":" + p(n)).mkString("{", ",", "}"))
         .mkString("[", ",", "]")
-      java.nio.file.Files.writeString(target,
-        s"""{"summary":$foldedLine,"passes":$passesJson}""" + "\n")
+      java.nio.file.Files.writeString(dir.resolve(s"bench_$sfName.json"),
+        s"""{"summary":$line,"passes":$passesJson,"tree":"$tree"}""" + "\n")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist bench json: $e")
     }

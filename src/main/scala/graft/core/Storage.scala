@@ -772,7 +772,7 @@ object Storage {
     *   - `graft.bloom.ndv.<col> = n` sizes the bloom for n distinct values
     *     PER ROW GROUP (~1% fpp) — not per table: oversizing by the table
     *     NDV makes every row-group bloom megabytes and the bloom READS
-    *     dominate the lookup (measured in BloomProbe). Without the hint
+    *     dominate the lookup (bench/bloom_probe.json). Without the hint
     *     parquet's adaptive sizing picks the smallest candidate that holds
     *     each row group's observed NDV — the right default.
     */

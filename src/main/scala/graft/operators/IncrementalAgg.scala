@@ -206,10 +206,9 @@ object IncrementalAgg {
     * applied (== toTxn), or the current watermark when skipped. */
   def maintainAbsoluteMulti(base: MatDb, viewDb: MatDb, fromTxn: Long, toTxn: Long,
       groupCol: String,
-      precomputedDelta: Option[org.apache.spark.sql.DataFrame] = None,
-      forceAbsolute: Boolean = false): Long =
+      precomputedDelta: Option[org.apache.spark.sql.DataFrame] = None): Long =
     maintainAbsoluteMultiKeys(base, viewDb, fromTxn, toTxn, Seq(groupCol),
-      precomputedDelta, forceAbsolute)
+      precomputedDelta)
 
   /** The parsed aggregate spec of a maintained view — shared by the
     * incremental fold, the restricted absolute recompute, and the full
@@ -341,8 +340,7 @@ object IncrementalAgg {
     * contract. */
   def maintainAbsoluteMultiKeys(base: MatDb, viewDb: MatDb, fromTxn: Long, toTxn: Long,
       groupCols: Seq[String],
-      precomputedDelta: Option[org.apache.spark.sql.DataFrame] = None,
-      forceAbsolute: Boolean = false): Long = {
+      precomputedDelta: Option[org.apache.spark.sql.DataFrame] = None): Long = {
     require(groupCols.nonEmpty && viewDb.schema.dimNames == groupCols,
       s"view must be keyed by (${groupCols.mkString(", ")}); " +
         s"got dims=${viewDb.schema.dimNames}")
@@ -402,9 +400,9 @@ object IncrementalAgg {
       val hasMinMax = viewDb.schema.valueNames
         .exists(n => n.startsWith("min_") || n.startsWith("max_"))
       // self-maintenance needs `cnt` to detect emptied groups when there is
-      // no min/max recompute leg to reveal them; forceAbsolute is the
-      // measurement/escape hatch (ViewMaintProbe compares the two shapes)
-      val aligned = !forceAbsolute && watermark == fromTxn &&
+      // no min/max recompute leg to reveal them (bench/view_maint_probe.json
+      // records this shape against the absolute recompute)
+      val aligned = watermark == fromTxn &&
         (hasMinMax || viewDb.schema.valueNames.contains("cnt"))
       val txn = viewDb.newPinnedTransaction(toTxn)
       // the isNullGuard catch must cover EVERYTHING that can evaluate the

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.core._
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end demo of the graft core table format: create, insert, flush,
   * commit, reopen, upsert, time travel, rollback, chunk-pruned query.
@@ -9,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/graft-demo-db")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val schema = MatSchema(
       Seq(Dimension("time", 50), Dimension("sensor_id", 10)),

@@ -6,25 +6,14 @@ import org.apache.spark.sql.SparkSession
 /** Dump every battery query's formatted physical plan to a directory —
   * diffable round-over-round so plan regressions (lost broadcast, lost
   * pushdown, aggregate fallbacks) are visible in review, not just in
-  * timings. Usage: runMain graft.tools.ExplainDump [sfDir] [outDir] */
+  * timings. Usage: runMain graft.tools.ExplainDump [sfDir] [outDir].
+  * The committed `plans/` were dumped at SPARK_GRAFT_CPUS=8; set it to
+  * diff against them (partition counts follow the core count). */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption.getOrElse("plans")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // mirror the Bench session's planner-visible confs (round 16): the
-      // committed plans must show the join strategies and cached-plan
-      // partitioning the bench actually times
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     Files.createDirectories(Paths.get(outDir))
     val errors = SparkEntryPlans.dump(spark, sfDir, outDir)
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Dimension, MatDb, MatSchema, ValueCol}
 import graft.functions.Fingerprint64
@@ -14,11 +13,7 @@ import graft.streaming.Streams
   * Usage: runMain graft.tools.PipelineDemo */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     // 1. sensor-log ingest: TSV + gz + glob -> parse -> fixed point

@@ -47,11 +47,7 @@ object PipelineScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     graft.functions.TextOps.register(spark)
 
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Dimension, MatDb, MatSchema, ValueCol}
 
@@ -14,11 +13,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val millions = args.headOption.map(_.toInt).getOrElse(5)
     val n = millions * 1000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     val path = Files.createTempDirectory("graft-scale").toString
     // time chunk = 1 day of millis, 1000 sensors chunked by 100

@@ -83,14 +83,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     scaledTables(spark, src, factor).foreach { case (t, df) =>
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
       println(s"[scaleup] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")

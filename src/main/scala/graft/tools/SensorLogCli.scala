@@ -78,11 +78,7 @@ object SensorLogCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     args.toList match {
       case "load" :: dbDir :: glob :: Nil =>
         val t0 = System.nanoTime()

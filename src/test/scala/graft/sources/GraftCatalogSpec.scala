@@ -696,6 +696,67 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE gcat.trunc")
   }
 
+  /** Input bytes every task read while `body` ran. The listener bus is
+    * FIFO, so a marker job run after `body` (and before it) is delivered
+    * only once every earlier task-end event has been counted. */
+  private def bytesReadBy(body: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val markersDone = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val markerJobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) bytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("graft.spec.marker")))
+          .foreach(markerJobs.put(j.jobId, _))
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(markerJobs.get(j.jobId)).foreach(markersDone.put)
+    }
+    def drain(): Long = {
+      val marker = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty("graft.spec.marker", marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(markersDone.poll(60, java.util.concurrent.TimeUnit.SECONDS) === marker,
+        "the listener bus did not drain")
+      bytes.get()
+    }
+    sc.addSparkListener(listener)
+    try { val before = drain(); body; drain() - before }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("INSERT OVERWRITE and TRUNCATE read none of the replaced table's bytes") {
+    root
+    def build(name: String): Long = {
+      spark.sql(s"DROP TABLE IF EXISTS gcat.$name")
+      spark.sql(s"CREATE TABLE gcat.$name (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES('graft.dims' = 'k:1000')")
+      spark.sql(s"INSERT INTO gcat.$name SELECT id, id * 3 FROM range(0, 20000)")
+      MatDb.open(spark, root.resolve(name).toString).visibleBytes()
+    }
+    val tableBytes = build("ovwbytes")
+    // control: a statement that scans the old table fails the gate below
+    val fullRead = bytesReadBy(spark.sql("SELECT * FROM gcat.ovwbytes").collect())
+    assert(fullRead >= tableBytes / 10,
+      s"the listener must see a full read: $fullRead of $tableBytes")
+    val overwriteRead = bytesReadBy(spark.sql(
+      "INSERT OVERWRITE gcat.ovwbytes SELECT id, id * 7 FROM range(0, 100)"))
+    assert(overwriteRead < tableBytes / 10,
+      s"INSERT OVERWRITE must not scan the old table: read $overwriteRead of $tableBytes")
+    assert(spark.sql("SELECT count(*) FROM gcat.ovwbytes").head().getLong(0) === 100L)
+    assert(spark.sql("SELECT count(*) FROM gcat.ovwbytes VERSION AS OF 1")
+      .head().getLong(0) === 20000L)
+    val truncTableBytes = build("truncbytes")
+    val truncateRead = bytesReadBy(spark.sql("TRUNCATE TABLE gcat.truncbytes"))
+    assert(truncateRead < truncTableBytes / 100,
+      s"TRUNCATE must read ~nothing: read $truncateRead of $truncTableBytes")
+    spark.sql("DROP TABLE gcat.ovwbytes")
+    spark.sql("DROP TABLE gcat.truncbytes")
+  }
+
   test("ANALYZEd dim stats surface as columnStats; CBO join reorder uses them") {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     root
