@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.VectorOps
 
 /** IVF (inverted-file) approximate nearest neighbor over an embedding
   * column — the trained upgrade of q53's deterministic pseudo-centroids
@@ -12,12 +16,18 @@ import org.apache.spark.sql.functions._
   * centroid's `bucket`. Search probes only the query's `nprobe` nearest
   * buckets: cost ≈ nprobe/k of brute force, recall traded per probe.
   *
-  * Scale notes: training touches the driver only for the k×dim centroid
-  * matrix (k=8..4096 × 64 doubles — bytes, not data; the per-iteration means
-  * are a distributed groupBy). Assignment and search are narrow projections +
-  * a bucket equi-join with the (tiny) probe side broadcast — no shuffle of
-  * the corpus beyond the bucket join, and at 100 TB the corpus side would be
-  * written bucket-partitioned so probes prune partitions.
+  * Scale notes: training reads its input once, keeping a bounded sample
+  * of at most [[SamplePerCentroid]]·k rows (one job), and runs Lloyd's
+  * iterations on the driver, so their cost is fixed by k, not by the
+  * corpus; building the index reads the corpus once more, to assign and
+  * write it.
+  * Assignment and search are narrow projections; search matches the
+  * probed buckets' rows with the (tiny) probe side — broadcast, or for a
+  * persisted index a driver-computed literal bucket map — with no shuffle
+  * of the corpus beyond the pending-delta resolve ([[readLayout]]) and the
+  * per-query top-k, and the corpus is written bucket-partitioned so probes
+  * prune partitions. Index layouts are read with the schema of one data
+  * file's footer, never a schema-inference job.
   *
   * Measured on the driver's synthetic embeddings (deterministic seed, see
   * IvfSpec): the vectors are near-uniform on the sphere — essentially
@@ -48,49 +58,64 @@ object IvfIndex extends org.apache.spark.internal.Logging {
   def normalized(vec: Column): Column =
     graft.functions.VectorOps.normCol(vec.cast("array<double>"))
 
-  /** Spherical k-means (Lloyd's): deterministic init = first k vectors by
-    * `idCol`; each iteration assigns to the nearest centroid and recenters
-    * on the normalized per-bucket mean. Empty buckets keep their centroid.
-    * Only k×dim aggregated doubles ever reach the driver per iteration. */
+  /** Training rows per centroid, at most: [[train]] and [[PqIndex.train]]
+    * fit a sample of `SamplePerCentroid·k` rows (the usual IVF bound,
+    * FAISS's `max_points_per_centroid`). */
+  val SamplePerCentroid = 256
+
+  /** Spherical k-means (Lloyd's) on ONE bounded sample ([[trainingSample]]
+    * of the normalized vectors, one job), iterated on the driver by
+    * [[lloyd]]: deterministic init = first k sampled vectors by `idCol`;
+    * each iteration assigns to the nearest centroid and recenters on the
+    * normalized per-bucket mean. Empty buckets keep their centroid. Driver
+    * cost: O(iters·n·k·dim) compute and n·dim·8 bytes of memory, for
+    * n ≤ 256·k sampled rows; the sample is dropped on return. */
   def train(emb: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int)
       : Array[Array[Double]] = {
     reg(emb)
-    // train() is eager (each Lloyd iteration is a collect of k×dim means),
-    // so the normalized sample would otherwise be recomputed from the scan
-    // for EVERY job (init + one per iteration): cache it for the duration
-    // of training and release before returning. The sample is a fraction of
-    // the corpus by contract (callers pass a sample); MEMORY_AND_DISK
-    // spills rather than OOMs if a caller passes more.
-    val v = emb.select(col(idCol), normalized(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // tiny training samples skip codegen+AQE for the per-iteration jobs
-    // (graft.core.FastPlan): each Lloyd job is driver-latency-bound at
-    // this size, and the centroid literals change per iteration
-    try graft.core.FastPlan.scoped(emb.sparkSession,
-      graft.core.FastPlan.isSmall(emb)) {
-      val initRows = v.orderBy(col(idCol)).limit(k).collect()
-      require(initRows.nonEmpty, "IvfIndex.train: empty corpus")
-      val dim = initRows.head.getSeq[Double](1).length
-      var centroids: Seq[Seq[Double]] = initRows.map(_.getSeq[Double](1)).toSeq
-      // corpora smaller than k get one bucket per vector, not a crash
-      val kEff = centroids.size
-      for (_ <- 0 until iters) {
-        val means = assign(v, "v", centroids)
-          .select(col("bucket"), posexplode(col("v")).as(Seq("i", "x")))
-          .groupBy(col("bucket"), col("i")).agg(avg(col("x")).as("m"))
-          .collect() // k*dim rows — the centroid matrix, driver-sized by design
-        val byBucket = means.groupBy(_.getAs[Int]("bucket"))
-        centroids = (0 until kEff).map { b =>
-          byBucket.get(b).fold(centroids(b)) { rows =>
-            val arr = new Array[Double](dim)
-            rows.foreach(r => arr(r.getAs[Int]("i")) = r.getAs[Double]("m"))
-            val n = math.sqrt(arr.map(x => x * x).sum)
-            (if (n > 0) arr.map(_ / n) else centroids(b).toArray).toSeq
-          }
-        }
-      }
-      centroids.map(_.toArray).toArray
-    } finally v.unpersist(blocking = false)
+    val points = trainingSample(emb, idCol, normalized(col(vecCol)), k)
+    require(points.nonEmpty, "IvfIndex.train: empty corpus")
+    // corpora smaller than k get one bucket per vector, not a crash
+    lloyd(points, points.take(k), iters, (mean, old) => {
+      val n = math.sqrt(mean.map(x => x * x).sum)
+      if (n > 0) mean.map(_ / n) else old
+    })
+  }
+
+  /** ONE deterministic bounded training sample, collected in one job: the
+    * `SamplePerCentroid·k` rows smallest by (xxhash64(id), id) — a
+    * uniform subset no partitioning changes — or the whole input when it
+    * is smaller. The `vec` values come back in `idCol` order, the order
+    * the initialization and the means read them in. */
+  private[operators] def trainingSample(emb: DataFrame, idCol: String,
+      vec: Column, k: Int): Array[Array[Double]] =
+    emb.select(col(idCol), vec)
+      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(SamplePerCentroid * k)
+      .orderBy(col(idCol)) // over the single-partition top-k: same job
+      .collect().map(_.getSeq[Double](1).toArray)
+
+  /** Lloyd's k-means on the driver, from `init` — the kernel [[train]] and
+    * [[PqIndex.train]] share. Each iteration assigns every point to its
+    * nearest centroid by the codegen kernel's own left fold
+    * (`VectorOps.sqDist`; ties → lowest index, as `array_position(d,
+    * array_min(d))` picks), then replaces each centroid by
+    * `recenter(mean of its points, old centroid)`; a centroid no point
+    * chose keeps its place. Means sum in point order, from 0.0, as `avg`. */
+  private[operators] def lloyd(points: Array[Array[Double]],
+      init: Array[Array[Double]], iters: Int,
+      recenter: (Array[Double], Array[Double]) => Array[Double])
+      : Array[Array[Double]] = {
+    val ps = points.map(UnsafeArrayData.fromPrimitiveArray)
+    (0 until iters).foldLeft(init) { (cs, _) =>
+      val cd = cs.map(UnsafeArrayData.fromPrimitiveArray)
+      val members = points.indices.groupBy(i =>
+        cd.indices.minBy(c => VectorOps.sqDist(ps(i), cd(c)))(Ordering.Double.TotalOrdering))
+      cs.indices.map(c => members.get(c).fold(cs(c)) { is =>
+        val sum = new Array[Double](cs(c).length)
+        is.foreach(i => points(i).indices.foreach(j => sum(j) += points(i)(j)))
+        recenter(sum.map(_ / is.size), cs(c))
+      }).toArray
+    }
   }
 
   /** Per-centroid squared distances of `vecCol` (already normalized).
@@ -135,15 +160,8 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * hoped for from a filter. */
   def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], path: String): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     reg(corpus)
-    // the centroid table is driver-sized by construction (k×dim doubles):
-    // always skip codegen for its write plan
-    graft.core.FastPlan.scoped(spark, small = true)(
-      centroids.zipWithIndex.map { case (c, b) => (b, c) }
-        .toDF("bucket", "weights").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/centroids"))
+    writeCentroids(corpus.sparkSession, centroids, s"$path/centroids")
     // drift BASELINE: the mean assigned-centroid distance of the corpus
     // the index was built for, OBSERVED during the write action itself
     // (zero extra jobs — the metric rides the pass that lays the corpus
@@ -163,13 +181,28 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     IndexStats.record(path, phase = "train", obs)
   }
 
-  /** The persisted centroid matrix, bucket-ordered (k×dim doubles). */
-  def readCentroids(spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
+  /** Write the k-row centroid table (bucket, weights) to `dir`: the
+    * `centroids/` of [[writeIndex]] and [[PqIndex.writeIvfPq]], and the
+    * battery's centroid fixtures. */
+  def writeCentroids(spark: SparkSession, centroids: Seq[Seq[Double]], dir: String): Unit = {
+    import spark.implicits._
+    // driver-sized by construction (k×dim doubles): always skip codegen
+    graft.core.FastPlan.scoped(spark, small = true)(
+      centroids.zipWithIndex.map { case (c, b) => (b, c) }
+        .toDF("bucket", "weights").coalesce(1).write.mode("overwrite").parquet(dir))
+  }
+
+  private val CentroidSchema = StructType(Seq(
+    StructField("bucket", IntegerType), StructField("weights", ArrayType(DoubleType))))
+
+  /** The persisted centroid matrix, bucket-ordered (k×dim doubles): one
+    * collect of the k rows under their fixed schema, sorted on the driver. */
+  def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
     // k rows; the fixture-path literal changes per index, so this tiny
     // plan would otherwise recompile its codegen per call
     graft.core.FastPlan.scoped(spark, small = true)(
-      spark.read.parquet(s"$path/centroids").orderBy(col("bucket"))
-        .collect().map(_.getSeq[Double](1).toArray))
+      spark.read.schema(CentroidSchema).parquet(s"$path/centroids").collect())
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** Fingerprint of the persisted centroid layout — ONE driver-side stat
     * walk of the (two-file) `centroids/` directory. A rebuild
@@ -300,11 +333,10 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     } yield last / base
   }
 
-  /** Advisory threshold for [[driftAdvisory]] (`graft.index.drift.warn`
-    * system property, default 4× — comfortably above the ~1 in-distribution
-    * noise band DriftProbe measured, well below the ~71× of a hard shift). */
-  def driftWarnThreshold: Double =
-    sys.props.get("graft.index.drift.warn").map(_.toDouble).getOrElse(4.0)
+  /** Advisory threshold for [[driftAdvisory]]: 4×, comfortably above the
+    * ~1 in-distribution noise band DriftProbe measured, well below the ~71×
+    * of a hard shift. */
+  val driftWarnThreshold: Double = 4.0
 
   /** The RE-TRAIN ADVISORY: Some(message) when the latest drift ratio
     * crossed [[driftWarnThreshold]] — incoming vectors no longer match the
@@ -322,31 +354,33 @@ object IvfIndex extends org.apache.spark.internal.Logging {
   }
 
   /** Re-train + rebuild — the drift advisory's remedy: fresh spherical
-    * k-means centroids over the index's CURRENT corpus (same k unless
-    * overridden), then a full [[writeIndex]] rebuild under the new
-    * geometry. The corpus is STAGED to a temp sibling first because the
-    * rebuild overwrites the very layout it reads (one extra corpus pass —
-    * a rebuild is O(corpus) regardless; no driver materialization). The
-    * stats log resets with a fresh baseline (writeIndex), so the drift
-    * ratio returns to ~1; the `maint_txn` marker is untouched — the
-    * rebuild re-buckets exactly the rows the index already held. */
-  def retrain(spark: org.apache.spark.sql.SparkSession, path: String,
-      iters: Int = 5, kOverride: Option[Int] = None): Unit = {
-    val corpusPath = s"$path/corpus"
-    val k = kOverride.getOrElse(readCentroids(spark, path).length)
+    * k-means centroids (same k) over the index's CURRENT corpus, then a
+    * full [[writeIndex]] rebuild under the new geometry; returns the new
+    * centroid matrix. The corpus is STAGED to a temp sibling first because
+    * the rebuild overwrites the very layout it reads (one extra corpus
+    * pass — a rebuild is O(corpus) regardless); [[train]] keeps only its
+    * bounded sample on the driver. The stats log resets with a fresh
+    * baseline (writeIndex), so the drift ratio returns to ~1; the
+    * `maint_txn` marker is untouched — the rebuild re-buckets exactly the
+    * rows the index already held. */
+  def retrain(spark: SparkSession, path: String, iters: Int = 5): Array[Array[Double]] = {
+    val corpus = java.nio.file.Paths.get(path, "corpus")
+    val k = readCentroids(spark, path).length
     val tmp = java.nio.file.Paths.get(s"$path/corpus.retrain.tmp")
     graft.core.Storage.deleteRecursively(tmp)
-    val idCol = spark.read.parquet(corpusPath).columns
-      .find(c => c != "v" && c != "bucket").getOrElse(
-        throw new IllegalStateException(s"no id column in index corpus at $corpusPath"))
+    val idCol = firstParquet(corpus).toSeq
+      .flatMap(GraftInternals.parquetSchema(spark, _).fieldNames)
+      .find(_ != "v").getOrElse(
+        throw new IllegalStateException(s"no id column in index corpus at $corpus"))
     // resolved through pending maintenance generations — the retrain must
     // see the corpus as maintained, not the stale base
-    readLayout(spark, corpusPath, idCol)
+    readLayout(spark, corpus.toString, idCol)
       .select(col(idCol), col("v")).write.parquet(tmp.toString)
     try {
-      val staged = spark.read.parquet(tmp.toString)
-      val centroids = train(staged, idCol, "v", k, iters).map(_.toSeq).toSeq
-      writeIndex(staged, idCol, "v", centroids, path)
+      val staged = readParquet(spark, tmp, bucketed = false)
+      val centroids = train(staged, idCol, "v", k, iters)
+      writeIndex(staged, idCol, "v", centroids.map(_.toSeq).toSeq, path)
+      centroids
     } finally graft.core.Storage.deleteRecursively(tmp)
   }
 
@@ -406,22 +440,21 @@ object IvfIndex extends org.apache.spark.internal.Logging {
       idCol: String, buckets: Option[Seq[Int]] = None): DataFrame = {
     def prune(df: DataFrame): DataFrame =
       buckets.fold(df)(bs => df.where(col("bucket").isin(bs: _*)))
+    val root = java.nio.file.Paths.get(layoutPath)
     val gens = deltaGens(layoutPath)
-    if (gens.isEmpty) prune(spark.read.parquet(layoutPath))
+    if (gens.isEmpty) prune(readParquet(spark, root))
     else {
       // one read per generation root (each is its own bucket-partitioned
       // tree — a multi-root read trips partition-structure inference);
       // the union collapses into one scan stage and the bucket filter
       // pushes into every leg
-      val deltas = prune(gens.map(g => spark.read.parquet(g.toString))
-        .reduce(_ unionByName _))
+      val deltas = prune(gens.map(readParquet(spark, _)).reduce(_ unionByName _))
       // a parquet-less base (an interrupted compaction removed every
       // emptied live bucket before clearing the deltas) contributes an
-      // empty frame with the delta-derived schema instead of crashing
-      // parquet schema inference on the bare root
+      // empty frame with the delta-derived schema
       val base =
-        if (hasParquet(java.nio.file.Paths.get(layoutPath)))
-          prune(spark.read.parquet(layoutPath))
+        if (hasParquet(root))
+          prune(readParquet(spark, root))
             .withColumn("_gen", lit(0L)).withColumn("_del", lit(false))
         else deltas.limit(0)
       val all = base.unionByName(deltas)
@@ -449,13 +482,14 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     def restrict(df: DataFrame): DataFrame =
       df.join(broadcast(touched), Seq(idCol), "left_semi")
     // a parquet-less base (interrupted compaction) holds no live ids
-    val base = (if (hasParquet(java.nio.file.Paths.get(layoutPath)))
-        restrict(spark.read.parquet(layoutPath).select(col(idCol), col("bucket")))
+    val root = java.nio.file.Paths.get(layoutPath)
+    val base = (if (hasParquet(root))
+        restrict(readParquet(spark, root).select(col(idCol), col("bucket")))
       else touched.select(col(idCol), lit(0).cast("int").as("bucket")).limit(0))
       .select(col(idCol), col("bucket"), lit(0L).as("_gen"), lit(false).as("_del"))
     val gens = deltaGens(layoutPath)
     val all = if (gens.isEmpty) base else base.unionByName(
-      restrict(gens.map(g => spark.read.parquet(g.toString)).reduce(_ unionByName _)
+      restrict(gens.map(readParquet(spark, _)).reduce(_ unionByName _)
         .select(col(idCol), col("bucket"), col("_gen"), col("_del"))))
     all.groupBy(col("bucket"), col(idCol))
       .agg(max_by(col("_del"), col("_gen")).as("_del"))
@@ -463,15 +497,32 @@ object IvfIndex extends org.apache.spark.internal.Logging {
       .select(col(idCol), col("bucket"))
   }
 
-  /** Any `.parquet` data file under `p`? (schema inference fails on a
-    * data-file-less root, so every base read checks this first). */
-  private def hasParquet(p: java.nio.file.Path): Boolean =
-    java.nio.file.Files.isDirectory(p) && {
+  /** The first `.parquet` data file under `p`, if any — one walk, shared
+    * by the data-file check and the footer schema read. */
+  private def firstParquet(p: java.nio.file.Path): Option[java.nio.file.Path] =
+    if (!java.nio.file.Files.isDirectory(p)) None
+    else {
       val s = java.nio.file.Files.walk(p)
       try {
         import scala.jdk.CollectionConverters._
-        s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
+        s.iterator().asScala.find(_.toString.endsWith(".parquet"))
       } finally s.close()
+    }
+
+  /** Any `.parquet` data file under `p`? (a data-file-less root has no
+    * schema to read, so every base read checks this first). */
+  private def hasParquet(p: java.nio.file.Path): Boolean = firstParquet(p).nonEmpty
+
+  /** `spark.read.parquet(dir)` under the schema of the first data file's
+    * footer, plus the `bucket` partition column of a bucket layout — the
+    * schema inference would find, without its job. A data-file-less `dir`
+    * falls back to inference, which reports it. */
+  private def readParquet(spark: SparkSession, dir: java.nio.file.Path,
+      bucketed: Boolean = true): DataFrame =
+    firstParquet(dir).fold(spark.read.parquet(dir.toString)) { f =>
+      val schema = GraftInternals.parquetSchema(spark, f)
+      spark.read.schema(if (bucketed) schema.add("bucket", IntegerType) else schema)
+        .parquet(dir.toString)
     }
 
   /** No data file anywhere under the layout OR its pending generations —
@@ -481,16 +532,14 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     !hasParquet(java.nio.file.Paths.get(layoutPath)) &&
       deltaGens(layoutPath).forall(p => !hasParquet(p))
 
-  /** The (qid, id, score, rn) empty frame a candidate-less search returns
-    * (id typed like the query's id column). */
-  private[operators] def emptySearchResult(
-      spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
-      idCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** The (qid, id, `scoreCol`, rn) empty frame a candidate-less search
+    * returns (id typed like the query's id column). */
+  private[operators] def emptySearchResult(spark: SparkSession, queries: DataFrame,
+      idCol: String, scoreCol: String = "score"): DataFrame = {
     val idType = queries.schema(idCol).dataType
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("qid", idType), StructField(idCol, idType),
-        StructField("score", DoubleType), StructField("rn", LongType))))
+        StructField(scoreCol, DoubleType), StructField("rn", LongType))))
   }
 
   /** Pending generations allowed before [[compactLayout]] auto-triggers. */
@@ -577,17 +626,8 @@ object IvfIndex extends org.apache.spark.internal.Logging {
   private[operators] def upsertBucketLayout(
       spark: org.apache.spark.sql.SparkSession, layoutPath: String,
       idCol: String, newRowsIn: DataFrame, touchedIn: DataFrame): Unit = {
-    val empty = {
-      val p = java.nio.file.Paths.get(layoutPath)
-      !java.nio.file.Files.isDirectory(p) || {
-        val s = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          !s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
-        } finally s.close()
-      }
-    }
-    if (empty) {
+    val baseFile = firstParquet(java.nio.file.Paths.get(layoutPath))
+    if (baseFile.isEmpty) {
       newRowsIn.write.mode("overwrite").partitionBy("bucket").parquet(layoutPath)
       graft.core.Storage.deleteRecursively(deltasDir(layoutPath))
       return
@@ -606,8 +646,8 @@ object IvfIndex extends org.apache.spark.internal.Logging {
         case _           => 1L // unreachable: deltaGens filters by the regex
       })
       .getOrElse(1L)
-    val schema = spark.read.parquet(layoutPath).schema
-    val dataFields = schema.fields.filterNot(f => f.name == idCol || f.name == "bucket")
+    val dataFields = GraftInternals.parquetSchema(spark, baseFile.get).fields
+      .filterNot(_.name == idCol)
     // tombstones: every bucket a touched id currently LIVES in, minus the
     // bucket its new version lands in (a pure delete has no new version);
     // payload columns are null — the id + bucket + generation is the fact
@@ -630,17 +670,10 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     generation.write.partitionBy("bucket").parquet(tmpDir.toString)
     // an ALL-SILENT fold (empty upserts and deletes — e.g. a micro-batch
     // whose delta netted to same-value rewrites) produces a data-file-less
-    // directory; committing it would poison every later read (parquet
-    // schema inference fails on an empty root). Checked driver-side on the
+    // directory; committing it would poison every later read (an empty
+    // root has no footer to read a schema from). Checked driver-side on the
     // just-written tree — no extra Spark job.
-    val hasData = {
-      val s = java.nio.file.Files.walk(tmpDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
-      } finally s.close()
-    }
-    if (!hasData) graft.core.Storage.deleteRecursively(tmpDir)
+    if (!hasParquet(tmpDir)) graft.core.Storage.deleteRecursively(tmpDir)
     else {
       java.nio.file.Files.move(tmpDir, finalDir)
       if (deltaGens(layoutPath).size >= maxPendingGens)
@@ -649,19 +682,19 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Top-k cosine search against a [[writeIndex]] layout. The probed
-    * bucket ids are collected to the driver (≤ queries×nprobe ints — the
-    * query side is small by contract, it is broadcast below) and pushed
-    * into the corpus scan as a partition filter: only the probed
-    * `bucket=N/` directories are read (IvfSpec asserts the pruning). */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+  /** Top-k cosine search against a [[writeIndex]] layout. The queries are
+    * collected once and probed on the driver ([[driverProbes]] — the query
+    * side is small by contract); the probed bucket ids are pushed into the
+    * corpus scan as a partition filter: only the probed `bucket=N/`
+    * directories are read (IvfSpec asserts the pruning). */
+  def searchIndex(spark: SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, nprobe: Int, k: Int,
       knownCentroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.VectorOps.register(spark)
     // an EMPTY layout (bootstrap writeIndex, or a truncate-driven rebuild
     // before the first re-seed fold) has no candidates — and no data files
-    // to infer a schema from: answer the empty result instead of crashing
+    // to read a schema from: answer the empty result instead of crashing
     if (layoutIsEmpty(s"$path/corpus")) return emptySearchResult(spark, queries, idCol)
     // centroids are fixed index geometry ([[maintainIndex]] scaladoc): a
     // caller that just trained or already read them passes them in and
@@ -669,22 +702,48 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     // the two paths see identical values)
     val centroids = knownCentroids.getOrElse(
       readCentroids(spark, path).map(_.toSeq).toSeq)
-    val q = probes(
-      queries.select(col(idCol).as("qid"), normalized(col(vecCol)).as("qv")),
-      "qv", centroids, nprobe)
-    // queries are small by contract (they are broadcast below): the probe
-    // collect is a tiny plan — skip codegen for it
-    val probed = graft.core.FastPlan.scoped(spark, small = true)(
-      q.select(col("bucket")).distinct().collect()).map(_.getInt(0)).toSeq
+    val probes = driverProbes(queries, idCol, vecCol, centroids, nprobe)
+    if (probes.isEmpty) return emptySearchResult(spark, queries, idCol)
+    // the probe side is a literal map bucket -> [(qid, qv)], looked up per
+    // candidate: a broadcast join would spend one more job collecting its
+    // build side, even from a local relation
+    val idType = queries.schema(idCol).dataType
+    val byBucket = map(probes.groupBy(_.bucket).toSeq.flatMap { case (b, ps) =>
+      Seq(lit(b), array(ps.map(p =>
+        struct(lit(p.qid).cast(idType).as("qid"), typedlit(p.qv).as("qv"))): _*))
+    }: _*)
     // resolved read: partition-pruned to the probed buckets BEFORE the
     // (pending-deltas-only) newest-wins resolve — see readLayout
-    val cand = readLayout(spark, s"$path/corpus", idCol, Some(probed))
-    broadcast(q).join(cand, Seq("bucket"))
-      .where(col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol), dot(col("qv"), col("v")).as("score"))
+    readLayout(spark, s"$path/corpus", idCol, Some(probes.map(_.bucket).distinct))
+      .select(col(idCol), col("v"), explode(byBucket(col("bucket"))).as("q"))
+      .where(col(idCol) =!= col("q.qid"))
+      .select(col("q.qid").as("qid"), col(idCol), dot(col("q.qv"), col("v")).as("score"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("score").desc, col(idCol))).cast("long"))
       .where(col("rn") <= k)
+  }
+
+  /** One query's probe of one bucket: `qv` is the normalized query vector,
+    * `raw` the query vector as given, as doubles. */
+  private[operators] final case class Probe(qid: Any, qv: Seq[Double], raw: Seq[Double],
+      bucket: Int)
+
+  /** The queries' probes, computed on the driver from ONE collect of
+    * (id, vector): each query's `nprobe` nearest centroids, chosen as
+    * [[probes]] chooses them — by the codegen kernels' own folds, ties →
+    * lowest bucket. */
+  private[operators] def driverProbes(queries: DataFrame, idCol: String,
+      vecCol: String, centroids: Seq[Seq[Double]], nprobe: Int): Seq[Probe] = {
+    val cs = centroids.map(c => UnsafeArrayData.fromPrimitiveArray(c.toArray))
+    // a query without a vector probes nothing, as in [[probes]]
+    queries.select(col(idCol), col(vecCol).cast("array<double>")).collect()
+      .toSeq.filterNot(_.isNullAt(1)).flatMap { r =>
+        val raw = r.getSeq[Double](1)
+        val qn = VectorOps.normalize(UnsafeArrayData.fromPrimitiveArray(raw.toArray))
+        val d = cs.map(VectorOps.sqDist(qn, _))
+        d.indices.sortBy(d)(Ordering.Double.TotalOrdering).take(nprobe)
+          .map(Probe(r.get(0), qn.toDoubleArray().toSeq, raw, _))
+      }
   }
 
   /** Top-k cosine neighbors per query via bucket-probe join: `queries`

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Product quantization (PQ) for embedding columns — the compression side
   * of large-scale similarity search (Jégou et al., "Product Quantization
@@ -21,10 +24,9 @@ import org.apache.spark.sql.functions._
   * squared distance is the table-lookup sum over its stored codes — a
   * per-row fold over m ints, no vector math on the corpus at search time.
   *
-  * Scale shape: training aggregates all m subspaces in ONE distributed
-  * job per Lloyd iteration (explode to (id, sub, subvec), join the
-  * broadcast codebook on `sub`, rank-1 assignment, per-(sub,code,i) mean);
-  * only the m×k×subDim codebook ever reaches the driver. Encoding is a
+  * Scale shape: training collects ONE bounded sample (at most
+  * [[IvfIndex.SamplePerCentroid]]·k rows, one job) and runs each
+  * subspace's Lloyd iterations on the driver. Encoding is a
   * shuffle-free codegen projection. ADC search scans ONLY the codes column
   * (32× fewer bytes than raw vectors), broadcasts the queries, and never
   * shuffles the corpus — the one wide op is the per-query top-k window on
@@ -43,67 +45,23 @@ object PqIndex {
   private def sqDist(a: Column, b: Column): Column =
     graft.functions.VectorOps.sqDistCol(a, b)
 
-  /** (id, sub, v): each input vector exploded into its m subvectors, cast
-    * to double (float32→double is exact, so both engines see identical
-    * operands). */
-  private def subvectors(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, subDim: Int): DataFrame =
-    emb.select(col(idCol), explode(expr(
-        s"transform(sequence(0, ${m - 1}), s -> struct(s as sub, " +
-          s"slice(cast($vecCol as array<double>), s * $subDim + 1, $subDim) as v))"))
-        .as("sv"))
-      .select(col(idCol), col("sv.sub").as("sub"), col("sv.v").as("v"))
-
-  /** Train per-subspace k-means codebooks. Deterministic init: subspace
-    * `sub`'s codes start from the first `k` vectors by `idCol`. Each Lloyd
-    * iteration is one distributed job covering ALL subspaces; empty codes
-    * keep their previous centroid. */
+  /** Train per-subspace k-means codebooks on ONE bounded sample
+    * ([[IvfIndex.trainingSample]], one job), each subspace iterated on the
+    * driver by [[IvfIndex.lloyd]]. Deterministic init: subspace `sub`'s
+    * codes start from the first `k` sampled vectors by `idCol`; empty codes
+    * keep their previous centroid. Driver cost: O(iters·n·k·dim) compute
+    * and n·dim·8 bytes of memory, for n ≤ 256·k sampled rows. */
   def train(emb: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, iters: Int): Codebook = {
-    graft.functions.VectorOps.register(emb.sparkSession)
-    val initRows = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .orderBy(col(idCol)).limit(k).collect()
-    require(initRows.nonEmpty, "PqIndex.train: empty corpus")
-    val dim = initRows.head.getSeq[Double](1).length
+    val points = IvfIndex.trainingSample(emb, idCol, col(vecCol).cast("array<double>"), k)
+    require(points.nonEmpty, "PqIndex.train: empty corpus")
+    val dim = points.head.length
     require(dim % m == 0, s"PqIndex.train: dim $dim not divisible by m=$m")
     val subDim = dim / m
-    val kEff = initRows.length
-    var cb: Array[Array[Array[Double]]] = Array.tabulate(m, kEff) { (s, c) =>
-      initRows(c).getSeq[Double](1).slice(s * subDim, (s + 1) * subDim).toArray
-    }
-    val sv = subvectors(emb, idCol, vecCol, m, subDim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // tiny training samples skip codegen+AQE for the Lloyd jobs — same
-    // rationale as IvfIndex.train (graft.core.FastPlan)
-    try graft.core.FastPlan.scoped(emb.sparkSession,
-      graft.core.FastPlan.isSmall(emb)) {
-      val spark = emb.sparkSession
-      import spark.implicits._
-      for (_ <- 0 until iters) {
-        val cbDf = (for (s <- 0 until m; c <- 0 until kEff)
-          yield (s, c, cb(s)(c).toSeq)).toDF("sub", "code", "w")
-        // nearest code per (vector, subspace) as min(struct(dd, code, v)):
-        // a HashAggregate with map-side combine, not a sort window; (dd,
-        // code) already breaks every tie, v just rides along to the mean
-        val means = sv.join(broadcast(cbDf), Seq("sub"))
-          .select(col(idCol), col("sub"), struct(
-            sqDist(col("v"), col("w")).as("dd"), col("code").as("code"),
-            col("v").as("v")).as("sc"))
-          .groupBy(col(idCol), col("sub")).agg(min(col("sc")).as("sc"))
-          .select(col("sub"), col("sc.code").as("code"),
-            posexplode(col("sc.v")).as(Seq("i", "x")))
-          .groupBy(col("sub"), col("code"), col("i")).agg(avg(col("x")).as("mean"))
-          .collect() // m×k×subDim doubles — the codebook, driver-sized by design
-        val next = cb.map(_.map(_.clone()))
-        means.foreach { r =>
-          next(r.getAs[Int]("sub"))(r.getAs[Int]("code"))(r.getAs[Int]("i")) =
-            r.getAs[Double]("mean")
-        }
-        // codes no row chose contribute no means rows → keep previous (clone)
-        cb = next
-      }
-      Codebook(m, subDim, cb)
-    } finally sv.unpersist(blocking = false)
+    Codebook(m, subDim, Array.tabulate(m) { s =>
+      val sub = points.map(_.slice(s * subDim, (s + 1) * subDim))
+      IvfIndex.lloyd(sub, sub.take(k), iters, (mean, _) => mean)
+    })
   }
 
   /** Per-subspace squared distances to every code, as a codegen array
@@ -228,11 +186,8 @@ object PqIndex {
   def writeIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]], cb: Codebook, path: String): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     graft.functions.VectorOps.register(spark)
-    centroids.zipWithIndex.map { case (c, b) => (b, c) }
-      .toDF("bucket", "weights").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+    IvfIndex.writeCentroids(spark, centroids, s"$path/centroids")
     writeCodebook(spark, cb, s"$path/codebook")
     // drift baseline observed during the write action itself, as in
     // IvfIndex.writeIndex — zero extra jobs
@@ -261,15 +216,9 @@ object PqIndex {
       knownCodebook: Option[Codebook] = None): DataFrame = {
     graft.functions.VectorOps.register(spark)
     // empty codes layout (bootstrap / fully-retired corpus): empty answer,
-    // not a schema-inference crash — same guard as IvfIndex.searchIndex
-    if (IvfIndex.layoutIsEmpty(s"$path/codes")) {
-      import org.apache.spark.sql.types._
-      val idType = queries.schema(idCol).dataType
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("qid", idType), StructField(idCol, idType),
-          StructField("dist", DoubleType), StructField("rn", LongType))))
-    }
+    // not a crash on a layout with no schema — same guard as IvfIndex.searchIndex
+    if (IvfIndex.layoutIsEmpty(s"$path/codes"))
+      return IvfIndex.emptySearchResult(spark, queries, idCol, "dist")
     // both models are FIXED index geometry (maintenance never rewrites
     // them — only retrain/rebuild does): a caller that just trained or
     // already read them passes them in and skips two driver read+collects
@@ -278,16 +227,18 @@ object PqIndex {
     val centroids = knownCentroids.getOrElse(
       IvfIndex.readCentroids(spark, path).map(_.toSeq).toSeq)
     val cb = knownCodebook.getOrElse(readCodebook(spark, s"$path/codebook"))
-    val probes = IvfIndex.probes(
-      queries.select(col(idCol).as("qid"), col(vecCol).as("_qraw"),
-        IvfIndex.normalized(col(vecCol)).as("_qn")), "_qn", centroids, nprobe)
-    val probed = graft.core.FastPlan.scoped(spark, small = true)(
-      probes.select(col("bucket")).distinct().collect()).map(_.getInt(0)).toSeq
+    // the probes, computed on the driver, broadcast as a local relation
+    val probes = IvfIndex.driverProbes(queries, idCol, vecCol, centroids, nprobe)
+    val probeRows = spark.createDataFrame(
+      probes.map(p => Row(p.qid, p.raw, p.bucket)).asJava,
+      StructType(Seq(StructField("qid", queries.schema(idCol).dataType),
+        StructField("_qraw", ArrayType(DoubleType, containsNull = false)),
+        StructField("bucket", IntegerType, nullable = false))))
     // resolved read: partition-pruned, newest-wins over pending
     // maintenance generations (IvfIndex.readLayout)
-    val encodedAssigned = IvfIndex.readLayout(spark, s"$path/codes", idCol, Some(probed))
-    ivfAdcSearchRefined(encodedAssigned, corpus,
-      probes.select(col("qid"), col("_qraw"), col("bucket")),
+    val encodedAssigned = IvfIndex.readLayout(spark, s"$path/codes", idCol,
+      Some(probes.map(_.bucket).distinct))
+    ivfAdcSearchRefined(encodedAssigned, corpus, probeRows,
       idCol, vecCol, "_qraw", cb, k, shortlist)
   }
 
@@ -335,11 +286,17 @@ object PqIndex {
         .coalesce(1).write.mode("overwrite").parquet(path))
   }
 
-  /** Read a [[writeCodebook]] table back (byte-identical weights). */
+  /** The schema [[writeCodebook]] writes. */
+  private val CodebookSchema = StructType(Seq(StructField("sub", IntegerType),
+    StructField("code", IntegerType), StructField("weights", ArrayType(DoubleType))))
+
+  /** Read a [[writeCodebook]] table back (byte-identical weights): one
+    * collect under the fixed schema, sorted on the driver. */
   def readCodebook(spark: SparkSession, path: String): Codebook = {
     // m×k rows; fixture-path literal defeats the codegen cache per call
     val rows = graft.core.FastPlan.scoped(spark, small = true)(
-      spark.read.parquet(path).orderBy(col("sub"), col("code")).collect())
+      spark.read.schema(CodebookSchema).parquet(path).collect())
+      .sortBy(r => (r.getInt(0), r.getInt(1)))
     val m = rows.map(_.getInt(0)).max + 1
     val k = rows.map(_.getInt(1)).max + 1
     val codes = Array.tabulate(m, k)((s, c) =>

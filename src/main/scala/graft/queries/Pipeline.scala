@@ -606,15 +606,10 @@ object Pipeline {
       // pinned separately by IvfSpec (full train, recall floors).
       val trained = IvfIndex.train(emb.where(col("vec_id") % 3 === 0),
         "vec_id", "embedding", k = 8, iters = 2)
-      locally {
-        import s.implicits._
-        trained.zipWithIndex.map { case (c, b) => (b, c.toSeq) }.toSeq
-          .toDF("bucket", "weights").coalesce(1)
-          .write.mode("overwrite").parquet(fixDir.resolve("centroids").toString)
-      }
+      val centroids: Seq[Seq[Double]] = trained.map(_.toSeq).toSeq
       // both engines consume byte-identical weights: the oracle reads the
       // fixture, parquet round-trips doubles bit-exactly — skip the re-read
-      val centroids: Seq[Seq[Double]] = trained.map(_.toSeq).toSeq
+      IvfIndex.writeCentroids(s, centroids, fixDir.resolve("centroids").toString)
       IvfIndex.searchTopK(emb, emb.where(col("vec_id") < 3),
           "vec_id", "embedding", centroids, nprobe = 2, k = 5)
         .select(col("qid"), col("vec_id"), col("score"), col("rn"))
@@ -661,17 +656,12 @@ object Pipeline {
       val fixDir = Q.fixture("q78-ivf")
       graft.core.Storage.deleteRecursively(fixDir)
       val emb = table(s, d, "embeddings")
-      // train (not replayable) → persist the fixture the oracle reads;
-      // centroid VALUES may vary run to run (float avg order), but fixture
-      // and search come from the SAME run, which is all the gate needs
+      // train → persist the fixture the oracle reads; fixture and search
+      // come from the SAME run, which is all the gate needs
       val trained = IvfIndex.train(emb.where(col("vec_id") % 3 === 0),
         "vec_id", "embedding", k = 8, iters = 2)
-      locally { // scoped import to keep the entry self-contained
-        import s.implicits._
-        trained.zipWithIndex.map { case (c, b) => (b, c.toSeq) }.toSeq
-          .toDF("bucket", "weights").coalesce(1)
-          .write.mode("overwrite").parquet(fixDir.resolve("centroids").toString)
-      }
+      IvfIndex.writeCentroids(s, trained.map(_.toSeq).toSeq,
+        fixDir.resolve("centroids").toString)
       // both engines consume byte-identical weights: the oracle reads the
       // fixture, parquet round-trips doubles bit-exactly — skip the re-read
       val w: Array[Seq[Double]] = trained.map(_.toSeq)
@@ -748,12 +738,8 @@ object Pipeline {
       val emb = table(s, d, "embeddings")
       val trained = IvfIndex.train(emb.where(col("vec_id") % 3 === 0),
         "vec_id", "embedding", k = 8, iters = 2)
-      locally {
-        import s.implicits._
-        trained.zipWithIndex.map { case (c, b) => (b, c.toSeq) }.toSeq
-          .toDF("bucket", "weights").coalesce(1)
-          .write.mode("overwrite").parquet(fixDir.resolve("centroids").toString)
-      }
+      IvfIndex.writeCentroids(s, trained.map(_.toSeq).toSeq,
+        fixDir.resolve("centroids").toString)
       // the corpus has no true embedding near-dups (within-cluster cosine
       // tops out ~0.47), so every 20th vector gets a deterministically
       // jittered copy (id offset 10M, cosine ~0.99999) — the duplicate
@@ -913,20 +899,15 @@ object Pipeline {
       graft.core.Storage.deleteRecursively(fixDir)
       val emb = table(s, d, "embeddings")
       // coarse + fine models trained on disjoint deterministic samples;
-      // values may vary run to run, but fixture and search share the run.
-      // The two trainers share nothing — overlap their driver-synchronous
-      // Lloyd collects (Q.par2, guide §2.6)
+      // fixture and search share the run. The two trainers share nothing —
+      // overlap their sample jobs and driver-side Lloyd (Q.par2, guide §2.6)
       val (trainedC, trainedCb) = Q.par2(
         IvfIndex.train(emb.where(col("vec_id") % 3 === 0),
           "vec_id", "embedding", k = 8, iters = 2),
         PqIndex.train(emb.where(col("vec_id") % 3 === 1),
           "vec_id", "embedding", m = 8, k = 16, iters = 2))
-      locally {
-        import s.implicits._
-        trainedC.zipWithIndex.map { case (c, b) => (b, c.toSeq) }.toSeq
-          .toDF("bucket", "weights").coalesce(1)
-          .write.mode("overwrite").parquet(fixDir.resolve("centroids").toString)
-      }
+      IvfIndex.writeCentroids(s, trainedC.map(_.toSeq).toSeq,
+        fixDir.resolve("centroids").toString)
       PqIndex.writeCodebook(s, trainedCb, fixDir.resolve("codebook").toString)
       // both engines consume byte-identical values: the oracle reads the
       // fixtures, and parquet round-trips doubles bit-exactly, so the
@@ -1003,12 +984,8 @@ object Pipeline {
       val emb = table(s, d, "embeddings")
       val trained = IvfIndex.train(emb.where(col("vec_id") % 3 === 0),
         "vec_id", "embedding", k = 8, iters = 2)
-      locally {
-        import s.implicits._
-        trained.zipWithIndex.map { case (c, bk) => (bk, c.toSeq) }.toSeq
-          .toDF("bucket", "weights").coalesce(1)
-          .write.mode("overwrite").parquet(fixDir.resolve("centroids").toString)
-      }
+      IvfIndex.writeCentroids(s, trained.map(_.toSeq).toSeq,
+        fixDir.resolve("centroids").toString)
       // both engines consume byte-identical weights: the oracle reads the
       // fixture, parquet round-trips doubles bit-exactly — skip the re-read
       val w: Array[Seq[Double]] = trained.map(_.toSeq)

@@ -289,9 +289,8 @@ object GraftProcedures {
               "indexes only; an IVF-PQ index (codes/ layout) is rebuilt by " +
               "re-running PqIndex.writeIvfPq over its source vectors")
           val spark = SparkSession.active
-          graft.operators.IvfIndex.retrain(spark, dir.toString)
           new GenericInternalRow(Array[Any](
-            graft.operators.IvfIndex.readCentroids(spark, dir.toString).length))
+            graft.operators.IvfIndex.retrain(spark, dir.toString).length))
       }
       case other =>
         throw new UnsupportedOperationException(

@@ -51,6 +51,22 @@ object GraftInternals {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** The Spark schema recorded in one parquet file's footer, read on the
+    * driver: what `spark.read.parquet` infers for a directory of such
+    * files, without the schema-inference job. */
+  def parquetSchema(spark: SparkSession, file: java.nio.file.Path)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val path = new org.apache.hadoop.fs.Path(file.toUri)
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        path, spark.sessionState.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** Unwrap Spark's `private[sql]` RowLevelOperationTable (the table the
     * UPDATE/MERGE rewrite plans its read relation against) back to the
     * underlying catalog table, so graft's analyzer rule can recognize its

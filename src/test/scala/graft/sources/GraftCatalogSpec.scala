@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{Dimension, MatDb, MatSchema, TestSpark, ValueCol}
 
@@ -10,7 +11,7 @@ import graft.core.{Dimension, MatDb, MatSchema, TestSpark, ValueCol}
   * gcat.t` resolves MVCC newest-wins, `VERSION AS OF n` ≡ `asOf(n)`,
   * provenance stays hidden from `SELECT *`, dimension predicates push below
   * the dedup into the scan while value predicates stay above it. */
-class GraftCatalogSpec extends AnyFunSuite {
+class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
   private val schema = MatSchema(
@@ -32,6 +33,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.gcat.root", dir.toString)
     dir
   }
+
+  // register `gcat` before any case runs: a case that starts with SQL on
+  // gcat must not depend on an earlier case having forced `root`
+  override def beforeAll(): Unit = { super.beforeAll(); root; () }
 
   private def mkTable(name: String): MatDb = {
     val db = MatDb.create(spark, schema, root.resolve(name).toString)

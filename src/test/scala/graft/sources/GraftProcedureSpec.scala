@@ -263,6 +263,23 @@ class GraftProcedureSpec extends AnyFunSuite {
     assert(e.getMessage.contains("not an index layout"))
   }
 
+  test("CALL retrain_index rebuilds an index and returns its bucket count") {
+    import spark.implicits._
+    root
+    val emb = (0L until 64L)
+      .map(i => (i, Seq.tabulate(8)(j => math.cos(i * 8 + j + 1))))
+      .toDF("vec_id", "embedding")
+    val dir = root.resolve("rix").toString
+    graft.operators.IvfIndex.writeIndex(emb, "vec_id", "embedding",
+      graft.operators.IvfIndex.train(emb, "vec_id", "embedding", k = 4, iters = 1)
+        .map(_.toSeq).toSeq, dir)
+    val out = spark.sql("CALL gproc.system.retrain_index('rix')").collect()
+    assert(out.map(_.getInt(0)).toSeq === Seq(4))
+    assert(graft.operators.IvfIndex.readCentroids(spark, dir).length === 4)
+    assert(graft.operators.IvfIndex.indexStats(dir).map(_.phase) === Seq("train"),
+      "a rebuild resets the drift log to its new baseline")
+  }
+
   test("listProcedures surfaces the system namespace") {
     root
     val cat = spark.sessionState.catalogManager.catalog("gproc")
