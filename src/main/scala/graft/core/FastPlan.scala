@@ -19,6 +19,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of their input (no job), so at scale the scope is a no-op and every
   * plan compiles as before. Threshold: [[SmallBytes]], 64 MB.
   *
+  * Inside the scope a plan runs as ONE job however many shuffles it has
+  * (AQE off: no stage-by-stage submission), which is what the tiny folds
+  * build on. They go further than planning, though: the view folds
+  * ([[graft.operators.IncrementalAgg]]) and the index folds
+  * ([[graft.operators.IvfIndex]]) collect their O(batch) delta once, and
+  * every set the driver then knows reaches the executors as a literal
+  * (`isin`, a literal map), never as a broadcast — in Spark 4.1 a
+  * broadcast is one more job, even of a local relation. A Project or
+  * Filter over a local relation is evaluated by the optimizer on the
+  * driver and costs no job at all.
+  *
   * Concurrency: the conf is session-global and grouped maintenance folds
   * run on a driver pool ([[graft.streaming.Streams]] MaintPool), so the
   * scope REFCOUNTS per session — the first entry saves and flips the

@@ -1,6 +1,11 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, StructField, StructType}
+
 import graft.core.MatDb
 
 /** Incrementally-maintained aggregate — a materialized GROUP BY view over a
@@ -25,6 +30,15 @@ import graft.core.MatDb
   * against the view's current rows for those groups only. A 100 TB base
   * table with a million-row daily delta maintains its per-source totals by
   * reading the delta, not the table.
+  *
+  * Tiny folds run at driver scale. When the metadata gate says the delta
+  * and the base are small ([[graft.core.FastPlan]]), the aligned fold of
+  * [[maintainAbsoluteMultiKeys]] collects the delta once onto the base
+  * handle ([[graft.core.MatDb.collectedChanges]], shared by every view of
+  * the batch), classifies and merges on the driver, reads only the
+  * touched view and dirty base rows through literal key-set filters, and
+  * writes with one job: about three jobs per fold where the distributed
+  * plan ran seven to ten. Larger folds keep the distributed plan.
   */
 object IncrementalAgg {
 
@@ -91,14 +105,17 @@ object IncrementalAgg {
     // null probe, both union legs, and the touched-group broadcast) —
     // persist it for the duration of the maintenance, exactly like
     // maintainAbsoluteMultiKeys does (O(batch) rows, never O(base))
-    val delta = base.changesBetween(fromTxn, toTxn, includeOld = true).persist()
+    val delta = base.changesBetween(fromTxn, toTxn, includeOld = true)
     // tiny-fold fast planning — same rationale (and the same base-size
     // guard) as maintainAbsoluteMultiKeys. The view-side gate reads the
     // MANIFEST's visible bytes (driver listing) instead of building and
-    // optimizing a snapshot plan just for its statistics.
+    // optimizing a snapshot plan just for its statistics. The scope opens
+    // BEFORE the persist: a cached plan is planned when it is cached, so a
+    // persist outside the scope would run the delta with AQE and codegen.
     val smallFold = graft.core.FastPlan.isSmall(delta) &&
       graft.core.FastPlan.isSmallBytes(viewDb.visibleBytes())
     graft.core.FastPlan.scoped(base.spark, smallFold) {
+    delta.persist()
     val merged = {
     requireNoNullValues(delta, valueCol)
     val isDim = base.schema.dimNames.contains(groupCol)
@@ -281,6 +298,36 @@ object IncrementalAgg {
     }
   }
 
+  /** Does retracting `old` retire the view extremum `cur` of the min/max
+    * column `n`? Equality counts: another row may hold the same extreme.
+    * The dirty-group test of both aligned folds. */
+  private def retires(n: String, old: Column, cur: Column): Column =
+    if (n.startsWith("min_")) old <= cur else old >= cur
+
+  /** A touched group's merged view values: its current row (`_cur_<n>`,
+    * null when absent) combined with its leg aggregates, which `agg` names
+    * — `_dc` (row count), `_d_<c>` (sum), `_dk_<c>` (non-null count),
+    * `_mn_<c>`/`_mx_<c>` (new extremes). Decimal addition widens
+    * precision; every value casts back to the view's declared type so
+    * segments stay byte-compatible. Shared by the distributed and the
+    * driver-scale fold, so both merge with the same expressions. */
+  private def mergedColsOf(viewDb: MatDb, agg: String => Column): Seq[Column] =
+    viewDb.schema.values.map { v =>
+      v.name match {
+        case "cnt" => (coalesce(col("_cur_cnt"), lit(0L)) + agg("_dc")).as("cnt")
+        case n if n.startsWith("cnt_") =>
+          (coalesce(col(s"_cur_$n"), lit(0L)) +
+            agg(s"_dk_${n.stripPrefix("cnt_")}")).cast(v.dataType).as(n)
+        case n if n.startsWith("sum_") =>
+          (coalesce(col(s"_cur_$n"), lit(0).cast(v.dataType)) +
+            agg(s"_d_${n.stripPrefix("sum_")}")).cast(v.dataType).as(n)
+        case n if n.startsWith("min_") =>
+          least(col(s"_cur_$n"), agg(s"_mn_${n.drop(4)}")).cast(v.dataType).as(n)
+        case n =>
+          greatest(col(s"_cur_$n"), agg(s"_mx_${n.drop(4)}")).cast(v.dataType).as(n)
+      }
+    }
+
   /** The maintenance stamp — the soundness token the MV auto-rewrite
     * verifies ([[graft.plans.MvRewriteRule]]): "this table is a maintained
     * view of <base>, exactly through <toTxn>". */
@@ -368,7 +415,6 @@ object IncrementalAgg {
     val delta = precomputedDelta.getOrElse(
       base.changesBetween(fromTxn, toTxn, includeOld = true))
     val owned = precomputedDelta.isEmpty
-    if (owned) delta.persist()
     // TINY-FOLD fast planning: a fold's queries re-plan with fresh
     // literals every batch (range txn ids, the pinned commit id), so each
     // one misses the codegen cache and recompiles — the dominant fixed
@@ -380,6 +426,17 @@ object IncrementalAgg {
     // even when its delta is tiny.
     val smallFold = graft.core.FastPlan.isSmall(delta) &&
       graft.core.FastPlan.isSmallBytes(base.visibleBytes(Some(toTxn)))
+    val hasMinMax = viewDb.schema.valueNames
+      .exists(n => n.startsWith("min_") || n.startsWith("max_"))
+    // self-maintenance needs `cnt` to detect emptied groups when there is
+    // no min/max recompute leg to reveal them (bench/view_maint_probe.json
+    // records this shape against the absolute recompute)
+    val aligned = watermark == fromTxn &&
+      (hasMinMax || viewDb.schema.valueNames.contains("cnt"))
+    // an aligned tiny fold runs at driver scale ([[foldAtDriverScale]]) over
+    // the base handle's collected delta, which never reads this frame's cache
+    val persisted = owned && !(aligned && smallFold)
+    if (persisted) delta.persist()
     // small intermediates (group keys, per-group deltas, merged rows) are
     // referenced several times inside the ONE commit write job — without a
     // cache each reference re-runs its delta aggregation and view join
@@ -397,13 +454,65 @@ object IncrementalAgg {
       val gCols = groupCols.map(col)
       val oldNotNull = groupCols.map(oldGOf(_).isNotNull).reduce(_ && _)
       val newNotNull = groupCols.map(col(_).isNotNull).reduce(_ && _)
-      val hasMinMax = viewDb.schema.valueNames
-        .exists(n => n.startsWith("min_") || n.startsWith("max_"))
-      // self-maintenance needs `cnt` to detect emptied groups when there is
-      // no min/max recompute leg to reveal them (bench/view_maint_probe.json
-      // records this shape against the absolute recompute)
-      val aligned = watermark == fromTxn &&
-        (hasMinMax || viewDb.schema.valueNames.contains("cnt"))
+      val sumSrcs = spec.sumSrcs
+      val cntSrcs = spec.cntSrcs
+      val mmSrcs = spec.mmSrcs
+      // a leg source's raw type: the base column's, or — for a declared
+      // expression — its analyzed type over the delta's base-named new
+      // side (analysis only, no job); both legs of the union must agree
+      def legType(c: String) =
+        base.schema.toStructType.fields.find(_.name == c).map(_.dataType)
+          .getOrElse(delta.select(valCol(c)).schema.head.dataType)
+      // a cnt_<col> counts NON-NULL source values: its delta is ±1 per
+      // row where the (possibly derived) source evaluates non-null —
+      // exactly retractable, like a sum of indicator values
+      def cntDelta(c: String, sign: Int): org.apache.spark.sql.Column =
+        when(valCol(c).isNotNull, lit(sign.toLong)).otherwise(lit(0L))
+      // retract leg: pre-images of U/D rows (a group-moving update
+      // retracts from its old group here and applies to the new one
+      // below); min/max sources contribute nothing to a retract — dirty
+      // groups recompute them from base. The pre-image frame renames
+      // _old_ values BACK to their base names (dims are version-
+      // invariant and keep theirs), so a declared expression evaluates
+      // verbatim over the OLD row — the exact value to retract.
+      def oldFrameOf(d: org.apache.spark.sql.DataFrame) =
+        d.where(col("op").isin("U", "D") && oldNotNull)
+          .select(groupCols.map(g => oldGOf(g).as(s"_g_$g")) ++
+            base.schema.dimNames.map(col) ++
+            base.schema.valueNames.map(v => col(s"_old_$v").as(v)): _*)
+      // the non-null sum contract rides the write job as a row-level
+      // raise_error instead of a separate up-front probe job (steady-path
+      // job count matters: each job is fixed latency per view per batch).
+      // The write job failing aborts BEFORE the manifest publish, so the
+      // guarantee is unchanged: a null in the delta means nothing commits
+      // (the claimed dir is swept by the next attempt's discardOrphanTxn).
+      def guarded(c: String): org.apache.spark.sql.Column =
+        if (!sumGuardCols.contains(c)) valCol(c)
+        else when(valCol(c).isNull, raise_error(lit(
+          s"delta contains null $c rows — the view's SUM would skip them " +
+            "while cnt counts them; coalesce or filter upstream " +
+            "(nothing was committed)"))).otherwise(valCol(c))
+      // the (retract, apply) legs of a delta frame; `retracted` adds each
+      // min/max source's retracted pre-image as `_o_<c>` (the dirty test's
+      // input, null on the apply leg)
+      def legsOf(d: org.apache.spark.sql.DataFrame, retracted: Boolean)
+          : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+        def o(v: String => org.apache.spark.sql.Column) =
+          if (retracted) mmSrcs.map(c => v(c).as(s"_o_$c")) else Nil
+        val retractLeg = oldFrameOf(d)
+          .select(groupCols.map(g => col(s"_g_$g").as(g)) ++
+            (sumSrcs.map(c => (-valCol(c)).as(s"_d_$c")) ++
+              cntSrcs.map(c => cntDelta(c, -1).as(s"_dk_$c")) ++
+              mmSrcs.map(c => lit(null).cast(legType(c)).as(s"_m_$c")) ++
+              o(valCol) :+ lit(-1L).as("_dc")): _*)
+        val applyLeg = d.where(col("op").isin("I", "U") && newNotNull)
+          .select(gCols ++
+            (sumSrcs.map(c => guarded(c).as(s"_d_$c")) ++
+              cntSrcs.map(c => cntDelta(c, 1).as(s"_dk_$c")) ++
+              mmSrcs.map(c => valCol(c).as(s"_m_$c")) ++
+              o(c => lit(null).cast(legType(c))) :+ lit(1L).as("_dc")): _*)
+        (retractLeg, applyLeg)
+      }
       val txn = viewDb.newPinnedTransaction(toTxn)
       // the isNullGuard catch must cover EVERYTHING that can evaluate the
       // guarded legs — the dirty/mergeable probe job (flags collect)
@@ -435,62 +544,21 @@ object IncrementalAgg {
         val emptied = touched.join(newAgg.select(gCols: _*), groupCols, "left_anti")
         txn.deleteRows(emptied)
         txn.addRows(newAgg)
+      } else if (smallFold) {
+        val local = base.collectedChanges(fromTxn, toTxn,
+          if (owned) delta else base.changesBetween(fromTxn, toTxn, includeOld = true))
+        val (retractLeg, applyLeg) = legsOf(local, retracted = true)
+        foldAtDriverScale(base, viewDb, txn, groupCols, fromTxn, aggs, hasMinMax,
+          local, retractLeg, applyLeg)
       } else {
-        val sumSrcs = spec.sumSrcs
-        val cntSrcs = spec.cntSrcs
-        val mmSrcs = spec.mmSrcs
         // the view's resolved snapshot is read TWICE per fold (the dirty
         // classification's extremes lookup in the probe job, the merge
         // leg's current-rows lookup in the write job) — each read a
         // parquet union scan + resolve aggregate. Cache it once for the
         // fold; O(view rows), released with the other fold frames.
         val viewSnap = cached(viewDb.snapshot())
-        // a leg source's raw type: the base column's, or — for a declared
-        // expression — its analyzed type over the delta's base-named new
-        // side (analysis only, no job); both legs of the union must agree
-        def legType(c: String) =
-          base.schema.toStructType.fields.find(_.name == c).map(_.dataType)
-            .getOrElse(delta.select(valCol(c)).schema.head.dataType)
-        // a cnt_<col> counts NON-NULL source values: its delta is ±1 per
-        // row where the (possibly derived) source evaluates non-null —
-        // exactly retractable, like a sum of indicator values
-        def cntDelta(c: String, sign: Int): org.apache.spark.sql.Column =
-          when(valCol(c).isNotNull, lit(sign.toLong)).otherwise(lit(0L))
-        // retract leg: pre-images of U/D rows (a group-moving update
-        // retracts from its old group here and applies to the new one
-        // below); min/max sources contribute nothing to a retract — dirty
-        // groups recompute them from base. The pre-image frame renames
-        // _old_ values BACK to their base names (dims are version-
-        // invariant and keep theirs), so a declared expression evaluates
-        // verbatim over the OLD row — the exact value to retract.
-        val oldFrame = delta.where(col("op").isin("U", "D") && oldNotNull)
-          .select(groupCols.map(g => oldGOf(g).as(s"_g_$g")) ++
-            base.schema.dimNames.map(col) ++
-            base.schema.valueNames.map(v => col(s"_old_$v").as(v)): _*)
-        val retractLeg = oldFrame
-          .select(groupCols.map(g => col(s"_g_$g").as(g)) ++
-            (sumSrcs.map(c => (-valCol(c)).as(s"_d_$c")) ++
-              cntSrcs.map(c => cntDelta(c, -1).as(s"_dk_$c")) ++
-              mmSrcs.map(c => lit(null).cast(legType(c)).as(s"_m_$c")) :+
-              lit(-1L).as("_dc")): _*)
-        // the non-null sum contract rides the write job as a row-level
-        // raise_error instead of a separate up-front probe job (steady-path
-        // job count matters: each job is fixed latency per view per batch).
-        // The write job failing aborts BEFORE the manifest publish, so the
-        // guarantee is unchanged: a null in the delta means nothing commits
-        // (the claimed dir is swept by the next attempt's discardOrphanTxn).
-        def guarded(c: String): org.apache.spark.sql.Column =
-          if (!sumGuardCols.contains(c)) valCol(c)
-          else when(valCol(c).isNull, raise_error(lit(
-            s"delta contains null $c rows — the view's SUM would skip them " +
-              "while cnt counts them; coalesce or filter upstream " +
-              "(nothing was committed)"))).otherwise(valCol(c))
-        val applyLeg = delta.where(col("op").isin("I", "U") && newNotNull)
-          .select(gCols ++
-            (sumSrcs.map(c => guarded(c).as(s"_d_$c")) ++
-              cntSrcs.map(c => cntDelta(c, 1).as(s"_dk_$c")) ++
-              mmSrcs.map(c => valCol(c).as(s"_m_$c")) :+
-              lit(1L).as("_dc")): _*)
+        val oldFrame = oldFrameOf(delta)
+        val (retractLeg, applyLeg) = legsOf(delta, retracted = false)
         val groupAggs = sumSrcs.map(c => sum(col(s"_d_$c")).as(s"_d_$c")) ++
           cntSrcs.map(c => sum(col(s"_dk_$c")).as(s"_dk_$c")) ++
           mmSrcs.flatMap(c => Seq(min(col(s"_m_$c")).as(s"_mn_$c"),
@@ -523,11 +591,8 @@ object IncrementalAgg {
               mmSrcs.map(c => valCol(c).as(s"_o_$c")): _*)
           val mmView = viewSnap
             .select(gCols ++ (mmViewCols.map(col) :+ lit(true).as("_present")): _*)
-          val boundary = mmViewCols.map { n =>
-            val c = n.drop(4)
-            if (n.startsWith("min_")) col(s"_o_$c") <= col(n)
-            else col(s"_o_$c") >= col(n)
-          }.reduce(_ || _)
+          val boundary = mmViewCols
+            .map(n => retires(n, col(s"_o_${n.drop(4)}"), col(n))).reduce(_ || _)
           retractVals.join(mmView, groupCols, "left")
             .where(col("_present").isNull || boundary)
             .select(gCols: _*).distinct()
@@ -543,23 +608,7 @@ object IncrementalAgg {
           .join(broadcast(mergeable.select(gCols: _*)), groupCols, "left_semi")
           .select(gCols ++
             viewDb.schema.valueNames.map(n => col(n).as(s"_cur_$n")): _*)
-        val mergedCols = viewDb.schema.values.map { v =>
-          v.name match {
-            case "cnt" => (coalesce(col("_cur_cnt"), lit(0L)) + col("_dc")).as("cnt")
-            case n if n.startsWith("cnt_") =>
-              (coalesce(col(s"_cur_$n"), lit(0L)) +
-                col(s"_dk_${n.stripPrefix("cnt_")}")).cast(v.dataType).as(n)
-            case n if n.startsWith("sum_") =>
-              // decimal addition widens precision; cast back to the view's
-              // declared type so segments stay byte-compatible
-              (coalesce(col(s"_cur_$n"), lit(0).cast(v.dataType)) +
-                col(s"_d_${n.stripPrefix("sum_")}")).cast(v.dataType).as(n)
-            case n if n.startsWith("min_") =>
-              least(col(s"_cur_$n"), col(s"_mn_${n.drop(4)}")).cast(v.dataType).as(n)
-            case n =>
-              greatest(col(s"_cur_$n"), col(s"_mx_${n.drop(4)}")).cast(v.dataType).as(n)
-          }
-        }
+        val mergedCols = mergedColsOf(viewDb, col)
         val merged = cached(mergeable.join(current, groupCols, "left")
           .select(gCols ++ mergedCols: _*))
         if (!hasMinMax) {
@@ -618,7 +667,133 @@ object IncrementalAgg {
       txn.id.getOrElse(toTxn)
     } finally {
       cachedFrames.foreach(_.unpersist())
-      if (owned) { delta.unpersist(); () }
+      if (persisted) { delta.unpersist(); () }
     }
+  }
+
+  /** The aligned fold at DRIVER SCALE, taken when the metadata gate of
+    * [[maintainAbsoluteMultiKeys]] says the fold is tiny. Its legs are
+    * projections of the base handle's collected delta
+    * ([[graft.core.MatDb.collectedChanges]]), and a Project or Filter over
+    * a `LocalRelation` is evaluated by the optimizer on the driver: no job.
+    * From there:
+    *   - the legs are grouped by key on the driver;
+    *   - the view rows of the touched groups are read through a literal
+    *     key-set filter (one job; none for an empty view);
+    *   - classification (dirty min/max groups) and merge are ONE Project
+    *     over a `LocalRelation` of per-group leg arrays, so Catalyst
+    *     evaluates the arithmetic on the driver with the distributed
+    *     fold's own expressions ([[mergedColsOf]], [[retires]]): Spark's
+    *     decimal widening, casts and ANSI overflow;
+    *   - dirty groups recompute from only their own base rows, again
+    *     through a literal key-set filter (one job, only when one is
+    *     dirty);
+    *   - the result is buffered into `txn` as local rows, which its commit
+    *     writes with one job.
+    * The branch pruning is the distributed fold's: no base read without a
+    * dirty group, no merge rows when every group is dirty. */
+  private def foldAtDriverScale(base: MatDb, viewDb: MatDb,
+      txn: graft.core.Transaction, groupCols: Seq[String], fromTxn: Long,
+      aggs: Seq[Column], hasMinMax: Boolean, delta: DataFrame,
+      retractLeg: DataFrame, applyLeg: DataFrame): Unit = {
+    val spark = base.spark
+    val n = groupCols.size
+    val legSchema = retractLeg.unionByName(applyLeg).schema
+    val legRows = ph("legs")(retractLeg.collect() ++ applyLeg.collect())
+    val byGroup = legRows.groupBy(_.toSeq.take(n))
+    // literal key-set filter over `cols` (a subset of the group columns):
+    // one isin per column — a superset for composite keys, which callers
+    // narrow to the exact tuples on the driver
+    def keyFilter(cols: Seq[String], keys: Iterable[Seq[Any]]): Column =
+      cols.map { g =>
+        val i = groupCols.indexOf(g)
+        col(g).isin(keys.map(_(i)).toSeq.distinct: _*)
+      }.reduce(_ && _)
+    val current: Map[Seq[Any], Row] =
+      if (byGroup.isEmpty || viewDb.committedSegments.isEmpty) Map.empty
+      else ph("viewRead")(viewDb.snapshot(pred = Some(keyFilter(groupCols, byGroup.keys)))
+        .select((groupCols ++ viewDb.schema.valueNames).map(col): _*).collect())
+        .map(r => r.toSeq.take(n) -> r).toMap
+    // one row per touched group: its key, its current view row, and each
+    // leg column gathered into an array
+    val legCols = legSchema.fields.drop(n).toSeq
+    val perGroup = spark.createDataFrame(byGroup.toSeq.map { case (k, rs) =>
+      val cur = current.get(k)
+      Row.fromSeq(k ++ (cur.isDefined +: viewDb.schema.values.indices.map(i =>
+        cur.map(_.get(n + i)).orNull)) ++
+        legCols.map(f => rs.map(_.get(legSchema.fieldIndex(f.name))).toSeq))
+    }.asJava, StructType(legSchema.fields.take(n) ++
+      (StructField("_present", BooleanType) +: viewDb.schema.values.map(v =>
+        StructField(s"_cur_${v.name}", v.dataType))) ++
+      legCols.map(f => StructField(f.name, ArrayType(f.dataType)))))
+    // a leg array's aggregate, as the distributed fold's groupBy computes
+    // it: SUM in Spark's own result type (nulls skipped, null when none),
+    // MIN / MAX as array_min / array_max
+    def legAgg(name: String): Column = name.take(4) match {
+      case "_mn_" => array_min(col(s"_m_${name.drop(4)}"))
+      case "_mx_" => array_max(col(s"_m_${name.drop(4)}"))
+      case _ =>
+        val t = retractLeg.select(sum(col(name))).schema.head.dataType
+        val vals = filter(col(name), _.isNotNull)
+        when(size(vals) > 0,
+          aggregate(vals, lit(0).cast(t), (acc, x) => (acc + x.cast(t)).cast(t)))
+    }
+    // DIRTY: a group with a retraction whose view row is missing, or whose
+    // retracted pre-image sits at a current extreme (see the distributed
+    // fold's classification)
+    val mmViewCols = viewDb.schema.valueNames
+      .filter(v => v.startsWith("min_") || v.startsWith("max_"))
+    val dirtyCol =
+      if (!hasMinMax) lit(false)
+      else (exists(col("_dc"), _ < 0) && !col("_present")) ||
+        mmViewCols.map(v => coalesce(exists(col(s"_o_${v.drop(4)}"),
+          retires(v, _, col(s"_cur_$v"))), lit(false))).reduce(_ || _)
+    val mergedFrame = perGroup
+      .select(groupCols.map(col) ++ mergedColsOf(viewDb, legAgg) :+ dirtyCol.as("_dirty"): _*)
+    val merged = ph("merge")(mergedFrame.collect())
+    val outSchema = StructType(mergedFrame.schema.fields.dropRight(1))
+    val (dirty, clean) = merged.partition(_.getBoolean(outSchema.size))
+    val cleanRows = clean.map(r => Row.fromSeq(r.toSeq.dropRight(1)))
+    val dirtyKeys = dirty.map(_.toSeq.take(n)).toSet
+    val (adds, deletes) =
+      if (!hasMinMax) {
+        // a group whose count reaches zero has no aggregate — delete it
+        val cnt = outSchema.fieldIndex("cnt")
+        val (gone, kept) = cleanRows.partition(_.getLong(cnt) == 0L)
+        (kept.toSeq, gone.map(_.toSeq.take(n)).toSeq)
+      } else if (dirtyKeys.isEmpty) (cleanRows.toSeq, Nil)
+      else {
+        // dirty groups: restricted absolute recompute from their own base
+        // rows. Their rows at toTxn are their rows at fromTxn whose key the
+        // batch left alone, plus the batch's new versions in them: the
+        // older state is often one checkpoint baseline, whose read needs
+        // no resolve, so the group filter pushes into the file scan.
+        // Dimension group columns filter below the resolve either way.
+        val dims = base.schema.dimNames
+        val cols = base.schema.columnNames.map(col)
+        val touched = delta.select(dims.map(col): _*).collect().map(_.toSeq)
+        val untouched =
+          if (dims.size == 1) !col(dims.head).isin(touched.map(_.head).toSeq: _*)
+          else !struct(dims.map(col): _*).isin(touched.toSeq.map(k =>
+            struct(dims.zip(k).map { case (d, v) => lit(v).as(d) }: _*)): _*)
+        val (dimG, valG) = groupCols.partition(dims.contains)
+        val inDirty = keyFilter(groupCols, dirtyKeys)
+        val atFrom = base.snapshot(Some(fromTxn),
+          if (dimG.isEmpty) None else Some(keyFilter(dimG, dirtyKeys)))
+        val recomputed = ph("dirtyRead")(
+          atFrom.where(untouched && (if (valG.isEmpty) lit(true) else keyFilter(valG, dirtyKeys)))
+            .select(cols: _*)
+            .unionByName(delta.where(col("op").isin("I", "U") && inDirty).select(cols: _*))
+            .groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*).collect())
+          .filter(r => dirtyKeys.contains(r.toSeq.take(n)))
+        // clean merged groups cannot empty; a dirty group absent from the
+        // recompute lost its last row
+        val found = recomputed.map(_.toSeq.take(n)).toSet
+        (cleanRows.toSeq ++ recomputed, (dirtyKeys -- found).toSeq)
+      }
+    if (deletes.nonEmpty)
+      txn.deleteRows(spark.createDataFrame(deletes.map(Row.fromSeq).asJava,
+        StructType(outSchema.fields.take(n))))
+    txn.addRows(spark.createDataFrame(adds.asJava, outSchema))
   }
 }

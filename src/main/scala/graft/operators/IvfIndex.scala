@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftInternals, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, GraftInternals, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -271,12 +273,11 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     *
     * Cost shape at 100 TB: one O(delta) assignment; one column-pruned scan
     * of the corpus's id column for the old-bucket lookup of touched ids
-    * (parquet reads only the id bytes — never the vectors — of
-    * un-probed buckets); then a read+write of the touched buckets' rows
-    * only. The rewrite lands in a temp sibling and swaps per-bucket
-    * directories (the source buckets are being read by the same plan, so
-    * an in-place overwrite is illegal). Single-writer contract, like
-    * every fixture layout. */
+    * (parquet reads only the id bytes — never the vectors); then ONE
+    * delta generation of O(delta) rows ([[upsertBucketLayout]]). A batch
+    * of at most [[DriverFoldRows]] rows folds in two jobs: one bounded
+    * collect of the assigned batch, one write. Single-writer contract,
+    * like every fixture layout. */
   def maintainIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, upserts: DataFrame, deletes: DataFrame,
       knownCentroids: Option[Seq[Seq[Double]]] = None): Unit = {
@@ -289,22 +290,17 @@ object IvfIndex extends org.apache.spark.internal.Logging {
       readCentroids(spark, path).map(_.toSeq).toSeq)
     // DRIFT METRIC: mean assigned-centroid distance of this batch's
     // upserts, OBSERVED during the layout's own actions (zero extra Spark
-    // jobs, zero extra persists — the observation node rides whichever
-    // evaluation of the assignment the rewrite runs first) and appended
+    // jobs, zero extra persists — the observation node rides the fold's
+    // one evaluation of the assignment, [[upsertBucketLayout]]) and appended
     // to the index's stats log driver-side. A rising maintain-vs-train
     // ratio says the fixed centroids no longer describe incoming data:
     // recall will sag and a re-train + writeIndex rebuild is due
     // (indexStats / CALL system.index_stats expose it; DriftProbe
     // measures the correlation with actual recall).
-    val obs = new org.apache.spark.sql.Observation()
     val newAssign = assignWithDist(
       upserts.select(col(idCol), normalized(col(vecCol)).as("v")), "v", centroids)
-      .observe(obs, count(lit(1)).as("n"), avg(col("_adist")).as("m"))
-    val touched = upserts.select(col(idCol))
-      .unionByName(deletes.select(col(idCol))).distinct()
-    upsertBucketLayout(spark, s"$path/corpus", idCol,
-      newAssign.select(col(idCol), col("v"), col("bucket")), touched)
-    IndexStats.record(path, phase = "maintain", obs)
+    IndexStats.record(path, phase = "maintain",
+      upsertBucketLayout(spark, s"$path/corpus", idCol, newAssign, deletes))
     // close the advisory loop: the log alone only OBSERVES drift — warn
     // loudly (driver log) the moment the ratio crosses the threshold, so
     // an operator sees the re-train signal without polling index_stats
@@ -470,22 +466,19 @@ object IvfIndex extends org.apache.spark.internal.Logging {
   }
 
   /** The resolved live (id, bucket) pairs of the TOUCHED ids only — the
-    * maintenance fold's old-bucket lookup. The touched semi-join sits
-    * BELOW the newest-wins resolve (per-id resolution only needs that
-    * id's own rows), so the base contributes a column-pruned id scan
-    * streamed through one broadcast join — the resolve aggregate then
-    * shuffles O(touched ids), never the corpus. Resolving first and
-    * joining after would hash-shuffle every corpus id per fold — at
-    * 100 TB with k=4096 that is a full-corpus exchange per micro-batch. */
+    * maintenance fold's old-bucket lookup, for a layout whose base holds
+    * data files. `restrict` narrows each read to the touched ids (a
+    * semi-join against the touched frame, or a literal id set) BELOW the
+    * newest-wins resolve (per-id resolution only needs that id's own
+    * rows), so the base contributes a column-pruned id scan and the
+    * resolve aggregate shuffles O(touched ids), never the corpus.
+    * Resolving first and restricting after would hash-shuffle every
+    * corpus id per fold — at 100 TB with k=4096 that is a full-corpus
+    * exchange per micro-batch. */
   private def readLayoutIds(spark: org.apache.spark.sql.SparkSession,
-      layoutPath: String, idCol: String, touched: DataFrame): DataFrame = {
-    def restrict(df: DataFrame): DataFrame =
-      df.join(broadcast(touched), Seq(idCol), "left_semi")
-    // a parquet-less base (interrupted compaction) holds no live ids
-    val root = java.nio.file.Paths.get(layoutPath)
-    val base = (if (hasParquet(root))
-        restrict(readParquet(spark, root).select(col(idCol), col("bucket")))
-      else touched.select(col(idCol), lit(0).cast("int").as("bucket")).limit(0))
+      layoutPath: String, idCol: String, restrict: DataFrame => DataFrame): DataFrame = {
+    val base = restrict(readParquet(spark, java.nio.file.Paths.get(layoutPath))
+        .select(col(idCol), col("bucket")))
       .select(col(idCol), col("bucket"), lit(0L).as("_gen"), lit(false).as("_del"))
     val gens = deltaGens(layoutPath)
     val all = if (gens.isEmpty) base else base.unionByName(
@@ -615,31 +608,46 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     graft.core.Storage.deleteRecursively(tmp)
   }
 
+  /** Batches of at most this many rows (new versions plus delete ids) fold
+    * at driver scale ([[upsertBucketLayout]]). */
+  private[operators] val DriverFoldRows = 4096
+
   /** The shared O(delta) maintenance fold under a `bucket=N/` parquet
     * layout ([[maintainIndex]] for normalized vectors,
     * [[PqIndex.maintainIvfPq]] for PQ codes): append ONE delta generation
-    * holding the `newRows` versions (which carry a `bucket` column) plus
-    * tombstones into every bucket a `touched` id leaves — bytes written
-    * ∝ delta; reads resolve through [[readLayout]]. Auto-compacts at
-    * [[maxPendingGens]] pending generations. Bootstraps an EMPTY layout:
-    * the first delta becomes the corpus. */
+    * holding the `newRowsIn` versions (which carry a `bucket` column) plus
+    * tombstones into every bucket a touched id (a new version's or a
+    * `deletes` id) leaves — bytes written ∝ delta; reads resolve through
+    * [[readLayout]]. Auto-compacts at [[maxPendingGens]] pending
+    * generations. Bootstraps an EMPTY layout: the first delta becomes the
+    * corpus.
+    *
+    * `newRowsIn` also carries `_adist`, the drift input: the returned
+    * observation holds the batch's count and mean `_adist`, observed
+    * during the fold's own evaluation of the batch (no extra job).
+    *
+    * The batch is evaluated once, by ONE bounded collect of its new rows
+    * and delete ids (at most [[DriverFoldRows]] + 1 rows, one partition).
+    * A batch within the bound folds at driver scale: the old-bucket lookup
+    * reads the touched ids through a literal id filter, the new buckets
+    * are a literal map, and the generation is written from local rows plus
+    * that lookup in one job. A larger batch keeps the distributed fold
+    * (broadcast semi-join and join against the batch frames). */
   private[operators] def upsertBucketLayout(
       spark: org.apache.spark.sql.SparkSession, layoutPath: String,
-      idCol: String, newRowsIn: DataFrame, touchedIn: DataFrame): Unit = {
-    val baseFile = firstParquet(java.nio.file.Paths.get(layoutPath))
+      idCol: String, newRowsIn: DataFrame, deletes: DataFrame)
+      : org.apache.spark.sql.Observation = {
+    def observed(obs: org.apache.spark.sql.Observation): DataFrame =
+      newRowsIn.observe(obs, count(lit(1)).as("n"), avg(col("_adist")).as("m"))
+        .drop("_adist")
+    val obs = new org.apache.spark.sql.Observation()
+    val layout = java.nio.file.Paths.get(layoutPath)
+    val baseFile = firstParquet(layout)
     if (baseFile.isEmpty) {
-      newRowsIn.write.mode("overwrite").partitionBy("bucket").parquet(layoutPath)
+      observed(obs).write.mode("overwrite").partitionBy("bucket").parquet(layoutPath)
       graft.core.Storage.deleteRecursively(deltasDir(layoutPath))
-      return
+      return obs
     }
-    // TINY-FOLD fast planning (graft.core.FastPlan): every fold plans with
-    // a fresh generation-number literal, so each micro-batch recompiles
-    // its codegen fragments — fixed cost that dominates small folds. Gated
-    // on BOTH the delta and the corpus estimate (the tombstone lookup and
-    // a triggered compaction scan the corpus).
-    val small = graft.core.FastPlan.isSmall(newRowsIn) &&
-      graft.core.FastPlan.isSmallDir(java.nio.file.Paths.get(layoutPath))
-    graft.core.FastPlan.scoped(spark, small) {
     val gen = deltaGens(layoutPath).lastOption
       .map(_.getFileName.toString match {
         case DeltaGen(g) => java.lang.Long.parseLong(g, 16) + 1L
@@ -647,27 +655,77 @@ object IvfIndex extends org.apache.spark.internal.Logging {
       })
       .getOrElse(1L)
     val dataFields = GraftInternals.parquetSchema(spark, baseFile.get).fields
-      .filterNot(_.name == idCol)
+      .filterNot(_.name == idCol).toSeq
+    val nulls = dataFields.map(f => lit(null).cast(f.dataType).as(f.name))
     // tombstones: every bucket a touched id currently LIVES in, minus the
     // bucket its new version lands in (a pure delete has no new version);
     // payload columns are null — the id + bucket + generation is the fact
-    val newBuckets = newRowsIn.select(col(idCol), col("bucket").as("_nb"))
-    val tomb = readLayoutIds(spark, layoutPath, idCol, touchedIn)
-      .join(broadcast(newBuckets), Seq(idCol), "left")
-      .where(col("_nb").isNull || col("_nb") =!= col("bucket"))
-      .select(col(idCol) +:
-        dataFields.toSeq.map(f => lit(null).cast(f.dataType).as(f.name)) :+
-        col("bucket"): _*)
-    val generation = newRowsIn
-      .select((col(idCol) +: dataFields.toSeq.map(f => col(f.name)) :+ col("bucket")) :+
+    def tombstones(lives: DataFrame, newBucket: Column): DataFrame =
+      lives.withColumn("_nb", newBucket)
+        .where(col("_nb").isNull || col("_nb") =!= col("bucket"))
+        .select((col(idCol) +: nulls :+ col("bucket")) :+ lit(true).as("_del"): _*)
+    def versions(rows: DataFrame): DataFrame =
+      rows.select((col(idCol) +: dataFields.map(f => col(f.name)) :+ col("bucket")) :+
         lit(false).as("_del"): _*)
-      .unionByName(tomb.withColumn("_del", lit(true)))
-      .withColumn("_gen", lit(gen))
+    // TINY-FOLD fast planning (graft.core.FastPlan): every fold plans with
+    // a fresh generation-number literal, so each micro-batch recompiles
+    // its codegen fragments — fixed cost that dominates small folds. The
+    // tombstone lookup and a triggered compaction scan the corpus, so the
+    // corpus must be small too.
+    val smallCorpus = graft.core.FastPlan.isSmallDir(layout)
+    val batchCols = (idCol +: dataFields.map(_.name)) :+ "bucket"
+    val tagged = observed(obs).select(batchCols.map(col) :+ lit(false).as("_gone"): _*)
+      .unionByName(deletes.select((col(idCol) +: nulls) :+
+        lit(null).cast(IntegerType).as("bucket") :+ lit(true).as("_gone"): _*))
+    val batch = graft.core.FastPlan.scoped(spark, smallCorpus)(
+      tagged.coalesce(1).limit(DriverFoldRows + 1).collect())
+    if (batch.length <= DriverFoldRows) {
+      val ids = batch.map(_.get(0)).distinct
+      // an all-silent fold (no upserts, no deletes) writes nothing
+      if (ids.nonEmpty) graft.core.FastPlan.scoped(spark, smallCorpus) {
+        val fresh = batch.filterNot(_.getBoolean(batchCols.size)).toSeq
+        val freshFrame = spark.createDataFrame(fresh.map(r =>
+            Row.fromSeq(r.toSeq.take(batchCols.size))).asJava,
+          StructType(tagged.schema.fields.take(batchCols.size)))
+        val newBucket =
+          if (fresh.isEmpty) lit(null).cast(IntegerType)
+          else map(fresh.map(r => r.get(0) -> r.getInt(batchCols.size - 1)).toMap.toSeq
+            .flatMap { case (i, b) => Seq(lit(i), lit(b)) }: _*)(col(idCol))
+        // one writer task: a tiny generation lands as one file per bucket
+        writeGeneration(spark, layoutPath, idCol, gen, versions(freshFrame)
+          .unionByName(tombstones(readLayoutIds(spark, layoutPath, idCol,
+            _.where(col(idCol).isin(ids.toSeq: _*))), newBucket))
+          .coalesce(1))
+      }
+      obs
+    } else {
+      val over = new org.apache.spark.sql.Observation()
+      val newRows = observed(over)
+      val small = graft.core.FastPlan.isSmall(newRowsIn) && smallCorpus
+      graft.core.FastPlan.scoped(spark, small) {
+        val touched = newRowsIn.select(col(idCol))
+          .unionByName(deletes.select(col(idCol))).distinct()
+        val newBuckets = newRows.select(col(idCol), col("bucket").as("_nb"))
+        val lives = readLayoutIds(spark, layoutPath, idCol,
+          _.join(broadcast(touched), Seq(idCol), "left_semi"))
+          .join(broadcast(newBuckets), Seq(idCol), "left")
+        writeGeneration(spark, layoutPath, idCol, gen,
+          versions(newRows).unionByName(tombstones(lives, col("_nb"))))
+      }
+      over
+    }
+  }
+
+  /** Write one delta generation `gen` of the layout (its `_del` rows
+    * included) and commit it by rename; auto-compact at
+    * [[maxPendingGens]] pending generations. */
+  private def writeGeneration(spark: SparkSession, layoutPath: String, idCol: String,
+      gen: Long, rows: DataFrame): Unit = {
     val tmpDir = deltasDir(layoutPath).resolve(f"d$gen%08x.tmp")
     val finalDir = deltasDir(layoutPath).resolve(f"d$gen%08x")
     graft.core.Storage.deleteRecursively(tmpDir)
     graft.core.Storage.deleteRecursively(finalDir)
-    generation.write.partitionBy("bucket").parquet(tmpDir.toString)
+    rows.withColumn("_gen", lit(gen)).write.partitionBy("bucket").parquet(tmpDir.toString)
     // an ALL-SILENT fold (empty upserts and deletes — e.g. a micro-batch
     // whose delta netted to same-value rewrites) produces a data-file-less
     // directory; committing it would poison every later read (an empty
@@ -678,7 +736,6 @@ object IvfIndex extends org.apache.spark.internal.Logging {
       java.nio.file.Files.move(tmpDir, finalDir)
       if (deltaGens(layoutPath).size >= maxPendingGens)
         compactLayout(spark, layoutPath, idCol)
-    }
     }
   }
 

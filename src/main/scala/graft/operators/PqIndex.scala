@@ -1,8 +1,7 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -163,14 +162,21 @@ object PqIndex {
       .where(col("srn") <= shortlist)
       .select(col("qid"), col(idCol))
     val qv = probes.select(col("qid"), qvec.as("_qv")).distinct()
-    broadcast(cand.join(qv, Seq("qid")))
+    refine(cand.join(qv, Seq("qid")), corpus, idCol, vecCol, k)
+  }
+
+  /** The exact refine stage: `cand` (qid, idCol, `_qv` = the query vector
+    * as doubles) is the per-query shortlist, broadcast against the raw
+    * vectors of `corpus`; the exact top `k` per query, ties → lowest id. */
+  private def refine(cand: DataFrame, corpus: DataFrame, idCol: String,
+      vecCol: String, k: Int): DataFrame =
+    broadcast(cand)
       .join(corpus.select(col(idCol), col(vecCol).cast("array<double>").as("_v")),
         Seq(idCol))
       .select(col("qid"), col(idCol), sqDist(col("_qv"), col("_v")).as("dist"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))).cast("long"))
       .where(col("rn") <= k)
-  }
 
   /** Persist a full IVF-PQ index — the 100 TB layout:
     *   - `path/centroids`: the IVF coarse quantizer (k rows, same table
@@ -227,19 +233,43 @@ object PqIndex {
     val centroids = knownCentroids.getOrElse(
       IvfIndex.readCentroids(spark, path).map(_.toSeq).toSeq)
     val cb = knownCodebook.getOrElse(readCodebook(spark, s"$path/codebook"))
-    // the probes, computed on the driver, broadcast as a local relation
     val probes = IvfIndex.driverProbes(queries, idCol, vecCol, centroids, nprobe)
-    val probeRows = spark.createDataFrame(
-      probes.map(p => Row(p.qid, p.raw, p.bucket)).asJava,
-      StructType(Seq(StructField("qid", queries.schema(idCol).dataType),
-        StructField("_qraw", ArrayType(DoubleType, containsNull = false)),
-        StructField("bucket", IntegerType, nullable = false))))
+    if (probes.isEmpty) return IvfIndex.emptySearchResult(spark, queries, idCol, "dist")
+    // the probe side is literal, as in IvfIndex.searchIndex: a broadcast
+    // would spend one more job collecting its build side, even from a
+    // local relation. bucket -> [qid], and per query its vector and its
+    // ADC table, computed on the driver by the kernel the codegen
+    // expression ([[subDistances]]) calls, so the distances are the same
+    val idType = queries.schema(idCol).dataType
+    def qid(p: IvfIndex.Probe): Column = lit(p.qid).cast(idType)
+    val perQuery = probes.groupBy(_.qid).values.map(_.head).toSeq
+    val byBucket = map(probes.groupBy(_.bucket).toSeq.flatMap { case (b, ps) =>
+      Seq(lit(b), array(ps.map(qid): _*))
+    }: _*)
+    val qtab = map(perQuery.flatMap(p => Seq(qid(p), typedlit(
+      (0 until cb.m).map { s =>
+        val q = UnsafeArrayData.fromPrimitiveArray(
+          p.raw.slice(s * cb.subDim, (s + 1) * cb.subDim).toArray)
+        cb.codes(s).toSeq.map(w => graft.functions.VectorOps.sqDist(q,
+          UnsafeArrayData.fromPrimitiveArray(w)))
+      }))): _*)
+    val qv = map(perQuery.flatMap(p => Seq(qid(p), typedlit(p.raw))): _*)
     // resolved read: partition-pruned, newest-wins over pending
     // maintenance generations (IvfIndex.readLayout)
-    val encodedAssigned = IvfIndex.readLayout(spark, s"$path/codes", idCol,
-      Some(probes.map(_.bucket).distinct))
-    ivfAdcSearchRefined(encodedAssigned, corpus, probeRows,
-      idCol, vecCol, "_qraw", cb, k, shortlist)
+    val cand = IvfIndex.readLayout(spark, s"$path/codes", idCol,
+        Some(probes.map(_.bucket).distinct))
+      .select(col(idCol), col("codes"), explode(byBucket(col("bucket"))).as("qid"))
+      .where(col(idCol) =!= col("qid"))
+      // ascending-sub fold, same IEEE order as adcSearch
+      .select(col("qid"), col(idCol), col("codes"), qtab(col("qid")).as("qtab"))
+      .select(col("qid"), col(idCol), expr(
+        s"aggregate(sequence(0, ${cb.m - 1}), cast(0.0 as double), " +
+          "(acc, s) -> acc + qtab[s][codes[s]])").as("approx_dist"))
+      .withColumn("srn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("approx_dist"), col(idCol))))
+      .where(col("srn") <= shortlist)
+      .select(col("qid"), col(idCol), qv(col("qid")).as("_qv"))
+    refine(cand, corpus, idCol, vecCol, k)
   }
 
   /** INDEX MAINTENANCE under DML for the [[writeIvfPq]] layout — the PQ
@@ -261,16 +291,13 @@ object PqIndex {
     // drift metric — same advisory as IvfIndex.maintainIndex (the PQ
     // layout shares the coarse geometry, so the same mean applies),
     // observed during the rewrite's own actions
-    val obs = new org.apache.spark.sql.Observation()
     val newRows = IvfIndex.assignWithDist(
         upserts.select(col(idCol), col(vecCol),
           IvfIndex.normalized(col(vecCol)).as("_nv")), "_nv", centroids)
-      .observe(obs, count(lit(1)).as("n"), avg(col("_adist")).as("m"))
-      .select(col(idCol), codesCol(col(vecCol), cb).as("codes"), col("bucket"))
-    val touched = upserts.select(col(idCol))
-      .unionByName(deletes.select(col(idCol))).distinct()
-    IvfIndex.upsertBucketLayout(spark, s"$path/codes", idCol, newRows, touched)
-    IndexStats.record(path, phase = "maintain", obs)
+      .select(col(idCol), codesCol(col(vecCol), cb).as("codes"), col("bucket"),
+        col("_adist"))
+    IndexStats.record(path, phase = "maintain",
+      IvfIndex.upsertBucketLayout(spark, s"$path/codes", idCol, newRows, deletes))
     // same advisory loop as IvfIndex.maintainIndex: warn loudly the moment
     // the maintain/train ratio crosses the threshold
     IvfIndex.driftAdvisory(path).foreach(IvfIndex.logDriftAdvisory)

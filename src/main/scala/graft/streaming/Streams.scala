@@ -277,6 +277,9 @@ object Streams {
             // view-independent (one restricted single-pass resolve — the
             // dominant fixed cost), persisted for the batch and released
             // after the last view committed. O(batch) rows, never O(base).
+            // A persist is lazy: aligned tiny folds never evaluate this
+            // frame — they share the base handle's collected delta
+            // (MatDb.collectedChanges), computed once for the batch.
             // Views advance in lockstep, so the shared range starts at the
             // MINIMUM pending watermark; a laggard view (fresh, or behind
             // after a crash) sees a superset delta and its non-aligned

@@ -29,6 +29,36 @@ object TestSpark {
   def finalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
 
+  /** Spark jobs `body` starts on the calling thread: they carry a local
+    * property the listener matches, and a marker job run afterwards
+    * drains the listener bus (events are delivered in order). */
+  def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("graft.spec.jobs")) match {
+          case Some(`tag`) => jobs.incrementAndGet(); ()
+          case Some(t) if t == s"$tag-drain" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.spec.jobs", tag)
+      val out = try body finally sc.setLocalProperty("graft.spec.jobs", null)
+      sc.setLocalProperty("graft.spec.jobs", s"$tag-drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.jobs", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus did not drain")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Run `df` and assert its final plan contains no Exchange. */
   def assertNoExchange(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
     df.collect()

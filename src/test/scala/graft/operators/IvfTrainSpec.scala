@@ -96,56 +96,26 @@ class IvfTrainSpec extends AnyFunSuite {
       "an input under the cap is sampled whole")
   }
 
-  /** Spark jobs `body` starts: they carry a local property the listener
-    * matches, and a marker job run afterwards drains the listener bus
-    * (events are delivered in order). */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("graft.spec.jobs")) match {
-          case Some(`tag`) => jobs.incrementAndGet(); ()
-          case Some(t) if t == s"$tag-drain" => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.spec.jobs", tag)
-      val out = try body finally sc.setLocalProperty("graft.spec.jobs", null)
-      sc.setLocalProperty("graft.spec.jobs", s"$tag-drain")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.jobs", null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener bus did not drain")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("job counts: train 1, readCentroids 1, searchIndex <= 4, retrain <= 6, maintain -2") {
     val corpus = emb
-    val (trained, trainJobs) = jobsOf(IvfIndex.train(corpus, "vec_id", "embedding", k = 8, iters = 4))
+    val (trained, trainJobs) = TestSpark.jobsOf(IvfIndex.train(corpus, "vec_id", "embedding", k = 8, iters = 4))
     val centroids = trained.map(_.toSeq).toSeq
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-jobs").toString
     IvfIndex.writeIndex(corpus, "vec_id", "embedding", centroids, path)
-    val (_, readJobs) = jobsOf(IvfIndex.readCentroids(spark, path))
+    val (_, readJobs) = TestSpark.jobsOf(IvfIndex.readCentroids(spark, path))
     // one maintenance fold: antipodal upserts (bucket moves) plus deletes
     val upserts = corpus.where(col("vec_id") % 7 === 1)
       .select(col("vec_id"), expr("transform(embedding, x -> -x)").as("embedding"))
     val deletes = corpus.where(col("vec_id") % 11 === 3 && col("vec_id") % 7 =!= 1)
       .select(col("vec_id"))
-    val (_, maintainJobs) = jobsOf(
+    val (_, maintainJobs) = TestSpark.jobsOf(
       IvfIndex.maintainIndex(spark, path, "vec_id", upserts, deletes, Some(centroids)))
     // search and retrain over the maintained layout (one pending generation)
     val queries = corpus.where(col("vec_id") < 4)
-    val (found, searchJobs) = jobsOf(IvfIndex.searchIndex(spark, path, queries,
+    val (found, searchJobs) = TestSpark.jobsOf(IvfIndex.searchIndex(spark, path, queries,
       "vec_id", "embedding", nprobe = 2, k = 5, Some(centroids)).collect())
     assert(found.length === 20)
-    val (_, retrainJobs) = jobsOf(IvfIndex.retrain(spark, path, iters = 3))
+    val (_, retrainJobs) = TestSpark.jobsOf(IvfIndex.retrain(spark, path, iters = 3))
     info(s"jobs: train=$trainJobs readCentroids=$readJobs maintain=$maintainJobs " +
       s"search=$searchJobs retrain=$retrainJobs")
     assert(trainJobs === 1)

@@ -223,4 +223,23 @@ class PqSpec extends AnyFunSuite {
     assert(fromIndex(postDml).except(inMemory(postDml)).count() === 0L,
       "answers must survive layout compaction")
   }
+
+  test("searchIvfPq probes through literals: no probe-side broadcast job") {
+    graft.functions.VectorOps.register(spark)
+    val cb = PqIndex.train(emb, "vec_id", "embedding", m = 8, k = 16, iters = 2)
+    val cent = IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 3)
+      .map(_.toSeq).toSeq
+    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-jobs").toString
+    PqIndex.writeIvfPq(emb, "vec_id", "embedding", cent, cb, path)
+    val (found, jobs) = TestSpark.jobsOf(PqIndex.searchIvfPq(spark, path, emb,
+      emb.where(col("vec_id") < 3), "vec_id", "embedding", nprobe = 3, k = 5,
+      shortlist = 10, Some(cent), Some(cb)).collect())
+    info(s"searchIvfPq jobs: $jobs")
+    assert(found.length === 15)
+    assert(jobs <= SearchJobsBefore - 3)
+  }
+
+  /** `searchIvfPq` jobs for the search above while its probes crossed to
+    * the executors as a broadcast local relation. */
+  private val SearchJobsBefore = 10
 }
